@@ -29,14 +29,6 @@ from aidc_2018_timeseries_spark.operators.text import shingle_hashes, tokenize
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 
 
-def _spread(df: DataFrame, col: str) -> DataFrame:
-    """Spread a small CPU-bound input across cores before md5-heavy
-    projections — shared gate; policy and scale rationale documented on
-    :func:`~aidc_2018_timeseries_spark.operators.partitioning.spread_for_compute`
-    (round 9: byte-stat gate, no forced physical planning)."""
-    return spread_for_compute(df, col)
-
-
 def _minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs derived from md5 — reproducible in SQL
     text (the literals are inlined into oracles)."""
@@ -60,7 +52,7 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup via content hash: returns (doc_id, canonical_id) for
     EVERY doc; duplicates share a canonical (minimum) id.
     """
-    hashed = _spread(df, id_col).select(
+    hashed = spread_for_compute(df, id_col).select(
         F.col(id_col), content_hash(text_col).alias("content_hash")
     )
     # window-min instead of groupBy + join-back: one shuffle on the content
@@ -122,7 +114,7 @@ def minhash_signature_agg(
     Docs with no shingles (< n tokens) are dropped — they have no content
     to near-dup on.
     """
-    exploded = _spread(df, id_col).select(
+    exploded = spread_for_compute(df, id_col).select(
         F.col(id_col).alias("doc"),
         F.explode(shingle_hashes(F.col(text_col), n=shingle_n)).alias("h"),
     )
@@ -251,7 +243,7 @@ def ngram_jaccard_candidates(
     # join — without the checkpoint the shingle hashing runs ~4× (Spark
     # never reuses a subplan across join sides).
     hashed = (
-        _spread(df, id_col)
+        spread_for_compute(df, id_col)
         .select(
             F.col(id_col).alias("doc"),
             shingle_hashes(F.col(text_col), n=shingle_n).alias("sh"),
@@ -351,7 +343,7 @@ def simhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     match buckets are the oracle-checkable core.)
     """
     return (
-        _spread(df, id_col)
+        spread_for_compute(df, id_col)
         .select(F.col(id_col), simhash32(F.col(text_col)).alias("simhash"))
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("canonical_id"))
@@ -385,12 +377,12 @@ def incremental_ingest_verdicts(
     scan further when the batch is small.
     """
     corpus_hashes = (
-        _spread(corpus, id_col)
+        spread_for_compute(corpus, id_col)
         .select(content_hash(text_col).alias("content_hash"))
         .distinct()
         .withColumn("in_corpus", F.lit(True))
     )
-    arr = _spread(arrivals, id_col).select(
+    arr = spread_for_compute(arrivals, id_col).select(
         F.col(id_col), content_hash(text_col).alias("content_hash")
     )
     w = Window.partitionBy("content_hash")
@@ -550,38 +542,23 @@ def blocked_edit_distance_pairs(
 
 
 def exact_collapse(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    key_cols: list[str] | None = None,
+    df: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Exact-duplicate PRE-COLLAPSE for the quadratic pairwise operators:
-    group docs by normalized content hash (plus ``key_cols``, when the
-    downstream operator blocks on extra columns), pick each group's
-    minimum id as representative, and return ``(mapping, representatives)``
-    — mapping is (id_col, canonical_id) for EVERY doc, representatives is
-    the subset of ``df`` rows whose id is their group's canonical id.
-
-    Why: the round-5 10× audits showed the worst case for containment /
-    edit-distance linkage is a corpus of identical copies — the TRUE pair
-    relation is quadratic in copy count, so any direct computation is
-    output-bound. But every pairwise verdict between docs is a function
-    of their (normalized content, key_cols) alone, so computing on one
-    representative per identical group and expanding verdicts back over
-    members is exact and reduces the quadratic to the UNIQUE-content
-    corpus. One content-hash-keyed window shuffle + one id semi-join.
+    """Exact-duplicate PRE-COLLAPSE: group docs by normalized content
+    hash, pick each group's minimum id as representative, and return
+    ``(mapping, representatives)`` — mapping is (id_col, canonical_id)
+    for EVERY doc, representatives is the subset of ``df`` rows whose id
+    is their group's canonical id. One content-hash-keyed window shuffle
+    + one id semi-join; used by :func:`minhash_components_collapsed`.
     """
-    keys = ["_chash", *(key_cols or [])]
-    # project to (id, keys, digest) BEFORE the window: the content-hash
+    # project to (id, digest) BEFORE the window: the content-hash
     # shuffle must carry 16-byte digests, never document bodies
-    hashed = _spread(df, id_col).select(
-        F.col(id_col),
-        *[F.col(c) for c in (key_cols or [])],
-        content_hash(text_col).alias("_chash"),
+    hashed = spread_for_compute(df, id_col).select(
+        F.col(id_col), content_hash(text_col).alias("_chash")
     )
-    w = Window.partitionBy(*keys)
+    w = Window.partitionBy("_chash")
     # Materialized once: the mapping feeds the reps semi-join here plus
-    # the caller's two expansion joins — three consumers of the
+    # the caller's star and node joins — three consumers of the
     # content-hash window. Narrow and doc-count-bounded (id, canonical).
     mapping = hashed.select(
         F.col(id_col), F.min(id_col).over(w).alias("canonical_id")
@@ -594,285 +571,6 @@ def exact_collapse(
     return mapping, reps
 
 
-#: default redundancy fraction above which the collapsed operators engage
-#: the exact-dup pre-collapse. The collapse pays a roughly FIXED overhead
-#: (content-hash window + semi-join + expansion joins, ~0.8s per face at
-#: sf0.1) and wins QUADRATICALLY in copy-group size — so a corpus that is
-#: barely duplicated (sf0.1 documents: 16 of 5000 rows in dup groups,
-#: 0.3%) loses by collapsing, while the round-5 worst case (every doc
-#: copied 10×, 90% redundancy) wins 3.3×. 2% is comfortably between the
-#: two regimes; both paths are exact, so the gate is a pure compute knob.
-COLLAPSE_REDUNDANCY_THRESHOLD = 0.02
-
-#: mean copies-per-content above which the MinHash-family collapse wins.
-#: The redundancy threshold is the WRONG statistic for this family: a
-#: corpus of all-doubled docs is 50% redundant yet the direct form still
-#: wins, because the collapse's mapping/expansion joins cost more than
-#: the few bucket rows a 2-group saves. Mean group size n/d falls out of
-#: the SAME gate aggregate for free (round-7 verdict item 6). The two
-#: operators cross over at DIFFERENT sizes (round-8 solo-JVM sweep,
-#: SCALING.md: pairs — direct wins at K=3, collapsed at K=10/30/60, so
-#: the wall is ~5-10; CC — direct wins at K=3/10, collapsed at K=30,
-#: wall ~10-30): the pairs collapse saves the signature/banding stage
-#: outright, while CC's star-vs-clique advantage only beats the mapping
-#: overhead once cliques are large.
-MINHASH_PAIRS_COLLAPSE_MEAN_COPIES = 8.0
-MINHASH_CC_COLLAPSE_MEAN_COPIES = 20.0
-#: kept as the CC alias for round-7 compatibility in external callers
-MINHASH_COLLAPSE_MEAN_COPIES = MINHASH_CC_COLLAPSE_MEAN_COPIES
-
-
-def exact_dup_stats(
-    df: DataFrame, text_col: str, key_cols: list[str] | None = None
-) -> tuple[int, int]:
-    """The skip-gate aggregate, shared by every gate statistic:
-    (row count n, distinct (content hash, key_cols) count d). ONE scan +
-    a map-side-combined count/distinct-count; the ``.first()`` is bounded
-    scalar bookkeeping (one row), the same class as knn_ivf's corpus
-    count. Callers composing SEVERAL collapsed operators over one corpus
-    should run this once and pass each operator an explicit
-    ``collapse=`` verdict instead of paying the aggregate per operator
-    (ADVICE r7 item 2).
-
-    Keys are packed into a struct so NULL-able ``key_cols`` (e.g. lang)
-    count as distinct values rather than being dropped by countDistinct's
-    multi-column NULL rule — matching exact_collapse's window, which
-    groups NULLs together.
-    """
-    keys = [content_hash(text_col).alias("_chash")] + [
-        F.col(c) for c in (key_cols or [])
-    ]
-    row = (
-        df.select(F.struct(*keys).alias("_k"))
-        .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("_k").alias("d"))
-        .first()
-    )
-    return int(row["n"]), int(row["d"])
-
-
-def exact_dup_redundancy(
-    df: DataFrame, text_col: str, key_cols: list[str] | None = None
-) -> float:
-    """Skip-gate statistic for the exact-dup pre-collapse (round-6 verdict
-    item 2): the fraction of rows that are redundant exact copies,
-    (n − d) / n over :func:`exact_dup_stats` — 0.0 on a clean corpus,
-    → 1.0 as copy groups dominate. The right statistic for operators
-    whose collapse overhead is near-fixed (containment, linkage); the
-    MinHash family gates on :func:`exact_dup_mean_copies` instead.
-    """
-    n, d = exact_dup_stats(df, text_col, key_cols)
-    return 0.0 if n == 0 else (n - d) / n
-
-
-def exact_dup_mean_copies(
-    df: DataFrame, text_col: str, key_cols: list[str] | None = None
-) -> float:
-    """Mean exact-copy group size n/d (1.0 on a clean corpus) — the
-    MinHash-family gate statistic (see MINHASH_COLLAPSE_MEAN_COPIES)."""
-    n, d = exact_dup_stats(df, text_col, key_cols)
-    return 1.0 if d == 0 else n / d
-
-
-def corpus_has_exact_dups(
-    df: DataFrame, text_col: str, key_cols: list[str] | None = None
-) -> bool:
-    """True iff ≥ 2 docs share (normalized content hash, ``key_cols``)."""
-    return exact_dup_redundancy(df, text_col, key_cols) > 0.0
-
-
-def ngram_containment_pairs_collapsed(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.9,
-    max_df: int | None = None,
-    collapse_threshold: float = COLLAPSE_REDUNDANCY_THRESHOLD,
-    collapse: bool | None = None,
-) -> DataFrame:
-    """:func:`ngram_containment_pairs` with :func:`exact_collapse` in
-    front — identical output, but the posting join and exact verification
-    run over one representative per identical-content group.
-
-    Expansion is exact because containment is a pure function of the two
-    shingle SETS, and identical normalized content ⟹ identical token
-    sequence ⟹ identical (distinct) shingle set:
-    - cross-group: C(a→b) = C(rep(a)→rep(b)) for every member pair —
-      two membership joins against the rep-level result;
-    - within-group: every ordered pair of distinct members has
-      containment exactly 1.0 (n/n — exact in IEEE), PROVIDED the group's
-      content has ≥ 1 shingle; shingle-less docs (< n tokens) produce no
-      output in the direct operator and are guarded out here too.
-
-    On the round-5 worst case (every doc duplicated 10×) this turns an
-    output-bound 1000× pair explosion into rep-level work that matches
-    the 1× corpus plus a membership-join expansion that is linear in the
-    true output size — which is the best possible, since the output must
-    be written either way.
-
-    ``max_df`` caveat: under collapse, shingle document frequencies are
-    counted over REPRESENTATIVES (one per unique content), not raw docs —
-    for the equality-to-direct guarantee pass ``max_df=None`` (the
-    default, and what the catalog face uses). With a cap set, the
-    rep-counted df is arguably the BETTER boilerplate signal (copy count
-    no longer inflates a shingle's df), but it is a different valve than
-    the direct operator's raw-df cap, so the two forms may keep/drop
-    different boilerplate-only pairs. The divergence also reaches INTRA
-    pairs (ADVICE r6): collapse always emits identical-copy pairs at
-    containment 1.0, whereas the direct operator with ``max_df`` drops
-    even those when EVERY shingle of the doc exceeds the cap (a doc made
-    entirely of boilerplate has no posting rows left to join on).
-
-    Skip-gate: when :func:`exact_dup_redundancy` says the corpus is
-    (nearly) exact-clean — redundant-copy fraction ≤ ``collapse_threshold``
-    — the mapping/expansion joins would collapse (almost) nothing — run
-    the direct operator outright (round-6 verdict: the collapse pre-pass
-    cost ~0.8s at sf0.1 to collapse 8 pairs). Both paths are exact; the
-    gate is purely a compute knob. The tri-state ``collapse`` overrides
-    it: True/False skips the gate aggregate entirely (the DataFrame
-    construction becomes lazy again — ADVICE r7 item 2), so callers
-    composing several collapsed operators over one corpus can pay
-    :func:`exact_dup_stats` once and route all of them.
-    """
-    if collapse is None:
-        collapse = exact_dup_redundancy(df, text_col) > collapse_threshold
-    if not collapse:
-        return ngram_containment_pairs(
-            df, id_col, text_col, shingle_n, threshold, max_df
-        )
-    mapping, reps = exact_collapse(df, id_col, text_col)
-    rep_pairs = ngram_containment_pairs(
-        reps, id_col, text_col, shingle_n, threshold, max_df
-    )
-    ma = mapping.select(
-        F.col("canonical_id").alias("id_a"), F.col(id_col).alias("_ma")
-    )
-    mb = mapping.select(
-        F.col("canonical_id").alias("id_b"), F.col(id_col).alias("_mb")
-    )
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.col("_ma").alias("id_a"),
-            F.col("_mb").alias("id_b"),
-            "containment",
-        )
-    )
-    shingled = reps.select(
-        F.col(id_col).alias("_canon"),
-        (F.size(shingle_hashes(F.col(text_col), n=shingle_n)) > 0).alias(
-            "_has_sh"
-        ),
-    )
-    mx = mapping.select(
-        F.col("canonical_id").alias("_canon"), F.col(id_col).alias("_ma")
-    )
-    my = mapping.select(
-        F.col("canonical_id").alias("_canon"), F.col(id_col).alias("_mb")
-    )
-    intra = (
-        mx.join(my, "_canon")
-        .filter(F.col("_ma") != F.col("_mb"))
-        .join(shingled.filter(F.col("_has_sh")), "_canon", "semi")
-        .select(
-            F.col("_ma").alias("id_a"),
-            F.col("_mb").alias("id_b"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return cross.unionByName(intra)
-
-
-def minhash_candidate_pairs_collapsed(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    num_bands: int = 4,
-    shingle_n: int = 3,
-    mean_copies_threshold: float = MINHASH_PAIRS_COLLAPSE_MEAN_COPIES,
-    collapse: bool | None = None,
-) -> DataFrame:
-    """:func:`minhash_candidate_pairs` with :func:`exact_collapse` in
-    front — identical (id_a < id_b) pair relation, but signatures, band
-    explode, and the bucket join run over one representative per
-    identical-content group.
-
-    Expansion is exact because the MinHash signature is a pure function
-    of the (distinct) shingle set, which identical normalized content
-    shares:
-    - cross-group: members inherit their reps' band-collision verdict
-      (member sig == rep sig), so two membership joins expand the
-      rep-level pairs; least/greatest restores the id_a < id_b normal
-      form (member ids need not order like their reps);
-    - within-group: identical signatures collide in EVERY band, so each
-      unordered pair of distinct members of a shingled group is always a
-      candidate; shingle-less groups (< n tokens ⇒ no signature) produce
-      no pairs in the direct operator and are guarded out here too.
-
-    Why it matters at 100 TB: a duplicate-heavy crawl is the NORM, and
-    in the direct form each k-copy group contributes k·num_bands band
-    rows and C(k,2)·num_bands bucket-join matches before the distinct
-    (the round-5 bench's own worst case). Collapsed, the shingle explode
-    + signature aggregation — the dominant cost — touch unique content
-    only, and the copy-quadratic appears solely in the expanded OUTPUT,
-    which must be written either way.
-
-    Skip-gate (round-7 verdict item 6 — per-FAMILY statistic): the
-    MinHash family gates on mean copy-group size n/d, not redundancy —
-    the round-8 solo-JVM sweep put the PAIRS crossover at ~5-10
-    copies/content (direct wins at K=3, collapsed from K=10 on), hence
-    the default threshold 8. Tri-state ``collapse`` (True/False)
-    skips the gate aggregate and restores lazy construction (ADVICE r7
-    item 2) — pair it with one shared :func:`exact_dup_stats` call when
-    composing several collapsed operators.
-    """
-    if collapse is None:
-        collapse = exact_dup_mean_copies(df, text_col) > mean_copies_threshold
-    if not collapse:
-        return minhash_candidate_pairs(
-            df, id_col, text_col, num_hashes, num_bands, shingle_n
-        )
-    mapping, reps = exact_collapse(df, id_col, text_col)
-    rep_pairs = minhash_candidate_pairs(
-        reps, id_col, text_col, num_hashes, num_bands, shingle_n
-    )
-    ma = mapping.select(
-        F.col("canonical_id").alias("id_a"), F.col(id_col).alias("_ma")
-    )
-    mb = mapping.select(
-        F.col("canonical_id").alias("id_b"), F.col(id_col).alias("_mb")
-    )
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_ma", "_mb").alias("id_a"),
-            F.greatest("_ma", "_mb").alias("id_b"),
-        )
-    )
-    shingled = reps.select(
-        F.col(id_col).alias("_canon"),
-        (F.size(shingle_hashes(F.col(text_col), n=shingle_n)) > 0).alias(
-            "_has_sh"
-        ),
-    )
-    mx = mapping.select(
-        F.col("canonical_id").alias("_canon"), F.col(id_col).alias("_ma")
-    )
-    my = mapping.select(
-        F.col("canonical_id").alias("_canon"), F.col(id_col).alias("_mb")
-    )
-    intra = (
-        mx.join(my, "_canon")
-        .filter(F.col("_ma") < F.col("_mb"))
-        .join(shingled.filter(F.col("_has_sh")), "_canon", "semi")
-        .select(F.col("_ma").alias("id_a"), F.col("_mb").alias("id_b"))
-    )
-    return cross.unionByName(intra)
-
-
 def minhash_components_collapsed(
     df: DataFrame,
     id_col: str,
@@ -880,49 +578,26 @@ def minhash_components_collapsed(
     num_hashes: int = 16,
     num_bands: int = 4,
     shingle_n: int = 3,
-    mean_copies_threshold: float = MINHASH_CC_COLLAPSE_MEAN_COPIES,
-    collapse: bool | None = None,
+    collapse: bool = False,
 ) -> DataFrame:
-    """Connected components over the MinHash candidate graph, with
-    :func:`exact_collapse` in front — (node, label) over the SHINGLED
-    docs, byte-identical to ``connected_components(shingled nodes,
-    minhash_candidate_pairs(df))`` (pytest-pinned).
+    """Connected components over the MinHash candidate graph — (node,
+    label) over the SHINGLED docs. ``collapse=False`` (the default) is
+    ``connected_components(shingled nodes, minhash_candidate_pairs(df))``.
 
-    Instead of expanding the copy-quadratic intra-group pair cliques and
-    feeding them to CC, each identical-content group enters the graph as
-    a linear STAR — member → canonical edges (the
-    ``dedup_linkage_clusters`` pattern) — which preserves connectivity
-    exactly: within a group the star connects what the clique connected;
-    across groups an (a, b) band collision exists iff the (rep(a),
-    rep(b)) collision does, and the rep edge plus two star paths restores
-    it. Labels agree because min-label CC labels a component by its
-    minimum node id, and the node SET per component is unchanged (the
-    rep is its group's min id by construction, so star edges never
-    introduce a smaller id than the clique would).
-
-    Star edges attach only to groups whose content has ≥ 1 shingle: an
-    unshingled doc has no signature and stays a CC singleton in the
-    direct form, so its identical copies must stay singletons here too
-    (they are not CC nodes at all — the face layer handles unshingled
-    docs as self-components).
-
-    This is the scale path for cluster-then-select pipelines
-    (keep-best-quality canonicalization): the CC iteration — the
-    heaviest stage — runs on the unique-content graph, and copies rejoin
-    via |members| star edges rather than Σ C(k,2) clique edges.
-
-    Skip-gate (round-7 verdict item 6): gates on mean copy-group size
-    n/d > ``mean_copies_threshold`` like its pairs sibling, but at the
-    CC family's own measured wall (~10-30 copies/content — direct wins
-    at K=3/10, collapsed at K=30; the star relation only beats clique
-    expansion once cliques are large), hence the deeper default 20.
-    Tri-state ``collapse`` (True/False) skips the gate aggregate and
-    restores lazy construction (ADVICE r7 item 2).
+    ``collapse=True`` puts :func:`exact_collapse` in front and yields
+    byte-identical output (pytest-pinned): instead of the copy-quadratic
+    intra-group pair cliques, each identical-content group enters the
+    graph as a linear STAR of member → canonical edges. Connectivity is
+    preserved — within a group the star connects what the clique
+    connected; across groups an (a, b) band collision exists iff the
+    (rep(a), rep(b)) collision does. Labels agree because the rep is its
+    group's min id, so star edges never introduce a smaller id than the
+    clique would. Star edges attach only to groups whose content has
+    ≥ 1 shingle: an unshingled doc has no signature and is not a CC node
+    in the direct form either.
     """
     from aidc_2018_timeseries_spark.operators.graph import connected_components
 
-    if collapse is None:
-        collapse = exact_dup_mean_copies(df, text_col) > mean_copies_threshold
     if not collapse:
         pairs = minhash_candidate_pairs(
             df, id_col, text_col, num_hashes, num_bands, shingle_n
@@ -996,10 +671,11 @@ def ngram_containment_pairs(
     # corpus size) in executor block storage — deliberate: every byte of
     # it is consumed ≥ 3× downstream (postings build + two verify legs),
     # and MEMORY_AND_DISK spills rather than OOMs, so at corpus scale
-    # the trade is storage-for-recompute at worst 1:3. eager=False keeps
-    # construction lazy; the first action materializes it once.
+    # the trade is storage-for-recompute at worst 1:3. eager=False skips
+    # the extra count job, but under AQE the checkpoint still executes
+    # the shuffle map stages below it when the DataFrame is built.
     hashed = (
-        _spread(df, id_col)
+        spread_for_compute(df, id_col)
         .select(
             F.col(id_col).alias("doc"),
             shingle_hashes(F.col(text_col), n=shingle_n).alias("sh"),
@@ -1020,7 +696,7 @@ def ngram_containment_pairs(
     # once instead of twice (storage is bounded by the exploded shingle
     # relation, which the windows already shuffle in full either way;
     # same spill-not-OOM footprint note as `hashed` above). eager=False:
-    # lazy construction, materialized by the first downstream action.
+    # as for `hashed`, the window shuffles below still run at build time.
     with_rk = (
         sh.withColumn("df", F.count(F.lit(1)).over(wdf))
         .withColumn("rk", F.row_number().over(w))

@@ -30,14 +30,6 @@ from aidc_2018_timeseries_spark.functions.vectors import cosine_similarity, dot,
 from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
 
 
-def _spread(df: DataFrame, col: str) -> DataFrame:
-    """Spread a small CPU-bound input across cores before fold/GEMM-heavy
-    per-row work — shared gate; policy and scale rationale documented on
-    :func:`~aidc_2018_timeseries_spark.operators.partitioning.spread_for_compute`
-    (round 9: byte-stat gate, no forced physical planning)."""
-    return spread_for_compute(df, col)
-
-
 def _round6_half_up(x):
     """Decimal HALF_UP (away from zero) at 6 dp for NumPy arrays — the
     ``F.round``/DuckDB ROUND convention, NOT ``np.round``'s
@@ -108,7 +100,7 @@ def brute_force_topk(
     ``dot/(nv*nq)`` behind the same zero-norm guard is bit-identical
     while paying one fold per pair instead of three.
     """
-    v = _spread(vectors, id_col).withColumn("_nv", l2_norm(vec_col))
+    v = spread_for_compute(vectors, id_col).withColumn("_nv", l2_norm(vec_col))
     q = queries.withColumn("_nq", l2_norm(query_vec_col))
     joined = v.crossJoin(F.broadcast(q)).filter(
         F.col(id_col) != F.col(query_id_col)
@@ -152,7 +144,7 @@ def assign_centroids(
     # norm-once (round 8): one l2_norm fold per vector / per centroid
     # instead of per (vector, centroid) pair — bit-identical (see
     # brute_force_topk)
-    v = _spread(vectors, id_col).withColumn("_nv", l2_norm(vec_col))
+    v = spread_for_compute(vectors, id_col).withColumn("_nv", l2_norm(vec_col))
     c = centroids.withColumn("_nc", l2_norm(centroid_vec_col))
     joined = v.crossJoin(F.broadcast(c))
     sim = F.round(
@@ -548,7 +540,7 @@ def lsh_signatures(
         F.sequence(F.lit(1), F.size("shifts")), F.lit(0).cast("long"), _step
     )
     return (
-        _spread(vectors, id_col)
+        spread_for_compute(vectors, id_col)
         .crossJoin(F.broadcast(pl))
         .select(F.col(id_col), F.col("table_id"), bucket.alias("bucket"))
     )
@@ -709,7 +701,7 @@ def lsh_signatures_arrow(
                 }
             )
 
-    return _spread(vectors, id_col).select(id_col, vec_col).mapInPandas(
+    return spread_for_compute(vectors, id_col).select(id_col, vec_col).mapInPandas(
         gen, schema=f"{id_col} {id_t}, table_id int, bucket long"
     )
 
@@ -1523,7 +1515,7 @@ def semdedup_verdicts(
             vectors, group_col=cluster_col, id_col=id_col, vec_col=vec_col
         ).select(F.col(cluster_col).cast("long").alias("cluster"), "centroid_vec")
         assigned = _semdedup_assign_arrow(
-            _spread(vectors, id_col), cents, id_col, vec_col
+            spread_for_compute(vectors, id_col), cents, id_col, vec_col
         ).localCheckpoint(eager=True)
         pairs = _semdedup_cluster_pairs_arrow(assigned, threshold, id_col, vec_col)
     else:
@@ -1533,7 +1525,7 @@ def semdedup_verdicts(
         # sf0.1 pair stage), and the fold over the same array yields the
         # same double, so dot/(na*nb) is bit-identical to the guarded
         # per-pair form while paying one fold per pair instead of three.
-        v = _spread(vectors, id_col).select(
+        v = spread_for_compute(vectors, id_col).select(
             F.col(id_col), F.col(vec_col).cast("array<double>").alias("_e")
         ).withColumn("_n", l2_norm("_e"))
         cents = centroid_means(

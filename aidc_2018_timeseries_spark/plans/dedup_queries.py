@@ -18,6 +18,7 @@ from aidc_2018_timeseries_spark.operators.similarity import (
     hyperplane_rows_stable,
 )
 from aidc_2018_timeseries_spark.operators.graph import connected_components
+from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
 from aidc_2018_timeseries_spark.operators.text import (
     REPETITION_VERDICT_SQL as _REPETITION_VERDICT_SQL,
 )
@@ -98,12 +99,9 @@ def _minhash_oracle() -> str:
     _minhash_oracle(),
     doc="MinHash(16)+LSH(4 bands) candidate pairs — shingle→minhash→band→"
     "bucket-join; only band keys shuffle, never the doc cross product. "
-    "Stays the DIRECT form after the round-6 collapse audit: banded LSH "
-    "is already within bands× of its (inherently copy-quadratic) output "
-    "and signatures are copy-linear, so exact-dup pre-collapse measured "
-    "as a wash at 10 copies and a 3× regression on a dup-free corpus — "
-    "minhash_candidate_pairs_collapsed exists (equality pytest-pinned) "
-    "for extreme-duplication corpora; SCALING.md round-6 has the numbers",
+    "Banded LSH is already within bands× of its (inherently "
+    "copy-quadratic) output and signatures are copy-linear, so no "
+    "exact-dup pre-collapse runs in front of it",
 )
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -258,14 +256,12 @@ def _corpus_pipeline_sql() -> str:
     "the already-verified leaf operator; this face proves they COMPOSE — "
     "one declarative plan plus the bounded CC rounds.",
 )
-def llm_corpus_pipeline(
-    spark: SparkSession, sf_dir: str, collapse: bool | None = False
-) -> DataFrame:
+def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.operators import text as tx
 
     # Conditional spread (round 8): the face-level curation chain
     # (quality/lang scoring, the gram explode) is compute-bound per row
-    # and, unlike the leaf dedup operators, had no _spread — on a
+    # and, unlike the leaf dedup operators, had no spread — on a
     # single-file corpus the whole pre-shuffle stage ran as ONE task
     # (measured: the r7 dup-10x decade's 125-145s was ~85% this layout
     # artifact, 20.0s once spread — SCALING.md round-8 correction). At
@@ -274,7 +270,7 @@ def llm_corpus_pipeline(
     under = (
         raw.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
     )
-    d = dd._spread(raw, "doc_id") if under else raw
+    d = spread_for_compute(raw, "doc_id") if under else raw
     scored = d.select(
         "doc_id",
         "text",
@@ -327,26 +323,12 @@ def llm_corpus_pipeline(
     nodes = kept.where(
         F.size(shingle_hashes(F.col("text"), n=_SHINGLE_N)) > 0
     ).select("doc_id")
-    # The near-dup clustering stage routes through
-    # minhash_components_collapsed, whose tri-state `collapse` knob this
-    # face now PLUMBS THROUGH as a parameter (ADVICE r9) instead of
-    # hardcoding. The face default is collapse=False because leaving the
-    # tri-state unset (None) ran the adaptive gate's count aggregate
-    # over `kept` at face-CONSTRUCTION time — executing the whole
-    # curation chain before any caller action (ADVICE r8) — and False is
-    # the measured-right branch for clean corpora (mean copies/content
-    # <= the 20-copy CC crossover, SCALING.md dup-25x decade). The two
-    # branches are byte-identical (tests/test_dedup_properties.py), so
-    # the default is performance-only. NOTE: with the False default this
-    # call site does NOT take the star-collapse path on duplicate-heavy
-    # corpora — a deployment at the 100 TB crawl norm should pass
-    # collapse=True (identical-content groups enter CC as a linear star
-    # instead of a quadratic clique) or None to re-enable the adaptive
-    # gate at run time.
+    # Near-dup clustering: the direct MinHash pairs -> connected
+    # components path (minhash_components_collapsed's default). The CC
+    # loop runs eagerly here, at face construction.
     labels = dd.minhash_components_collapsed(
         kept, "doc_id", "text",
         num_hashes=_NUM_HASHES, num_bands=_NUM_BANDS, shingle_n=_SHINGLE_N,
-        collapse=collapse,
     )
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     canon = (
@@ -435,11 +417,7 @@ def _cc_oracle() -> str:
     "components (min-label propagation, operators/graph.py). The full "
     "dedup pipeline's final step: every doc labeled with its duplicate "
     "cluster's canonical (minimum) id; singletons label themselves. "
-    "Oracle = recursive-CTE transitive closure over the same pairs. "
-    "Direct form by measurement: collapse pays only past ~20-30 copies "
-    "per content (clique edges re-shuffle every CC round) — "
-    "minhash_components_collapsed is the pytest-pinned variant for that "
-    "regime (SCALING.md round-6 crossover table)",
+    "Oracle = recursive-CTE transitive closure over the same pairs.",
 )
 def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Vertex set = ALL doc ids (the keep_best_quality r8 rewrite): edge
@@ -450,7 +428,7 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's reach base moved from sh to documents in the same commit,
     # making the docstring's "every doc labeled" literally true on
     # corpora with shingle-less docs.
-    d = dd._spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = spread_for_compute(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = dd.minhash_candidate_pairs(
         d, "doc_id", "text", num_hashes=_NUM_HASHES, num_bands=_NUM_BANDS, shingle_n=_SHINGLE_N
     )
@@ -624,9 +602,7 @@ def _keep_best_oracle() -> str:
     "No-shingle docs are their own singletons. The argmax window runs "
     "over the component-labeled relation (one shuffle on component_id, "
     "already the CC output partitioning); quality rounds at 6 dp BEFORE "
-    "ranking so the cross-engine order is deterministic. Swap "
-    "connected_components for minhash_components_collapsed on corpora "
-    "past ~20-30 copies per content (SCALING.md round-6 crossover)",
+    "ranking so the cross-engine order is deterministic",
 )
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -638,8 +614,8 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single task on a one-file corpus (the layout pathology measured in
     # SCALING.md round-8 — nodes alone was 4.1s of this face's 12s solo
     # wall). Conditional, so at 100 TB (thousands of scan splits) it is a
-    # no-op, exactly like the leaf operators' internal _spread.
-    d = dd._spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    # no-op, exactly like the leaf operators' internal spread.
+    d = spread_for_compute(load_table(spark, sf_dir, "documents"), "doc_id")
     pairs = dd.minhash_candidate_pairs(
         d, "doc_id", "text", num_hashes=_NUM_HASHES, num_bands=_NUM_BANDS, shingle_n=_SHINGLE_N
     )
@@ -891,20 +867,11 @@ def dedup_blocked_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "prunes; the container side indexes full postings by necessity), "
     "one-sided size filter |B| >= t|A|, exact JVM-side verification; "
     "ratio unrounded (exact-integer division). The oracle restates the "
-    "naive posting join - prefix filtering must be lossless. Round 6: "
-    "computed through the exact-dup PRE-COLLAPSE (operators/dedup."
-    "ngram_containment_pairs_collapsed) — identical output, but the "
-    "posting join runs over one representative per identical-content "
-    "group, erasing the duplicated-corpus quadratic the round-5 10x "
-    "audit measured (the true output is still quadratic in copy count; "
-    "only the COMPUTE no longer is). Round 7: redundancy skip-gate — one "
-    "digest aggregate routes (nearly) exact-clean corpora (like this "
-    "testdata: <= 0.3% redundant rows) straight to the direct operator, "
-    "so the collapse overhead is paid only where it wins",
+    "naive posting join - prefix filtering must be lossless",
 )
 def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    return dd.ngram_containment_pairs_collapsed(
+    return dd.ngram_containment_pairs(
         d, "doc_id", "text", shingle_n=_SHINGLE_N, threshold=0.9
     )
 
@@ -930,63 +897,16 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "when A-C exceeds the distance bound). The record-linkage twin of "
     "dedup_clusters_cc (whose pairs come from MinHash); oracle = "
     "recursive-CTE transitive closure over the identical pair relation. "
-    "Round 6: edit-distance pairing runs on exact-dup representatives "
-    "only (collapse key = content hash + lang, matching the blocking "
-    "column), with star edges member→canonical restoring connectivity — "
-    "components and min-labels are IDENTICAL to the direct run because "
-    "identical (content, lang) docs share a block and pair at distance "
-    "0, while token-less docs (NULL block key) and NULL-lang docs (the "
-    "blocked join's equality is null-unsafe, so they never pair "
-    "directly) are excluded from star edges to keep them singletons",
+    "Token-less docs (NULL block key) and NULL-lang docs (the blocked "
+    "join's equality is null-unsafe) never pair, so they stay singletons",
 )
 def dedup_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from aidc_2018_timeseries_spark.operators.graph import connected_components
-    from aidc_2018_timeseries_spark.operators.text import tokenize
-
     d = load_table(spark, sf_dir, "documents")
-    # skip-gate (round-6 verdict item 2): (nearly) exact-clean corpus ->
-    # the star relation would be (almost) empty and reps ~= d, so run the
-    # direct blocked pairing without the collapse mapping/expansion
-    # overhead; both paths are exact (equality pytest-pinned)
-    if (
-        dd.exact_dup_redundancy(d, "text", key_cols=["lang"])
-        <= dd.COLLAPSE_REDUNDANCY_THRESHOLD
-    ):
-        pairs = dd.blocked_edit_distance_pairs(
-            d, "doc_id", "text", block_cols=["lang"], prefix_tokens=4, max_dist=3
-        ).select("id_a", "id_b")
-        return connected_components(
-            d.select("doc_id"), pairs, id_col="doc_id", src_col="id_a", dst_col="id_b"
-        ).select(F.col("node").alias("doc_id"), F.col("label").alias("entity_id"))
-    mapping, reps = dd.exact_collapse(d, "doc_id", "text", key_cols=["lang"])
-    rep_pairs = dd.blocked_edit_distance_pairs(
-        reps, "doc_id", "text", block_cols=["lang"], prefix_tokens=4, max_dist=3
+    pairs = dd.blocked_edit_distance_pairs(
+        d, "doc_id", "text", block_cols=["lang"], prefix_tokens=4, max_dist=3
     ).select("id_a", "id_b")
-    # star edges: member -> its group's canonical, but ONLY for groups
-    # whose content has >= 1 token AND a non-NULL lang — a token-less doc
-    # has a NULL block key and never pairs in the direct computation, and
-    # the blocked join's null-unsafe equality means NULL-lang docs never
-    # pair either, while exact_collapse's window groups NULL lang together
-    # — so both classes' identical copies must stay singletons here too
-    # (ADVICE r6: the lang guard; testdata lang is non-null, but the
-    # equality guarantee must not depend on that)
-    tokened = reps.filter(
-        (F.size(tokenize(F.col("text"))) > 0) & F.col("lang").isNotNull()
-    ).select(F.col("doc_id").alias("canonical_id"))
-    star = (
-        mapping.filter(F.col("doc_id") != F.col("canonical_id"))
-        .join(tokened, "canonical_id", "semi")
-        .select(
-            F.col("doc_id").alias("id_a"), F.col("canonical_id").alias("id_b")
-        )
-    )
-    nodes = d.select("doc_id")
     return connected_components(
-        nodes,
-        rep_pairs.unionByName(star),
-        id_col="doc_id",
-        src_col="id_a",
-        dst_col="id_b",
+        d.select("doc_id"), pairs, id_col="doc_id", src_col="id_a", dst_col="id_b"
     ).select(F.col("node").alias("doc_id"), F.col("label").alias("entity_id"))
 
 

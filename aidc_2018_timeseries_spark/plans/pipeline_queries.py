@@ -946,9 +946,9 @@ def _semantic_curation_oracle() -> str:
     "own operator's scale shape (SCALING.md round-8 decades for both)",
 )
 def llm_semantic_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import aidc_2018_timeseries_spark.operators.dedup as dd
     from aidc_2018_timeseries_spark.operators import similarity as sim
     from aidc_2018_timeseries_spark.operators import text as tx
+    from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
     from aidc_2018_timeseries_spark.plans.similarity_queries import _SEMDEDUP_TAU
     from aidc_2018_timeseries_spark.plans.text_queries import _DSIR_BUCKETS, _DSIR_KEEP
 
@@ -956,7 +956,7 @@ def llm_semantic_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
     sem = sim.semdedup_verdicts(e, threshold=_SEMDEDUP_TAU).select(
         F.col("vec_id").alias("doc_id"), F.col("keep").alias("semantic_keep")
     )
-    d = dd._spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = spread_for_compute(load_table(spark, sf_dir, "documents"), "doc_id")
     dsel = tx.dsir_selection(
         d.withColumn("_is_target", F.col("lang") == "en"),
         id_col="doc_id",

@@ -1189,9 +1189,9 @@ def _dsir_ctes() -> str:
     "weights; rank is a source-partitioned window",
 )
 def text_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import aidc_2018_timeseries_spark.operators.dedup as dd
+    from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
 
-    d = dd._spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    d = spread_for_compute(load_table(spark, sf_dir, "documents"), "doc_id")
     return tx.dsir_selection(
         d.withColumn("_is_target", F.col("lang") == "en"),
         id_col="doc_id",

@@ -10,9 +10,12 @@ externally-provided session (the driver passes us one).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
 
 # Runtime-settable confs required to read the driver's testdata and to keep
 # results deterministic / DuckDB-comparable.
@@ -27,14 +30,16 @@ _RUNTIME_CONFS = {
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs needed by this engine to an existing session."""
+    """Apply runtime confs needed by this engine to an existing session.
+
+    A conf that cannot be set (static on some builds) is logged as one
+    WARNING naming the key and the error; the session is still returned.
+    """
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # A conf may be static on some builds; reads that need it will
-            # raise a clear error of their own.
-            pass
+        except Exception as exc:
+            _LOG.warning("configure_session: cannot set %s=%s: %r", k, v, exc)
     return spark
 
 

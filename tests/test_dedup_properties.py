@@ -97,31 +97,9 @@ def test_prefix_filtered_jaccard_is_lossless(spark):
             )
 
 
-def test_one_sided_filtered_containment_is_lossless(spark):
-    """Multiple thresholds, same rationale as the jaccard twin — at
-    t=0.7 the A-prefix widens and the positional bound α = ceil(t·|A|)
-    prunes harder, so boundary off-by-ones would surface here first."""
-    for threshold in (0.7, 0.9):
-        for seed in range(6):
-            docs = _random_corpus(seed)
-            df = spark.createDataFrame(
-                list(docs.items()), "doc_id long, text string"
-            )
-            got = {
-                (r["id_a"], r["id_b"])
-                for r in ngram_containment_pairs(
-                    df, "doc_id", "text", threshold=threshold
-                ).collect()
-            }
-            assert got == _brute_containment(docs, threshold), (
-                f"seed {seed} t={threshold}"
-            )
-
-
 def _corpus_with_copies(seed: int) -> dict[int, str]:
-    """Random corpus plus planted identical copies (the pre-collapse
-    target), shingle-less short docs, and empty docs — the edge cases the
-    collapsed form must keep byte-identical to the direct form."""
+    """Random corpus plus planted identical copies (incl. case/whitespace
+    variants), shingle-less short docs, and empty docs."""
     rng = random.Random(1000 + seed)
     docs = _random_corpus(seed)
     did = max(docs) + 1
@@ -141,127 +119,73 @@ def _corpus_with_copies(seed: int) -> dict[int, str]:
     return docs
 
 
-def test_collapsed_containment_equals_direct(spark):
-    from aidc_2018_timeseries_spark.operators.dedup import (
-        ngram_containment_pairs_collapsed,
-    )
+def test_one_sided_filtered_containment_is_lossless(spark):
+    """Multiple thresholds, same rationale as the jaccard twin — at
+    t=0.7 the A-prefix widens and the positional bound α = ceil(t·|A|)
+    prunes harder, so boundary off-by-ones would surface here first. The
+    copy corpora add identical-content groups (every ordered member pair
+    is contained at 1.0), shingle-less docs and empty docs."""
+    corpora = [("random", seed, _random_corpus(seed)) for seed in range(6)]
+    corpora += [("copies", seed, _corpus_with_copies(seed)) for seed in range(4)]
+    for threshold in (0.7, 0.9):
+        for kind, seed, docs in corpora:
+            df = spark.createDataFrame(
+                list(docs.items()), "doc_id long, text string"
+            )
+            got = {
+                (r["id_a"], r["id_b"])
+                for r in ngram_containment_pairs(
+                    df, "doc_id", "text", threshold=threshold
+                ).collect()
+            }
+            assert got == _brute_containment(docs, threshold), (
+                f"{kind} seed {seed} t={threshold}"
+            )
 
-    for seed in range(4):
-        docs = _corpus_with_copies(seed)
-        df = spark.createDataFrame(
-            list(docs.items()), "doc_id long, text string"
-        )
-        direct = {
-            (r["id_a"], r["id_b"]): r["containment"]
-            for r in ngram_containment_pairs(
-                df, "doc_id", "text", threshold=0.9
-            ).collect()
-        }
-        collapsed = {
-            (r["id_a"], r["id_b"]): r["containment"]
-            for r in ngram_containment_pairs_collapsed(
-                df, "doc_id", "text", threshold=0.9
-            ).collect()
-        }
-        assert collapsed == direct, f"seed {seed}"
 
+def test_linkage_clusters_keep_edge_docs_apart(spark, tmp_path):
+    """dedup_linkage_clusters on a corpus of same-lang copies, typo
+    variants and edge docs: identical empty docs stay apart, identical
+    NULL-lang copies stay singletons (the blocked join's lang equality is
+    null-unsafe), and en/de copies of the same text never merge."""
+    from aidc_2018_timeseries_spark.plans.catalog import CATALOG, load_all
 
-def test_collapsed_linkage_clusters_equal_direct(spark):
-    """CC over (rep pairs + star edges) == CC over direct blocked pairs,
-    including lang-split identical content and token-less singletons."""
-    from aidc_2018_timeseries_spark.operators.dedup import (
-        blocked_edit_distance_pairs,
-        exact_collapse,
-    )
-    from aidc_2018_timeseries_spark.operators.graph import connected_components
-    from aidc_2018_timeseries_spark.operators.text import tokenize
-
-    from pyspark.sql import functions as F
-
+    load_all()
     rng = random.Random(42)
     rows = []
+    expected: dict[int, int] = {}
     did = 0
     titles = ["alpha beta gamma delta", "alpha betta gamma delta",
               "omega psi chi phi", "different title here now"]
+    entity: dict[tuple[str, str], int] = {}
     for t in titles:
         for lang in ("en", "de"):
+            # the first two titles are one typo apart: one entity per lang
+            key = (lang, "alpha" if t.startswith("alpha") else t)
             for _ in range(rng.randint(1, 3)):
                 rows.append((did, t + " body filler", lang))
+                expected[did] = entity.setdefault(key, did)
                 did += 1
     rows.append((did, "", "en"))
-    rows.append((did + 1, "", "en"))  # identical empty pair: must stay apart
-    # identical-content NULL-lang copies (ADVICE r6): the blocked join's
-    # null-unsafe equality never pairs them, so they must stay singletons
-    # even though exact_collapse's window groups NULL lang together
+    rows.append((did + 1, "", "en"))
     rows.append((did + 2, titles[0] + " body filler", None))
     rows.append((did + 3, titles[0] + " body filler", None))
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    for i in range(did, did + 4):
+        expected[i] = i
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    direct_pairs = blocked_edit_distance_pairs(
-        df, "doc_id", "text", block_cols=["lang"], prefix_tokens=4, max_dist=3
-    ).select("id_a", "id_b")
-    nodes = df.select("doc_id")
-    direct = {
-        r["node"]: r["label"]
-        for r in connected_components(
-            nodes, direct_pairs, id_col="doc_id", src_col="id_a", dst_col="id_b"
-        ).collect()
+    got = {
+        r["doc_id"]: r["entity_id"]
+        for r in CATALOG["dedup_linkage_clusters"]
+        .spark_fn(spark, str(tmp_path))
+        .collect()
     }
-
-    mapping, reps = exact_collapse(df, "doc_id", "text", key_cols=["lang"])
-    rep_pairs = blocked_edit_distance_pairs(
-        reps, "doc_id", "text", block_cols=["lang"], prefix_tokens=4, max_dist=3
-    ).select("id_a", "id_b")
-    tokened = reps.filter(
-        (F.size(tokenize(F.col("text"))) > 0) & F.col("lang").isNotNull()
-    ).select(F.col("doc_id").alias("canonical_id"))
-    star = (
-        mapping.filter(F.col("doc_id") != F.col("canonical_id"))
-        .join(tokened, "canonical_id", "semi")
-        .select(F.col("doc_id").alias("id_a"), F.col("canonical_id").alias("id_b"))
-    )
-    collapsed = {
-        r["node"]: r["label"]
-        for r in connected_components(
-            nodes,
-            rep_pairs.unionByName(star),
-            id_col="doc_id",
-            src_col="id_a",
-            dst_col="id_b",
-        ).collect()
-    }
-    assert collapsed == direct
-
-
-def test_collapsed_minhash_pairs_equal_direct(spark):
-    """minhash_candidate_pairs_collapsed == minhash_candidate_pairs on
-    corpora with planted identical copies (incl. normalization variants),
-    shingle-less docs, and empty docs — the signature is a pure function
-    of the shingle set, so the expansion must be lossless AND add nothing."""
-    from aidc_2018_timeseries_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        minhash_candidate_pairs_collapsed,
-    )
-
-    for seed, num_bands in ((0, 4), (1, 4), (2, 2), (3, 8)):
-        # band widths 4/8/2 exercise the rows_per_band slicing at its
-        # extremes (2 bands of 8 rows .. 8 bands of 2 rows)
-        docs = _corpus_with_copies(seed)
-        df = spark.createDataFrame(
-            list(docs.items()), "doc_id long, text string"
-        )
-        direct = {
-            (r["id_a"], r["id_b"])
-            for r in minhash_candidate_pairs(
-                df, "doc_id", "text", num_bands=num_bands
-            ).collect()
-        }
-        collapsed_rows = minhash_candidate_pairs_collapsed(
-            df, "doc_id", "text", num_bands=num_bands, collapse=True
-        ).collect()
-        collapsed = {(r["id_a"], r["id_b"]) for r in collapsed_rows}
-        assert len(collapsed_rows) == len(collapsed), f"seed {seed}: dup rows"
-        assert collapsed == direct, f"seed {seed} bands={num_bands}"
+    assert got == expected
+    assert got[did] != got[did + 1]  # identical empty docs
+    assert got[did + 2] == did + 2 and got[did + 3] == did + 3  # NULL lang
+    assert entity[("en", "alpha")] != entity[("de", "alpha")]
 
 
 def test_collapsed_minhash_components_equal_direct(spark):
@@ -302,130 +226,36 @@ def test_collapsed_minhash_components_equal_direct(spark):
         assert collapsed == direct, f"seed {seed}"
 
 
-def test_exact_dup_skip_gate(spark):
-    """exact_dup_redundancy / corpus_has_exact_dups: the one-aggregate
-    gate that lets collapsed operators bypass the mapping/expansion joins
-    on (nearly) clean corpora (round-6 verdict item 2)."""
-    from pyspark.sql import functions as F
+def test_containment_face_build_runs_no_gate_job(spark, sf_dir):
+    """Building dedup_ngram_containment runs no job of its own: only the
+    parquet schema read of load_table and the shuffle map stages that
+    ngram_containment_pairs' localCheckpoint(eager=False) executes under
+    AQE. A full-corpus gate aggregate at build time would add a job."""
+    from aidc_2018_timeseries_spark.plans.catalog import CATALOG, load_all
+    from aidc_2018_timeseries_spark.sources.tables import load_table
 
-    from aidc_2018_timeseries_spark.operators.dedup import (
-        corpus_has_exact_dups,
-        exact_dup_redundancy,
+    load_all()
+    sc = spark.sparkContext
+
+    def build_jobs(name, build) -> list[int]:
+        group = f"build-{name}"
+        sc.setJobGroup(group, "DataFrame construction only")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    docs = load_table(spark, sf_dir, "documents")
+    read = build_jobs("read", lambda: load_table(spark, sf_dir, "documents"))
+    op = build_jobs(
+        "op",
+        lambda: ngram_containment_pairs(
+            docs, "doc_id", "text", shingle_n=3, threshold=0.9
+        ),
     )
-
-    clean = spark.createDataFrame(
-        [(1, "alpha beta gamma", "en"), (2, "delta epsilon zeta", "en")],
-        "doc_id long, text string, lang string",
+    face = build_jobs(
+        "face",
+        lambda: CATALOG["dedup_ngram_containment"].spark_fn(spark, sf_dir),
     )
-    assert not corpus_has_exact_dups(clean, "text")
-    assert exact_dup_redundancy(clean, "text") == 0.0
-    # normalization variants collide (same content hash)
-    dup = spark.createDataFrame(
-        [(1, "alpha beta", "en"), (2, "  ALPHA   beta ", "en")],
-        "doc_id long, text string, lang string",
-    )
-    assert corpus_has_exact_dups(dup, "text")
-    assert exact_dup_redundancy(dup, "text") == 0.5  # 1 redundant of 2
-    # empty relation: 0.0, not a division error
-    assert exact_dup_redundancy(clean.filter(F.lit(False)), "text") == 0.0
-    # key_cols split: same content, different lang -> distinct keys
-    assert not corpus_has_exact_dups(dup.withColumn(
-        "lang", F.when(F.col("doc_id") == 1, "en").otherwise("de")
-    ), "text", key_cols=["lang"])
-    # NULL lang groups together (matching exact_collapse's window)
-    nulled = spark.createDataFrame(
-        [(1, "alpha beta", None), (2, "alpha beta", None)],
-        "doc_id long, text string, lang string",
-    )
-    assert corpus_has_exact_dups(nulled, "text", key_cols=["lang"])
-
-
-def test_collapsed_forms_on_clean_corpus_take_direct_path(spark):
-    """On a corpus with NO exact dups the gated operators must equal the
-    direct forms (they ARE the direct forms after the gate) — wiring check
-    for the skip-gate branch."""
-    from aidc_2018_timeseries_spark.operators.dedup import (
-        corpus_has_exact_dups,
-        minhash_candidate_pairs,
-        minhash_candidate_pairs_collapsed,
-        ngram_containment_pairs_collapsed,
-    )
-
-    # deterministic exact-clean corpus WITH near-dup structure: overlapping
-    # vocab slices (all distinct contents) plus a strict-subset doc, so the
-    # direct path actually produces pairs to compare
-    vocab = [f"w{j}" for j in range(14)]
-    docs = {i: " ".join(vocab[i : i + 8]) for i in range(6)}
-    docs[6] = " ".join(vocab[0:4])  # subset of doc 0 -> containment pair
-    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    assert not corpus_has_exact_dups(df, "text")
-    direct_c = {
-        (r["id_a"], r["id_b"], r["containment"])
-        for r in ngram_containment_pairs(df, "doc_id", "text", threshold=0.9).collect()
-    }
-    coll_c = {
-        (r["id_a"], r["id_b"], r["containment"])
-        for r in ngram_containment_pairs_collapsed(
-            df, "doc_id", "text", threshold=0.9
-        ).collect()
-    }
-    assert coll_c == direct_c
-    direct_m = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_candidate_pairs(df, "doc_id", "text").collect()
-    }
-    coll_m = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_candidate_pairs_collapsed(df, "doc_id", "text").collect()
-    }
-    assert coll_m == direct_m
-
-
-def test_minhash_gate_statistic_mean_copies(spark):
-    """Round-8 per-family gate (r7 verdict item 6): the MinHash family
-    routes on mean copies/content n/d, not redundancy — an all-doubled
-    corpus (50% redundant, mean copies 2) stays DIRECT, a 25-copy corpus
-    collapses; and the tri-state knob overrides either way with equal
-    results on both routes."""
-    from aidc_2018_timeseries_spark.operators.dedup import (
-        exact_dup_mean_copies,
-        exact_dup_redundancy,
-        exact_dup_stats,
-        minhash_candidate_pairs,
-        minhash_candidate_pairs_collapsed,
-    )
-
-    base = {
-        i: f"alpha beta gamma delta epsilon zeta eta theta doc{i} tail{i}"
-        for i in range(6)
-    }
-    doubled = spark.createDataFrame(
-        [(i, t) for i, t in base.items()]
-        + [(100 + i, t) for i, t in base.items()],
-        "doc_id long, text string",
-    )
-    n, d = exact_dup_stats(doubled, "text")
-    assert (n, d) == (12, 6)
-    assert abs(exact_dup_redundancy(doubled, "text") - 0.5) < 1e-12
-    assert abs(exact_dup_mean_copies(doubled, "text") - 2.0) < 1e-12
-
-    heavy = spark.createDataFrame(
-        [(k * 100 + i, t) for i, t in base.items() for k in range(25)],
-        "doc_id long, text string",
-    )
-    assert exact_dup_mean_copies(heavy, "text") == 25.0
-
-    # both routes exact on both corpora — the gate is purely a compute knob
-    for df in (doubled, heavy):
-        direct = {
-            (r["id_a"], r["id_b"])
-            for r in minhash_candidate_pairs(df, "doc_id", "text").collect()
-        }
-        for forced in (True, False, None):
-            got = {
-                (r["id_a"], r["id_b"])
-                for r in minhash_candidate_pairs_collapsed(
-                    df, "doc_id", "text", collapse=forced
-                ).collect()
-            }
-            assert got == direct, forced
+    assert len(face) == len(read) + len(op), (read, op, face)

@@ -109,8 +109,8 @@ def semdedup_forms() -> None:
 def dsir() -> None:
     from pyspark.sql import functions as F
 
-    import aidc_2018_timeseries_spark.operators.dedup as dd
     from aidc_2018_timeseries_spark.operators import text as tx
+    from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
 
     spark = _spark()
     corpora = [
@@ -121,7 +121,7 @@ def dsir() -> None:
     for tag, path in corpora:
         d = spark.read.parquet(path)
         parts = d.rdd.getNumPartitions()
-        d = dd._spread(d, "doc_id")
+        d = spread_for_compute(d, "doc_id")
         walls = []
         sel = rows = None
         for _ in range(2):
