@@ -6,8 +6,9 @@ initialized from those states that unrolls one step at a time feeding its
 own output back (M8/W15: the training path is teacher-forced, the
 inference path autoregressive).
 
-NumPy forward pass, distributed the same way as ml/tcn.py (mapInPandas) —
-training stays out of scope (no distributed backprop, SURVEY §7.7).
+NumPy forward pass over one sequence at a time (ml/tcn.py is the model
+that scores whole Arrow record batches with mapInArrow) — training stays
+out of scope (no distributed backprop, SURVEY §7.7).
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
-"""TCN inference stage (SURVEY §2.6 M1-M5, M10) — NumPy forward pass
-distributed with mapInPandas.
+"""TCN inference stage (SURVEY §2.6 M1-M5, M10) — batched NumPy forward
+pass distributed with mapInArrow.
 
 The reference declares these as ngraph graph ops
 (``topologies/custom_neon_classes.py:43-139`` dilated causal conv with
@@ -7,9 +7,12 @@ weight normalization, ``temporal_convolutional_network.py:7-65`` temporal
 blocks / residual blocks / dilation-2^i stacking, Affine readout at
 ``turbofan_with_tcn.py:80``); execution happened in the ngraph
 transformer. Here the forward pass is plain NumPy over Arrow record
-batches — the Spark plan stays scan-shaped: windows stream through Python
-workers partition-by-partition, nothing collects to the driver, so 100 TB
-of windows is just more partitions.
+batches: each batch's window column is read with pyarrow, gathered into
+(N, T, F) arrays and scored with batched forwards, the reference's
+minibatch shape (``datasets/timeseries.py:90-115``). The Spark plan stays
+scan-shaped: windows stream through Python workers partition-by-partition,
+nothing collects to the driver, so 100 TB of windows is just more
+partitions.
 
 Training is out of scope by design (SURVEY §7.7): no distributed backprop.
 Weights are deterministic (seeded) or caller-provided; inference parity
@@ -27,11 +30,20 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 WEIGHT_NORM_EPS = 1e-3  # reference custom_neon_classes.py:86
+
+#: ``window_predictions`` scores windows of one length in slices of at most
+#: this many (window, timestep) rows, so that every temporary of the forward
+#: stays cache-sized and is served from the allocator's free lists instead
+#: of fresh pages. On a 4-core x86 host, 2160 windows (T=30, F=24, 3 levels
+#: x 16 channels) took 275 ms CPU in one forward, 55 ms of it kernel time
+#: for ~17k page faults per call, and 125 ms with no page faults in
+#: 2048-row slices.
+FORWARD_ROWS = 2048
 
 
 def weight_normalized(v: np.ndarray, g: np.ndarray) -> np.ndarray:
@@ -46,17 +58,19 @@ def causal_dilated_conv(x: np.ndarray, w: np.ndarray, b: np.ndarray, dilation: i
     zero-padding of (k-1)*dilation — the 'causal' padding flag at
     ``temporal_convolutional_network.py:13``).
 
-    x: (T, C_in); w: (k, C_in, C_out); b: (C_out,) → (T, C_out)
+    x: (T, C_in) or a batch (N, T, C_in); w: (k, C_in, C_out); b: (C_out,)
+    → (T, C_out) / (N, T, C_out). Each tap is one (N·T, C_in) @ (C_in, C_out)
+    GEMM over the whole batch.
     """
     k = w.shape[0]
-    t_len = x.shape[0]
+    t_len = x.shape[-2]
     pad = (k - 1) * dilation
-    xp = np.concatenate([np.zeros((pad, x.shape[1])), x], axis=0)
-    out = np.zeros((t_len, w.shape[2]))
+    xp = np.concatenate([np.zeros(x.shape[:-2] + (pad, x.shape[-1])), x], axis=-2)
+    out = np.zeros(x.shape[:-1] + (w.shape[2],))
     for j in range(k):
         # tap j looks back (k-1-j)*dilation steps
-        seg = xp[j * dilation : j * dilation + t_len, :]
-        out += seg @ w[j]
+        seg = xp[..., j * dilation : j * dilation + t_len, :]
+        out += (seg.reshape(-1, seg.shape[-1]) @ w[j]).reshape(out.shape)
     return out + b
 
 
@@ -92,11 +106,12 @@ def apply_spatial_dropout(
     channel mask at full value; INFERENCE multiplies by the keep
     probability — the deterministic expectation, which is why the
     long-standing inference fold (keep=1.0 default → identity) was exact
-    rather than an approximation. h: (T, C)."""
+    rather than an approximation. h: (T, C) or (N, T, C); one mask serves
+    the whole batch."""
     if keep >= 1.0:
         return h
     if training:
-        return h * spatial_dropout_mask(h.shape[1], keep, seed, block_idx, layer_idx)
+        return h * spatial_dropout_mask(h.shape[-1], keep, seed, block_idx, layer_idx)
     return h * keep
 
 
@@ -128,15 +143,18 @@ class TCNWeights:
         self.readout = (rng.normal(0, 0.1, size=(self.n_hidden, 1)), rng.normal(0, 0.1, size=1))
 
 
-def tcn_forward(
+def tcn_forward_batch(
     x: np.ndarray,
     weights: TCNWeights,
     *,
     keep: float = 1.0,
     training: bool = False,
     dropout_seed: int = 0,
-) -> float:
-    """Forward pass for one (T, F) window → scalar prediction.
+) -> np.ndarray:
+    """Forward pass for a batch of equal-length (N, T, F) windows → (N,)
+    predictions — the reference's minibatch shape
+    (``datasets/timeseries.py:90-115``). Weight normalization runs once per
+    block per call, every causal conv is one GEMM per tap over all N·T rows.
 
     ``keep``/``training``/``dropout_seed`` wire M2 spatial dropout after
     each conv+relu, matching the reference block layout
@@ -154,7 +172,59 @@ def tcn_forward(
         res = h if side is None else causal_dilated_conv(h, side, np.zeros(side.shape[2]), 1)
         h = relu(main + res)
     w, b = weights.readout
-    return float((h[-1] @ w + b)[0])  # last timepoint (W12) + Affine (M10)
+    return (h[:, -1] @ w + b)[:, 0]  # last timepoint (W12) + Affine (M10)
+
+
+def tcn_forward(
+    x: np.ndarray,
+    weights: TCNWeights,
+    *,
+    keep: float = 1.0,
+    training: bool = False,
+    dropout_seed: int = 0,
+) -> float:
+    """Forward pass for one (T, F) window → scalar prediction: the N = 1
+    case of ``tcn_forward_batch``."""
+    return float(
+        tcn_forward_batch(
+            x[None], weights, keep=keep, training=training, dropout_seed=dropout_seed
+        )[0]
+    )
+
+
+def window_predictions(
+    windows: pa.Array, feature_names: list[str], weights: TCNWeights
+) -> pa.Array:
+    """Score one Arrow column of ``list<struct<features>>`` windows → a
+    double array, null where a window is null, empty or holds a null
+    feature value.
+
+    The struct fields become one (elements, F) matrix; windows of each
+    distinct length T are then gathered to (N, T, F) and scored with
+    ``tcn_forward_batch``, one call per ``FORWARD_ROWS // T`` windows — no
+    per-window loop, and windows of different lengths are never padded
+    together.
+    """
+    lengths = windows.value_lengths().fill_null(0).to_numpy()
+    elems = windows.flatten()  # skips the slots of null lists
+    fields = dict(zip([f.name for f in elems.type], elems.flatten()))
+    x = np.empty((len(elems), len(feature_names)))
+    null = np.zeros(len(elems), dtype=bool)
+    for j, name in enumerate(feature_names):
+        col = fields[name]  # carries the struct's own nulls
+        x[:, j] = col.to_numpy(zero_copy_only=False)
+        if col.null_count:
+            null |= col.is_null().to_numpy(zero_copy_only=False)
+    ok = lengths > 0
+    ok[np.repeat(np.arange(len(lengths)), lengths)[null]] = False
+    starts = np.cumsum(lengths) - lengths
+    pred = np.zeros(len(lengths))
+    for t_len in np.unique(lengths[ok]):
+        idx = np.flatnonzero(ok & (lengths == t_len))
+        step = max(1, FORWARD_ROWS // t_len)
+        for part in np.split(idx, range(step, len(idx), step)):
+            pred[part] = tcn_forward_batch(x[starts[part, None] + np.arange(t_len)], weights)
+    return pa.array(pred, mask=~ok, type=pa.float64())
 
 
 def predict_windows(
@@ -164,11 +234,15 @@ def predict_windows(
     feature_cols: list[str] | None = None,
     id_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Distributed inference: mapInPandas over Arrow batches of windows.
+    """Distributed inference: mapInArrow, batched forwards over each record
+    batch (per window length, in ``FORWARD_ROWS`` slices) via
+    ``window_predictions``.
 
     Input rows carry ``window`` = array<struct<features>>; output keeps
-    ``id_cols`` plus a double ``pred``. The UDF touches only its partition
-    — bounded memory, no shuffle, linear scale-out.
+    ``id_cols`` — passed through as the Arrow arrays Spark sent — plus a
+    double ``pred`` (null for windows with a null feature value). The UDF
+    touches only its partition — bounded memory, no shuffle, linear
+    scale-out.
     """
     id_cols = id_cols or [c for c in df.columns if c != window_col]
     feature_names = feature_cols or [
@@ -177,15 +251,13 @@ def predict_windows(
     out_schema = T.StructType(
         [df.schema[c] for c in id_cols] + [T.StructField("pred", T.DoubleType())]
     )
+    names = [*id_cols, "pred"]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            preds = []
-            for win in pdf[window_col]:
-                x = np.array([[row[f] for f in feature_names] for row in win])
-                preds.append(tcn_forward(x, weights))
-            res = pdf[id_cols].copy()
-            res["pred"] = preds
-            yield res
+    def infer(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            pred = window_predictions(batch.column(window_col), feature_names, weights)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in id_cols] + [pred], names=names
+            )
 
-    return df.mapInPandas(infer, schema=out_schema)
+    return df.select(*id_cols, window_col).mapInArrow(infer, schema=out_schema)
