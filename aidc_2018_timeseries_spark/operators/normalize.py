@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aidc_2018_timeseries_spark.operators._sql import WHOLE_PARTITION, _q, over
+
 
 def per_key_max_scale(
     df: DataFrame,
@@ -35,19 +37,17 @@ def per_key_max_scale(
     (identical result), letting Catalyst satisfy every window in the chain
     with one sort instead of sorting once for the unordered spec and again
     for the ordered ones.
+
+    One projection: every ``max(c) OVER (…)`` sits in a single
+    ``selectExpr``, so Catalyst evaluates them in one Window node. Input
+    columns keep their positions (``suffix=""`` scales in place); new
+    ``c + suffix`` columns follow in ``cols`` order.
     """
-    if order:
-        w = (
-            Window.partitionBy(key)
-            .orderBy(*[F.col(c) for c in order])
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-    else:
-        w = Window.partitionBy(key)
-    out = df
-    for c in cols:
-        out = out.withColumn(c + suffix, F.col(c) / F.max(F.col(c)).over(w))
-    return out
+    spec = over(key, order or (), WHOLE_PARTITION if order else "")
+    scaled = {c + suffix: f"{_q(c)} / max({_q(c)}) {spec}" for c in cols}
+    exprs = [f"{scaled.pop(n)} AS {_q(n)}" if n in scaled else _q(n) for n in df.columns]
+    exprs += [f"{e} AS {_q(n)}" for n, e in scaled.items()]
+    return df.selectExpr(*exprs)
 
 
 def trailing_window_zscore(

@@ -6,15 +6,18 @@ The two pad rules are intentionally DIFFERENT (SURVEY §7 trap):
 - music W6 left-pads with ZEROS / left-TRUNCATES to exactly seq_len+1
   (reference ``music.py:37-45``).
 
-Both are pure higher-order array expressions — no UDF, no shuffle.
+The array forms are pure higher-order array expressions — no UDF, no
+shuffle; the long form adds one window over the series partition.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from aidc_2018_timeseries_spark.operators._sql import WHOLE_PARTITION, _q, over
 
 
 def _c(col: Column | str) -> Column:
@@ -44,35 +47,37 @@ def pad_short_series_front_repeat_long(
     leading rows that copy the series' first row (reference
     ``turbofan.py:133-138`` pads to T*skip before windowing).
 
-    ``df`` must contain exactly (key, order, value_cols); ``order`` must be
-    numeric — pad rows take order values min(order) - 1 .. min(order) - n,
-    so they sort strictly before the real rows.
+    Output columns are (key, order, value_cols); other input columns are
+    dropped. ``order`` must be numeric — pad rows take order values
+    min(order) - 1 .. min(order) - n, so they sort strictly before the
+    real rows; every row's order is ``order - k`` with a BIGINT ``k``, so
+    an INT order column comes out BIGINT.
 
-    Scale: one window pass to find per-series length/first-row, pad rows
-    are generated from one row per short series (explode of a sequence) —
-    no shuffle beyond the series partitioning, and the union is free
-    (narrow).
+    Scale: no union and no second read of the input. One window
+    projection over the series' ordered spec numbers the rows and counts
+    the series; one generator projection then explodes
+    ``sequence(n_pad, 0, -1)``, which is ``[0]`` (the row itself) for
+    every row except a short series' first row, which becomes itself plus
+    its n_pad copies. Two projections, because Spark cannot put a
+    generator and window functions in one. The ordered spec is the one
+    ``per_key_max_scale(order=...)`` and the windowing operators use, so
+    the window shares their sort.
     """
-    cols = [key, order, *value_cols]
-    w = Window.partitionBy(key)
-    first_w = Window.partitionBy(key).orderBy(F.col(order))
-    annotated = (
-        df.select(*cols)
-        .withColumn("_len", F.count(F.lit(1)).over(w))
-        .withColumn("_rn", F.row_number().over(first_w))
+    k, o = _q(key), _q(order)
+    values = [_q(c) for c in value_cols]
+    counted = df.selectExpr(
+        k,
+        o,
+        *values,
+        f"row_number() {over(key, order)} AS _rn",
+        f"count(1) {over(key, order, WHOLE_PARTITION)} AS _len",
     )
-    firsts = annotated.filter((F.col("_rn") == 1) & (F.col("_len") < target_len))
-    pads = firsts.select(
-        key,
-        F.explode(F.sequence(F.lit(1), F.lit(target_len) - F.col("_len"))).alias("_j"),
-        F.col(order).alias("_first_order"),
-        *value_cols,
-    ).select(
-        key,
-        (F.col("_first_order") - F.col("_j")).alias(order),
-        *value_cols,
+    n_pad = f"IF(_rn = 1, greatest({int(target_len)} - _len, 0L), 0L)"
+    return counted.selectExpr(
+        k,
+        f"explode(transform(sequence({n_pad}, 0L, -1L), _pad_k -> {o} - _pad_k)) AS {o}",
+        *values,
     )
-    return df.select(*cols).unionByName(pads)
 
 
 def pad_or_truncate_front_zero(arr: Column | str, target_len: int, zero: Column | None = None) -> Column:

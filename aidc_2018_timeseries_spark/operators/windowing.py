@@ -27,6 +27,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aidc_2018_timeseries_spark.operators._sql import _q, over
+
 
 def _order_cols(order: str | Sequence[str]) -> list[Column]:
     names = [order] if isinstance(order, str) else list(order)
@@ -92,19 +94,17 @@ def rolling_window_arrays(
     a DataFrame. Materialization amplifies data ×T — keep it the LAST step
     before the ML stage, after filters/stride have cut N (same reason the
     reference uses as_strided views).
+
+    One projection: the BIGINT ``rn`` and the ``collect_list`` frame share
+    the ordered spec, so Catalyst evaluates both in one Window node.
     """
-    df = with_row_index(df, key, order)
-    frame = (
-        Window.partitionBy(key)
-        .orderBy(*_order_cols(order))
-        .rowsBetween(-(seq_len - 1), Window.currentRow)
-    )
-    window_expr = F.collect_list(F.struct(*[F.col(c) for c in feature_cols])).over(frame)
-    return (
-        df.withColumn(window_col, window_expr)
-        .filter(F.col("rn") >= seq_len)
-        .select(key, "rn", window_col)
-    )
+    fields = ", ".join(_q(c) for c in feature_cols)
+    frame = f"ROWS BETWEEN {int(seq_len) - 1} PRECEDING AND CURRENT ROW"
+    return df.selectExpr(
+        _q(key),
+        f"CAST(row_number() {over(key, order)} AS BIGINT) AS rn",
+        f"collect_list(struct({fields})) {over(key, order, frame)} AS {_q(window_col)}",
+    ).where(f"rn >= {int(seq_len)}")
 
 
 def rolling_window_agg_bucketed(

@@ -5,11 +5,15 @@ load → per-trajectory max scaling (A1) → strided sliding windows (W2) →
 RUL labels capped (W3+P5) → per-window normalization (A2) → shuffle (O2).
 
 Spark-first: the whole chain is ONE logical plan with ONE hash shuffle on
-the series key — every step is a window function over the same partition
-spec, so Catalyst collapses them into a single sort+window stage. At 100 TB
-(≈ millions of engines × long histories) this scales linearly: no series
-ever crosses an executor boundary, and nothing materializes windows until
-the optional array step at the very end.
+the series key. The train path (``turbofan_train_windows``) is a short
+chain of SQL-expression projections (scale, pad, window arrays, label)
+whose windows all partition by the series key: the scale maxima and the
+pad's row number and count use the same ordered spec and share one sort;
+the pad's explode rewrites the order column, so the window arrays sort
+once more; the label's ``max(rn)`` needs only the key order those arrays
+already have. Physical plan: 1 Exchange, 2 Sorts, no Union. At 100 TB (≈ millions of engines × long histories)
+this scales linearly: no series ever crosses an executor boundary, and
+nothing materializes windows until the array step at the very end.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from aidc_2018_timeseries_spark.operators._sql import _q, over
 from aidc_2018_timeseries_spark.operators.normalize import per_key_max_scale
 from aidc_2018_timeseries_spark.operators.padding import pad_short_series_front_repeat_long
 from aidc_2018_timeseries_spark.operators.windowing import last_window, rolling_window_arrays
@@ -81,20 +86,15 @@ def turbofan_train_windows(
     ``y = L - T - k*skip`` capped (reference ``turbofan.py:118-163``).
     """
     if scale:
-        df = per_key_max_scale(df, key, list(feature_cols), suffix="")
-    df = df.select(key, order, *feature_cols)
+        df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
     df = pad_short_series_front_repeat_long(df, key, order, feature_cols, seq_len * skip)
     windows = rolling_window_arrays(df, key, order, feature_cols, seq_len)
     # label of each window's END row is a function of (series_len, rn);
     # max(rn) over the series == series length, so no re-join is needed
-    from pyspark.sql import Window as W
-
-    windows = windows.withColumn("_sl", F.max("rn").over(W.partitionBy(key)))
-    return (
-        windows.filter(((F.col("rn") - seq_len) % skip) == 0)
-        .withColumn("rul", F.least(F.col("_sl") - F.col("rn"), F.lit(cap)).cast("long"))
-        .drop("_sl")
-    )
+    rul = f"least(max(rn) {over(key)} - rn, {int(cap)})"
+    return windows.selectExpr(
+        _q(key), "rn", "window", f"CAST({rul} AS BIGINT) AS rul"
+    ).where(f"(rn - {int(seq_len)}) % {int(skip)} = 0")
 
 
 def turbofan_val_windows(
@@ -116,8 +116,7 @@ def turbofan_val_windows(
     (reference pads to T*skip with skip=1 here).
     """
     if scale:
-        df = per_key_max_scale(df, key, list(feature_cols), suffix="")
-    df = df.select(key, order, *feature_cols)
+        df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
     df = pad_short_series_front_repeat_long(df, key, order, feature_cols, seq_len)
     tail = last_window(df, key, order, seq_len)
     windows = (

@@ -4,11 +4,14 @@ turbofan / music / forecasting pipelines, against NumPy-oracle semantics.
 
 from __future__ import annotations
 
+import gc
 import math
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aidc_2018_timeseries_spark.pipelines.forecasting import (
     next_point_dataset,
@@ -88,6 +91,95 @@ def test_turbofan_train_windows_counts_and_labels(spark, cmapss_file):
     # windows are exactly seq_len long
     sizes = out.select(F.size("window").alias("s")).distinct().collect()
     assert [r["s"] for r in sizes] == [seq_len]
+
+
+@pytest.fixture(scope="module")
+def fleet_parquet(spark, cmapss_file, tmp_path_factory):
+    """The CMAPSS fixture as (trajectory_id, t, 24 features) parquet: a
+    plain scan, so the only shuffle in a plan is the pipeline's own."""
+    path = str(tmp_path_factory.mktemp("fleet") / "fleet.parquet")
+    read_cmapss(spark, cmapss_file).select("trajectory_id", "t", *FEATURE_COLS).write.parquet(path)
+    return path
+
+
+def _py4j_commands(spark, build) -> int:
+    """py4j commands ``build()`` sends, object releases (``m``/``d``)
+    left out; gc is off so no release of an unrelated object lands in
+    the count."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.disable()
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        client.send_command = send
+        gc.enable()
+    return sum(1 for c in sent if not c.startswith("m\nd\n"))
+
+
+def _plan_nodes(df) -> list[str]:
+    """Node names of the physical plan before adaptive execution
+    re-plans it (AdaptiveSparkPlan prints its initial plan until run)."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    return [re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line).split(" ")[0] for line in text.splitlines()]
+
+
+def test_turbofan_train_windows_build_py4j_budget(spark, fleet_parquet):
+    """Building the 24-feature train pipeline is a few SQL-expression
+    projections, not one Column chain per feature: ≤ 300 py4j commands."""
+    df = spark.read.parquet(fleet_parquet)
+    df.schema  # cache the input schema outside the count
+    build = lambda: turbofan_train_windows(df, FEATURE_COLS, seq_len=10, skip=3)  # noqa: E731
+    assert _py4j_commands(spark, build) <= 300
+
+
+def test_turbofan_train_windows_plan_shape(spark, fleet_parquet):
+    """One shuffle on the series key, the scale and pad windows sharing
+    the first sort, the window arrays the second; no Union."""
+    df = spark.read.parquet(fleet_parquet)
+    nodes = _plan_nodes(turbofan_train_windows(df, FEATURE_COLS, seq_len=10, skip=3))
+    assert nodes.count("Exchange") == 1, nodes
+    assert "Union" not in nodes, nodes
+    assert nodes.count("Sort") <= 2, nodes
+
+
+def test_turbofan_train_windows_quotes_column_names(spark, fleet_parquet):
+    """Names with a space and a backtick go through every projection and
+    give the same windows as plain names."""
+    odd = {"sensor_1": "sensor 1`x", "trajectory_id": "engine id`"}
+    df = spark.read.parquet(fleet_parquet)
+    feats = [odd.get(c, c) for c in FEATURE_COLS]
+    renamed = df.toDF(*[odd.get(c, c) for c in df.columns])
+    got = turbofan_train_windows(renamed, feats, seq_len=10, skip=3, key="engine id`")
+    want = turbofan_train_windows(df, FEATURE_COLS, seq_len=10, skip=3)
+    assert got.columns == ["engine id`", "rn", "window", "rul"]
+    assert got.schema["window"].dataType.elementType.names == feats
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_turbofan_train_windows_empty_fleet(spark, fleet_parquet):
+    """An empty fleet gives zero windows with the usual schema."""
+    df = spark.read.parquet(fleet_parquet).limit(0)
+    out = turbofan_train_windows(df, FEATURE_COLS, seq_len=10, skip=3)
+    window = T.ArrayType(
+        T.StructType([T.StructField(c, T.DoubleType()) for c in FEATURE_COLS]), False
+    )
+    assert out.schema == T.StructType(
+        [
+            T.StructField("trajectory_id", T.IntegerType()),
+            T.StructField("rn", T.LongType(), False),
+            T.StructField("window", window, False),
+            T.StructField("rul", T.LongType(), False),
+        ]
+    )
+    assert out.collect() == []
 
 
 def test_turbofan_val_windows_last_rows_and_base_rul(spark, cmapss_file, rul_file):

@@ -188,3 +188,61 @@ def test_pad_truncate_front_zero_properties(spark, lengths, target):
             assert got[i] == orig[n - target:]  # keep the LAST rows
         else:
             assert got[i] == [0.0] * (target - n) + orig  # zeros at the FRONT
+
+
+@given(
+    target=st.integers(min_value=2, max_value=60),
+    lengths=st.lists(st.integers(min_value=1, max_value=60), min_size=0, max_size=4),
+    dup_every=st.lists(st.integers(min_value=1, max_value=3), min_size=7, max_size=7),
+)
+@_SETTINGS
+def test_pad_short_series_long_form_properties(spark, target, lengths, dup_every):
+    """W5 long form: every series comes out with max(L, target) rows; pad
+    rows take order values min-1 .. min-n and copy the series' first row
+    (one of the rows at min(t) when t repeats); real rows pass through;
+    the INT order column widens to BIGINT."""
+    from pyspark.sql.types import (
+        DoubleType,
+        IntegerType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from aidc_2018_timeseries_spark.operators.padding import (
+        pad_short_series_front_repeat_long,
+    )
+
+    lengths = [1, target - 1, target, *lengths]  # always draw 1, T-1 and T
+    rows = [
+        # t repeats each value dup_every[sid] times: duplicate timestamps
+        (sid, 5 + i // dup_every[sid], float(sid * 1000 + i), f"r{sid}.{i}")
+        for sid, length in enumerate(lengths)
+        for i in range(length)
+    ]
+    df = spark.createDataFrame(rows, "sid INT, t INT, v DOUBLE, w STRING")
+    out = pad_short_series_front_repeat_long(df, "sid", "t", ["v", "w"], target)
+    assert out.schema == StructType(
+        [
+            StructField("sid", IntegerType()),
+            StructField("t", LongType()),
+            StructField("v", DoubleType()),
+            StructField("w", StringType()),
+        ]
+    )
+    by_sid: dict[int, list] = {}
+    for r in out.collect():
+        by_sid.setdefault(r["sid"], []).append(tuple(r))
+    for sid, length in enumerate(lengths):
+        got = by_sid[sid]
+        assert len(got) == max(length, target), (sid, length, target)
+        real = [r for r in rows if r[0] == sid]
+        t_min = min(r[1] for r in real)
+        pads = sorted((r for r in got if r[1] < t_min), key=lambda r: r[1])
+        assert sorted(r for r in got if r[1] >= t_min) == sorted(real)
+        n = max(target - length, 0)
+        assert [r[1] for r in pads] == list(range(t_min - n, t_min))
+        firsts = {r[2:] for r in real if r[1] == t_min}
+        assert len({r[2:] for r in pads}) <= 1
+        assert all(r[2:] in firsts for r in pads)
