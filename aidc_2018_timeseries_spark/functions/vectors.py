@@ -40,10 +40,10 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
 
     The guard tests each norm INDIVIDUALLY, not their product: for
     subnormal-magnitude vectors (components ≲ 1e-154) two positive norms
-    can multiply to exactly 0.0, and the Arrow kernels
-    (assign_centroids_arrow et al.) mask on per-vector norm > 0 — a
-    product guard would make the expression and Arrow forms disagree on
-    exactly those vectors (ADVICE r5)."""
+    can multiply to exactly 0.0, and the Arrow kernels in
+    operators/similarity.py (assign_centroids et al.) mask on per-vector
+    norm > 0 — a product guard would make these folds and the kernels
+    disagree on exactly those vectors (ADVICE r5)."""
     return F.when(
         (l2_norm(a) > 0) & (l2_norm(b) > 0),
         dot(a, b) / (l2_norm(a) * l2_norm(b)),

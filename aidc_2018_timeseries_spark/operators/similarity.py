@@ -14,11 +14,19 @@ Two tiers, per the 100 TB design brief:
   query shape.
 - PERSISTED IVF (round 8) — the deployment tier: ivf_build_persisted
   writes the inverted file bucketed on centroid_id once;
-  ivf_probe_persisted(arrow=True) routes and rescores through Arrow
-  GEMMs with bucket-pruned scans (2000-query probe at 200k vectors:
-  4.9s vs 62.8s through the fold expressions — SCALING.md round 8).
-  ivf_topk remains the single-pass oracle-able form; at corpus scale
-  prefer build-once + persisted probes.
+  ivf_probe_persisted routes and rescores with bucket-pruned scans.
+  ivf_topk is the single-pass form; at corpus scale prefer build-once +
+  persisted probes.
+
+Every per-row × per-centroid (or × per-plane) step — centroid
+assignment, query routing, IVF candidate rescore, sign-LSH signatures,
+PQ codes, the SemDeDup pair stage — has ONE implementation: a batched
+NumPy kernel over Arrow batches (mapInPandas / applyInPandas), with
+similarities rounded by ``_round6_half_up`` (the ``F.round``/DuckDB
+HALF_UP convention) and ties broken to the smallest id. The DuckDB
+oracles of the catalog faces check these kernels directly. Brute-force
+top-k, the brute-force dup pairs and the final candidate rescores stay
+JVM-side fold expressions (functions/vectors.py).
 """
 
 from __future__ import annotations
@@ -26,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from aidc_2018_timeseries_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from aidc_2018_timeseries_spark.functions.vectors import dot, l2_norm
 from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
 
 
@@ -37,7 +45,7 @@ def _round6_half_up(x):
     HALF_UP everywhere except within an ulp of a ×1e6 halfway boundary,
     where ``F.round`` rounds the double's SHORTEST DECIMAL REPR
     (BigDecimal.valueOf); those rare rows take an exact Decimal(repr)
-    path — the same rescue the PQ kernel uses. The halfway-detection
+    path. The halfway-detection
     window scales with ulp(|x|·1e6) (ADVICE r9): a fixed 1e-6 window is
     narrower than one ulp once |x| exceeds ~1e4, so large-magnitude
     true-halfway values would have missed the Decimal rescue. The
@@ -128,6 +136,27 @@ def brute_force_topk(
     )
 
 
+def _centroid_matrix(centroids: DataFrame, id_col: str, vec_col: str):
+    """Collect a centroid table driver-side as ``(ids, Mn)``: ids sorted
+    ascending (int64) and ``Mn`` the (dim × C) matrix of their
+    L2-normalized vectors, so one GEMM scores a batch against every
+    centroid and argmax/argsort ties fall to the smallest id. Zero-norm
+    centroids are dropped — a normalized zero column would score 0.0 and
+    beat genuinely negative similarities. Bounded: C × dim floats, the
+    table an IVF router holds. An empty or all-zero table gives ``C = 0``;
+    the kernels then emit no rows."""
+    import numpy as np
+
+    rows = sorted(centroids.select(id_col, vec_col).collect(), key=lambda r: r[0])
+    if not rows:
+        return np.empty(0, dtype=np.int64), np.empty((0, 0))
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    M = np.array([r[1] for r in rows], dtype=np.float64)
+    norms = np.linalg.norm(M, axis=1)
+    keep = norms > 0
+    return ids[keep], (M[keep] / norms[keep][:, None]).T
+
+
 def assign_centroids(
     vectors: DataFrame,
     centroids: DataFrame,
@@ -136,58 +165,18 @@ def assign_centroids(
     centroid_id_col: str = "centroid_id",
     centroid_vec_col: str = "centroid_vec",
 ) -> DataFrame:
-    """IVF build: nearest centroid per vector (centroids broadcast).
+    """IVF build: nearest centroid per vector, as ONE dense normalized
+    GEMM per Arrow batch — (batch_rows × dim) @ (dim × C).
 
     One scan over the corpus; output is the inverted file — at scale you
-    write it back partitioned/bucketed by centroid_id so probes prune files.
-    """
-    # norm-once (round 8): one l2_norm fold per vector / per centroid
-    # instead of per (vector, centroid) pair — bit-identical (see
-    # brute_force_topk)
-    v = spread_for_compute(vectors, id_col).withColumn("_nv", l2_norm(vec_col))
-    c = centroids.withColumn("_nc", l2_norm(centroid_vec_col))
-    joined = v.crossJoin(F.broadcast(c))
-    sim = F.round(
-        F.when(
-            (F.col("_nv") > 0) & (F.col("_nc") > 0),
-            dot(F.col(vec_col), F.col(centroid_vec_col))
-            / (F.col("_nv") * F.col("_nc")),
-        ),
-        6,
-    )
-    return (
-        joined.select(F.col(id_col), F.col(vec_col), F.col(centroid_id_col), sim.alias("csim"))
-        # zero-norm vectors have NO nearest centroid (cosine undefined →
-        # NULL); drop them from the index rather than silently assigning
-        # the lowest centroid_id via a NULL-ranked window (zero-vector
-        # edge battery; the Arrow form masks the same rows)
-        .filter(F.col("csim").isNotNull())
-        .withColumn("rk", F.row_number().over(Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col(centroid_id_col))))
-        .filter(F.col("rk") == 1)
-        .select(id_col, vec_col, centroid_id_col)
-    )
-
-
-def assign_centroids_arrow(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    centroid_vec_col: str = "centroid_vec",
-) -> DataFrame:
-    """IVF build, Arrow-batched: nearest centroid per vector as ONE dense
-    normalized GEMM per batch — (batch_rows × dim) @ (dim × C) — instead of
-    C interpreted fold expressions per row.
-
-    Why this exists: the expression form (``assign_centroids``) costs
-    n × C interpreted 64-dim folds; with stride-derived centroids C grows
-    with n, making the build QUADRATIC — measured 152s for n=20k vs 12s
-    for the GEMM form's sibling (SCALING.md round-4 ANN audit). Centroids
-    are collected driver-side (bounded: C × dim floats — an IVF index
-    build step, run once and reused at scale) and closed over, so workers
-    do pure BLAS. Argmax tiebreak = smallest centroid_id on the
-    6-dp-rounded similarity, matching the expression form.
+    write it back partitioned/bucketed by centroid_id so probes prune
+    files. Centroids are collected driver-side (``_centroid_matrix``) and
+    closed over, so workers do pure BLAS; an n × C fold-expression build
+    was measured QUADRATIC once C grows with n (152s vs 12s at n=20k,
+    SCALING.md round-4 ANN audit). Argmax tiebreak = smallest
+    centroid_id on the 6-dp-rounded similarity. Zero-norm vectors have
+    no nearest centroid (cosine undefined) and are dropped from the
+    index.
     """
     import numpy as np
     import pandas as pd
@@ -195,45 +184,19 @@ def assign_centroids_arrow(
     id_t = vectors.schema[id_col].dataType.simpleString()
     vec_t = vectors.schema[vec_col].dataType.simpleString()
     cid_t = centroids.schema[centroid_id_col].dataType.simpleString()
-    rows = sorted(centroids.collect(), key=lambda r: r[centroid_id_col])
-    if not rows:
-        # degrade like the expression form: no centroids → no assignments
-        # (np.linalg.norm on a 0-row matrix would raise driver-side)
-        return (
-            vectors.select(id_col, vec_col)
-            .filter(F.lit(False))
-            .withColumn(centroid_id_col, F.lit(None).cast(cid_t))
-        )
-    ids = np.array([r[centroid_id_col] for r in rows], dtype=np.int64)
-    M = np.array([r[centroid_vec_col] for r in rows], dtype=np.float64)
-    # zero-norm CENTROIDS are dropped like the expression form drops their
-    # NULL cosines — a 1e-300-normalized zero column would score 0.0 and
-    # beat genuinely negative similarities, silently winning the argmax
-    cnorms = np.linalg.norm(M, axis=1)
-    ckeep = cnorms > 0
-    if not ckeep.any():
-        return (
-            vectors.select(id_col, vec_col)
-            .filter(F.lit(False))
-            .withColumn(centroid_id_col, F.lit(None).cast(cid_t))
-        )
-    ids, M = ids[ckeep], M[ckeep]
-    Mn = (M / cnorms[ckeep][:, None]).T
+    ids, Mn = _centroid_matrix(centroids, centroid_id_col, centroid_vec_col)
 
     def gen(batches):
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(ids):
                 continue
             V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             norms = np.linalg.norm(V, axis=1, keepdims=True)
-            # zero-norm vectors: no nearest centroid — mask them out, same
-            # semantics as the expression form's NULL-cosine filter
             keep = norms[:, 0] > 0
             if not keep.any():
                 continue
             pdf = pdf[keep].reset_index(drop=True)
-            Vn = V[keep] / norms[keep]
-            S = _round6_half_up(Vn @ Mn)
+            S = _round6_half_up((V[keep] / norms[keep]) @ Mn)
             # argmax returns the FIRST max; columns are centroid_id-ascending
             best = ids[np.argmax(S, axis=1)]
             yield pd.DataFrame(
@@ -257,7 +220,7 @@ def stride_centroids(
     )
 
 
-def _score_candidates_arrow(
+def _score_candidates(
     cand: DataFrame,
     id_col: str,
     vec_col: str,
@@ -266,11 +229,11 @@ def _score_candidates_arrow(
 ) -> DataFrame:
     """Shared Arrow candidate scorer for the IVF probe paths: one
     vectorized einsum batch over pre-joined (query, candidate) rows —
-    (query_id, neighbor_id, sim double), NULL sim dropped. Rounding is
-    ``_round6_half_up`` — decimal HALF_UP at 6 dp, the same convention as
-    the fold expressions' ``F.round`` (round 9 fix: ``np.round`` is
-    half-to-even and could flip a threshold/tie on a decimal halfway
-    boundary) — and the zero-norm policy matches the fold form."""
+    (query_id, neighbor_id, sim double). Rounding is ``_round6_half_up``
+    — decimal HALF_UP at 6 dp, the ``F.round`` convention (``np.round``
+    is half-to-even and could flip a tie on a decimal halfway boundary);
+    a zero-norm vector on either side gives NULL sim, which is dropped
+    (the brute_force_topk policy)."""
     import numpy as np
     import pandas as pd
 
@@ -317,86 +280,34 @@ def ivf_topk(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     n_centroids: int | None = None,
-    arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k: probe the n_probe nearest centroid cells only.
 
-    Recall < 1 by design; tests measure recall against brute force rather
-    than exact equality (the driver's rows-only check applies) —
-    EXCEPT under ``arrow=False``, which swaps the GEMM assignment for the
-    bit-reproducible expression form (in-order fold + HALF_UP round,
-    matching DuckDB's sequential list_dot_product): with pinned knobs the
-    whole approximate result becomes deterministic and SQL-expressible,
-    which is what the oracle-checked quality face ``knn_ivf_eval`` runs
-    (round-6 verdict item 1).
+    Recall < 1 by design; with pinned knobs the result is nevertheless
+    deterministic (6-dp HALF_UP rounding, smallest-id ties) and
+    SQL-expressible, which is what the oracle-checked quality face
+    ``knn_ivf_eval`` runs against brute force.
 
     ``n_centroids`` overrides ``centroid_stride`` with a corpus-size-
     independent cell count (stride = n / n_centroids, one count() job at
     build time). This is the scale knob: a FIXED stride makes C grow with
     the corpus and the build cost n·C quadratic; fixing C (≈√n is the
     classic IVF choice) keeps the build linear and the probed fraction
-    n_probe/C stable. Under ``arrow=True`` all THREE per-row × per-
-    centroid stages run vectorized (GEMM assignment, GEMM+argsort query
-    routing, einsum candidate rescore — round 8 extended the routing and
-    rescore after the persisted-probe A/B showed the routing folds were
-    the actual wall, SCALING.md); the expression forms are kept for
-    bit-reproducible oracle parity but are never the scale path.
+    n_probe/C stable. All three per-row × per-centroid stages are
+    vectorized: GEMM assignment, GEMM + argsort query routing, einsum
+    candidate rescore (SCALING.md round 8). Assignment and routing
+    collect the centroid table on the driver when the plan is built.
     """
     if n_centroids is not None:
         n = vectors.count()
         centroid_stride = max(1, n // max(1, n_centroids))
     cents = stride_centroids(vectors, centroid_stride, id_col, vec_col)
-    assign = assign_centroids_arrow if arrow else assign_centroids
-    inverted = assign(vectors, cents, id_col, vec_col)
+    inverted = assign_centroids(vectors, cents, id_col, vec_col)
     # queries → their n_probe closest centroids
-    if arrow:
-        probes = _route_queries_arrow(
-            queries, cents, n_probe, query_id_col, query_vec_col
-        )
-    else:
-        # norm-once routing and rescore (round 8, bit-identical — see
-        # brute_force_topk): query/centroid/vector norms are computed
-        # once each and carried as columns through the probe join
-        qn = queries.withColumn("_nq", l2_norm(query_vec_col))
-        cn = cents.withColumn("_nc", l2_norm("centroid_vec"))
-        qc = qn.crossJoin(F.broadcast(cn))
-        qsim = F.round(
-            F.when(
-                (F.col("_nq") > 0) & (F.col("_nc") > 0),
-                dot(F.col(query_vec_col), F.col("centroid_vec"))
-                / (F.col("_nq") * F.col("_nc")),
-            ),
-            6,
-        )
-        wq = Window.partitionBy(query_id_col).orderBy(F.col("qsim").desc(), F.col("centroid_id"))
-        probes = (
-            qc.select(F.col(query_id_col), F.col(query_vec_col), F.col("_nq"), F.col("centroid_id"), qsim.alias("qsim"))
-            # zero-norm query/centroid → NULL cosine: drop before ranking so a
-            # degenerate query probes nothing instead of n_probe arbitrary cells
-            .filter(F.col("qsim").isNotNull())
-            .withColumn("rk", F.row_number().over(wq))
-            .filter(F.col("rk") <= n_probe)
-            .select(query_id_col, query_vec_col, "_nq", "centroid_id")
-        )
-        inverted = inverted.withColumn("_nv", l2_norm(vec_col))
+    probes = _route_queries(queries, cents, n_probe, query_id_col, query_vec_col)
     # probe join: only vectors in probed cells are scored
     cand = probes.join(inverted, "centroid_id").filter(F.col(id_col) != F.col(query_id_col))
-    if arrow:
-        scored = _score_candidates_arrow(
-            cand, id_col, vec_col, query_id_col, query_vec_col
-        )
-    else:
-        sim = F.round(
-            F.when(
-                (F.col("_nv") > 0) & (F.col("_nq") > 0),
-                dot(F.col(vec_col), F.col(query_vec_col))
-                / (F.col("_nv") * F.col("_nq")),
-            ),
-            6,
-        )
-        scored = cand.select(
-            F.col(query_id_col), F.col(id_col).alias("neighbor_id"), sim.alias("sim")
-        ).filter(F.col("sim").isNotNull())  # match brute_force_topk's NULL policy
+    scored = _score_candidates(cand, id_col, vec_col, query_id_col, query_vec_col)
     w = Window.partitionBy(query_id_col).orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -453,7 +364,7 @@ def hyperplane_rows(
 ) -> list[tuple[int, int, list[float]]]:
     """Deterministic Gaussian hyperplanes for sign-LSH: one (table_id,
     bit_idx, plane) tuple per bit. The single source of truth shared by the
-    Spark expressions below AND the DuckDB oracle generator in
+    Spark signature kernel below AND the DuckDB oracle generator in
     plans/dedup_queries.py — both engines see bit-identical plane constants,
     so the driver's hash check verifies the whole LSH algorithm."""
     import numpy as np
@@ -498,169 +409,18 @@ def lsh_signatures(
     bigint bucket key. Cosine-LSH property: P[bit match] = 1 − θ/π, so
     similar vectors collide in some table with high probability.
 
-    Plan shape: the planes are DATA, not code — a per-table relation
-    (table_id, shifts, plane matrix), n_tables rows, BROADCAST against
-    the vector scan; each (vector, table) row evaluates one compact
-    higher-order fold over the plane arrays. No shuffle of the corpus,
-    no explode. This replaced two measured pathologies of the original
-    inlined-literal form (SCALING.md round-7, identical output all the
-    way): n_tables × n_bits expression copies crossed the JVM's
-    JIT-compilable method size, so tasks ran in the bytecode interpreter
-    (18.6s vs 0.7s at 16×5×64); and PySpark expands ``F.lit`` per
-    element, so the ~5k-literal tree cost ~48k py4j round-trips ≈ 7-10s
-    of DRIVER time per plan construction. The arithmetic is REPLACED BY
-    NOTHING: the same zip_with cast-multiply, the same left-fold add in
-    element order, the same 6-dp-rounded sign test and bit-shift
-    accumulation in bit order — bit-identical buckets (A/B-verified
-    across sf0.01/sf0.1 and both plane configurations), so the
-    DuckDB-oracle contract is unchanged."""
-    spark = vectors.sparkSession
-    per_table: dict[int, list[tuple[int, list[float]]]] = {}
-    for t, b, plane in planes:
-        per_table.setdefault(t, []).append((b, plane))
-    rows = [
-        (t, [1 << b for b, _ in sorted(ps)], [p for _, p in sorted(ps)])
-        for t, ps in sorted(per_table.items())
-    ]
-    pl = spark.createDataFrame(
-        rows, "table_id int, shifts array<bigint>, planes array<array<double>>"
-    )
-
-    def _step(acc, j):
-        prods = F.zip_with(
-            F.col(vec_col), F.element_at(F.col("planes"), j),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        )
-        d = F.aggregate(prods, F.lit(0.0), lambda a, v: a + v)
-        return acc + F.when(
-            F.round(d, 6) > 0, F.element_at(F.col("shifts"), j)
-        ).otherwise(F.lit(0).cast("long"))
-
-    bucket = F.aggregate(
-        F.sequence(F.lit(1), F.size("shifts")), F.lit(0).cast("long"), _step
-    )
-    return (
-        spread_for_compute(vectors, id_col)
-        .crossJoin(F.broadcast(pl))
-        .select(F.col(id_col), F.col("table_id"), bucket.alias("bucket"))
-    )
-
-
-def embedding_lsh_dup_pairs(
-    vectors: DataFrame,
-    threshold: float = 0.35,
-    n_tables: int = 8,
-    n_bits: int | None = None,
-    seed: int = 7,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    arrow: bool = False,
-    planes: list[tuple[int, int, list[float]]] | None = None,
-) -> DataFrame:
-    """Embedding near-duplicate pairs, LSH-bucketed: candidates = vectors
-    sharing any table's sign-bucket (equi-join on (table_id, bucket) over
-    posting lists), exact-rescored with cosine and thresholded.
-
-    This is the 100 TB catalog face for embedding dedup: the corpus is
-    never self-joined all-pairs — only bucket keys shuffle, and n_bits
-    scales the bucket count with the corpus (it MUST: fixed bits means
-    per-bucket population ∝ n and candidates quadratic — measured 15s→300s
-    over one decade with n_bits=4, SCALING.md round-4 audit). For exactly
-    that reason the DEFAULT is corpus-derived: ``n_bits=None`` counts the
-    corpus once and picks bits via ``scaled_n_bits`` (~64 vectors/bucket);
-    pinning an explicit n_bits is the opt-in for oracle baselines whose
-    plane constants must be inlineable into a static SQL string
-    (plans/dedup_queries.py: dedup_embedding_lsh). Precision is exact
-    (rescore); recall < 1 by design and is pinned against the brute-force
-    baseline in tests/test_similarity.py. ``arrow=True`` computes
-    signatures as a batched GEMM (the scale path); the default expression
-    form stays bit-reproducible for the DuckDB oracle.
-    ``planes`` overrides the generated hyperplanes (n_tables/seed/dim are
-    then ignored) — the corpus-scaled catalog face passes prefix-stable
-    planes so its data-derived bit count remains oracle-checkable.
-    Output: (id_a, id_b, sim), id_a < id_b.
-    """
-    if planes is None:
-        if n_bits is None:
-            n_bits = scaled_n_bits(vectors.count())
-        planes = hyperplane_rows(dim, n_tables, n_bits, seed)
-    sig_fn = lsh_signatures_arrow if arrow else lsh_signatures
-    # Materialize the signature relation once: Spark does not reuse a
-    # subplan across the two sides of a self-join, so without this the
-    # full-corpus signature scan (the GEMM pass at scale) runs TWICE —
-    # the graph.py oriented-edges pattern. The checkpointed relation is
-    # narrow ((id, table, bucket), n_tables rows/vector), bounded at any
-    # corpus size. Measured at sf0.1: 5.7 -> ~5.2s wall; the win grows
-    # with corpus size because the doubled work is the corpus scan.
-    sig = sig_fn(vectors, planes, id_col, vec_col).localCheckpoint(eager=True)
-    cand = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.table_id") == F.col("b.table_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    # Norm-once rescore (round 8): the guarded per-pair cosine re-runs
-    # the l2_norm fold for BOTH vectors of every candidate pair — the
-    # measured wall of the output-bound decade regime (three interpreted
-    # folds ≈ 100µs/pair, 417s at 10.9M true pairs). Norms computed once
-    # per corpus vector ride the same marshalling joins; the fold over
-    # the same array yields the same double, so the guarded dot/(na*nb)
-    # is bit-identical to cosine_similarity and the oracle contract
-    # holds. (The GEMM sibling embedding_lsh_dup_pairs_gemm remains the
-    # deployment form; this narrows the gap while staying oracle-exact.)
-    va = vectors.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(vec_col).alias("_na"),
-    )
-    vb = vectors.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(vec_col).alias("_nb"),
-    )
-    sim = F.round(
-        F.when(
-            (F.col("_na") > 0) & (F.col("_nb") > 0),
-            dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        ),
-        6,
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
-    )
-
-
-def lsh_signatures_arrow(
-    vectors: DataFrame,
-    planes: list[tuple[int, int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched sibling of ``lsh_signatures``: same output contract
-    (id, table_id, bucket), computed as ONE dense NumPy GEMM per Arrow
-    batch — (batch_rows × dim) @ (dim × n_planes) — instead of n_planes
-    interpreted expression-tree dot products per row.
-
-    Why both exist: the expression form is bit-reproducible against the
-    DuckDB oracle (sequential fold, HALF_UP rounding), so the
-    oracle-checked faces keep it; since the round-7 broadcast-relation
-    restructure its wall is within ~2× of this form at the test corpus
-    sizes, but per-FLOP the interpreted fold still loses to BLAS by
-    orders of magnitude — at real corpus scale signature hashing is a
-    dense GEMM (batch_rows × planes × dim multiply-adds at memory
-    speed), the textbook Arrow escape hatch, and this form remains the
-    deployment default. Sign flips vs the JVM fold would need |v·p|
-    within float ulps of the rounding boundary — margins measured 54×
-    that boundary, and bucket equality is pinned in tests.
+    Computed as ONE dense NumPy GEMM per Arrow batch — (batch_rows × dim)
+    @ (dim × n_planes) — then the 6-dp HALF_UP sign test
+    (``_round6_half_up(v·p) > 0``) and bit-shift accumulation in bit
+    order per table. Scan-shaped: no shuffle of the corpus, no explode,
+    and the plane matrix is a closed-over constant (an inlined-literal
+    expression form crossed the JIT method-size limit and cost ~48k py4j
+    round-trips per plan, SCALING.md round 7). The DuckDB oracles fold
+    ``list_dot_product`` sequentially; the GEMM's different accumulation
+    order can flip a bit only when |v·p| lies within float ulps of the
+    rounding boundary (margins measured ≥ 54× that boundary on the
+    testdata), and tests pin the buckets against a sequential-fold
+    reference.
     """
     import numpy as np
     import pandas as pd
@@ -706,6 +466,95 @@ def lsh_signatures_arrow(
     )
 
 
+def embedding_lsh_dup_pairs(
+    vectors: DataFrame,
+    threshold: float = 0.35,
+    n_tables: int = 8,
+    n_bits: int | None = None,
+    seed: int = 7,
+    dim: int = 64,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    planes: list[tuple[int, int, list[float]]] | None = None,
+) -> DataFrame:
+    """Embedding near-duplicate pairs, LSH-bucketed: candidates = vectors
+    sharing any table's sign-bucket (equi-join on (table_id, bucket) over
+    posting lists), exact-rescored with cosine and thresholded.
+
+    This is the 100 TB catalog face for embedding dedup: the corpus is
+    never self-joined all-pairs — only bucket keys shuffle, and n_bits
+    scales the bucket count with the corpus (it MUST: fixed bits means
+    per-bucket population ∝ n and candidates quadratic — measured 15s→300s
+    over one decade with n_bits=4, SCALING.md round-4 audit). For exactly
+    that reason the DEFAULT is corpus-derived: ``n_bits=None`` counts the
+    corpus once and picks bits via ``scaled_n_bits`` (~64 vectors/bucket);
+    pinning an explicit n_bits is the opt-in for oracle baselines whose
+    plane constants must be inlineable into a static SQL string
+    (plans/dedup_queries.py: dedup_embedding_lsh). Precision is exact
+    (rescore); recall < 1 by design and is pinned against the brute-force
+    baseline in tests/test_similarity.py. Signatures come from the GEMM
+    kernel :func:`lsh_signatures`.
+    ``planes`` overrides the generated hyperplanes (n_tables/seed/dim are
+    then ignored) — the corpus-scaled catalog face passes prefix-stable
+    planes so its data-derived bit count remains oracle-checkable.
+    Output: (id_a, id_b, sim), id_a < id_b.
+    """
+    if planes is None:
+        if n_bits is None:
+            n_bits = scaled_n_bits(vectors.count())
+        planes = hyperplane_rows(dim, n_tables, n_bits, seed)
+    # Materialize the signature relation once: Spark does not reuse a
+    # subplan across the two sides of a self-join, so without this the
+    # full-corpus signature scan (the GEMM pass at scale) runs TWICE —
+    # the graph.py oriented-edges pattern. The checkpointed relation is
+    # narrow ((id, table, bucket), n_tables rows/vector), bounded at any
+    # corpus size. Measured at sf0.1: 5.7 -> ~5.2s wall; the win grows
+    # with corpus size because the doubled work is the corpus scan.
+    sig = lsh_signatures(vectors, planes, id_col, vec_col).localCheckpoint(eager=True)
+    cand = (
+        sig.alias("a")
+        .join(
+            sig.alias("b"),
+            (F.col("a.table_id") == F.col("b.table_id"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+    # Norm-once rescore (round 8): the guarded per-pair cosine re-runs
+    # the l2_norm fold for BOTH vectors of every candidate pair — the
+    # measured wall of the output-bound decade regime (three interpreted
+    # folds ≈ 100µs/pair, 417s at 10.9M true pairs). Norms computed once
+    # per corpus vector ride the same marshalling joins; the fold over
+    # the same array yields the same double, so the guarded dot/(na*nb)
+    # is bit-identical to cosine_similarity and the oracle contract
+    # holds.
+    va = vectors.select(
+        F.col(id_col).alias("id_a"),
+        F.col(vec_col).alias("_va"),
+        l2_norm(vec_col).alias("_na"),
+    )
+    vb = vectors.select(
+        F.col(id_col).alias("id_b"),
+        F.col(vec_col).alias("_vb"),
+        l2_norm(vec_col).alias("_nb"),
+    )
+    sim = F.round(
+        F.when(
+            (F.col("_na") > 0) & (F.col("_nb") > 0),
+            dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
+        ),
+        6,
+    )
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", sim.alias("sim"))
+        .filter(F.col("sim") >= threshold)
+    )
+
+
 def rp_lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -718,13 +567,11 @@ def rp_lsh_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    arrow: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k via random-hyperplane LSH (the bucketed
-    sibling of ivf_topk; brief: "IVF or LSH-bucketed variant").
-    ``arrow=False`` swaps the GEMM signatures for the bit-reproducible
-    expression form — the deterministic path the oracle-checked quality
-    face ``knn_rp_lsh_eval`` runs (round-6 verdict item 1).
+    sibling of ivf_topk; brief: "IVF or LSH-bucketed variant"). With
+    pinned knobs the result is deterministic — the oracle-checked quality
+    face ``knn_rp_lsh_eval`` restates it in DuckDB.
 
     Candidates = corpus vectors sharing ANY table's bucket with the query
     (equi-join on (table_id, bucket) — a shuffled hash join over posting
@@ -735,9 +582,8 @@ def rp_lsh_topk(
     driver rows-only check; recall vs brute force is pinned in
     tests/test_similarity.py."""
     planes = hyperplane_rows(dim, n_tables, n_bits, seed)
-    sig_fn = lsh_signatures_arrow if arrow else lsh_signatures
-    sig_v = sig_fn(vectors, planes, id_col, vec_col)
-    sig_q = sig_fn(queries, planes, query_id_col, query_vec_col)
+    sig_v = lsh_signatures(vectors, planes, id_col, vec_col)
+    sig_q = lsh_signatures(queries, planes, query_id_col, query_vec_col)
     cand = (
         sig_q.join(sig_v, ["table_id", "bucket"])
         .select(query_id_col, id_col)
@@ -883,7 +729,6 @@ def pq_assign_codes(
     vec_col: str = "embedding",
     m: int = 8,
     k: int = 16,
-    arrow: bool = True,
 ) -> DataFrame:
     """Product quantization assignment: split each vector into ``m``
     contiguous subspaces and replace every subvector with the id of its
@@ -903,20 +748,19 @@ def pq_assign_codes(
     iterations — each iteration IS ``kmeans_step_centroids`` run on the
     slice — so the training loop composes from already-verified parts.
 
-    Scale: assignment is a pure scan either way — no shuffle, and the
-    codebook rides into the plan as literals (expression form) or a
-    closed-over constant (Arrow form). The DEFAULT is the Arrow batch
-    kernel: the expression form pays ~10M higher-order-lambda dispatches
-    per 5k vectors (m × k zip_with/aggregate folds per row — measured
-    6.3s at sf0.1 vs sub-second Arrow), while the Arrow kernel runs the
-    same m × k × subdim arithmetic as vectorized NumPy with an EXPLICIT
-    sequential j-loop, reproducing the expression/oracle left-fold IEEE
-    accumulation order bit-for-bit; the final 6-dp round runs Spark-side
-    (exact HALF_UP on the binary value) in both forms. Ties on the
-    rounded distance break to the LOWEST code id, reproducible across
-    engines; ``arrow=False`` keeps the pure-Catalyst sibling (parity of
-    the two forms is pinned in tests/test_round5_ops.py).
+    Scale: assignment is a pure scan — no shuffle; the codebook is a
+    closed-over constant of an Arrow batch kernel that runs the m × k ×
+    subdim arithmetic as vectorized NumPy with an EXPLICIT sequential
+    j-loop, reproducing the oracle's left-fold IEEE accumulation order
+    bit-for-bit (m × k higher-order-lambda folds per row as expressions
+    measured 6.3s at sf0.1 vs sub-second here). The code is the argmin of
+    ``_round6_half_up`` distances, so ties on the rounded distance break
+    to the LOWEST code id, reproducible across engines; the emitted
+    ``dist`` is rounded Spark-side (exact HALF_UP on the binary value).
     """
+    import numpy as np
+    import pandas as pd
+
     rows = vectors.orderBy(id_col).limit(k).collect()
     if len(rows) < k:
         raise ValueError(f"need at least {k} vectors to seed the codebook")
@@ -924,118 +768,45 @@ def pq_assign_codes(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     subdim = dim // m
-    books = [
-        [[float(r[vec_col][s * subdim + j]) for j in range(subdim)] for r in rows]
-        for s in range(m)
-    ]
+    id_t = vectors.schema[id_col].dataType.simpleString()
+    # (m, k, subdim): subspace s of codeword c is the s-th slice of row c
+    B = np.array([r[vec_col] for r in rows], dtype=np.float64).reshape(k, m, subdim)
+    B = B.transpose(1, 0, 2)
 
-    if arrow:
-        import numpy as np
-        import pandas as pd
-
-        id_t = vectors.schema[id_col].dataType.simpleString()
-        B = np.array(books, dtype=np.float64)  # (m, k, subdim)
-
-        def gen(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                n = len(pdf)
-                codes = np.empty((n, m), dtype=np.int32)
-                dists = np.empty((n, m), dtype=np.float64)
-                for s in range(m):
-                    sub = V[:, s * subdim : (s + 1) * subdim]
-                    acc = np.zeros((n, k))
-                    # sequential j accumulation — the same left-fold IEEE
-                    # order as the aggregate() expression and the oracle's
-                    # left-associated sum (pairwise np.sum would differ in
-                    # ulps and risk the 6-dp hash)
-                    for j in range(subdim):
-                        d = sub[:, j : j + 1] - B[s, :, j]
-                        acc += d * d
-                    # floor(x*1e6 + 0.5): decimal HALF_UP for non-negative
-                    # values, matching F.round/DuckDB ROUND on the dyadic
-                    # halfway cases where np.round's half-to-even would pick
-                    # a different code than the expression form. F.round
-                    # actually rounds the double's SHORTEST DECIMAL REPR
-                    # (BigDecimal.valueOf), which the scaled floor only
-                    # approximates — so values within an ulp of a halfway
-                    # boundary take a rare exact path through Decimal(repr)
-                    scaled = acc * 1e6
-                    r6 = np.floor(scaled + 0.5)
-                    frac = scaled - np.floor(scaled)
-                    sus = np.abs(frac - 0.5) < 1e-6
-                    if sus.any():
-                        from decimal import ROUND_HALF_UP, Decimal
-
-                        q6 = Decimal("0.000001")
-                        r6[sus] = [
-                            float(
-                                Decimal(repr(float(v)))
-                                .quantize(q6, rounding=ROUND_HALF_UP)
-                                .scaleb(6)
-                            )
-                            for v in acc[sus]
-                        ]
-                    best = np.argmin(r6, axis=1)  # first (lowest) code wins ties
-                    codes[:, s] = best
-                    dists[:, s] = acc[np.arange(n), best]
-                yield pd.DataFrame(
-                    {
-                        id_col: np.repeat(pdf[id_col].to_numpy(), m),
-                        "subspace": np.tile(np.arange(m, dtype=np.int32), n),
-                        "code": codes.reshape(-1),
-                        "dist_raw": dists.reshape(-1),
-                    }
-                )
-
-        out = vectors.select(id_col, vec_col).mapInPandas(
-            gen, schema=f"{id_col} {id_t}, subspace int, code int, dist_raw double"
-        )
-        return out.select(
-            id_col, "subspace", "code", F.round("dist_raw", 6).alias("dist")
-        )
-
-    def dist(s: int, cvec: list[float]):
-        # zip_with + aggregate (left fold, j ascending — identical IEEE
-        # accumulation order to the oracle's left-associated sum; the
-        # leading 0.0 + t1 is exact since every term is ≥ 0). A fully
-        # unrolled literal sum was tried first: 1024 terms per row blew
-        # the codegen method limit and fell back to interpreted eval —
-        # this form keeps the tree small enough to stay compiled.
-        sub = F.slice(F.col(vec_col), s * subdim + 1, subdim)
-        sq = F.zip_with(
-            sub,
-            F.array(*[F.lit(v) for v in cvec]),
-            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-        )
-        return F.round(
-            F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x), 6
-        )
-
-    best = [
-        F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        dist(s, books[s][c]).alias("dist"),
-                        F.lit(c).cast("int").alias("code"),
-                    )
-                    for c in range(k)
-                ]
+    def gen(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            n = len(pdf)
+            codes = np.empty((n, m), dtype=np.int32)
+            dists = np.empty((n, m), dtype=np.float64)
+            for s in range(m):
+                sub = V[:, s * subdim : (s + 1) * subdim]
+                acc = np.zeros((n, k))
+                # sequential j accumulation — the same left-fold IEEE
+                # order as the oracle's left-associated sum (pairwise
+                # np.sum would differ in ulps and risk the 6-dp hash)
+                for j in range(subdim):
+                    d = sub[:, j : j + 1] - B[s, :, j]
+                    acc += d * d
+                # first (lowest) code wins ties on the rounded distance
+                best = np.argmin(_round6_half_up(acc), axis=1)
+                codes[:, s] = best
+                dists[:, s] = acc[np.arange(n), best]
+            yield pd.DataFrame(
+                {
+                    id_col: np.repeat(pdf[id_col].to_numpy(), m),
+                    "subspace": np.tile(np.arange(m, dtype=np.int32), n),
+                    "code": codes.reshape(-1),
+                    "dist_raw": dists.reshape(-1),
+                }
             )
-        )
-        for s in range(m)
-    ]
-    return vectors.select(
-        id_col, F.posexplode(F.array(*best)).alias("subspace", "bc")
-    ).select(
-        id_col,
-        F.col("subspace").cast("int").alias("subspace"),
-        F.col("bc.code").alias("code"),
-        F.col("bc.dist").alias("dist"),
+
+    out = vectors.select(id_col, vec_col).mapInPandas(
+        gen, schema=f"{id_col} {id_t}, subspace int, code int, dist_raw double"
     )
+    return out.select(id_col, "subspace", "code", F.round("dist_raw", 6).alias("dist"))
 
 
 def ivf_build_persisted(
@@ -1044,7 +815,6 @@ def ivf_build_persisted(
     table: str,
     path: str,
     n_buckets: int = 8,
-    arrow: bool = True,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1058,21 +828,19 @@ def ivf_build_persisted(
     the probed buckets. Bucketing (not partitionBy) because C ≈ √n at
     scale means tens of thousands of centroid directories — a
     small-files problem — while the bucket count stays fixed and bucket
-    pruning serves the probe's ``centroid_id IN (...)`` filter. The
-    ``arrow`` knob mirrors :func:`ivf_topk`: GEMM assignment for the
-    production path, the bit-reproducible expression form for the
-    oracle-checked face (parquet round-trips doubles exactly, so
-    persisted == in-memory assignment bit-for-bit).
+    pruning serves the probe's ``centroid_id IN (...)`` filter.
+    Assignment is :func:`assign_centroids`, as in :func:`ivf_topk`
+    (parquet round-trips doubles exactly, so persisted == in-memory
+    assignment bit-for-bit).
     """
     from aidc_2018_timeseries_spark.sources.sinks import write_bucketed
 
-    assign = assign_centroids_arrow if arrow else assign_centroids
-    inverted = assign(vectors, centroids, id_col, vec_col)
+    inverted = assign_centroids(vectors, centroids, id_col, vec_col)
     write_bucketed(inverted, table, path, "centroid_id", n_buckets)
     return vectors.sparkSession.table(table)
 
 
-def _route_queries_arrow(
+def _route_queries(
     queries: DataFrame,
     centroids: DataFrame,
     n_probe: int,
@@ -1080,32 +848,17 @@ def _route_queries_arrow(
     query_vec_col: str,
 ) -> DataFrame:
     """Query→cell routing as one (batch_rows × C) GEMM + partial argsort
-    per Arrow batch — the assign_centroids_arrow shape generalized to
-    top-n_probe. Centroids are collected driver-side (bounded: C × dim,
-    the same router table a serving tier holds). Semantics mirror the
-    expression router exactly: 6-dp-rounded cosine, ties to the smaller
-    centroid_id, zero-norm queries and zero-norm centroids dropped."""
+    per Arrow batch — the :func:`assign_centroids` shape generalized to
+    top-n_probe: 6-dp-rounded cosine, ties to the smaller centroid_id,
+    zero-norm queries and zero-norm centroids dropped. The centroid table
+    is collected driver-side (``_centroid_matrix``: C × dim, the router
+    table a serving tier holds)."""
     import numpy as np
     import pandas as pd
 
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     qvec_t = queries.schema[query_vec_col].dataType.simpleString()
-    rows = sorted(centroids.collect(), key=lambda r: r["centroid_id"])
-    if not rows:
-        # empty router table → empty probe relation (np.linalg.norm on a
-        # 0-row matrix raises driver-side — the assign_centroids_arrow
-        # guard, caught by tests/test_ivf_persisted.py edge battery)
-        return queries.select(
-            query_id_col, query_vec_col
-        ).filter(F.lit(False)).withColumn(
-            "centroid_id", F.lit(None).cast("long")
-        )
-    ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    M = np.array([r["centroid_vec"] for r in rows], dtype=np.float64)
-    cnorms = np.linalg.norm(M, axis=1)
-    keep = cnorms > 0
-    ids, M = ids[keep], M[keep]
-    Mn = (M / cnorms[keep][:, None]).T  # (dim × C)
+    ids, Mn = _centroid_matrix(centroids, "centroid_id", "centroid_vec")
 
     def gen(batches):
         for pdf in batches:
@@ -1118,9 +871,8 @@ def _route_queries_arrow(
                 continue
             pdf = pdf[mask].reset_index(drop=True)
             S = _round6_half_up((V[mask] / norms[mask]) @ Mn)
-            # argsort on (-sim, centroid_id): columns are id-ascending, and
-            # np.argsort is stable, so sorting by -S alone breaks ties to
-            # the smaller centroid_id — the expression router's order
+            # columns are id-ascending and np.argsort is stable, so sorting
+            # by -S alone breaks ties to the smaller centroid_id
             top = np.argsort(-S, axis=1, kind="stable")[:, :n_probe]
             m = top.shape[1]
             yield pd.DataFrame(
@@ -1152,7 +904,6 @@ def ivf_probe_persisted(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    arrow: bool = False,
 ) -> DataFrame:
     """Probe a PERSISTED inverted file: route each query to its n_probe
     nearest centroids, then rescore only the vectors in those cells.
@@ -1164,58 +915,22 @@ def ivf_probe_persisted(
     corpus-sized), and it is what lets Spark prune buckets at the FILE
     level: the plan's bucketed scan shows SelectedBucketsCount < total
     (asserted in tests/test_ivf_persisted.py), so a probe touches
-    ~n_probe/C of the corpus on DISK, not just post-scan. Ranking
-    contract (6-dp round, neighbor-id tiebreak, NULL-cosine drop) is
-    identical to :func:`ivf_topk`, so with the expression-form build the
+    ~n_probe/C of the corpus on DISK, not just post-scan. Routing (a
+    (queries × C) GEMM + argsort — queries·C fold cosines were the
+    measured probe wall, 894k folds ≈ 60s of a 67.7s probe at 2000
+    queries × 447 cells, SCALING.md round 8) and the candidate rescore
+    are the same kernels as :func:`ivf_topk`, and so is the ranking
+    contract (6-dp round, neighbor-id tiebreak, NULL-cosine drop): the
     persisted path is bit-equal to the in-memory one.
-
-    ``arrow=True`` is the deployment form for large query batches: BOTH
-    per-query stages move to vectorized NumPy — the routing (a
-    (queries × C) GEMM + argsort instead of queries·C interpreted fold
-    cosines, which the round-8 A/B measured as the actual probe wall:
-    894k folds ≈ 60s of the 67.7s probe at 2000 queries × 447 cells)
-    and the candidate rescore (the :func:`cosine_rescore_arrow`
-    arithmetic). The expression form stays the default because the
-    oracle-checked face needs DuckDB-exact folds; top-k parity between
-    the two is pinned in tests/test_ivf_persisted.py.
     """
-    if arrow:
-        probes = _route_queries_arrow(
-            queries, centroids, n_probe, query_id_col, query_vec_col
-        )
-    else:
-        # norm-once routing (round 8, bit-identical — see brute_force_topk)
-        qn = queries.withColumn("_nq", l2_norm(query_vec_col))
-        cn = centroids.withColumn("_nc", l2_norm("centroid_vec"))
-        qc = qn.crossJoin(F.broadcast(cn))
-        qsim = F.round(
-            F.when(
-                (F.col("_nq") > 0) & (F.col("_nc") > 0),
-                dot(F.col(query_vec_col), F.col("centroid_vec"))
-                / (F.col("_nq") * F.col("_nc")),
-            ),
-            6,
-        )
-        wq = Window.partitionBy(query_id_col).orderBy(
-            F.col("qsim").desc(), F.col("centroid_id")
-        )
-        probes = (
-            qc.select(
-                F.col(query_id_col), F.col(query_vec_col), F.col("_nq"),
-                F.col("centroid_id"), qsim.alias("qsim"),
-            )
-            .filter(F.col("qsim").isNotNull())
-            .withColumn("rk", F.row_number().over(wq))
-            .filter(F.col("rk") <= n_probe)
-            .select(query_id_col, query_vec_col, "_nq", "centroid_id")
-        )
+    probes = _route_queries(queries, centroids, n_probe, query_id_col, query_vec_col)
     # Routing runs ONCE (ADVICE r8): `probes` feeds both the driver-side
     # distinct-cells collect below and the candidate join, and without
     # lineage truncation the join re-evaluated the whole routing stage —
-    # under arrow=True that is a second routing GEMM AND a second
-    # driver-side centroid collect per probe call. eager=False keeps
-    # construction lazy; the distinct() collect (always the first action
-    # on this DataFrame) materializes it for both consumers.
+    # a second routing GEMM AND a second driver-side centroid collect per
+    # probe call. eager=False keeps construction lazy; the distinct()
+    # collect (always the first action on this DataFrame) materializes
+    # it for both consumers.
     probes = probes.localCheckpoint(eager=False)
     # bounded router collect: n_queries × n_probe cell ids
     cell_ids = sorted(
@@ -1223,28 +938,10 @@ def ivf_probe_persisted(
         for r in probes.select("centroid_id").distinct().collect()
     )
     pruned = index.filter(F.col("centroid_id").isin(cell_ids))
-    if not arrow:
-        # norm-once rescore: one fold per pruned index row, not per pair
-        pruned = pruned.withColumn("_nv", l2_norm(vec_col))
     cand = probes.join(pruned, "centroid_id").filter(
         F.col(id_col) != F.col(query_id_col)
     )
-    if arrow:
-        scored = _score_candidates_arrow(
-            cand, id_col, vec_col, query_id_col, query_vec_col
-        )
-    else:
-        sim = F.round(
-            F.when(
-                (F.col("_nv") > 0) & (F.col("_nq") > 0),
-                dot(F.col(vec_col), F.col(query_vec_col))
-                / (F.col("_nv") * F.col("_nq")),
-            ),
-            6,
-        )
-        scored = cand.select(
-            F.col(query_id_col), F.col(id_col).alias("neighbor_id"), sim.alias("sim")
-        ).filter(F.col("sim").isNotNull())
+    scored = _score_candidates(cand, id_col, vec_col, query_id_col, query_vec_col)
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("sim").desc(), F.col("neighbor_id")
     )
@@ -1255,117 +952,12 @@ def ivf_probe_persisted(
     )
 
 
-def cosine_rescore_arrow(
-    pairs: DataFrame,
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
-    """Arrow-batched exact cosine over CANDIDATE PAIRS: one vectorized
-    (rows × dim) elementwise-multiply + row-sum per batch instead of
-    three interpreted HOF folds per pair.
-
-    This is the deployment relief for the one output-bound regime the
-    round-7 ANN decade measured (SCALING.md: 10.9M true pairs × ≈100µs
-    of fold arithmetic = 417s — the rescore, not the LSH, was the wall).
-    The joins that marshal both vectors to each pair are unchanged; only
-    the arithmetic moves from the interpreted expression tree to NumPy.
-    Zero-norm vectors yield NULL sim (the shared contract); rounding is
-    ``_round6_half_up`` — decimal HALF_UP at 6 dp, the same convention
-    as ``F.round`` (round 9 fix: this kernel previously used np.round's
-    half-to-even and the docstring mislabeled F.round as HALF_EVEN) —
-    so any divergence from the fold form needs a true sum whose
-    accumulation-order error crosses a 5e-7 boundary; margins are
-    measured in tests/test_gemm_rescore.py.
-    Output: (a_col, b_col, sim double).
-    """
-    import numpy as np
-    import pandas as pd
-
-    a_t = pairs.schema[a_col].dataType.simpleString()
-    b_t = pairs.schema[b_col].dataType.simpleString()
-    va = vectors.select(F.col(id_col).alias(a_col), F.col(vec_col).alias("_va"))
-    vb = vectors.select(F.col(id_col).alias(b_col), F.col(vec_col).alias("_vb"))
-    joined = pairs.select(a_col, b_col).join(va, a_col).join(vb, b_col)
-
-    def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.asarray(pdf["_va"].tolist(), dtype=np.float64)
-            B = np.asarray(pdf["_vb"].tolist(), dtype=np.float64)
-            na = np.einsum("ij,ij->i", A, A)
-            nb = np.einsum("ij,ij->i", B, B)
-            dot = np.einsum("ij,ij->i", A, B)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sim = _round6_half_up(dot / np.sqrt(na * nb))
-            sim = np.where((na > 0) & (nb > 0), sim, np.nan)
-            out = pd.DataFrame(
-                {a_col: pdf[a_col], b_col: pdf[b_col], "sim": sim}
-            )
-            # NaN → NULL under Arrow; make the mask explicit
-            out.loc[~((na > 0) & (nb > 0)), "sim"] = None
-            yield out
-
-    return joined.mapInPandas(
-        gen, schema=f"{a_col} {a_t}, {b_col} {b_t}, sim double"
-    )
-
-
-def embedding_lsh_dup_pairs_gemm(
-    vectors: DataFrame,
-    threshold: float = 0.35,
-    n_tables: int = 8,
-    n_bits: int | None = None,
-    seed: int = 7,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes: list[tuple[int, int, list[float]]] | None = None,
-) -> DataFrame:
-    """Deployment sibling of :func:`embedding_lsh_dup_pairs`: identical
-    candidate generation (GEMM signatures, banded self-join on
-    (table_id, bucket)), but the exact rescore runs through
-    :func:`cosine_rescore_arrow` instead of the fold expressions.
-
-    Kept as a SEPARATE function so the oracle-checked faces keep the
-    construction-exact fold contract while the 100 TB path gets BLAS
-    arithmetic in the one regime where rescore volume is the wall
-    (heavily duplicated corpora — SCALING.md round-8 decade row). Pair
-    sets are pinned equal to the fold form in tests/test_gemm_rescore.py.
-    """
-    if planes is None:
-        if n_bits is None:
-            n_bits = scaled_n_bits(vectors.count())
-        planes = hyperplane_rows(dim, n_tables, n_bits, seed)
-    sig = lsh_signatures_arrow(vectors, planes, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    cand = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.table_id") == F.col("b.table_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    return cosine_rescore_arrow(cand, vectors, id_col, vec_col).filter(
-        F.col("sim") >= threshold
-    )
-
-
 def kmeans_converged_labels(
     vectors: DataFrame,
     cluster_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_iters: int = 10,
-    arrow: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
     """Lloyd iteration to a (bounded) fixed point over the stored seed
@@ -1376,8 +968,8 @@ def kmeans_converged_labels(
 
     Each round: centroids = element-wise means of the current labels
     (``centroid_means`` — k × dim bounded relation), then every vector
-    reassigns to its cosine-nearest centroid (``assign_centroids`` /
-    ``assign_centroids_arrow`` — broadcast/GEMM scan, no corpus shuffle).
+    reassigns to its cosine-nearest centroid (``assign_centroids`` — a
+    GEMM scan, no corpus shuffle).
     Deterministic end to end: deterministic seeding, 6-dp-rounded
     similarities, argmax ties to the smallest cluster id, so the round
     trajectory — and therefore the fixed point — is a pure function of
@@ -1392,7 +984,6 @@ def kmeans_converged_labels(
     Returns (id, vec, cluster_col) with the converged label; ``stats``
     (optional) records ``{"kmeans_rounds": r, "converged": bool}``.
     """
-    assign = assign_centroids_arrow if arrow else assign_centroids
     cur = vectors.select(
         F.col(id_col),
         F.col(vec_col),
@@ -1403,7 +994,7 @@ def kmeans_converged_labels(
         cents = centroid_means(
             cur, group_col="_cur", id_col=id_col, vec_col=vec_col
         ).select(F.col("_cur").cast("long").alias("_cid"), "centroid_vec")
-        moved_to = assign(
+        moved_to = assign_centroids(
             cur, cents, id_col=id_col, vec_col=vec_col, centroid_id_col="_cid"
         ).select(id_col, F.col("_cid").cast("long").alias("_new"))
         nxt = (
@@ -1434,7 +1025,6 @@ def semdedup_verdicts(
     cluster_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = False,
     kmeans_iters: int = 0,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-bucketed
@@ -1462,34 +1052,21 @@ def semdedup_verdicts(
     NULL there) and are excluded from the output — the caller's corpus
     contract, mirrored by the oracle's ``sim IS NOT NULL`` filter.
 
-    Scale shape: centroid assignment is scan × broadcast(k×dim) with a
-    per-row argmax window on ``id`` — no corpus shuffle beyond the spread;
-    the pairwise stage shuffles once on ``cluster`` and is bounded by
-    Σ|cluster|² — the SemDeDup contract is that k grows with the corpus
-    (the paper uses k ≈ n/10k), keeping clusters bounded; CC shuffles only
-    (node, label) rounds over edges that near-dup survivors alone
-    populate. The assigned relation is localCheckpoint-materialized before
-    the self-join (Spark never reuses a subplan across self-join sides —
-    the banded-relation lesson), trading executor block storage for a
-    recompute of the full assignment arm, same as the MinHash banded
-    relation.
-
-    ``arrow=True`` is the DEPLOYMENT form (the fold path stays the
-    oracle-checked default): assignment runs as one (batch × C)
-    normalized GEMM per Arrow batch emitting (id, cluster, cent_sim) —
-    the assign_centroids_arrow shape, which the round-8 router lesson
-    showed is the difference between seconds and hours once C grows with
-    the corpus — and the within-cluster pair stage becomes ONE
-    ``applyInPandas`` per cluster computing the full c × c similarity
-    matrix in BLAS and emitting only the ≥ threshold upper triangle
-    (exactly the paper's per-cluster GPU GEMM, minus the GPU). That
-    replaces the expression path's pair-marshalling self-join — whose
-    cost is per CANDIDATE pair — with a stage that shuffles each vector
-    ONCE (by cluster) and is output-bound in true duplicates. At
-    C = √n both stages are n^1.5 in flops but linear in shuffled bytes,
-    the same contract as the IVF build. Parity with the fold form is
-    GEMM-vs-fold ulps crossing the 5e-7 rounding boundary — pinned with
-    measured margins in tests/test_semdedup.py.
+    Scale shape: assignment is one (batch × C) normalized GEMM per Arrow
+    batch emitting (id, cluster, cent_sim) — the :func:`assign_centroids`
+    shape, which the round-8 router lesson showed is the difference
+    between seconds and hours once C grows with the corpus. The assigned
+    relation is localCheckpoint-materialized, then the within-cluster
+    pair stage is ONE ``applyInPandas`` per cluster computing the full
+    c × c similarity matrix in BLAS and emitting only the ≥ threshold
+    upper triangle (exactly the paper's per-cluster GPU GEMM, minus the
+    GPU): each vector shuffles ONCE (by cluster) and the stage is
+    output-bound in true duplicates, never candidate-bound. The SemDeDup
+    contract is that k grows with the corpus (the paper uses k ≈ n/10k),
+    keeping clusters bounded; at C = √n both stages are n^1.5 in flops
+    but linear in shuffled bytes, the same contract as the IVF build. CC
+    shuffles only (node, label) rounds over edges that near-dup
+    survivors alone populate.
 
     ``kmeans_iters > 0`` is the DEPLOYMENT clustering option (VERDICT r9
     ask 6): the stored labels seed :func:`kmeans_converged_labels`, which
@@ -1508,78 +1085,14 @@ def semdedup_verdicts(
             id_col=id_col,
             vec_col=vec_col,
             max_iters=kmeans_iters,
-            arrow=arrow,
         )
-    if arrow:
-        cents = centroid_means(
-            vectors, group_col=cluster_col, id_col=id_col, vec_col=vec_col
-        ).select(F.col(cluster_col).cast("long").alias("cluster"), "centroid_vec")
-        assigned = _semdedup_assign_arrow(
-            spread_for_compute(vectors, id_col), cents, id_col, vec_col
-        ).localCheckpoint(eager=True)
-        pairs = _semdedup_cluster_pairs_arrow(assigned, threshold, id_col, vec_col)
-    else:
-        # Norms are computed ONCE per vector/centroid and carried as
-        # columns: cosine_similarity would re-run the l2_norm fold per
-        # PAIR (three interpreted HOF folds each — ~1.2M folds on the
-        # sf0.1 pair stage), and the fold over the same array yields the
-        # same double, so dot/(na*nb) is bit-identical to the guarded
-        # per-pair form while paying one fold per pair instead of three.
-        v = spread_for_compute(vectors, id_col).select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_e")
-        ).withColumn("_n", l2_norm("_e"))
-        cents = centroid_means(
-            vectors, group_col=cluster_col, id_col=id_col, vec_col=vec_col
-        ).select(
-            F.col(cluster_col).alias("_cl"),
-            "centroid_vec",
-            l2_norm("centroid_vec").alias("_cn"),
-        )
-        scored = v.crossJoin(F.broadcast(cents)).select(
-            id_col,
-            "_e",
-            "_n",
-            "_cl",
-            F.round(
-                F.when(
-                    (F.col("_n") > 0) & (F.col("_cn") > 0),
-                    dot("_e", "centroid_vec") / (F.col("_n") * F.col("_cn")),
-                ),
-                6,
-            ).alias("cent_sim"),
-        )
-        w_assign = Window.partitionBy(id_col).orderBy(
-            F.col("cent_sim").desc(), F.col("_cl").asc()
-        )
-        assigned = (
-            scored.filter(F.col("cent_sim").isNotNull())
-            .withColumn("_rk", F.row_number().over(w_assign))
-            .filter(F.col("_rk") == 1)
-            .select(
-                id_col, F.col("_cl").cast("long").alias("cluster"), "cent_sim", "_e", "_n"
-            )
-            .localCheckpoint(eager=True)
-        )
-        a, b = assigned.alias("a"), assigned.alias("b")
-        # both norms are > 0 here by construction (zero-norm vectors never
-        # pass the cent_sim IS NOT NULL filter), so the guard is free
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.cluster") == F.col("b.cluster"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .filter(
-                F.round(
-                    dot("a._e", "b._e") / (F.col("a._n") * F.col("b._n")), 6
-                )
-                >= threshold
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-        )
-        assigned = assigned.drop("_n")
+    cents = centroid_means(
+        vectors, group_col=cluster_col, id_col=id_col, vec_col=vec_col
+    ).select(F.col(cluster_col).cast("long").alias("cluster"), "centroid_vec")
+    assigned = _semdedup_assign(
+        spread_for_compute(vectors, id_col), cents, id_col, vec_col
+    ).localCheckpoint(eager=True)
+    pairs = _semdedup_cluster_pairs(assigned, threshold, id_col, vec_col)
     from aidc_2018_timeseries_spark.operators.graph import connected_components
 
     groups = connected_components(
@@ -1602,53 +1115,24 @@ def semdedup_verdicts(
     )
 
 
-def _semdedup_assign_arrow(
+def _semdedup_assign(
     vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """SemDeDup assignment, Arrow-batched: nearest centroid AND the
-    similarity to it per vector — (id, cluster, cent_sim, _e). One
-    (batch × C) normalized GEMM per batch; 6-dp rounding, ties to the
-    smaller cluster id, zero-norm vectors and centroids dropped — the
-    assign_centroids_arrow contract extended with the kept similarity
-    (SemDeDup's keep policy ranks on it)."""
+    similarity to it per vector — (id, cluster, cent_sim, _e). The
+    :func:`assign_centroids` kernel extended with the kept similarity
+    (SemDeDup's keep policy ranks on it): 6-dp rounding, ties to the
+    smaller cluster id, zero-norm vectors and centroids dropped."""
     import numpy as np
     import pandas as pd
 
     id_t = vectors.schema[id_col].dataType.simpleString()
     vec_t = vectors.schema[vec_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_t}, cluster long, cent_sim double, _e {vec_t}"
-    rows = sorted(centroids.collect(), key=lambda r: r["cluster"])
-    src = vectors.select(id_col, vec_col)
-    if not rows:
-        return (
-            src.filter(F.lit(False))
-            .select(
-                F.col(id_col),
-                F.lit(None).cast("long").alias("cluster"),
-                F.lit(None).cast("double").alias("cent_sim"),
-                F.col(vec_col).alias("_e"),
-            )
-        )
-    ids = np.array([r["cluster"] for r in rows], dtype=np.int64)
-    M = np.array([r["centroid_vec"] for r in rows], dtype=np.float64)
-    cnorms = np.linalg.norm(M, axis=1)
-    ckeep = cnorms > 0
-    if not ckeep.any():
-        return (
-            src.filter(F.lit(False))
-            .select(
-                F.col(id_col),
-                F.lit(None).cast("long").alias("cluster"),
-                F.lit(None).cast("double").alias("cent_sim"),
-                F.col(vec_col).alias("_e"),
-            )
-        )
-    ids, M = ids[ckeep], M[ckeep]
-    Mn = (M / cnorms[ckeep][:, None]).T
+    ids, Mn = _centroid_matrix(centroids, "cluster", "centroid_vec")
 
     def gen(batches):
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(ids):
                 continue
             V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             norms = np.linalg.norm(V, axis=1, keepdims=True)
@@ -1668,10 +1152,12 @@ def _semdedup_assign_arrow(
                 }
             )
 
-    return src.mapInPandas(gen, schema=out_schema)
+    return vectors.select(id_col, vec_col).mapInPandas(
+        gen, schema=f"{id_col} {id_t}, cluster long, cent_sim double, _e {vec_t}"
+    )
 
 
-def _semdedup_cluster_pairs_arrow(
+def _semdedup_cluster_pairs(
     assigned: DataFrame, threshold: float, id_col: str, vec_col: str
 ) -> DataFrame:
     """SemDeDup within-cluster pair stage as ONE dense GEMM per cluster:
@@ -1720,7 +1206,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    arrow: bool = False,
 ) -> DataFrame:
     """IVF-PQ with asymmetric distance computation (ADC) — the
     billion-scale ANN serving pattern (Jégou, Douze, Schmid 2011,
@@ -1733,8 +1218,8 @@ def ivfpq_topk(
 
     Composition of already-verified parts: :func:`stride_centroids` +
     :func:`assign_centroids` (the IVF build), :func:`pq_assign_codes`
-    (the compression layer), the expression query router (the
-    bit-reproducible ivf_topk/ivf_probe_persisted shape).
+    (the compression layer) and the ivf_topk/ivf_probe_persisted query
+    router.
 
     Cross-engine exactness — the groupBy-sum trap: the per-candidate
     score sums m per-subspace doubles, and a groupBy's float
@@ -1776,54 +1261,13 @@ def ivfpq_topk(
     )
 
     cents = stride_centroids(vectors, centroid_stride, id_col, vec_col)
-    # ``arrow=True`` is the DEPLOYMENT form (the expression path stays
-    # the oracle-checked default): assignment and routing move to the
-    # GEMM kernels — the round-4 lesson that an n × C expression-fold
-    # build is quadratic and hours at the 1M-vector decade. The ADC
-    # stage itself is unchanged either way (integer LUT joins, JVM-side)
-    # — equality of the two forms on bounded corpora is pinned in
-    # tests/test_ivfpq.py.
-    assign = assign_centroids_arrow if arrow else assign_centroids
-    inverted = assign(vectors, cents, id_col, vec_col).select(
+    inverted = assign_centroids(vectors, cents, id_col, vec_col).select(
         id_col, "centroid_id"
     )
-    # codes always take the Arrow kernel: it is equality-pinned to the
-    # expression form (tests/test_round5_ops.py) at 6-dp-exact parity and
-    # ~6x faster, so even the oracle face keeps it
     codes = pq_assign_codes(
         vectors, id_col, vec_col, m=m, k=kcode
     ).select(id_col, "subspace", "code")
-
-    if arrow:
-        probes = _route_queries_arrow(
-            queries, cents, n_probe, query_id_col, query_vec_col
-        )
-    else:
-        # expression router (bit-reproducible): n_probe nearest cells/query
-        qn = queries.withColumn("_nq", l2_norm(query_vec_col))
-        cn = cents.withColumn("_nc", l2_norm("centroid_vec"))
-        qsim = F.round(
-            F.when(
-                (F.col("_nq") > 0) & (F.col("_nc") > 0),
-                dot(F.col(query_vec_col), F.col("centroid_vec"))
-                / (F.col("_nq") * F.col("_nc")),
-            ),
-            6,
-        )
-        wq = Window.partitionBy(query_id_col).orderBy(
-            F.col("qsim").desc(), F.col("centroid_id")
-        )
-        probes = (
-            qn.crossJoin(F.broadcast(cn))
-            .select(
-                F.col(query_id_col), F.col(query_vec_col),
-                F.col("centroid_id"), qsim.alias("qsim"),
-            )
-            .filter(F.col("qsim").isNotNull())
-            .withColumn("rk", F.row_number().over(wq))
-            .filter(F.col("rk") <= n_probe)
-            .select(query_id_col, query_vec_col, "centroid_id")
-        )
+    probes = _route_queries(queries, cents, n_probe, query_id_col, query_vec_col)
 
     # ADC lookup table: <q_s, codeword(s, j)> in integer micro-units
     lut = (
@@ -1885,7 +1329,6 @@ def ivfpq_rescored_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    arrow: bool = False,
 ) -> DataFrame:
     """Two-stage IVF-PQ serve — the standard production recipe (Jégou et
     al. 2011 §V): the ADC code-only pass shortlists ``shortlist`` (~10×k)
@@ -1904,7 +1347,7 @@ def ivfpq_rescored_topk(
     sl = ivfpq_topk(
         vectors, queries, centroid_stride=centroid_stride, n_probe=n_probe,
         k=shortlist, m=m, kcode=kcode, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, query_vec_col=query_vec_col, arrow=arrow,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
     ).select(query_id_col, "neighbor_id")
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_e")

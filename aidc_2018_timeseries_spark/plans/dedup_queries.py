@@ -441,11 +441,10 @@ def dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_embedding_lsh",
     _embedding_lsh_oracle(),
     doc="embedding near-dup pairs via sign-LSH buckets + exact cosine "
-    "rescore: signatures via a broadcast join against the tiny per-table "
-    "plane relation (round 7 — plane constants are DATA, not inlined "
-    "code; see operators/similarity.py:lsh_signatures), materialized "
-    "once, then only (table_id, bucket) keys shuffle — the corpus is "
-    "never self-joined all-pairs. Brute force remains the pytest recall "
+    "rescore: signatures as one GEMM per Arrow batch against the "
+    "closed-over plane matrix (operators/similarity.py:lsh_signatures), "
+    "materialized once, then only (table_id, bucket) keys shuffle — the "
+    "corpus is never self-joined all-pairs. Brute force remains the pytest recall "
     "baseline (tests/test_similarity.py).",
 )
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,9 +523,9 @@ def _embedding_lsh_scaled_oracle() -> str:
     "data-derived bit count maskable against one inlined max-budget "
     "plane set (see _embedding_lsh_scaled_oracle), so the driver hash "
     "now certifies the SCALING RULE and the GEMM signature path, not "
-    "just the fixed-bits baseline. GEMM-vs-expression sign parity holds "
-    "with measured margin (min |dot| 2.7e-5 at sf0.01 vs the 5e-7 "
-    "rounding boundary; bucket equality pinned in tests)",
+    "just the fixed-bits baseline. GEMM-vs-sequential-fold sign parity "
+    "holds with measured margin (min |dot| 2.7e-5 at sf0.01 vs the 5e-7 "
+    "rounding boundary; buckets pinned against a fold reference in tests)",
 )
 def dedup_embedding_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.operators.similarity import scaled_n_bits
@@ -537,7 +536,6 @@ def dedup_embedding_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         e,
         threshold=_LSH_THRESHOLD,
         planes=hyperplane_rows_stable(_LSH_DIM, _LSH_TABLES, bits, _LSH_SEED),
-        arrow=True,
     )
 
 

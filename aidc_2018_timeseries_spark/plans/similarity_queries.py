@@ -209,22 +209,19 @@ def _ann_eval(pred: DataFrame, truth: DataFrame) -> DataFrame:
     "knn_ivf_eval",
     _ivf_eval_oracle(),
     doc="IVF quality scorecard, ORACLE-CHECKED (round-6 verdict item 1 — "
-    "the dedup_minhash_eval pattern applied to ANN): ivf_topk on the "
-    "bit-reproducible expression assignment path (arrow=False; in-order "
-    "fold + 6-dp round matches DuckDB's sequential list functions) with "
-    "pinned knobs (stride 50, probe 3), scored against brute-force "
-    "ground truth — n_queries/n_truth/n_pred/hits/recall/precision in "
-    "one hash-checked row. The GEMM production path is pinned equal to "
-    "the expression path in tests/test_similarity.py, so this face "
-    "certifies the quality of BOTH. At 100 TB this is the tune-on-a-"
+    "the dedup_minhash_eval pattern applied to ANN): ivf_topk (GEMM "
+    "assignment, GEMM routing, Arrow rescore — the one implementation, "
+    "6-dp HALF_UP rounding and smallest-id ties like DuckDB's ROUND and "
+    "ORDER BY) with pinned knobs (stride 50, probe 3), scored against "
+    "brute-force ground truth — n_queries/n_truth/n_pred/hits/recall/"
+    "precision in one hash-checked row. At 100 TB this is the tune-on-a-"
     "sampled-stratum run: truth is quadratic in the stratum only",
 )
 def knn_ivf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_table(spark, sf_dir, "embeddings")
     q = _queries_df(v)
     pred = sim.ivf_topk(
-        v, q, centroid_stride=_IVF_EVAL_STRIDE, n_probe=_IVF_EVAL_PROBE,
-        k=_K, arrow=False,
+        v, q, centroid_stride=_IVF_EVAL_STRIDE, n_probe=_IVF_EVAL_PROBE, k=_K
     )
     return _ann_eval(pred, sim.brute_force_topk(v, q, k=_K))
 
@@ -273,21 +270,19 @@ def _rp_lsh_eval_oracle() -> str:
     "knn_rp_lsh_eval",
     _rp_lsh_eval_oracle(),
     doc="sign-LSH kNN quality scorecard, ORACLE-CHECKED (round-6 verdict "
-    "item 1): rp_lsh_topk on the bit-reproducible expression-signature "
-    "path (arrow=False) with the PRODUCTION configuration (16 tables x "
-    "5 bits = scaled_n_bits at this corpus; plane constants inlined into "
-    "the SQL), scored against brute-force truth — one hash-checked "
-    "recall/precision row (0.68 at sf0.01; both sides reproduce the "
-    "number exactly, which is the point: even the approximation QUALITY "
-    "is cross-engine-verified). Certifies the GEMM path too via the "
-    "arrow==expression equality pin in tests",
+    "item 1): rp_lsh_topk (GEMM signatures) with the PRODUCTION "
+    "configuration (16 tables x 5 bits = scaled_n_bits at this corpus; "
+    "plane constants inlined into the SQL), scored against brute-force "
+    "truth — one hash-checked recall/precision row (0.68 at sf0.01; both "
+    "sides reproduce the number exactly, which is the point: even the "
+    "approximation QUALITY is cross-engine-verified)",
 )
 def knn_rp_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_table(spark, sf_dir, "embeddings")
     q = _queries_df(v)
     pred = sim.rp_lsh_topk(
         v, q, n_tables=_LSH_EVAL_TABLES, n_bits=_LSH_EVAL_BITS, k=_K,
-        seed=_LSH_EVAL_SEED, dim=_LSH_EVAL_DIM, arrow=False,
+        seed=_LSH_EVAL_SEED, dim=_LSH_EVAL_DIM,
     )
     return _ann_eval(pred, sim.brute_force_topk(v, q, k=_K))
 
@@ -502,9 +497,9 @@ _PQ_M, _PQ_K, _PQ_SUBDIM = 8, 16, 8
 def _pq_oracle() -> str:
     """DuckDB mirror of pq_assign_codes: codebook = subvector slices of
     the 16 lowest-vec_id embeddings; squared-L2 written as the SAME
-    explicit left-associated 8-term sum the Spark expression folds, so
-    both engines accumulate in identical IEEE order before the 6-dp
-    round."""
+    explicit left-associated 8-term sum the Spark kernel's sequential
+    j-loop accumulates, so both engines add in identical IEEE order
+    before the 6-dp round."""
     terms = " + ".join(
         f"(CAST(e.embedding[sub.s*{_PQ_SUBDIM}+{j}] AS DOUBLE)"
         f" - CAST(c.embedding[sub.s*{_PQ_SUBDIM}+{j}] AS DOUBLE))"
@@ -538,8 +533,8 @@ def _pq_oracle() -> str:
     "32x compression layer under billion-scale ANN. Codebook = slices "
     "of the 16 lowest-id vectors (deterministic init; Lloyd refinement "
     "= kmeans_step_centroids per subspace). Assignment is a pure scan: "
-    "codebook literals fold into whole-stage codegen, no shuffle, no "
-    "Python; the oracle cross-joins the same codebook relation",
+    "one Arrow batch kernel with the codebook closed over, no shuffle; "
+    "the oracle cross-joins the same codebook relation",
 )
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_table(spark, sf_dir, "embeddings")
@@ -569,9 +564,7 @@ def knn_ivf_persisted_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _queries_df(v)
     cents = sim.stride_centroids(v, _IVF_EVAL_STRIDE)
     path = tempfile.mkdtemp(prefix="aidc_ivf_index_")
-    index = sim.ivf_build_persisted(
-        v, cents, "aidc_ivf_index", path, n_buckets=8, arrow=False
-    )
+    index = sim.ivf_build_persisted(v, cents, "aidc_ivf_index", path, n_buckets=8)
     pred = sim.ivf_probe_persisted(
         index, q, cents, n_probe=_IVF_EVAL_PROBE, k=_K
     )
@@ -697,11 +690,9 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(n_vectors/n_groups/pruned/true_pairs/captured_pairs/recall). "
     "Honest numbers: 0.26 at sf0.01 — tau=0.35 sits BELOW any cluster "
     "structure on this near-uniform testdata, so cross-cluster misses "
-    "dominate (the measurement working as intended) — vs 0.95 on the "
-    "planted-copy emb10 corpus at the paper's tau=0.9 regime "
-    "(tools/bench_semdedup.py methodology, pinned in pytest). Certifies "
-    "the fold face; the arrow deployment form is pinned equal in "
-    "tests/test_semdedup.py",
+    "dominate (the measurement working as intended) — vs >= 0.9 on a "
+    "planted-duplicate corpus at the paper's tau=0.9 regime (pinned in "
+    "tests/test_semdedup.py)",
 )
 def dedup_semdedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.functions.vectors import dot, l2_norm
@@ -882,10 +873,10 @@ def _retrieval_eval_oracle() -> str:
     "array<double>) contract), the inverted file is BUILT AND WRITTEN "
     "bucketed on centroid_id (ivf_build_persisted, Arrow GEMM "
     "assignment), and a query stride of the same chunks probes it "
-    "(ivf_probe_persisted arrow=True: routing GEMM + Arrow rescore, "
-    "bucket-pruned scan). Rows-only by design — the quality twin "
-    "retrieval_recall_eval carries the DuckDB oracle on the "
-    "expression-form sibling of the same chain",
+    "(ivf_probe_persisted: routing GEMM + Arrow rescore, bucket-pruned "
+    "scan). Rows-only by design — the quality twin "
+    "retrieval_recall_eval carries the DuckDB oracle on the in-memory "
+    "ivf_topk form of the same chain",
 )
 def retrieval_index_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
@@ -893,12 +884,10 @@ def retrieval_index_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _retrieval_corpus(spark, sf_dir)
     cents = sim.stride_centroids(v, _RET_CSTRIDE)
     path = tempfile.mkdtemp(prefix="aidc_retrieval_idx_")
-    index = sim.ivf_build_persisted(
-        v, cents, "aidc_retrieval_idx", path, n_buckets=8, arrow=True
-    )
+    index = sim.ivf_build_persisted(v, cents, "aidc_retrieval_idx", path, n_buckets=8)
     q = _retrieval_queries(v)
     return sim.ivf_probe_persisted(
-        index, q, cents, n_probe=_RET_PROBE, k=_RET_K, arrow=True
+        index, q, cents, n_probe=_RET_PROBE, k=_RET_K
     )
 
 
@@ -906,10 +895,11 @@ def retrieval_index_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "retrieval_recall_eval",
     _retrieval_eval_oracle(),
     doc="ORACLE-CHECKED quality twin of retrieval_index_e2e: the same "
-    "chunk -> feature-hash-embed -> IVF chain on the bit-reproducible "
-    "expression path (in-memory ivf_topk; parquet round-trips doubles "
-    "exactly, so the persisted deployment form returns the same top-k — "
-    "the knn_ivf_persisted_eval precedent), scored against brute-force "
+    "chunk -> feature-hash-embed -> IVF chain through the in-memory "
+    "ivf_topk (the same assignment, routing and rescore kernels; parquet "
+    "round-trips doubles exactly, so the persisted deployment form "
+    "returns the same top-k — the knn_ivf_persisted_eval precedent), "
+    "scored against brute-force "
     "truth over the identical chunk corpus: n_queries/n_truth/n_pred/"
     "hits/recall/precision in one hash-checked row. The oracle restates "
     "the ENTIRE chain in DuckDB — tokenizer slicing, md5 feature "
@@ -921,8 +911,7 @@ def retrieval_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _retrieval_corpus(spark, sf_dir)
     q = _retrieval_queries(v)
     pred = sim.ivf_topk(
-        v, q, centroid_stride=_RET_CSTRIDE, n_probe=_RET_PROBE, k=_RET_K,
-        arrow=False,
+        v, q, centroid_stride=_RET_CSTRIDE, n_probe=_RET_PROBE, k=_RET_K
     )
     return _ann_eval(pred, sim.brute_force_topk(v, q, k=_RET_K))
 

@@ -1,13 +1,13 @@
 """Persisted IVF index (round-7 verdict item 3): build-once, probe-later.
 
 Three claims the face's docstring makes, pinned here:
-1. the persisted probe is BIT-EQUAL to the in-memory ivf_topk on the
-   expression path (parquet round-trip adds no approximation);
+1. the persisted probe is BIT-EQUAL to the in-memory ivf_topk (parquet
+   round-trip adds no approximation);
 2. the probe's index scan is a bucketed scan with bucket PRUNING — it
    selects strictly fewer buckets than the table has (the on-disk
    n_probe/C story, not just a post-scan filter);
-3. the GEMM (arrow=True) build persists the same inverted file as the
-   expression build — the production path serves the same index.
+3. the persisted inverted file is the in-memory assign_centroids
+   relation, row for row.
 """
 
 from __future__ import annotations
@@ -40,22 +40,16 @@ def _rows(df):
 def test_persisted_probe_equals_in_memory(spark):
     v, q, cents = _frames(spark)
     path = tempfile.mkdtemp(prefix="aidc_ivf_test_")
-    index = sim.ivf_build_persisted(
-        v, cents, "aidc_ivf_test_idx", path, n_buckets=8, arrow=False
-    )
+    index = sim.ivf_build_persisted(v, cents, "aidc_ivf_test_idx", path, n_buckets=8)
     pred = sim.ivf_probe_persisted(index, q, cents, n_probe=PROBE, k=K)
-    ref = sim.ivf_topk(
-        v, q, centroid_stride=STRIDE, n_probe=PROBE, k=K, arrow=False
-    )
+    ref = sim.ivf_topk(v, q, centroid_stride=STRIDE, n_probe=PROBE, k=K)
     assert _rows(pred) == _rows(ref)
 
 
 def test_probe_scan_prunes_buckets(spark):
     v, q, cents = _frames(spark)
     path = tempfile.mkdtemp(prefix="aidc_ivf_test_")
-    index = sim.ivf_build_persisted(
-        v, cents, "aidc_ivf_test_idx2", path, n_buckets=8, arrow=False
-    )
+    index = sim.ivf_build_persisted(v, cents, "aidc_ivf_test_idx2", path, n_buckets=8)
     pred = sim.ivf_probe_persisted(index, q, cents, n_probe=PROBE, k=K)
     import io
     from contextlib import redirect_stdout
@@ -74,38 +68,18 @@ def test_probe_scan_prunes_buckets(spark):
 
 def test_gemm_build_persists_same_index(spark):
     v, _, cents = _frames(spark)
-    p1 = tempfile.mkdtemp(prefix="aidc_ivf_test_")
-    p2 = tempfile.mkdtemp(prefix="aidc_ivf_test_")
-    a = sim.ivf_build_persisted(
-        v, cents, "aidc_ivf_test_a", p1, n_buckets=8, arrow=False
-    ).select("vec_id", "centroid_id")
-    b = sim.ivf_build_persisted(
-        v, cents, "aidc_ivf_test_b", p2, n_buckets=8, arrow=True
-    ).select("vec_id", "centroid_id")
-    assert _rows(a) == _rows(b)
-
-
-def test_arrow_probe_matches_expression_probe(spark):
-    """The arrow=True deployment rescore must reproduce the expression
-    probe's top-k exactly on this corpus (same 6-dp round, same NULL
-    policy, same tiebreak)."""
-    v, q, cents = _frames(spark)
     path = tempfile.mkdtemp(prefix="aidc_ivf_test_")
-    index = sim.ivf_build_persisted(
-        v, cents, "aidc_ivf_test_idx3", path, n_buckets=8, arrow=False
-    )
-    a = sim.ivf_probe_persisted(index, q, cents, n_probe=PROBE, k=K)
-    b = sim.ivf_probe_persisted(
-        index, q, cents, n_probe=PROBE, k=K, arrow=True
-    )
-    assert _rows(a) == _rows(b)
+    persisted = sim.ivf_build_persisted(
+        v, cents, "aidc_ivf_test_a", path, n_buckets=8
+    ).select("vec_id", "centroid_id")
+    in_memory = sim.assign_centroids(v, cents).select("vec_id", "centroid_id")
+    assert _rows(persisted) == _rows(in_memory)
 
 
 def test_arrow_router_edge_cases(spark):
-    """_route_queries_arrow must mirror the expression router's edge
-    semantics: zero-norm queries probe nothing, zero-norm centroids are
-    dropped, n_probe > C degrades to all live cells, empty centroid set
-    yields an empty probe relation."""
+    """_route_queries edge semantics: zero-norm queries probe nothing,
+    zero-norm centroids are dropped, n_probe > C degrades to all live
+    cells, an empty centroid set yields an empty probe relation."""
     from pyspark.sql import functions as F
 
     q = spark.createDataFrame(
@@ -118,7 +92,7 @@ def test_arrow_router_edge_cases(spark):
     )
     got = {
         (r.query_id, r.centroid_id)
-        for r in sim._route_queries_arrow(
+        for r in sim._route_queries(
             q, cents, n_probe=5, query_id_col="query_id",
             query_vec_col="query_vec",
         ).collect()
@@ -129,7 +103,7 @@ def test_arrow_router_edge_cases(spark):
 
     empty = cents.filter(F.lit(False))
     assert (
-        sim._route_queries_arrow(
+        sim._route_queries(
             q, empty, n_probe=3, query_id_col="query_id",
             query_vec_col="query_vec",
         ).count()
@@ -137,14 +111,9 @@ def test_arrow_router_edge_cases(spark):
     )
 
 
-def test_arrow_router_matches_expression_router_ranking(spark):
-    """Tie and ordering parity on a crafted grid: same probed cells as
-    the expression router (6-dp round, smaller centroid_id on ties)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from aidc_2018_timeseries_spark.functions.vectors import cosine_similarity
-
+def test_arrow_router_ties_break_to_smaller_centroid_id(spark):
+    """Ranking on a crafted grid: 6-dp-rounded cosine descending, and a
+    rounded tie goes to the smaller centroid_id."""
     q = spark.createDataFrame(
         [(i, [float(i % 3 + 1), float((7 * i) % 5)]) for i in range(1, 9)],
         "query_id long, query_vec array<double>",
@@ -154,24 +123,19 @@ def test_arrow_router_matches_expression_router_ranking(spark):
         [(1, [1.0, 1.0]), (2, [1.0, 1.0]), (3, [2.0, 1.0]), (4, [0.5, 2.0])],
         "centroid_id long, centroid_vec array<double>",
     )
-    arrow = {
+    got = {
         (r.query_id, r.centroid_id)
-        for r in sim._route_queries_arrow(
+        for r in sim._route_queries(
             q, cents, n_probe=2, query_id_col="query_id",
             query_vec_col="query_vec",
         ).collect()
     }
-    qc = q.crossJoin(F.broadcast(cents))
-    qsim = F.round(cosine_similarity(F.col("query_vec"), F.col("centroid_vec")), 6)
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("qsim").desc(), F.col("centroid_id")
-    )
-    expr = {
-        (r.query_id, r.centroid_id)
-        for r in qc.select("query_id", "centroid_id", qsim.alias("qsim"))
-        .filter(F.col("qsim").isNotNull())
-        .withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= 2)
-        .collect()
+    # queries 1-4 ([2,2] [3,4] [1,1] [2,3]) are closest to [1,1]: the tied
+    # cells 1 and 2 fill both probes. Queries 5-8 ([3,0] [1,2] [2,4] [3,1])
+    # have a closer single cell (3, 4, 4, 3: e.g. cos([3,0],[2,1]) =
+    # 0.894427 > cos([3,0],[1,1]) = 0.707107), and their second probe is
+    # the 1-vs-2 tie, which cell 1 wins.
+    want = {(i, c) for i in (1, 2, 3, 4) for c in (1, 2)} | {
+        (5, 3), (5, 1), (6, 4), (6, 1), (7, 4), (7, 1), (8, 3), (8, 1)
     }
-    assert arrow == expr
+    assert got == want

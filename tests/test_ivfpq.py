@@ -93,19 +93,3 @@ def test_two_stage_beats_code_only_on_testdata(spark, sf_dir):
     two = CATALOG["knn_ivfpq_rescored_eval"].spark_fn(spark, sf_dir).collect()[0]
     assert two["recall"] >= code["recall"]
     assert two["recall"] >= 0.6  # a realistic config, not a strawman
-
-
-def test_arrow_form_matches_expression_form(spark, sf_dir):
-    """The GEMM deployment form (arrow=True: Arrow assignment + routing)
-    must return the identical relation to the oracle-checked expression
-    form on the testdata corpus — the ivf_topk parity contract."""
-    from aidc_2018_timeseries_spark.sources.tables import load_table
-
-    v = load_table(spark, sf_dir, "embeddings")
-    q = v.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    kw = dict(centroid_stride=50, n_probe=3, k=5, m=8, kcode=16)
-    expr = sorted(map(tuple, ivfpq_topk(v, q, arrow=False, **kw).collect()))
-    gemm = sorted(map(tuple, ivfpq_topk(v, q, arrow=True, **kw).collect()))
-    assert expr == gemm

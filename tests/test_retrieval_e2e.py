@@ -68,9 +68,9 @@ def test_embedding_is_signed_token_count(spark):
 
 def test_deployment_face_matches_expression_chain(spark, sf_dir):
     """retrieval_index_e2e (persisted index + Arrow GEMM route/rescore)
-    must return the same top-k sets as the expression-form in-memory
-    chain the oracle checks — the knn_ivf_persisted_eval parity contract
-    applied to the composed face."""
+    must return the same top-k sets as the in-memory ivf_topk chain the
+    oracle checks — the knn_ivf_persisted_eval parity contract applied to
+    the composed face."""
     dep = sorted(map(tuple, retrieval_index_e2e(spark, sf_dir).collect()))
     v = _retrieval_corpus(spark, sf_dir)
     q = _retrieval_queries(v)
@@ -79,7 +79,7 @@ def test_deployment_face_matches_expression_chain(spark, sf_dir):
             tuple,
             sim.ivf_topk(
                 v, q, centroid_stride=_RET_CSTRIDE, n_probe=_RET_PROBE,
-                k=_RET_K, arrow=False,
+                k=_RET_K,
             ).collect(),
         )
     )

@@ -123,15 +123,45 @@ def test_pq_total_error_below_worst_codeword(spark):
     assert all(v == 0.0 for v in seed_err.values())
 
 
-def test_pq_arrow_and_expression_forms_identical(spark, sf_dir):
-    # the Arrow batch kernel must reproduce the pure-Catalyst expression
-    # form bit-for-bit (same left-fold accumulation, Spark-side rounding)
+def test_pq_codes_match_sequential_fold_reference(spark, sf_dir):
+    # every (vector, subspace) code and dist equals a pure-Python
+    # reference: left-fold squared L2 in j order, 6-dp HALF_UP, argmin
+    # with the lowest code on ties — the embedding_pq_codes oracle's rule
+    from decimal import ROUND_HALF_UP, Decimal
+
     from aidc_2018_timeseries_spark.sources.tables import load_table
 
+    def r6(x):
+        return float(Decimal(x).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
     v = load_table(spark, sf_dir, "embeddings")
-    a = sorted(map(tuple, pq_assign_codes(v, m=8, k=16, arrow=True).collect()))
-    e = sorted(map(tuple, pq_assign_codes(v, m=8, k=16, arrow=False).collect()))
-    assert a == e
+    m, k = 8, 16
+    rows = sorted((r["vec_id"], r["embedding"]) for r in v.collect())
+    seeds = [e for _, e in rows[:k]]
+    sub = len(rows[0][1]) // m
+    want = set()
+    for vid, e in rows:
+        for s in range(m):
+            best = None
+            for c, cw in enumerate(seeds):
+                acc = 0.0
+                for j in range(s * sub, (s + 1) * sub):
+                    d = float(e[j]) - float(cw[j])
+                    acc += d * d
+                if best is None or r6(acc) < best[0]:
+                    best = (r6(acc), c)
+            want.add((vid, s, best[1], best[0]))
+    got = set(map(tuple, pq_assign_codes(v, m=m, k=k).collect()))
+    assert got == want
+
+    # two identical codewords (ids 0 and 1) tie at every distance: the
+    # lower code wins; [1, 2] is 1.0 from both
+    tied = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, [1.0, 1.0]), (2, [1.0, 2.0])],
+        "vec_id long, embedding array<float>",
+    )
+    got = sorted(map(tuple, pq_assign_codes(tied, m=1, k=2).collect()))
+    assert got == [(0, 0, 0, 0.0), (1, 0, 0, 0.0), (2, 0, 0, 1.0)]
 
 
 # --- bigram perplexity ------------------------------------------------------

@@ -106,9 +106,14 @@ def _planted(seed=7, n_clusters=3, per_cluster=8, dim=16):
     return vecs, labels
 
 
-def test_semdedup_matches_brute_force_on_planted_corpus(spark):
-    vecs, labels = _planted()
-    df = _corpus(spark, vecs, labels)
+def _split(df, split):
+    """The corpus as one partition, or hash-spread over three so the
+    per-batch Arrow kernels see it in several pieces; the verdicts must
+    not depend on the layout."""
+    return df.repartition(3, "vec_id") if split else df.coalesce(1)
+
+
+def _assert_matches_brute_force(df, vecs, labels):
     got = {
         r["vec_id"]: (r["cluster"], r["cent_sim"], r["group_id"], r["keep"])
         for r in semdedup_verdicts(df, threshold=TAU).collect()
@@ -127,6 +132,20 @@ def test_semdedup_matches_brute_force_on_planted_corpus(spark):
     assert sorted(map(sorted, by_group_got.values())) == sorted(
         map(sorted, by_group_want.values())
     )
+
+
+def test_semdedup_matches_brute_force_on_planted_corpus(spark):
+    vecs, labels = _planted()
+    _assert_matches_brute_force(_corpus(spark, vecs, labels), vecs, labels)
+
+
+def test_semdedup_arrow_form_matches_on_planted_corpus(spark):
+    """The Arrow kernel (GEMM assignment + per-cluster GEMM pair stage)
+    on a wider planted corpus spread over several partitions: the same
+    verdicts as the brute-force replica."""
+    vecs, labels = _planted(seed=23, n_clusters=4, per_cluster=10)
+    df = _split(_corpus(spark, vecs, labels), True)
+    _assert_matches_brute_force(df, vecs, labels)
 
 
 def test_semdedup_keeps_exactly_one_per_group(spark):
@@ -179,31 +198,11 @@ def test_semdedup_near_identical_cross_cluster_pair_not_grouped(spark):
     assert g[0] != g[1]
 
 
-def test_semdedup_arrow_form_matches_fold_form(spark, sf_dir):
-    """The deployment form (GEMM assignment + per-cluster GEMM pair stage)
-    must reproduce the oracle-checked fold form exactly — divergence needs
-    a true accumulation-order error crossing the 5e-7 rounding boundary."""
-    from aidc_2018_timeseries_spark.sources.tables import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    fold = semdedup_verdicts(e, threshold=0.35).collect()
-    gemm = semdedup_verdicts(e, threshold=0.35, arrow=True).collect()
-    assert sorted(map(tuple, fold)) == sorted(map(tuple, gemm))
-
-
-def test_semdedup_arrow_form_matches_on_planted_corpus(spark):
-    vecs, labels = _planted(seed=23, n_clusters=4, per_cluster=10)
-    df = _corpus(spark, vecs, labels)
-    fold = semdedup_verdicts(df, threshold=TAU).collect()
-    gemm = semdedup_verdicts(df, threshold=TAU, arrow=True).collect()
-    assert sorted(map(tuple, fold)) == sorted(map(tuple, gemm))
-
-
 def test_semdedup_arrow_zero_vector_and_singleton_clusters(spark):
     vecs, labels = _planted(seed=31, n_clusters=2, per_cluster=3, dim=8)
     vecs.append([0.0] * 8)
     labels.append(1)
-    out = semdedup_verdicts(_corpus(spark, vecs, labels), threshold=TAU, arrow=True)
+    out = semdedup_verdicts(_corpus(spark, vecs, labels), threshold=TAU)
     ids = {r["vec_id"] for r in out.collect()}
     assert len(vecs) - 1 not in ids and ids == set(range(len(vecs) - 1))
 
@@ -217,7 +216,7 @@ def test_semdedup_recall_near_one_on_planted_duplicates(spark):
     df = _corpus(spark, vecs, labels)
     grp = {
         r["vec_id"]: r["group_id"]
-        for r in semdedup_verdicts(df, threshold=TAU, arrow=True).collect()
+        for r in semdedup_verdicts(df, threshold=TAU).collect()
     }
     M = np.asarray(np.asarray(vecs, dtype=np.float32), dtype=np.float64)
     M = M / np.linalg.norm(M, axis=1, keepdims=True)
@@ -230,21 +229,22 @@ def test_semdedup_recall_near_one_on_planted_duplicates(spark):
     assert captured / len(ia) >= 0.9
 
 
-@pytest.mark.parametrize("arrow", [False, True])
-def test_semdedup_edge_corpora(spark, arrow):
+@pytest.mark.parametrize("split", [False, True])
+def test_semdedup_edge_corpora(spark, split):
     """Empty corpus, single vector, and all-identical vectors must not
-    throw and must keep exactly one per group."""
+    throw and must keep exactly one per group, on one partition or
+    spread over several."""
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<float>, label int"
     )
-    assert semdedup_verdicts(empty, threshold=TAU, arrow=arrow).count() == 0
+    assert semdedup_verdicts(_split(empty, split), threshold=TAU).count() == 0
 
-    single = _corpus(spark, [[1.0] + [0.0] * 7], [0])
-    rows = semdedup_verdicts(single, threshold=TAU, arrow=arrow).collect()
+    single = _split(_corpus(spark, [[1.0] + [0.0] * 7], [0]), split)
+    rows = semdedup_verdicts(single, threshold=TAU).collect()
     assert len(rows) == 1 and rows[0]["keep"] == 1
 
-    same = _corpus(spark, [[1.0, 2.0, 3.0]] * 5, [0] * 5)
-    rows = semdedup_verdicts(same, threshold=TAU, arrow=arrow).collect()
+    same = _split(_corpus(spark, [[1.0, 2.0, 3.0]] * 5, [0] * 5), split)
+    rows = semdedup_verdicts(same, threshold=TAU).collect()
     assert len(rows) == 5
     assert sum(r["keep"] for r in rows) == 1
     assert len({r["group_id"] for r in rows}) == 1
@@ -267,28 +267,28 @@ def _blob_corpus(spark, seed=3, n_per=40, d=8, sep=6.0):
     return _corpus(spark, vecs, labels), blob
 
 
-@pytest.mark.parametrize("arrow", [False, True])
-def test_kmeans_fixed_point_labels_stable(spark, arrow):
+@pytest.mark.parametrize("split", [False, True])
+def test_kmeans_fixed_point_labels_stable(spark, split):
     """At the converged fixed point, one MORE centroid+assign step must
-    reproduce the labels exactly — the definition this option promises."""
+    reproduce the labels exactly — the definition this option promises —
+    whatever the partition layout of the corpus."""
     from aidc_2018_timeseries_spark.operators.similarity import (
         assign_centroids,
-        assign_centroids_arrow,
         centroid_means,
         kmeans_converged_labels,
     )
 
     df, _ = _blob_corpus(spark)
+    df = _split(df, split)
     stats = {}
     conv = kmeans_converged_labels(
-        df, max_iters=15, arrow=arrow, stats=stats
+        df, max_iters=15, stats=stats
     ).localCheckpoint(eager=True)
     assert stats["converged"], stats
     cents = centroid_means(conv, group_col="label").select(
         F.col("label").cast("long").alias("_cid"), "centroid_vec"
     )
-    assign = assign_centroids_arrow if arrow else assign_centroids
-    again = assign(conv, cents, centroid_id_col="_cid").select(
+    again = assign_centroids(conv, cents, centroid_id_col="_cid").select(
         "vec_id", F.col("_cid").cast("long").alias("relabel")
     )
     diff = (
@@ -336,8 +336,8 @@ def test_semdedup_kmeans_iters_zero_is_oracle_face(spark):
     assert base == explicit
 
 
-@pytest.mark.parametrize("arrow", [False, True])
-def test_semdedup_converged_still_valid_verdicts(spark, arrow):
+@pytest.mark.parametrize("split", [False, True])
+def test_semdedup_converged_still_valid_verdicts(spark, split):
     """With converged clustering the verdict invariants must hold: one
     keep per group, every group_id is a member id, planted near-dup pairs
     still deduplicate (the clustering changed, not the policy)."""
@@ -345,10 +345,8 @@ def test_semdedup_converged_still_valid_verdicts(spark, arrow):
     base = rng.standard_normal((30, 8))
     vecs = list(base) + [b + 0.001 * rng.standard_normal(8) for b in base[:10]]
     labels = [int(rng.integers(0, 4)) for _ in vecs]  # scrambled seed
-    df = _corpus(spark, vecs, labels)
-    out = semdedup_verdicts(
-        df, threshold=TAU, arrow=arrow, kmeans_iters=10
-    ).collect()
+    df = _split(_corpus(spark, vecs, labels), split)
+    out = semdedup_verdicts(df, threshold=TAU, kmeans_iters=10).collect()
     by_group = {}
     for r in out:
         by_group.setdefault(r["group_id"], []).append(r)

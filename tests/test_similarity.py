@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators.similarity import (
@@ -17,6 +20,46 @@ def _queries(v):
     return v.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
+
+
+def _half_up6(x):
+    """Spark F.round / DuckDB ROUND at 6 dp: HALF_UP on the exact binary
+    value (Decimal(x) is exact)."""
+    return float(Decimal(x).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _fold_cos(a, b):
+    """The oracle's cosine: left-fold dot and norms in array order, then
+    the 6-dp round; None when either norm is zero."""
+    d = na = nb = 0.0
+    for x, y in zip(a, b):
+        d += float(x) * float(y)
+        na += float(x) * float(x)
+        nb += float(y) * float(y)
+    if na == 0 or nb == 0:
+        return None
+    return _half_up6(d / (math.sqrt(na) * math.sqrt(nb)))
+
+
+def _top(vec, others, n):
+    """ids of the n most similar ``others`` (id -> vec) by rounded
+    cosine, ties to the smaller id — with their sims."""
+    sims = [(_fold_cos(vec, o), i) for i, o in others.items()]
+    ranked = sorted(((s, i) for s, i in sims if s is not None), key=lambda t: (-t[0], t[1]))
+    return [(i, s) for s, i in ranked[:n]]
+
+
+def _ref_bucket(vec, planes_for_table):
+    """Sign-LSH bucket of one vector for one table: left-fold dot in array
+    order, 6-dp HALF_UP, sign test, bit-shift accumulate."""
+    bucket = 0
+    for b, plane in sorted(planes_for_table):
+        acc = 0.0
+        for x, y in zip(vec, plane):
+            acc += float(x) * y
+        if _half_up6(acc) > 0:
+            bucket += 1 << b
+    return bucket
 
 
 def test_ivf_recall_against_brute_force(spark):
@@ -124,28 +167,30 @@ def test_rp_lsh_wide_tables_recover_exact(spark):
     assert exact == got
 
 
-def test_assign_centroids_arrow_matches_expression_form(spark):
-    """The Arrow GEMM assignment (the scale path inside ivf_topk) must pick
-    the SAME centroid per vector as the expression form, including the
-    smallest-centroid-id tiebreak on the 6-dp-rounded similarity."""
-    from aidc_2018_timeseries_spark.operators.similarity import (
-        assign_centroids,
-        assign_centroids_arrow,
-    )
+def test_assign_centroids_matches_sequential_fold_reference(spark):
+    """The GEMM assignment picks the centroid a sequential-fold, HALF_UP
+    reference picks for every vector, and breaks a rounded tie (two
+    centroids with the same vector) to the smaller centroid_id."""
+    from aidc_2018_timeseries_spark.operators.similarity import assign_centroids
 
     v = load_table(spark, SF_DIR, "embeddings")
     cents = stride_centroids(v, 50)
-    expr = {
-        r["vec_id"]: r["centroid_id"] for r in assign_centroids(v, cents).collect()
-    }
-    arrow = {
-        r["vec_id"]: r["centroid_id"]
-        for r in assign_centroids_arrow(v, cents).collect()
-    }
-    assert expr.keys() == arrow.keys()
-    diff = {k for k in expr if expr[k] != arrow[k]}
-    # identical up to genuine 6-dp rounding boundaries (none in this data)
-    assert not diff, f"{len(diff)} assignment diffs, e.g. {sorted(diff)[:3]}"
+    got = {r["vec_id"]: r["centroid_id"] for r in assign_centroids(v, cents).collect()}
+    cmap = {r["centroid_id"]: r["centroid_vec"] for r in cents.collect()}
+    want = {r["vec_id"]: _top(r["embedding"], cmap, 1)[0][0] for r in v.collect()}
+    assert got == want
+
+    tied = spark.createDataFrame(
+        [(7, [1.0, 1.0]), (3, [1.0, 1.0]), (5, [1.0, -1.0])],
+        "centroid_id long, centroid_vec array<double>",
+    )
+    vecs = spark.createDataFrame(
+        [(1, [2.0, 1.0]), (2, [1.0, -3.0])], "vec_id long, embedding array<double>"
+    )
+    got = {r["vec_id"]: r["centroid_id"] for r in assign_centroids(vecs, tied).collect()}
+    # vec 1: cos to [1,1] = 3/sqrt(10) = 0.948683 for BOTH 3 and 7 (> 0.316228
+    # to [1,-1]) -> 3; vec 2: cos to [1,-1] = 4/sqrt(20) = 0.894427 -> 5
+    assert got == {1: 3, 2: 5}
 
 
 def test_ivf_n_centroids_knob(spark):
@@ -215,107 +260,140 @@ def test_hyperplane_rows_stable_prefix_property(spark):
 
 
 def test_lsh_signature_arrow_matches_expression(spark):
-    """GEMM signatures == expression signatures on the stable planes at
-    test SF — the bucket-level certification behind the scaled face's
-    oracle (sign margins are ~50x the 6-dp rounding boundary on this
-    data, so the np.round/GEMM vs JVM-fold/HALF_UP difference cannot
-    flip a bit)."""
+    """GEMM signatures == a Spark-expression reference on the stable
+    planes at test SF: per (vector, plane) the sequential-fold
+    ``functions.vectors.dot``, the 6-dp ``F.round`` sign test, and the
+    bit-shift sum per table — the arithmetic the scaled face's DuckDB
+    oracle inlines, evaluated by the JVM instead of NumPy."""
+    from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
+
+    from aidc_2018_timeseries_spark.functions.vectors import dot
     from aidc_2018_timeseries_spark.operators.similarity import (
         hyperplane_rows_stable,
         lsh_signatures,
-        lsh_signatures_arrow,
     )
 
     v = load_table(spark, SF_DIR, "embeddings")
     planes = hyperplane_rows_stable(64, 8, 5, 7)
+    pl = spark.createDataFrame(
+        planes,
+        StructType(
+            [
+                StructField("table_id", IntegerType()),
+                StructField("bit_idx", IntegerType()),
+                StructField("plane", ArrayType(DoubleType())),
+            ]
+        ),
+    )
+    bit = F.when(
+        F.round(dot("embedding", "plane"), 6) > 0,
+        F.expr("shiftleft(CAST(1 AS BIGINT), bit_idx)"),
+    ).otherwise(F.lit(0).cast("long"))
     expr = {
         (r["vec_id"], r["table_id"]): r["bucket"]
-        for r in lsh_signatures(v, planes).collect()
+        for r in v.crossJoin(pl)
+        .groupBy("vec_id", "table_id")
+        .agg(F.sum(bit).alias("bucket"))
+        .collect()
     }
     arrow = {
         (r["vec_id"], r["table_id"]): r["bucket"]
-        for r in lsh_signatures_arrow(v, planes).collect()
+        for r in lsh_signatures(v, planes).collect()
     }
     assert expr == arrow
 
 
 def test_assign_centroids_arrow_empty_centroids(spark):
-    """No centroids → empty assignment (not a driver-side numpy crash),
-    matching the expression form's degradation."""
+    """No centroids, or only zero-norm ones → empty assignment with the
+    declared schema (not a driver-side numpy crash)."""
+    from aidc_2018_timeseries_spark.operators.similarity import assign_centroids
+
+    v = load_table(spark, SF_DIR, "embeddings")
+    cents = stride_centroids(v, 50)
+    none = cents.filter("centroid_id < 0")
+    zeros = cents.select(
+        "centroid_id", F.transform("centroid_vec", lambda x: x * 0).alias("centroid_vec")
+    )
+    for c in (none, zeros):
+        out = assign_centroids(v, c)
+        assert out.count() == 0
+        assert out.schema == assign_centroids(v, cents).schema
+        assert out.columns == ["vec_id", "embedding", "centroid_id"]
+
+
+def test_topk_matches_sequential_fold_reference(spark):
+    """ivf_topk and rp_lsh_topk return exactly the ranked rows of a
+    pure-Python reference built from sequential folds and HALF_UP
+    rounding — the arithmetic the DuckDB oracles of knn_ivf_eval and
+    knn_rp_lsh_eval use — on the knobs those faces pin."""
     from aidc_2018_timeseries_spark.operators.similarity import (
-        assign_centroids_arrow,
+        hyperplane_rows,
+        rp_lsh_topk,
     )
 
     v = load_table(spark, SF_DIR, "embeddings")
-    none = stride_centroids(v, 50).filter("centroid_id < 0")
-    out = assign_centroids_arrow(v, none)
-    assert out.count() == 0
-    assert out.columns == ["vec_id", "embedding", "centroid_id"]
-
-
-def test_topk_arrow_path_matches_expression_path(spark):
-    """ivf_topk / rp_lsh_topk: the Arrow GEMM production path and the
-    bit-reproducible expression path (what the oracle-checked
-    knn_ivf_eval / knn_rp_lsh_eval faces run) must produce the SAME
-    ranked result on the testdata — the link that lets a driver-green
-    eval face certify the GEMM path's quality too. A genuine divergence
-    needs |dot| within float ulps of the 6-dp rounding boundary; if this
-    ever trips, the eval faces no longer speak for the arrow=True path."""
-    from aidc_2018_timeseries_spark.operators.similarity import rp_lsh_topk
-
-    v = load_table(spark, SF_DIR, "embeddings")
     q = _queries(v)
-    for fn, kw in (
-        (ivf_topk, dict(centroid_stride=50, n_probe=3, k=5)),
-        (rp_lsh_topk, dict(n_tables=8, n_bits=8, k=5, seed=7, dim=64)),
-    ):
-        gemm = {
-            (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
-            for r in fn(v, q, arrow=True, **kw).collect()
-        }
-        expr = {
-            (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
-            for r in fn(v, q, arrow=False, **kw).collect()
-        }
-        assert gemm == expr, fn.__name__
+    vecs = {r["vec_id"]: r["embedding"] for r in v.collect()}
+    qs = {r["query_id"]: r["query_vec"] for r in q.collect()}
+
+    def ranked(qid, cand_ids):
+        cands = {i: vecs[i] for i in cand_ids if i != qid}
+        return [(qid, rk, i, s) for rk, (i, s) in enumerate(_top(qs[qid], cands, 5), 1)]
+
+    # IVF: stride-50 centroids, each vector in its nearest cell, probe 3
+    cents = {i: e for i, e in vecs.items() if i % 50 == 0}
+    cell = {i: _top(e, cents, 1)[0][0] for i, e in vecs.items()}
+    want = set()
+    for qid, qe in qs.items():
+        probed = {c for c, _ in _top(qe, cents, 3)}
+        want |= set(ranked(qid, [i for i in vecs if cell[i] in probed]))
+    got = set(map(tuple, ivf_topk(v, q, centroid_stride=50, n_probe=3, k=5).collect()))
+    assert got == want
+
+    # sign-LSH: candidates share a (table, bucket) with the query
+    planes = hyperplane_rows(64, 8, 8, 7)
+    per_table = {}
+    for t, b, plane in planes:
+        per_table.setdefault(t, []).append((b, plane))
+
+    def sig(e):
+        return {(t, _ref_bucket(e, ps)) for t, ps in per_table.items()}
+
+    vsig = {i: sig(e) for i, e in vecs.items()}
+    want = set()
+    for qid, qe in qs.items():
+        qsig = sig(qe)
+        want |= set(ranked(qid, [i for i in vecs if vsig[i] & qsig]))
+    got = set(
+        map(tuple, rp_lsh_topk(v, q, n_tables=8, n_bits=8, k=5, seed=7, dim=64).collect())
+    )
+    assert got == want
 
 
 def test_lsh_signature_matches_python_sequential_fold(spark):
-    """The broadcast-relation signature form (round 7) == a pure-Python
-    sequential-fold reference, element for element: left-fold dot in
-    array order, round-half-up at 6 dp, sign test, bit-shift accumulate.
-    This is the construction-level pin behind the oracle contract — the
-    DuckDB hash checks one configuration per face; this checks the
-    arithmetic CONTRACT on several plane shapes, including per-table
-    bit counts that differ (the prefix-stable masked regime)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
+    """The GEMM signature kernel == a pure-Python sequential-fold
+    reference, element for element: left-fold dot in array order,
+    round-half-up at 6 dp, sign test, bit-shift accumulate. This is the
+    construction-level pin behind the oracle contract — the DuckDB hash
+    checks one configuration per face; this checks the arithmetic
+    CONTRACT on several plane shapes, including per-table bit counts that
+    differ (the prefix-stable masked regime)."""
     from aidc_2018_timeseries_spark.operators.similarity import (
         hyperplane_rows,
+        hyperplane_rows_stable,
         lsh_signatures,
     )
 
     v = load_table(spark, SF_DIR, "embeddings")
     rows = {r["vec_id"]: list(r["embedding"]) for r in v.collect()}
 
-    def ref_bucket(vec, planes_for_table):
-        bucket = 0
-        for b, plane in sorted(planes_for_table):
-            acc = 0.0
-            for x, y in zip(vec, plane):
-                acc += float(x) * y  # left fold, array order
-            # Spark F.round = BigDecimal(double) HALF_UP at 6 dp: use the
-            # exact binary value, not repr — Decimal(acc) is exact.
-            r = Decimal(acc).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-            if r > 0:
-                bucket += 1 << b
-        return bucket
-
     configs = [
         hyperplane_rows(64, 3, 4, 11),
         hyperplane_rows(64, 1, 10, 5),
         # mixed per-table widths: drop the high bit from table 0 only
         [p for p in hyperplane_rows(64, 2, 5, 99) if not (p[0] == 0 and p[1] == 4)],
+        # the prefix-stable planes the corpus-scaled face uses
+        hyperplane_rows_stable(64, 8, 5, 7),
     ]
     for planes in configs:
         per_table = {}
@@ -326,7 +404,7 @@ def test_lsh_signature_matches_python_sequential_fold(spark):
             for r in lsh_signatures(v, planes).collect()
         }
         want = {
-            (vid, t): ref_bucket(vec, ps)
+            (vid, t): _ref_bucket(vec, ps)
             for vid, vec in rows.items()
             for t, ps in per_table.items()
         }
