@@ -218,145 +218,3 @@ def bpe_token_counts(
             F.sum("n_subwords").alias("n_subwords"),
         )
     )
-
-
-def select_disjoint_batch(
-    ranked: list[tuple[str, str]], m: int
-) -> list[tuple[str, str]]:
-    """Greedy batch selection over a ranked candidate list: take a pair
-    iff neither symbol appears in an already-taken pair, stop at m.
-
-    Symbol-disjoint merges commute (no occurrence of one pair overlaps an
-    occurrence of another), so a whole batch can be applied in ONE vocab
-    pass with order-independent results — the standard batching trick
-    distributed BPE trainers use to cut scheduler round trips. A pair
-    whose LEFT is another batch member's fused output cannot occur (fused
-    symbols don't exist in the counts yet), and a pre-existing pair like
-    (ab, c) after batch-mate (a, b) is applied IS order-dependent — both
-    the trainer and the pure-Python reference apply batches in ranked
-    order, so the schedules stay bit-identical (tests/test_bpe.py)."""
-    taken: list[tuple[str, str]] = []
-    used: set[str] = set()
-    for left, right in ranked:
-        if left in used or right in used:
-            continue
-        taken.append((left, right))
-        used.add(left)
-        used.add(right)
-        if len(taken) >= m:
-            break
-    return taken
-
-
-def train_bpe_merges_batched(
-    docs: DataFrame,
-    text_col: str,
-    n_merges: int = 10,
-    m: int = 8,
-    vocab: DataFrame | None = None,
-    candidate_factor: int = 4,
-) -> list[tuple[str, str]]:
-    """Batched sibling of :func:`train_bpe_merges`: learns up to ``m``
-    pairwise-symbol-disjoint merges per round, cutting driver round trips
-    (one bounded collect + one vocab pass per ROUND, not per merge) by
-    ~m× — the relief for the honest single-merge bottleneck documented in
-    the round-7 vocab decade (a realistic 30k-merge budget is 30k
-    serialized jobs on the exact path).
-
-    The SCHEDULE is part of the contract, mirrored exactly by the
-    pure-Python reference (tests/test_bpe.py): per round, rank pairs by
-    (count desc, left asc, right asc), consider only the top
-    ``m * candidate_factor`` (the bounded driver collect), greedily take
-    up to m symbol-disjoint pairs, apply them in ranked order in one
-    chained-regexp vocab pass. m=1 reduces to the exact sequential
-    trainer (also pinned in tests). Batching trades exact merge-order
-    fidelity for throughput — rank-r of a round is chosen from counts
-    computed before ranks 1..r-1 applied — which is the standard,
-    documented trade; the single-merge path remains the oracle face."""
-    if vocab is None:
-        vocab = word_vocab(docs, text_col).localCheckpoint(eager=True)
-    chars = F.expr("array_join(split(word, ''), ' ')")
-    state = vocab.select(chars.alias("syms"), "freq").localCheckpoint(eager=True)
-
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        window = m * candidate_factor
-        top = (
-            _pair_counts(state)
-            .withColumn("left", F.split("pair", " ")[0])
-            .withColumn("right", F.split("pair", " ")[1])
-            .orderBy(F.desc("n"), F.asc("left"), F.asc("right"))
-            .limit(window)
-            .collect()  # bounded: m * candidate_factor rows per ROUND
-        )
-        if not top:
-            break
-        batch = select_disjoint_batch(
-            [(r["left"], r["right"]) for r in top],
-            min(m, n_merges - len(merges)),
-        )
-        if not batch:
-            break
-        merges.extend(batch)
-        col = F.col("syms")
-        for left, right in batch:
-            pat, repl = _merge_pattern(left, right)
-            col = F.regexp_replace(col, pat, repl)
-        state = state.select(col.alias("syms"), "freq").localCheckpoint(eager=True)
-    return merges
-
-
-def reference_bpe_batched(
-    word_freqs: dict[str, int],
-    n_merges: int,
-    m: int = 8,
-    candidate_factor: int = 4,
-) -> list[tuple[str, str]]:
-    """Pure-Python mirror of :func:`train_bpe_merges_batched`'s schedule
-    (same ranked window, same greedy disjoint selection, same in-order
-    batch application) — shares NO code with the distributed path."""
-    state = {tuple(w): f for w, f in word_freqs.items()}
-    merges: list[tuple[str, str]] = []
-
-    def apply_one(st, best):
-        new_state: dict[tuple[str, ...], int] = {}
-        for syms, f in st.items():
-            out: list[str] = []
-            i = 0
-            while i < len(syms):
-                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
-                    out.append(syms[i] + syms[i + 1])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            key = tuple(out)
-            new_state[key] = new_state.get(key, 0) + f
-        return new_state
-
-    while len(merges) < n_merges:
-        counts: dict[tuple[str, str], int] = {}
-        for syms, f in state.items():
-            for a, b in zip(syms, syms[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + f
-        if not counts:
-            break
-        ranked = sorted(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )[: m * candidate_factor]
-        taken: list[tuple[str, str]] = []
-        used: set[str] = set()
-        for (a, b), _n in ranked:
-            if a in used or b in used:
-                continue
-            taken.append((a, b))
-            used.add(a)
-            used.add(b)
-            if len(taken) >= min(m, n_merges - len(merges)):
-                break
-        if not taken:
-            break
-        for best in taken:
-            state = apply_one(state, best)
-        merges.extend(taken)
-    return merges

@@ -63,38 +63,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 16, shingle_n: int = 3
-) -> Column:
-    """MinHash signature as array<bigint> of length num_hashes.
-
-    sig[i] = min over shingles s of (a_i * h30(s) + b_i) mod p; empty
-    shingle sets (docs shorter than n tokens) get sentinel p.
-    """
-    sh = shingle_hashes(text, n=shingle_n)
-
-    def universal(a: int, b: int):
-        # factory: pyspark inspects lambda arity, so defaults-as-closure fails
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    parts = []
-    for a, b in _minhash_params(num_hashes):
-        mh = F.array_min(F.transform(sh, universal(a, b)))
-        parts.append(F.coalesce(mh, F.lit(MINHASH_PRIME)))
-    return F.array(*parts)
-
-
-def minhash_bands(sig: Column, num_bands: int, rows_per_band: int) -> Column:
-    """array<struct<band_id, band_hash>>: hash of each r-row slice of the
-    signature. Equal band_hash in any band → candidate pair."""
-    entries = []
-    for band in range(num_bands):
-        chunk = F.slice(sig, band * rows_per_band + 1, rows_per_band)
-        band_hash = hash64(F.concat_ws(",", F.transform(chunk, lambda x: x.cast("string"))))
-        entries.append(F.struct(F.lit(band).alias("band_id"), band_hash.alias("band_hash")))
-    return F.array(*entries)
-
-
 def minhash_signature_agg(
     df: DataFrame,
     id_col: str,
@@ -107,7 +75,8 @@ def minhash_signature_agg(
     Each shingle is md5-hashed ONCE in the explode projection; the 16
     universal hashes are cheap arithmetic per (doc, shingle) row, and the
     min-aggregation is map-side partial, so only num_hashes values per doc
-    per partition ever shuffle. (The array-expression form recomputes the
+    per partition ever shuffle. (An array-expression signature, one
+    ``array_min(transform(...))`` per hash function, recomputes the
     shingle hashing per hash function × per band — a ~64× expression
     blow-up that measured 400+s at sf0.1 vs seconds for this form.)
 

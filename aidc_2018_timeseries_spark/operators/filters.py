@@ -46,23 +46,6 @@ def backfill(
     return df.withColumn(out or value_col, filled)
 
 
-def forward_fill(
-    df: DataFrame,
-    key: str | Sequence[str],
-    order: str | Sequence[str],
-    value_col: str,
-    out: str | None = None,
-) -> DataFrame:
-    """P2 sibling: last-observation-carried-forward."""
-    w = (
-        Window.partitionBy(*_keys(key))
-        .orderBy(*_order_cols(order))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = F.last(F.col(value_col), ignorenulls=True).over(w)
-    return df.withColumn(out or value_col, filled)
-
-
 def min_length_filter(
     df: DataFrame, key: str, min_len: int, len_col: str = "series_len"
 ) -> DataFrame:
@@ -88,17 +71,6 @@ def drop_zero_windows(df: DataFrame, arr_col: str, eps: float = 1e-12) -> DataFr
     """P4: drop windows whose total absolute mass ≤ eps — the reference's
     batch-norm NaN guard (``timeseries.py:154-167``)."""
     return df.filter(zero_window_abs_sum(F.flatten(F.col(arr_col))) > eps)
-
-
-def no_nan_check(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P6 as a data-quality operator: rows containing NaN/null in ``cols``.
-    The reference asserts no NaN (``turbofan.py:140``); in an engine this is
-    a filter you can count (tests assert count == 0)."""
-    pred = None
-    for c in cols:
-        p = F.isnan(F.col(c)) | F.col(c).isNull()
-        pred = p if pred is None else (pred | p)
-    return df.filter(pred)
 
 
 def take_last_k(

@@ -2,17 +2,13 @@
 
 Reference semantics (``datasets/turbofan.py:142-157``): a trajectory fails
 at its last row; the label of a window is the number of cycles remaining
-after the window's END row, capped at ``max_rul_predictable``. Validation
-trajectories are truncated before failure and carry an externally-given
-base RUL for their final row (positional file join,
-``turbofan.py:100-104``) — every earlier row adds its distance from the
-end.
+after the window's END row, capped at ``max_rul_predictable``.
 
-Spark-first: both variants are one window aggregate over the series
-partition (no extra shuffle after the series hash-partitioning), the cap is
-``least``. The positional label-file join becomes an explicit broadcast
-equi-join on the series key (the RUL table is tiny relative to the series
-data — at 100 TB of sensor rows it is one row per engine).
+Spark-first: the label is one window aggregate over the series partition
+(no extra shuffle after the series hash-partitioning), the cap is
+``least``. Validation labels (an externally given base RUL per
+trajectory) are built with the validation windows, in
+``pipelines/turbofan.py:turbofan_val_windows``.
 """
 
 from __future__ import annotations
@@ -47,32 +43,3 @@ def rul_label(
     remaining = F.count(F.lit(1)).over(w) - rn
     label = remaining if cap is None else F.least(remaining, F.lit(cap))
     return df.withColumn(out, label.cast("long"))
-
-
-def rul_label_with_base(
-    df: DataFrame,
-    rul_df: DataFrame,
-    key: str,
-    order: str | Sequence[str],
-    base_col: str = "base_rul",
-    cap: int | None = 130,
-    out: str = "rul",
-) -> DataFrame:
-    """Validation labels: external base RUL (at series end) + distance from
-    end, capped. ``rul_df`` must have (key, base_col); joined broadcast.
-    """
-    w = Window.partitionBy(key)
-    rank = Window.partitionBy(key).orderBy(*_order_cols(order))
-    rn = F.row_number().over(rank)
-    remaining = F.count(F.lit(1)).over(w) - rn
-    df = df.join(F.broadcast(rul_df), on=key, how="inner")
-    label = F.col(base_col) + remaining
-    if cap is not None:
-        label = F.least(label, F.lit(cap))
-    return df.withColumn(out, label.cast("long"))
-
-
-def cap_label(col: Column | str, cap: float) -> Column:
-    """P5: ``y[y > cap] = cap`` (reference ``turbofan.py:157``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.least(c, F.lit(cap))

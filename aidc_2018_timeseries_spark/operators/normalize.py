@@ -137,12 +137,6 @@ def array_window_zscore(arr: Column | str, eps: float = 1e-9) -> Column:
     return F.transform(a, lambda x: (x.cast("double") - mean) / safe)
 
 
-def constant_scale(col: Column | str, divisor: float = 100.0) -> Column:
-    """A3: settings ÷ 100 (reference ``turbofan.py:243-246``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c / F.lit(divisor)
-
-
 def winsorize_by_group(
     df: DataFrame,
     group: str,

@@ -8,60 +8,17 @@ can be fixed in exactly one place.
 from __future__ import annotations
 
 import logging
-import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LOG = logging.getLogger(__name__)
 
-#: Spark's default for spark.sql.files.maxPartitionBytes (128 MiB).
-_DEFAULT_MAX_SPLIT = 134217728
 
-#: Spark byte-string suffixes (JavaUtils.byteStringAsBytes semantics:
-#: binary multiples — "128m" means 128 MiB, not 128 MB).
-_BYTE_SUFFIX = {
-    "": 1,
-    "b": 1,
-    "k": 1 << 10,
-    "kb": 1 << 10,
-    "m": 1 << 20,
-    "mb": 1 << 20,
-    "g": 1 << 30,
-    "gb": 1 << 30,
-    "t": 1 << 40,
-    "tb": 1 << 40,
-    "p": 1 << 50,
-    "pb": 1 << 50,
-}
-
-_BYTE_RE = re.compile(r"^\s*(\d+)\s*([a-z]{0,2})\s*$")
-
-
-def _parse_byte_string(raw: str, default: int) -> int:
-    """Parse a Spark byte-string conf value ("134217728", "128m", "1g")
-    with JavaUtils.byteStringAsBytes semantics (binary multiples).
-
-    The previous strip-non-digits parse collapsed "128m" to 128 BYTES,
-    which made the spread gate's threshold n*128 bytes and silently
-    disabled the repartition it exists to apply (ADVICE r9, medium).
-    """
-    m = _BYTE_RE.match(str(raw).lower())
-    if not m:
-        return default
-    mult = _BYTE_SUFFIX.get(m.group(2))
-    if mult is None:
-        return default
-    return int(m.group(1)) * mult
-
-
-def _max_partition_bytes(df: DataFrame) -> int:
-    raw = str(
-        df.sparkSession.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(_DEFAULT_MAX_SPLIT)
-        )
-    )
-    return _parse_byte_string(raw, _DEFAULT_MAX_SPLIT)
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, as Spark itself
+    parsed it (byte strings such as "128m" are binary multiples)."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
 _warned_no_stats = False
@@ -127,7 +84,7 @@ def spread_for_compute(df: DataFrame, col: str) -> DataFrame:
                 "repartition is DISABLED for this process — small corpora "
                 "may run compute-bound stages serially."
             )
-    if size is None or not (0 <= size < n * _max_partition_bytes(df)):
+    if size is None or not (0 <= size < n * _max_partition_bytes(sess)):
         return df
     if size < n * _SMALL_SPREAD_FLOOR:
         return df.repartition(n, F.col(col))

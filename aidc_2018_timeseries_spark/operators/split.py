@@ -35,8 +35,8 @@ def time_ordered_split(
     (``intervals.hierarchical_running_sum``): per-bucket row numbering in
     parallel, one tiny buckets-total offset relation, identical output.
     Without it, a global single-partition window is used — fine only for
-    bookkeeping-sized inputs; at 100 TB use ``bucket_expr`` or
-    :func:`time_threshold_split` (no ordering at all).
+    bookkeeping-sized inputs; at 100 TB use ``bucket_expr`` or the
+    per-series form :func:`per_key_time_split`.
     """
     order_names = [order] if isinstance(order, str) else list(order)
     n = df.count()
@@ -59,17 +59,6 @@ def time_ordered_split(
     return ranked.withColumn(
         out, F.when(F.col("_rn") <= cutoff, F.lit("train")).otherwise(F.lit("test"))
     ).drop("_rn")
-
-
-def time_threshold_split(
-    df: DataFrame, time_col: str, threshold, out: str = "split"
-) -> DataFrame:
-    """Scale-path W13: split on a time threshold — embarrassingly parallel,
-    no global sort. The threshold is typically a precomputed approximate
-    quantile of the time column."""
-    return df.withColumn(
-        out, F.when(F.col(time_col) <= F.lit(threshold), F.lit("train")).otherwise(F.lit("test"))
-    )
 
 
 def per_key_time_split(

@@ -11,9 +11,13 @@ whose windows all partition by the series key: the scale maxima and the
 pad's row number and count use the same ordered spec and share one sort;
 the pad's explode rewrites the order column, so the window arrays sort
 once more; the label's ``max(rn)`` needs only the key order those arrays
-already have. Physical plan: 1 Exchange, 2 Sorts, no Union. At 100 TB (≈ millions of engines × long histories)
-this scales linearly: no series ever crosses an executor boundary, and
-nothing materializes windows until the array step at the very end.
+already have. Physical plan: 1 Exchange, 2 Sorts, no Union. The val path
+(``turbofan_val_windows``) runs the same scale, pad and window
+projections and keeps each series' last window, so train and val share
+one window materialization. At 100 TB (≈ millions of engines × long
+histories) this scales linearly: no series ever crosses an executor
+boundary, and nothing materializes windows until the array step at the
+very end.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ from pyspark.sql import functions as F
 from aidc_2018_timeseries_spark.operators._sql import _q, over
 from aidc_2018_timeseries_spark.operators.normalize import per_key_max_scale
 from aidc_2018_timeseries_spark.operators.padding import pad_short_series_front_repeat_long
-from aidc_2018_timeseries_spark.operators.windowing import last_window, rolling_window_arrays
+from aidc_2018_timeseries_spark.operators.windowing import rolling_window_arrays
 
 
 def rul_window_features(
@@ -112,30 +116,28 @@ def turbofan_val_windows(
     of each trajectory form ONE window; its label is the file-provided base
     RUL (positional join made explicit via the trajectory ordinal), capped.
 
-    Short trajectories are front-padded by repeating the first row
-    (reference pads to T*skip with skip=1 here).
+    Same window materialization as :func:`turbofan_train_windows` (scale,
+    front-repeat pad to seq_len, ``rolling_window_arrays``), keeping each
+    series' last window: the row whose ``rn`` is the series' ``max(rn)``,
+    the spec the train label uses. Every padded series has at least one
+    complete window, so every trajectory keeps one row. The ordinal (rank
+    of the key, keys ascend in file order) is numbered over that
+    one-row-per-key result, so the fleet is read once.
+
+    Output: (key, window array<struct<features>>, rul).
     """
     if scale:
         df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
     df = pad_short_series_front_repeat_long(df, key, order, feature_cols, seq_len)
-    tail = last_window(df, key, order, seq_len)
-    windows = (
-        tail.groupBy(key)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(order, *feature_cols))),
-                lambda s: F.struct(*[s[c].alias(c) for c in feature_cols]),
-            ).alias("window")
-        )
+    windows = rolling_window_arrays(df, key, order, feature_cols, seq_len)
+    k = _q(key)
+    last = windows.selectExpr(
+        k, "window", f"rn = max(rn) {over(key)} AS _last"
+    ).where("_last")
+    ranked = last.selectExpr(
+        k, "window", f"row_number() OVER (ORDER BY {k}) AS {_q(ordinal_col)}"
     )
-    # trajectory ordinal = rank of the key in file order (keys ascend)
-    from pyspark.sql import Window as W
-
-    ordinals = df.select(key).distinct().withColumn(
-        ordinal_col, F.row_number().over(W.orderBy(F.col(key)))
+    labeled = ranked.join(F.broadcast(rul_df), ordinal_col)
+    return labeled.selectExpr(
+        k, "window", f"CAST(least(base_rul, {int(cap)}) AS BIGINT) AS rul"
     )
-    windows = windows.join(F.broadcast(ordinals), key)
-    labeled = windows.join(F.broadcast(rul_df), ordinal_col)
-    return labeled.withColumn(
-        "rul", F.least(F.col("base_rul"), F.lit(cap)).cast("long")
-    ).select(key, "window", "rul")

@@ -667,8 +667,7 @@ def scd2_type_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="P6 NaN guard as a countable operator: NaNs injected "
     "deterministically at error events, NaN-or-NULL rows counted per "
-    "series in ONE conditional aggregate (no_nan_check is the filter "
-    "form of the same predicate, exercised in tests)",
+    "series in ONE conditional aggregate",
 )
 def p6_nan_guard_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     holed = _events(spark, sf_dir).withColumn(

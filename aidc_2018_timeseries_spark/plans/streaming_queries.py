@@ -290,13 +290,12 @@ def events_rollup_daily_from_hourly(spark: SparkSession, sf_dir: str) -> DataFra
     """,
     doc="record-breaking events per user (value strictly above the key's "
     "running max; first event always a record) — the ORACLE-CHECKED batch "
-    "face of the transformWithStateInPandas streaming operator "
-    "(streaming/records.py: Spark 4's arbitrary-stateful API, one "
-    "ValueState holding the running max = 8 bytes/key). Batch form is a "
-    "strict-prefix window max — one keyed shuffle, no Python; "
-    "tests/test_tws_records.py proves the chunked stream replay equals "
-    "this plan. Raw parquet doubles compared, no arithmetic — exact "
-    "cross-engine",
+    "face of the stateful streaming operator (streaming/records.py: "
+    "applyInPandasWithState, one state value holding the running max = "
+    "8 bytes/key). Batch form is a strict-prefix window max — one keyed "
+    "shuffle, no Python; tests/test_tws_records.py proves the chunked "
+    "stream replay equals this plan. Raw parquet doubles compared, no "
+    "arithmetic — exact cross-engine",
 )
 def tws_record_breaking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.streaming.records import record_breaking_batch

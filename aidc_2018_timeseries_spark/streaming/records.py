@@ -1,24 +1,18 @@
-"""Record-breaking-event detection on Spark 4's ``transformWithStateInPandas``.
+"""Record-breaking-event detection, batch and streaming.
 
 A row is a "record" when its value STRICTLY exceeds every earlier value of
 its key (first row of a key is always a record). Like the EWMA recurrence
 (streaming/stateful.py), the predicate depends on the full prefix of the
-key's history, so a stream needs cross-micro-batch state — but unlike
-applyInPandasWithState, this uses the arbitrary-stateful-processing API
-Spark 4 ships for exactly this shape: a ``StatefulProcessor`` holding one
-``ValueState`` (the running max — O(1) per key; the state store holds
-#keys × 8 bytes, independent of stream length).
+key's history, so a stream needs cross-micro-batch state: the streaming
+form runs on ``applyInPandasWithState`` with one state value per key (the
+running max — O(1) per key; the state store holds #keys × 8 bytes,
+independent of stream length).
 
 The batch form is a window aggregate: value > max over the key's strict
 prefix. Both forms share nothing but semantics, which is the point — the
-replay test (tests/test_tws_records.py) proves the TWS processor over
+replay test (tests/test_tws_records.py) proves the stateful form over
 chunked micro-batches equals the one-pass window plan, pinning the state
 machine against the declarative golden.
-
-Environment gate: the TWS state server speaks protobuf, which pyspark
-lists as an extra dependency; in environments without ``google.protobuf``
-(this container) the streaming form raises at query start and the replay
-test skips — the batch face and its DuckDB oracle are unaffected.
 
 Reference relation: the closest reference op is the running-extremum
 bookkeeping inside its training loop (best-eval tracking,
@@ -28,12 +22,9 @@ streaming operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -54,62 +45,10 @@ OUTPUT_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("max_v", DoubleType())])
 
 
-class RunningMaxProcessor(StatefulProcessor):
-    """Emit only rows that strictly exceed their key's running max."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._max = handle.getValueState("max_v", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key, rows, timerValues
-    ) -> Iterator[pd.DataFrame]:
-        chunks = list(rows)
-        if not chunks:  # schema-validation dry run passes no data
-            return
-        batch = pd.concat(chunks, ignore_index=True)
-        # arrival order within a micro-batch is not time order; restore it
-        batch = batch.sort_values(["ts", "event_id"], kind="mergesort")
-        cur = self._max.get()[0] if self._max.exists() else None
-        out = []
-        for row in batch.itertuples(index=False):
-            if cur is None or row.value > cur:
-                out.append(
-                    (row.user_id, row.event_id, row.ts, row.value, cur)
-                )
-                cur = float(row.value)
-        self._max.update((cur,))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "event_id", "ts", "value", "prev_max"]
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def record_breaking_stream(events: DataFrame) -> DataFrame:
-    """Streaming form: per-user records across micro-batches via TWS."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningMaxProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
 def record_breaking_stream_gs(events: DataFrame) -> DataFrame:
-    """Streaming form on ``applyInPandasWithState`` (GroupState) — the
-    SAME running-max state machine as :class:`RunningMaxProcessor`, on the
-    older stateful API that does not need the TWS protobuf state server.
-
-    This exists so the record-breaking detector has a live-stream replay
-    equality test that runs GREEN in this container (round-6 verdict item
-    8): the TWS form's replay test import-skips on ``google.protobuf``
-    here, which left the cross-micro-batch claim pinned only where full
-    pyspark deps exist. Both stream forms must equal the declarative
-    batch window golden; at deploy time pick TWS (timers, multiple state
-    variables, state TTL) when available, this form otherwise.
-    """
+    """Streaming form: per-user records across micro-batches, with the
+    running max held in ``GroupState``. Rows arriving in one micro-batch
+    are put back in (ts, event_id) order before the state machine runs."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def func(key, pdfs, state):

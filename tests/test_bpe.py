@@ -143,54 +143,3 @@ def test_duckdb_oracle_fold_matches_reference_on_adversarial_corpus():
         freqs[w] = freqs.get(w, 0) + 1
     want = reference_bpe(freqs, 12)
     assert got == want[: len(got)] and len(got) == min(12, len(want))
-
-
-def test_batched_merges_match_batched_reference_on_corpus(spark):
-    """Round-8 batching (verdict item 5): the distributed batched trainer
-    and the pure-Python mirror of the SAME schedule (ranked window,
-    greedy symbol-disjoint selection, in-order batch application) must
-    produce identical merge lists."""
-    from aidc_2018_timeseries_spark.operators.bpe import (
-        reference_bpe_batched,
-        train_bpe_merges_batched,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    freqs = {r.word: r.freq for r in word_vocab(docs, "text").collect()}
-    for m in (1, 4, 8):
-        got = train_bpe_merges_batched(docs, "text", n_merges=12, m=m)
-        want = reference_bpe_batched(freqs, 12, m=m)
-        assert got == want, m
-        assert len(got) == 12
-
-
-def test_batched_m1_equals_sequential(spark):
-    """m=1 degenerates to the exact sequential trainer — the oracle face's
-    path — so the batched machinery adds no drift at the boundary."""
-    from aidc_2018_timeseries_spark.operators.bpe import (
-        train_bpe_merges_batched,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    assert train_bpe_merges_batched(docs, "text", n_merges=8, m=1) == (
-        train_bpe_merges(docs, "text", n_merges=8)
-    )
-
-
-def test_batched_disjoint_selection_adversarial(spark):
-    """A corpus engineered so the top pairs SHARE symbols: the greedy
-    disjoint rule must skip conflicting candidates, and both sides must
-    skip the same ones."""
-    from aidc_2018_timeseries_spark.operators.bpe import (
-        reference_bpe_batched,
-        train_bpe_merges_batched,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, " ".join(["abc"] * 9 + ["bcd"] * 8 + ["cde"] * 7 + ["aaaa"] * 6))],
-        "doc_id long, text string",
-    )
-    freqs = {r.word: r.freq for r in word_vocab(docs, "text").collect()}
-    got = train_bpe_merges_batched(docs, "text", n_merges=6, m=4)
-    want = reference_bpe_batched(freqs, 6, m=4)
-    assert got == want

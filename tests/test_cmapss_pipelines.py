@@ -204,6 +204,70 @@ def test_turbofan_val_windows_last_rows_and_base_rul(spark, cmapss_file, rul_fil
     assert all(len(r["window"]) == seq_len for r in out)
 
 
+
+def _np_val_windows(fleet, base_rul, seq_len, cap, scale):
+    """NumPy restatement of validation mode: engine ``k`` in ascending id
+    order takes RUL ordinal ``k``; its window is the last ``seq_len``
+    rows after optional x / max(x) scaling and front-repeat padding."""
+    out = {}
+    for ordinal, tid in enumerate(sorted(fleet), start=1):
+        a = fleet[tid]
+        if scale:
+            a = a / a.max(axis=0)
+        if len(a) < seq_len:
+            a = np.concatenate([np.repeat(a[:1], seq_len - len(a), axis=0), a])
+        out[tid] = (a[-seq_len:].tolist(), min(base_rul[ordinal], cap))
+    return out
+
+
+@pytest.mark.parametrize(
+    "lengths,seq_len,scale",
+    [
+        ({3: 1, 7: 3, 8: 9, 20: 12, 21: 25}, 10, True),  # engines shorter than T
+        ({2: 1, 5: 4, 9: 7}, 1, False),  # T = 1
+        ({}, 10, True),  # empty fleet
+    ],
+    ids=["short_engines", "t1", "empty"],
+)
+def test_turbofan_val_windows_match_numpy_last_rows(spark, lengths, seq_len, scale):
+    rng = np.random.default_rng(11)
+    fleet = {tid: rng.uniform(1.0, 50.0, size=(n, 2)).round(3) for tid, n in lengths.items()}
+    base_rul = {k: int(v) for k, v in enumerate(rng.integers(0, 200, size=6), start=1)}
+    df = spark.createDataFrame(
+        [(tid, t, float(a[t, 0]), float(a[t, 1])) for tid, a in fleet.items() for t in range(len(a))],
+        "trajectory_id int, t int, a double, b double",
+    )
+    rul = spark.createDataFrame(list(base_rul.items()), "trajectory_ordinal int, base_rul int")
+    out = turbofan_val_windows(df, rul, ["a", "b"], seq_len=seq_len, cap=130, scale=scale)
+    got = {r["trajectory_id"]: ([list(w) for w in r["window"]], r["rul"]) for r in out.collect()}
+    assert out.columns == ["trajectory_id", "window", "rul"]
+    assert got == _np_val_windows(fleet, base_rul, seq_len, 130, scale)
+
+
+def test_turbofan_val_windows_quotes_column_names(spark, fleet_parquet, rul_file):
+    """Names with a space and a backtick go through the val path and give
+    the same windows as plain names."""
+    odd = {"sensor_1": "sensor 1`x", "trajectory_id": "engine id`"}
+    df = spark.read.parquet(fleet_parquet)
+    rul = read_rul_file(spark, rul_file)
+    feats = [odd.get(c, c) for c in FEATURE_COLS]
+    renamed = df.toDF(*[odd.get(c, c) for c in df.columns])
+    got = turbofan_val_windows(renamed, rul, feats, seq_len=10, key="engine id`")
+    want = turbofan_val_windows(df, rul, FEATURE_COLS, seq_len=10)
+    assert got.columns == ["engine id`", "window", "rul"]
+    assert got.schema["window"].dataType.elementType.names == feats
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_turbofan_val_windows_plan_shape(spark, fleet_parquet, rul_file):
+    """The val path reads the fleet once (the ordinals come from the
+    one-row-per-key windows, not a second distinct read) and has no Union."""
+    df = spark.read.parquet(fleet_parquet)
+    rul = read_rul_file(spark, rul_file)
+    nodes = _plan_nodes(turbofan_val_windows(df, rul, FEATURE_COLS, seq_len=10))
+    assert nodes.count("FileScan") == 1, nodes
+    assert "Union" not in nodes, nodes
+
 def test_music_dataset_shapes_and_shift(spark):
     n_keys, seq_len = 4, 6
     rng = np.random.default_rng(3)

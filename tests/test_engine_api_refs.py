@@ -11,6 +11,7 @@ from __future__ import annotations
 import ast
 import importlib
 import inspect
+import re
 from pathlib import Path
 
 import pytest
@@ -103,3 +104,117 @@ def test_engine_names_used_by_scripts_resolve(path):
                 for kw in _bad_keywords(fn, node):
                     problems.append(f"line {node.lineno}: keyword {kw}= of {fn.__name__}")
     assert not problems, sorted(set(problems))
+
+
+# ---------------------------------------------------------------------------
+# Reachability: every top-level engine definition is reached from a face,
+# a script, the package's own module-level code, or the allowlist below.
+
+#: Entry points that no face, perfbench script or tool calls, each kept on
+#: purpose. An entry that is undefined, or that another root reaches, fails.
+REACHABILITY_ALLOWLIST = {
+    # test references: oracles that the engine output is checked against
+    "reference_bpe": "pure-Python BPE trainer that tests/test_bpe.py checks the Spark trainer against",
+    "embedding_cosine_dup_pairs": "exact all-pairs cosine that tests/test_similarity.py measures LSH recall against",
+    # streaming forms whose batch sibling is the face; a replay test pins each
+    "dedup_documents_stream": "streaming dedup; tests/test_streaming_dedup.py replays it against the batch face",
+    "enrich_stream_with_static": "stream-static join; tests/test_streaming.py replays it against the batch face",
+    "ewma_anomaly_stream": "stateful EWMA stream; tests/test_stateful_streaming.py replays it against the batch face",
+    "start_upsert_stream": "foreachBatch upsert stream; tests/test_streaming_upsert.py replays it",
+    "record_breaking_stream_gs": "record-breaking stream; tests/test_tws_records.py replays it against the batch face",
+    # reference capabilities that have no face yet
+    "turbofan_val_windows": "reference val mode (datasets/turbofan.py:118-163); tests/test_cmapss_pipelines.py",
+    "array_window_zscore": "reference per-window normalization A2 on an array window; tests/test_windowing_golden.py",
+    "read_mat_music": "reference music .mat loader; tests/test_cmapss_pipelines.py checks its error without scipy",
+    "reconstruct": "forward pass of the reference seq2seq autoencoder; tests/test_autoregressive_seq2seq.py",
+    "write_metrics_json": "reference training-metrics JSON sink; tests/test_sinks.py",
+    "train_rul_linear_baseline": "MLlib RUL regression baseline; tests/test_mllib_baselines.py",
+    "train_rul_alarm_logistic_baseline": "MLlib RUL alarm classifier baseline; tests/test_mllib_baselines.py",
+    "rul_feature_frame": "feature frame the MLlib baselines train on; tests/test_mllib_baselines.py",
+    # multimodal form
+    "resize_images": "image-column resize of the multimodal operators; tests/test_ml_and_multimodal.py",
+    # observability hook
+    "observe_quality": "observe()-based quality counters (tests/test_sinks.py), the candidate per-request metrics hook",
+}
+
+_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+
+
+def _names(nodes) -> set[str]:
+    """Every identifier the nodes mention: names, attributes, imported
+    names and identifier-shaped string constants."""
+    out: set[str] = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.update(node.name.split("."))
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if _IDENT.match(node.value):
+                    out.add(node.value)
+    return out
+
+
+def _is_register(deco: ast.expr) -> bool:
+    return isinstance(deco, ast.Call) and isinstance(deco.func, ast.Name) and deco.func.id == "register"
+
+
+def _package_graph():
+    """(definitions name -> [locations], edges name -> names its bodies
+    mention, root names from module-level code and @register faces,
+    import aliases asname -> name)."""
+    defs: dict[str, list[str]] = {}
+    edges: dict[str, set[str]] = {}
+    roots: set[str] = set()
+    aliases: dict[str, set[str]] = {}
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        where = str(path.relative_to(ROOT))
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(node.name, []).append(f"{where}:{node.lineno}")
+                edges.setdefault(node.name, set()).update(_names([node]))
+                if any(_is_register(d) for d in node.decorator_list):
+                    roots.add(node.name)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                # an import binds a name; only its use reaches the target
+                for a in node.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(a.name.split(".")[-1])
+            else:
+                roots |= _names([node])
+    return defs, edges, roots, aliases
+
+
+def _closure(start: set[str], edges, aliases) -> set[str]:
+    seen: set[str] = set()
+    todo = list(start)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        todo.extend(edges.get(name, ()))
+        todo.extend(aliases.get(name, ()))
+    return seen
+
+
+def test_every_engine_definition_is_reached():
+    """Name matching over-matches (a shared name reaches every definition
+    of it), so this can miss dead code but never flags a definition that
+    is called by its name."""
+    defs, edges, roots, aliases = _package_graph()
+    scripts = [*SCRIPTS, ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    for path in scripts:
+        roots |= _names([ast.parse(path.read_text(), filename=str(path))])
+    reached = _closure(roots, edges, aliases)
+    problems = [f"allowlisted {n!r} is not defined" for n in REACHABILITY_ALLOWLIST if n not in defs]
+    problems += [
+        f"allowlisted {n!r} is reached without the allowlist" for n in REACHABILITY_ALLOWLIST if n in reached
+    ]
+    reached |= _closure(set(REACHABILITY_ALLOWLIST), edges, aliases)
+    problems += [f"{n} ({', '.join(locs)}) is not reached" for n, locs in sorted(defs.items()) if n not in reached]
+    assert not problems, problems

@@ -1,17 +1,24 @@
-"""spread_for_compute gate plumbing: byte-string conf parsing (ADVICE r9
-medium — '128m' used to parse as 128 BYTES, silently disabling the gate)
-and the halfway-window scaling of the Arrow rounding kernel."""
+"""spread_for_compute gate plumbing: the gate reads
+spark.sql.files.maxPartitionBytes as Spark parsed it (ADVICE r9 medium —
+'128m' once parsed as 128 BYTES, silently disabling the gate) and the
+halfway-window scaling of the Arrow rounding kernel."""
 
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pytest
 
-from aidc_2018_timeseries_spark.operators.partitioning import (
-    _DEFAULT_MAX_SPLIT,
-    _parse_byte_string,
-)
+from aidc_2018_timeseries_spark.operators.partitioning import _max_partition_bytes
 from aidc_2018_timeseries_spark.operators.similarity import _round6_half_up
+
+CONF = "spark.sql.files.maxPartitionBytes"
+
+
+@pytest.fixture
+def restore_conf(spark):
+    old = spark.conf.get(CONF)
+    yield
+    spark.conf.set(CONF, old)
 
 
 @pytest.mark.parametrize(
@@ -30,20 +37,29 @@ from aidc_2018_timeseries_spark.operators.similarity import _round6_half_up
         ("64b", 64),
         (" 128m ", 128 << 20),
         ("0", 0),
+        # Spark accepts a negative size; no input is below n x it, so the gate skips
+        ("-1m", -(1 << 20)),
     ],
 )
-def test_parse_byte_string(raw, expected):
-    assert _parse_byte_string(raw, _DEFAULT_MAX_SPLIT) == expected
+def test_parse_byte_string(spark, restore_conf, raw, expected):
+    spark.conf.set(CONF, raw)
+    assert _max_partition_bytes(spark) == expected
 
 
-@pytest.mark.parametrize("raw", ["", "abc", "128x", "1.5g", "-1m", "m128"])
-def test_parse_byte_string_fallback(raw):
-    assert _parse_byte_string(raw, _DEFAULT_MAX_SPLIT) == _DEFAULT_MAX_SPLIT
+@pytest.mark.parametrize("raw", ["", "abc", "128x", "1.5g", "m128"])
+def test_parse_byte_string_fallback(spark, restore_conf, raw):
+    """Spark rejects a value that is not a byte count when it is set, so
+    the gate keeps reading the value already in force."""
+    spark.conf.set(CONF, "64m")
+    with pytest.raises(Exception, match="INVALID_CONF_VALUE"):
+        spark.conf.set(CONF, raw)
+    assert _max_partition_bytes(spark) == 64 << 20
 
 
-def test_spark_default_is_binary_128_mib():
+def test_spark_default_is_binary_128_mib(spark, restore_conf):
     # Spark's documented default; the regression was 128m -> 128.
-    assert _parse_byte_string("128m", 0) == 134217728
+    spark.conf.unset(CONF)
+    assert _max_partition_bytes(spark) == 134217728
 
 
 def _decimal_half_up_6dp(v: float) -> float:

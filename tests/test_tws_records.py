@@ -1,8 +1,8 @@
-"""transformWithStateInPandas replay: the record-breaking detector's
-ValueState (running max per key) must survive micro-batch boundaries.
-The declarative window plan is the golden; the stream replays the same
-events split into three time-ordered files, one file per trigger, so the
-state crosses at least three micro-batches.
+"""Stateful-stream replay: the record-breaking detector's running max
+per key must survive micro-batch boundaries. The declarative window plan
+is the golden; the stream replays the same events split into three
+time-ordered files, one file per trigger, so the state crosses at least
+three micro-batches.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from aidc_2018_timeseries_spark.sources.tables import load_table
 from aidc_2018_timeseries_spark.streaming.records import (
     record_breaking_batch,
-    record_breaking_stream,
+    record_breaking_stream_gs,
 )
 from tests.conftest import SF_DIR
 
@@ -41,53 +41,9 @@ def chunked_events(spark, tmp_path_factory):
     return [str(d / f"chunk_{i}") for i in range(3)], ev
 
 
-def test_tws_stream_matches_batch_window(spark, chunked_events, tmp_path):
-    # The TWS state-server protocol is protobuf-based; this container has no
-    # protobuf (and installs are off), so the replay runs only where
-    # pyspark's full deps exist. The BATCH face stays oracle-checked either
-    # way; applyInPandasWithState (test_stateful_streaming.py) covers
-    # cross-micro-batch state in-container.
-    pytest.importorskip("google.protobuf")
-    chunk_dirs, ev = chunked_events
-    golden = sorted(map(tuple, record_breaking_batch(ev).collect()))
-    # sanity: records exist but are a strict subset (the detector selects)
-    assert 0 < len(golden) < ev.count()
-
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    for i, cd in enumerate(chunk_dirs):
-        for f in glob.glob(os.path.join(cd, "*.parquet")):
-            shutil.copy(f, feed / f"{i}.parquet")
-            time.sleep(0.05)  # distinct mod-times → deterministic file order
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(feed))
-    )
-    q = (
-        record_breaking_stream(stream)
-        .writeStream.format("memory")
-        .queryName("tws_records")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(map(tuple, spark.sql("SELECT * FROM tws_records").collect()))
-    assert got == golden
-
-
 def test_gs_stream_replay_matches_batch_window(spark, chunked_events, tmp_path):
-    """The applyInPandasWithState variant of the SAME state machine must
-    equal the batch window golden across >= 3 micro-batches — this replay
-    runs green in-container (no protobuf dependency), closing the gap the
-    TWS skip leaves (round-6 verdict item 8)."""
-    from aidc_2018_timeseries_spark.streaming.records import (
-        record_breaking_stream_gs,
-    )
-
+    """The applyInPandasWithState stream must equal the batch window
+    golden across >= 3 micro-batches."""
     chunk_dirs, ev = chunked_events
     golden = sorted(map(tuple, record_breaking_batch(ev).collect()))
     assert 0 < len(golden) < ev.count()
