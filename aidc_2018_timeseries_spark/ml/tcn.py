@@ -18,10 +18,12 @@ Training is out of scope by design (SURVEY §7.7): no distributed backprop.
 Weights are deterministic (seeded) or caller-provided; inference parity
 with a reference-shaped NumPy implementation is what the tests pin.
 
-Dropout note: inference mode only — the reference's Dropout2D multiplies
-by keep-prob at inference (``custom_neon_classes.py:32-33``), which is a
-deterministic scale and is folded into the conv weights here as the
-identity (keep=1.0 default).
+Dropout (SURVEY §2 M2): the reference's Dropout2D zeroes whole channels
+only while training; at inference it multiplies each conv+relu output by
+the keep probability k (``custom_neon_classes.py:32-33``). That scale folds
+exactly into the conv's own parameters: relu(a)·k = relu(k·a) for k > 0,
+and k·a is the conv with ``g`` and ``b`` scaled by k. Caller-provided
+weights carry the fold, so the forward has no dropout stage.
 """
 
 from __future__ import annotations
@@ -78,43 +80,6 @@ def relu(x: np.ndarray) -> np.ndarray:
     return np.maximum(x, 0.0)
 
 
-def spatial_dropout_mask(
-    n_channels: int, keep: float, seed: int, block_idx: int, layer_idx: int
-) -> np.ndarray:
-    """Per-CHANNEL Bernoulli(keep) mask — SURVEY §2 M2 (Dropout2D at
-    reference ``custom_neon_classes.py:20-33``): spatial dropout zeroes a
-    feature map across ALL timepoints, not individual activations.
-    Deterministic from (seed, block, layer) via a SeedSequence, so a
-    distributed training step applies the identical mask on every
-    partition with no mask broadcast."""
-    rng = np.random.default_rng(
-        np.random.SeedSequence([seed, block_idx, layer_idx])
-    )
-    return (rng.random(n_channels) < keep).astype(float)
-
-
-def apply_spatial_dropout(
-    h: np.ndarray,
-    keep: float,
-    training: bool,
-    seed: int = 0,
-    block_idx: int = 0,
-    layer_idx: int = 0,
-) -> np.ndarray:
-    """Reference (non-inverted) dropout semantics
-    (``custom_neon_classes.py:28-33``): TRAINING multiplies by the binary
-    channel mask at full value; INFERENCE multiplies by the keep
-    probability — the deterministic expectation, which is why the
-    long-standing inference fold (keep=1.0 default → identity) was exact
-    rather than an approximation. h: (T, C) or (N, T, C); one mask serves
-    the whole batch."""
-    if keep >= 1.0:
-        return h
-    if training:
-        return h * spatial_dropout_mask(h.shape[-1], keep, seed, block_idx, layer_idx)
-    return h * keep
-
-
 @dataclass
 class TCNWeights:
     """Deterministic TCN parameters: levels residual blocks, dilation 2^i,
@@ -143,53 +108,27 @@ class TCNWeights:
         self.readout = (rng.normal(0, 0.1, size=(self.n_hidden, 1)), rng.normal(0, 0.1, size=1))
 
 
-def tcn_forward_batch(
-    x: np.ndarray,
-    weights: TCNWeights,
-    *,
-    keep: float = 1.0,
-    training: bool = False,
-    dropout_seed: int = 0,
-) -> np.ndarray:
+def tcn_forward_batch(x: np.ndarray, weights: TCNWeights) -> np.ndarray:
     """Forward pass for a batch of equal-length (N, T, F) windows → (N,)
     predictions — the reference's minibatch shape
     (``datasets/timeseries.py:90-115``). Weight normalization runs once per
     block per call, every causal conv is one GEMM per tap over all N·T rows.
-
-    ``keep``/``training``/``dropout_seed`` wire M2 spatial dropout after
-    each conv+relu, matching the reference block layout
-    (``temporal_convolutional_network.py:7-30``: conv → relu → dropout,
-    twice per temporal block). Defaults preserve the inference identity
-    (keep=1.0) the catalog faces were verified under.
     """
     h = x
     for i, (v1, g1, b1, v2, g2, b2, side) in enumerate(weights.blocks):
         dilation = 2**i  # temporal_convolutional_network.py:51-65
         main = relu(causal_dilated_conv(h, weight_normalized(v1, g1), b1, dilation))
-        main = apply_spatial_dropout(main, keep, training, dropout_seed, i, 0)
         main = relu(causal_dilated_conv(main, weight_normalized(v2, g2), b2, dilation))
-        main = apply_spatial_dropout(main, keep, training, dropout_seed, i, 1)
         res = h if side is None else causal_dilated_conv(h, side, np.zeros(side.shape[2]), 1)
         h = relu(main + res)
     w, b = weights.readout
     return (h[:, -1] @ w + b)[:, 0]  # last timepoint (W12) + Affine (M10)
 
 
-def tcn_forward(
-    x: np.ndarray,
-    weights: TCNWeights,
-    *,
-    keep: float = 1.0,
-    training: bool = False,
-    dropout_seed: int = 0,
-) -> float:
+def tcn_forward(x: np.ndarray, weights: TCNWeights) -> float:
     """Forward pass for one (T, F) window → scalar prediction: the N = 1
     case of ``tcn_forward_batch``."""
-    return float(
-        tcn_forward_batch(
-            x[None], weights, keep=keep, training=training, dropout_seed=dropout_seed
-        )[0]
-    )
+    return float(tcn_forward_batch(x[None], weights)[0])
 
 
 def window_predictions(
@@ -231,7 +170,6 @@ def predict_windows(
     df: DataFrame,
     weights: TCNWeights,
     window_col: str = "window",
-    feature_cols: list[str] | None = None,
     id_cols: list[str] | None = None,
 ) -> DataFrame:
     """Distributed inference: mapInArrow, batched forwards over each record
@@ -245,9 +183,7 @@ def predict_windows(
     scale-out.
     """
     id_cols = id_cols or [c for c in df.columns if c != window_col]
-    feature_names = feature_cols or [
-        f.name for f in df.schema[window_col].dataType.elementType.fields
-    ]
+    feature_names = [f.name for f in df.schema[window_col].dataType.elementType.fields]
     out_schema = T.StructType(
         [df.schema[c] for c in id_cols] + [T.StructField("pred", T.DoubleType())]
     )

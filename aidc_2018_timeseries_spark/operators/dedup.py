@@ -436,7 +436,6 @@ def blocked_edit_distance_pairs(
     block_cols: list[str] | None = None,
     prefix_tokens: int = 4,
     max_dist: int = 3,
-    block_size_cap: int | None = None,
 ) -> DataFrame:
     """Entity-resolution-style near-duplicate pairing by EDIT DISTANCE
     under blocking: build a short "title" key (the first ``prefix_tokens``
@@ -455,16 +454,12 @@ def blocked_edit_distance_pairs(
     pairs, each pass this exact shape.
 
     Scale: one shuffle keyed by the blocking key; pair generation is
-    quadratic ONLY within a block, so the key must keep blocks bounded.
-    ``block_size_cap`` is the skew guard: blocks with more rows are
-    EXCLUDED from pairing (their candidate count is quadratic in the
-    block size — the round-5 10× audit measured a fully-duplicated
-    corpus growing candidates 105× for 10× rows; a production run
-    diverts those blocks to a stronger key or the MinHash pass, the same
-    skew relief the salted-join face demonstrates). The size relation is
-    block-count-bound (vocabulary-sized), joined back on the block key.
-    Levenshtein runs JVM-side (Catalyst ``levenshtein``), no Python in
-    the plan.
+    quadratic ONLY within a block, so the key must keep blocks bounded:
+    the candidate count grows with the square of the block size (the
+    round-5 10× audit measured a fully-duplicated corpus growing
+    candidates 105× for 10× rows), and a production run diverts oversized
+    blocks to a stronger key or the MinHash pass. Levenshtein runs
+    JVM-side (Catalyst ``levenshtein``), no Python in the plan.
     """
     toks = tokenize(F.col(text_col))
     title = F.array_join(F.slice(toks, 1, prefix_tokens), " ")
@@ -479,18 +474,6 @@ def blocked_edit_distance_pairs(
         F.floor(F.length(title) / 4).alias("_lbucket"),
     )
     block_key = [*(block_cols or []), "_tok1", "_lbucket"]
-    if block_size_cap is not None:
-        # Materialized: the capped relation feeds both self-join legs
-        # below, which would otherwise re-run the size aggregate and its
-        # join twice. The uncapped path stays lazy — there a leg recompute
-        # is a narrow parquet re-scan, cheaper than materializing.
-        sizes = keyed.groupBy(block_key).count()
-        keyed = (
-            keyed.join(sizes, block_key)
-            .filter(F.col("count") <= block_size_cap)
-            .drop("count")
-            .localCheckpoint(eager=True)
-        )
     a = keyed.select(
         *block_key,
         F.col(id_col).alias("id_a"),
@@ -607,7 +590,6 @@ def ngram_containment_pairs(
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.9,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT ≥ threshold — the ASYMMETRIC sibling of
     :func:`ngram_jaccard_pairs`: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|.
@@ -623,12 +605,9 @@ def ngram_containment_pairs(
     its FULL shingle set — B may be arbitrarily larger, that is the
     point. The size filter is one-sided too: |B| ≥ t·|A|. Because the B
     side is full postings, hot (boilerplate) shingles make the candidate
-    join quadratic in their document frequency; ``max_df`` caps the B
-    postings to discriminative shingles (lossy ONLY for pairs whose
-    entire overlap is boilerplate shingles — exactly the pairs a
-    curation pass does not want), the same relief valve as the
-    edit-distance blocker's ``block_size_cap``. Survivors verify exactly
-    JVM-side on the full distinct-shingle arrays; the ratio stays
+    join quadratic in their document frequency; the positional filter
+    below prunes most of those matches losslessly. Survivors verify
+    exactly JVM-side on the full distinct-shingle arrays; the ratio stays
     UNROUNDED (exact-integer division is bit-deterministic on both
     engines, rounding can only break parity).
     """
@@ -677,10 +656,7 @@ def ngram_containment_pairs(
         F.col("rk").alias("rk_a"),
         "shingle",
     )
-    full = with_rk
-    if max_df is not None:
-        full = full.filter(F.col("df") <= max_df)
-    full = full.select(
+    full = with_rk.select(
         F.col("doc").alias("id_b"),
         F.col("n_sh").alias("n_b"),
         F.col("rk").alias("rk_b"),
@@ -694,9 +670,7 @@ def ngram_containment_pairs(
     # non-common and overlap ≤ ceil(t|A|)−1 < α) and B indexes its full
     # set, so that match row exists and satisfies the bound. Hot
     # boilerplate shingles rank LATE on both sides — exactly the matches
-    # this prunes, complementing (not replacing) the lossy max_df valve.
-    # (rk is computed BEFORE the max_df filter, so the bound is unchanged
-    # by the valve.)
+    # this prunes.
     alpha = F.ceil(F.lit(threshold) * F.col("n_a") - F.lit(eps))
     ubound = F.lit(1) + F.least(
         F.col("n_a") - F.col("rk_a"), F.col("n_b") - F.col("rk_b")

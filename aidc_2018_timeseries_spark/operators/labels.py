@@ -15,13 +15,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _order_cols(order: str | Sequence[str]) -> list[Column]:
-    names = [order] if isinstance(order, str) else list(order)
-    return [F.col(n) for n in names]
+from aidc_2018_timeseries_spark.operators.windowing import _order_cols
 
 
 def rul_label(

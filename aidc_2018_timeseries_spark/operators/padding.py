@@ -17,11 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aidc_2018_timeseries_spark.functions.vectors import _c
 from aidc_2018_timeseries_spark.operators._sql import WHOLE_PARTITION, _q, over
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def pad_front_repeat_first(arr: Column | str, target_len: int) -> Column:

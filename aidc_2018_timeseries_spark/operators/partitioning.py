@@ -67,7 +67,9 @@ def spread_for_compute(df: DataFrame, col: str) -> DataFrame:
     handling (enabled session-wide) owns that regime. Unknown/absent
     statistics (no ``_jdf`` under Spark Connect, stats defaulting to
     Long.Max on exotic plans) degrade to skipping, i.e. never force a
-    shuffle on a possibly-huge input.
+    shuffle on a possibly-huge input. A non-positive
+    ``spark.sql.files.maxPartitionBytes`` (Spark accepts "-1m") would make
+    every input skip, so it raises ``ValueError`` instead.
     """
     global _warned_no_stats
     sess = df.sparkSession
@@ -84,7 +86,15 @@ def spread_for_compute(df: DataFrame, col: str) -> DataFrame:
                 "repartition is DISABLED for this process — small corpora "
                 "may run compute-bound stages serially."
             )
-    if size is None or not (0 <= size < n * _max_partition_bytes(sess)):
+    if size is None:
+        return df
+    max_bytes = _max_partition_bytes(sess)
+    if max_bytes <= 0:
+        conf = "spark.sql.files.maxPartitionBytes"
+        raise ValueError(
+            f"{conf} must be positive for the compute spread, got {sess.conf.get(conf)!r}"
+        )
+    if not (0 <= size < n * max_bytes):
         return df
     if size < n * _SMALL_SPREAD_FLOOR:
         return df.repartition(n, F.col(col))

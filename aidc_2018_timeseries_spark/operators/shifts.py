@@ -12,10 +12,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _order_cols(order: str | Sequence[str]) -> list[Column]:
-    names = [order] if isinstance(order, str) else list(order)
-    return [F.col(n) for n in names]
+from aidc_2018_timeseries_spark.operators.windowing import _order_cols
 
 
 def teacher_forcing_pairs(

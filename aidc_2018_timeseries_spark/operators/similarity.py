@@ -279,7 +279,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    n_centroids: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: probe the n_probe nearest centroid cells only.
 
@@ -288,19 +287,15 @@ def ivf_topk(
     SQL-expressible, which is what the oracle-checked quality face
     ``knn_ivf_eval`` runs against brute force.
 
-    ``n_centroids`` overrides ``centroid_stride`` with a corpus-size-
-    independent cell count (stride = n / n_centroids, one count() job at
-    build time). This is the scale knob: a FIXED stride makes C grow with
-    the corpus and the build cost n·C quadratic; fixing C (≈√n is the
-    classic IVF choice) keeps the build linear and the probed fraction
-    n_probe/C stable. All three per-row × per-centroid stages are
-    vectorized: GEMM assignment, GEMM + argsort query routing, einsum
+    ``centroid_stride`` sets the cell count C = n / stride. A FIXED
+    stride makes C grow with the corpus and the build cost n·C quadratic;
+    a caller that knows n derives the stride so that C stays near √n (the
+    classic IVF choice, as ``knn_ivf`` does), which keeps the build linear
+    and the probed fraction n_probe/C stable. All three per-row ×
+    per-centroid stages are vectorized: GEMM assignment, GEMM + argsort query routing, einsum
     candidate rescore (SCALING.md round 8). Assignment and routing
     collect the centroid table on the driver when the plan is built.
     """
-    if n_centroids is not None:
-        n = vectors.count()
-        centroid_stride = max(1, n // max(1, n_centroids))
     cents = stride_centroids(vectors, centroid_stride, id_col, vec_col)
     inverted = assign_centroids(vectors, cents, id_col, vec_col)
     # queries → their n_probe closest centroids
@@ -952,80 +947,12 @@ def ivf_probe_persisted(
     )
 
 
-def kmeans_converged_labels(
-    vectors: DataFrame,
-    cluster_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_iters: int = 10,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Lloyd iteration to a (bounded) fixed point over the stored seed
-    labels — the converged-k-means upgrade of the one-step clustering the
-    SemDeDup oracle face uses (VERDICT r9 ask 6; the paper clusters with
-    real k-means, the one-step form stays the oracle face because a
-    DuckDB oracle cannot express a data-dependent round count).
-
-    Each round: centroids = element-wise means of the current labels
-    (``centroid_means`` — k × dim bounded relation), then every vector
-    reassigns to its cosine-nearest centroid (``assign_centroids`` — a
-    GEMM scan, no corpus shuffle).
-    Deterministic end to end: deterministic seeding, 6-dp-rounded
-    similarities, argmax ties to the smallest cluster id, so the round
-    trajectory — and therefore the fixed point — is a pure function of
-    the input. Zero-norm vectors have no defined cosine and KEEP their
-    previous label (left join + coalesce) rather than dropping out of
-    the corpus mid-iteration. Convergence = zero moved assignments (one
-    driver-side count per round, the CC loop's scalar-readout class);
-    the loop stops at ``max_iters`` regardless — k-means is monotone in
-    its objective so oscillation needs a rounding-degenerate tie, and a
-    bounded round count is the deployment contract anyway.
-
-    Returns (id, vec, cluster_col) with the converged label; ``stats``
-    (optional) records ``{"kmeans_rounds": r, "converged": bool}``.
-    """
-    cur = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col(cluster_col).cast("long").alias("_cur"),
-    ).localCheckpoint(eager=True)
-    rounds, converged = 0, False
-    for i in range(max_iters):
-        cents = centroid_means(
-            cur, group_col="_cur", id_col=id_col, vec_col=vec_col
-        ).select(F.col("_cur").cast("long").alias("_cid"), "centroid_vec")
-        moved_to = assign_centroids(
-            cur, cents, id_col=id_col, vec_col=vec_col, centroid_id_col="_cid"
-        ).select(id_col, F.col("_cid").cast("long").alias("_new"))
-        nxt = (
-            cur.join(moved_to, id_col, "left")
-            .select(
-                id_col,
-                vec_col,
-                F.col("_cur").alias("_prev"),
-                F.coalesce("_new", "_cur").alias("_cur"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        rounds = i + 1
-        moved = nxt.filter(F.col("_cur") != F.col("_prev")).count()
-        cur = nxt.drop("_prev")
-        if moved == 0:
-            converged = True
-            break
-    if stats is not None:
-        stats["kmeans_rounds"] = rounds
-        stats["converged"] = converged
-    return cur.select(id_col, vec_col, F.col("_cur").alias(cluster_col))
-
-
 def semdedup_verdicts(
     vectors: DataFrame,
     threshold: float,
     cluster_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kmeans_iters: int = 0,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-bucketed
     SEMANTIC deduplication over an embedding column. Returns
@@ -1039,7 +966,9 @@ def semdedup_verdicts(
        ``cluster_col`` groups (the same deterministic seeding the
        ``kmeans_step_centroids`` face uses); every vector is then assigned
        to its cosine-NEAREST centroid — one k-means assignment step, so
-       the clustering is derived, not just the stored label.
+       the clustering is derived, not just the stored label. It is one
+       step, not Lloyd iteration to a fixed point: a data-dependent round
+       count cannot be stated as a DuckDB oracle.
     2. Within each cluster only, score all pairs; pairs with cosine ≥
        ``threshold`` are semantic duplicates. Transitive closure over
        those pairs (min-label connected components — the verified
@@ -1067,25 +996,7 @@ def semdedup_verdicts(
     but linear in shuffled bytes, the same contract as the IVF build. CC
     shuffles only (node, label) rounds over edges that near-dup
     survivors alone populate.
-
-    ``kmeans_iters > 0`` is the DEPLOYMENT clustering option (VERDICT r9
-    ask 6): the stored labels seed :func:`kmeans_converged_labels`, which
-    Lloyd-iterates to a fixed point (bounded by ``kmeans_iters``) before
-    the verdict stages run on the converged labels. 0 (default) keeps the
-    paper-faithful-but-one-step oracle face. At the fixed point the
-    downstream nearest-centroid assignment reproduces the converged
-    labels exactly (that is the fixed-point definition — pinned in
-    tests/test_semdedup.py), so the verdict stages need no separate code
-    path.
     """
-    if kmeans_iters:
-        vectors = kmeans_converged_labels(
-            vectors,
-            cluster_col=cluster_col,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_iters=kmeans_iters,
-        )
     cents = centroid_means(
         vectors, group_col=cluster_col, id_col=id_col, vec_col=vec_col
     ).select(F.col(cluster_col).cast("long").alias("cluster"), "centroid_vec")

@@ -79,7 +79,6 @@ def turbofan_train_windows(
     cap: int = 130,
     key: str = "trajectory_id",
     order: str = "t",
-    scale: bool = True,
 ) -> DataFrame:
     """Full-fidelity reference train pipeline on CMAPSS long format:
     A1 scale → W5 pad short series to T*skip → W2 strided windows →
@@ -89,8 +88,7 @@ def turbofan_train_windows(
     per series = ceil((L_padded - T + 1) / skip); labels follow
     ``y = L - T - k*skip`` capped (reference ``turbofan.py:118-163``).
     """
-    if scale:
-        df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
+    df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
     df = pad_short_series_front_repeat_long(df, key, order, feature_cols, seq_len * skip)
     windows = rolling_window_arrays(df, key, order, feature_cols, seq_len)
     # label of each window's END row is a function of (series_len, rn);
@@ -110,7 +108,6 @@ def turbofan_val_windows(
     key: str = "trajectory_id",
     order: str = "t",
     ordinal_col: str = "trajectory_ordinal",
-    scale: bool = True,
 ) -> DataFrame:
     """Validation mode (``augment_test_data=False``): the LAST seq_len rows
     of each trajectory form ONE window; its label is the file-provided base
@@ -126,8 +123,7 @@ def turbofan_val_windows(
 
     Output: (key, window array<struct<features>>, rul).
     """
-    if scale:
-        df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
+    df = per_key_max_scale(df, key, list(feature_cols), suffix="", order=[order])
     df = pad_short_series_front_repeat_long(df, key, order, feature_cols, seq_len)
     windows = rolling_window_arrays(df, key, order, feature_cols, seq_len)
     k = _q(key)

@@ -62,9 +62,8 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load_table(spark, sf_dir, "embeddings")
     # C ≈ √n keeps the index build linear and the probed fraction stable as
     # the corpus grows (round-4 ANN audit: fixed stride made the build
-    # quadratic — slower than brute force at 10× data). ONE count() job:
-    # the stride is derived here rather than via ivf_topk's n_centroids
-    # knob, which would re-count the same corpus
+    # quadratic — slower than brute force at 10× data). ONE count() job
+    # sizes the stride.
     n = v.count()
     stride = max(1, n // max(32, int(n**0.5)))
     return sim.ivf_topk(v, _queries_df(v), centroid_stride=stride, n_probe=3, k=_K)

@@ -6,14 +6,9 @@ rest; an ingestion pipeline dedups ON ARRIVAL. Structured Streaming's
 store, first occurrence emitted (append mode), later arrivals dropped —
 across micro-batch boundaries.
 
-Scale posture:
-- Unbounded form: state size = #distinct keys × key width. For content
-  hashes that is the dedup table itself — the honest cost of exact
-  streaming dedup, and why the key is a 128-bit hash, not the document.
-- Watermarked form (``within_watermark`` + an event-time column):
-  ``dropDuplicatesWithinWatermark`` evicts state older than the delay,
-  bounding memory for sources whose duplicates arrive close together
-  (retries, at-least-once replays) — the production default.
+Scale posture: state size = #distinct keys × key width. For content hashes that is the
+dedup table itself — the honest cost of exact streaming dedup, and why the
+key is a 128-bit hash, not the document.
 
 The same call works on a batch DataFrame (plain dropDuplicates), so the
 batch result is the streaming replay's golden (tests/test_streaming_dedup.py).
@@ -26,19 +21,8 @@ from pyspark.sql import DataFrame
 from aidc_2018_timeseries_spark.operators.dedup import content_hash
 
 
-def dedup_stream(
-    df: DataFrame,
-    key_cols: list[str],
-    within_watermark: tuple[str, str] | None = None,
-) -> DataFrame:
-    """First-seen-wins dedup on ``key_cols``.
-
-    ``within_watermark=(ts_col, delay)`` switches to the state-bounded
-    ``dropDuplicatesWithinWatermark`` form (streaming only).
-    """
-    if within_watermark is not None and df.isStreaming:
-        ts_col, delay = within_watermark
-        return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(key_cols)
+def dedup_stream(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """First-seen-wins dedup on ``key_cols``."""
     return df.dropDuplicates(key_cols)
 
 

@@ -192,28 +192,26 @@ def test_turbofan_val_windows_last_rows_and_base_rul(spark, cmapss_file, rul_fil
         FEATURE_COLS,
         seq_len=seq_len,
         cap=cap,
-        scale=False,
     ).collect()
     assert len(out) == 3  # one window per trajectory
     by_tid = {r["trajectory_id"]: r for r in out}
     assert by_tid[1]["rul"] == 112 and by_tid[2]["rul"] == 98 and by_tid[3]["rul"] == 20
-    # window = the LAST seq_len rows: check last element equals raw last row
-    raw = df.filter((F.col("trajectory_id") == 3)).orderBy("t").collect()
+    # window = the LAST seq_len rows: the last element is the raw last row
+    # max-scaled per trajectory
+    raw = [r["sensor_1"] for r in df.filter(F.col("trajectory_id") == 3).orderBy("t").collect()]
     last = by_tid[3]["window"][-1]
-    assert last["sensor_1"] == pytest.approx(raw[-1]["sensor_1"])
+    assert last["sensor_1"] == pytest.approx(raw[-1] / max(raw))
     assert all(len(r["window"]) == seq_len for r in out)
 
 
 
-def _np_val_windows(fleet, base_rul, seq_len, cap, scale):
+def _np_val_windows(fleet, base_rul, seq_len, cap):
     """NumPy restatement of validation mode: engine ``k`` in ascending id
     order takes RUL ordinal ``k``; its window is the last ``seq_len``
-    rows after optional x / max(x) scaling and front-repeat padding."""
+    rows after x / max(x) scaling and front-repeat padding."""
     out = {}
     for ordinal, tid in enumerate(sorted(fleet), start=1):
-        a = fleet[tid]
-        if scale:
-            a = a / a.max(axis=0)
+        a = fleet[tid] / fleet[tid].max(axis=0)
         if len(a) < seq_len:
             a = np.concatenate([np.repeat(a[:1], seq_len - len(a), axis=0), a])
         out[tid] = (a[-seq_len:].tolist(), min(base_rul[ordinal], cap))
@@ -221,15 +219,15 @@ def _np_val_windows(fleet, base_rul, seq_len, cap, scale):
 
 
 @pytest.mark.parametrize(
-    "lengths,seq_len,scale",
+    "lengths,seq_len",
     [
-        ({3: 1, 7: 3, 8: 9, 20: 12, 21: 25}, 10, True),  # engines shorter than T
-        ({2: 1, 5: 4, 9: 7}, 1, False),  # T = 1
-        ({}, 10, True),  # empty fleet
+        ({3: 1, 7: 3, 8: 9, 20: 12, 21: 25}, 10),  # engines shorter than T
+        ({2: 1, 5: 4, 9: 7}, 1),  # T = 1
+        ({}, 10),  # empty fleet
     ],
     ids=["short_engines", "t1", "empty"],
 )
-def test_turbofan_val_windows_match_numpy_last_rows(spark, lengths, seq_len, scale):
+def test_turbofan_val_windows_match_numpy_last_rows(spark, lengths, seq_len):
     rng = np.random.default_rng(11)
     fleet = {tid: rng.uniform(1.0, 50.0, size=(n, 2)).round(3) for tid, n in lengths.items()}
     base_rul = {k: int(v) for k, v in enumerate(rng.integers(0, 200, size=6), start=1)}
@@ -238,10 +236,10 @@ def test_turbofan_val_windows_match_numpy_last_rows(spark, lengths, seq_len, sca
         "trajectory_id int, t int, a double, b double",
     )
     rul = spark.createDataFrame(list(base_rul.items()), "trajectory_ordinal int, base_rul int")
-    out = turbofan_val_windows(df, rul, ["a", "b"], seq_len=seq_len, cap=130, scale=scale)
+    out = turbofan_val_windows(df, rul, ["a", "b"], seq_len=seq_len, cap=130)
     got = {r["trajectory_id"]: ([list(w) for w in r["window"]], r["rul"]) for r in out.collect()}
     assert out.columns == ["trajectory_id", "window", "rul"]
-    assert got == _np_val_windows(fleet, base_rul, seq_len, 130, scale)
+    assert got == _np_val_windows(fleet, base_rul, seq_len, 130)
 
 
 def test_turbofan_val_windows_quotes_column_names(spark, fleet_parquet, rul_file):

@@ -218,3 +218,93 @@ def test_every_engine_definition_is_reached():
     reached |= _closure(set(REACHABILITY_ALLOWLIST), edges, aliases)
     problems += [f"{n} ({', '.join(locs)}) is not reached" for n, locs in sorted(defs.items()) if n not in reached]
     assert not problems, problems
+
+
+# ---------------------------------------------------------------------------
+# Switches: every parameter of a public top-level engine function (outside
+# plans/) whose default is None, True or False is set by some call outside
+# the tests, or is on the allowlist below.
+
+#: Switches that no face, engine call, perfbench script or tool sets, each
+#: kept on purpose. An entry that is not a switch, or that a call sets, fails.
+SWITCH_ALLOWLIST = {
+    # names, not code paths
+    "asof_join.right_ts": "column name; None reuses left_ts, as both faces' sides share the ts column",
+    "trailing_window_zscore_bucketed.out": "output column name; None gives `<value_col>_z`",
+    "quality_score.stopwords": "stopword list; None is LANG_STOPWORDS['en']",
+    "remove_stopwords.stopwords": "stopword list; None is LANG_STOPWORDS['en']",
+    # set, but not visibly to a name match
+    "connected_components.stats": "round-count out-parameter; perfbench's corpus workload passes it through a wrapper",
+    "minhash_components_collapsed.collapse": "perfbench passes the default explicitly; the star path goes with ROADMAP item 2",
+    # reference forms that have no face (see REACHABILITY_ALLOWLIST)
+    "reconstruct.reverse_target": "reference W11 reversed decoder target; tests/test_autoregressive_seq2seq.py",
+    "resize_images.kernel": "pins the resize kernel where PIL is installed; tests/test_ml_and_multimodal.py",
+}
+
+
+def _switches() -> dict[tuple[str, str], tuple[int | None, object, str]]:
+    """(function, parameter) -> (position, or None when keyword-only;
+    default; location) for every switch in scope."""
+    out: dict[tuple[str, str], tuple[int | None, object, str]] = {}
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        where = path.relative_to(ROOT)
+        if where.parts[1] == "plans":
+            continue
+        for node in ast.parse(path.read_text(), filename=str(path)).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) or node.name.startswith("_"):
+                continue
+            a = node.args
+            positional = [*a.posonlyargs, *a.args]
+            defaults = [None] * (len(positional) - len(a.defaults)) + a.defaults
+            params = [(i, p, d) for i, (p, d) in enumerate(zip(positional, defaults))]
+            params += [(None, p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+            for i, p, d in params:
+                if isinstance(d, ast.Constant) and (d.value is None or isinstance(d.value, bool)):
+                    out[(node.name, p.arg)] = (i, d.value, f"{where}:{node.lineno}")
+    return out
+
+
+def _passed(call: ast.Call, param: str, position: int | None) -> ast.expr | None:
+    """The expression ``call`` passes for ``param``, by keyword or by
+    position. A splat (``*args``, ``**kwargs``) hides what it passes, so
+    it does not count."""
+    for kw in call.keywords:
+        if kw.arg == param:
+            return kw.value
+    for j, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            break
+        if j == position:
+            return arg
+    return None
+
+
+def test_every_engine_switch_is_set():
+    """Calls match functions by name, so a call of any function with the
+    same name sets the switch: this can miss a switch that nothing sets,
+    but never flags one that a call sets."""
+    switches = _switches()
+    by_function: dict[str, list[tuple[str, int | None, object]]] = {}
+    for (fn, param), (position, default, _) in switches.items():
+        by_function.setdefault(fn, []).append((param, position, default))
+    callers = [*(ROOT / PKG).rglob("*.py"), *SCRIPTS, ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    set_by_a_call: set[str] = set()
+    for path in callers:
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            for param, position, default in by_function.get(name, ()):
+                value = _passed(node, param, position)
+                if value is not None and not (isinstance(value, ast.Constant) and value.value is default):
+                    set_by_a_call.add(f"{name}.{param}")
+    names = {f"{fn}.{param}": loc for (fn, param), (_, _, loc) in switches.items()}
+    problems = [f"allowlisted {n!r} is not a switch" for n in SWITCH_ALLOWLIST if n not in names]
+    problems += [f"allowlisted {n!r} is set without the allowlist" for n in SWITCH_ALLOWLIST if n in set_by_a_call]
+    problems += [
+        f"{n}= ({loc}) is set by no call outside the tests"
+        for n, loc in sorted(names.items())
+        if n not in set_by_a_call and n not in SWITCH_ALLOWLIST
+    ]
+    assert not problems, problems

@@ -414,52 +414,27 @@ def test_audio_frames_face_matches_operator(spark):
     assert got == want and len(got) > len(set(r[0] for r in got))  # row-expanding
 
 
-def test_spatial_dropout_m2_semantics():
-    """M2 (Dropout2D, reference custom_neon_classes.py:20-33): the mask
-    is per-CHANNEL (constant across time), deterministic from (seed,
-    block, layer), training masks at full value, inference scales by
-    keep (non-inverted semantics), and keep=1.0 is the exact identity
-    the catalog faces were verified under."""
-    import numpy as np
+def test_inference_dropout_folds_into_conv_gain():
+    """M2 at inference (reference custom_neon_classes.py:32-33) scales
+    each conv+relu output by keep; relu(a)·k = relu(k·a) for k > 0, so
+    the same forward comes from scaling each conv's g and b by k."""
+    keep = 0.7
+    w = TCNWeights(n_features=3, n_hidden=4, levels=2)
+    x = np.random.default_rng(0).normal(size=(5, 12, 3))
 
-    from aidc_2018_timeseries_spark.ml.tcn import (
-        TCNWeights,
-        apply_spatial_dropout,
-        spatial_dropout_mask,
-        tcn_forward,
-    )
+    def keep_scaled_forward(x):
+        h = x
+        for i, (v1, g1, b1, v2, g2, b2, side) in enumerate(w.blocks):
+            main = tcn.relu(causal_dilated_conv(h, weight_normalized(v1, g1), b1, 2**i)) * keep
+            main = tcn.relu(causal_dilated_conv(main, weight_normalized(v2, g2), b2, 2**i)) * keep
+            res = h if side is None else causal_dilated_conv(h, side, np.zeros(side.shape[2]), 1)
+            h = tcn.relu(main + res)
+        wr, br = w.readout
+        return (h[:, -1] @ wr + br)[:, 0]
 
-    h = np.arange(40, dtype=float).reshape(10, 4) + 1.0
-    # identity at keep=1 regardless of mode
-    assert (apply_spatial_dropout(h, 1.0, True, 7) == h).all()
-    assert (apply_spatial_dropout(h, 1.0, False, 7) == h).all()
-    # inference = deterministic keep-scale
-    assert np.allclose(apply_spatial_dropout(h, 0.5, False), h * 0.5)
-    # training: per-channel mask, constant over time, reproducible
-    out1 = apply_spatial_dropout(h, 0.5, True, seed=3, block_idx=1, layer_idx=0)
-    out2 = apply_spatial_dropout(h, 0.5, True, seed=3, block_idx=1, layer_idx=0)
-    assert (out1 == out2).all()
-    mask = spatial_dropout_mask(4, 0.5, 3, 1, 0)
-    assert set(mask) <= {0.0, 1.0}
-    for c in range(4):
-        col = out1[:, c]
-        assert (col == h[:, c]).all() if mask[c] == 1.0 else (col == 0).all()
-    # different (seed, block, layer) decorrelate
-    masks = {
-        tuple(spatial_dropout_mask(64, 0.5, s, b, l))
-        for s in range(3) for b in range(2) for l in range(2)
-    }
-    assert len(masks) > 1
-    # statistical rate: mean keep fraction over many seeds ~ keep
-    rates = [spatial_dropout_mask(64, 0.7, s, 0, 0).mean() for s in range(200)]
-    assert abs(float(np.mean(rates)) - 0.7) < 0.03
-    # wiring: keep=1.0 forward identical to the pre-M2 path; training
-    # forward deterministic; inference keep<1 differs from identity
-    w = TCNWeights(n_features=3)
-    x = np.random.default_rng(0).normal(size=(12, 3))
-    base = tcn_forward(x, w)
-    assert tcn_forward(x, w, keep=1.0, training=True) == base
-    t1 = tcn_forward(x, w, keep=0.5, training=True, dropout_seed=11)
-    t2 = tcn_forward(x, w, keep=0.5, training=True, dropout_seed=11)
-    assert t1 == t2
-    assert tcn_forward(x, w, keep=0.5, training=False) != base
+    folded = TCNWeights(n_features=3, n_hidden=4, levels=2)
+    folded.blocks = [
+        (v1, g1 * keep, b1 * keep, v2, g2 * keep, b2 * keep, side)
+        for v1, g1, b1, v2, g2, b2, side in w.blocks
+    ]
+    assert tcn_forward_batch(x, folded) == pytest.approx(keep_scaled_forward(x), rel=1e-12)

@@ -8,7 +8,10 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pytest
 
-from aidc_2018_timeseries_spark.operators.partitioning import _max_partition_bytes
+from aidc_2018_timeseries_spark.operators.partitioning import (
+    _max_partition_bytes,
+    spread_for_compute,
+)
 from aidc_2018_timeseries_spark.operators.similarity import _round6_half_up
 
 CONF = "spark.sql.files.maxPartitionBytes"
@@ -37,7 +40,7 @@ def restore_conf(spark):
         ("64b", 64),
         (" 128m ", 128 << 20),
         ("0", 0),
-        # Spark accepts a negative size; no input is below n x it, so the gate skips
+        # Spark accepts a negative size; spread_for_compute rejects it
         ("-1m", -(1 << 20)),
     ],
 )
@@ -60,6 +63,19 @@ def test_spark_default_is_binary_128_mib(spark, restore_conf):
     # Spark's documented default; the regression was 128m -> 128.
     spark.conf.unset(CONF)
     assert _max_partition_bytes(spark) == 134217728
+
+
+def test_spread_rejects_non_positive_max_partition_bytes(spark):
+    """A negative maxPartitionBytes would make the gate skip every input
+    silently; the spread names the conf and its value instead."""
+    df = spark.range(10)
+    old = spark.conf.get(CONF)
+    try:
+        spark.conf.set(CONF, "-1m")
+        with pytest.raises(ValueError, match=r"maxPartitionBytes.*'-1m'"):
+            spread_for_compute(df, "id")
+    finally:
+        spark.conf.set(CONF, old)
 
 
 def _decimal_half_up_6dp(v: float) -> float:

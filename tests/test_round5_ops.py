@@ -74,24 +74,6 @@ def test_blocked_edit_distance_blocking_tradeoff_first_token(spark):
     assert out.count() == 0
 
 
-def test_blocked_edit_distance_cap_excludes_skewed_block(spark):
-    # 6 near-identical titles in one block (15 candidate pairs) + one
-    # 2-row block: cap=5 must drop the skewed block entirely while the
-    # small block still pairs — the 100 TB skew relief valve.
-    rows = [(i, f"common title words here variant{i}", "en") for i in range(6)]
-    rows += [(10, "rare block title text alpha", "en"),
-             (11, "rare block title text alphb", "en")]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    capped = blocked_edit_distance_pairs(
-        df, "doc_id", "text", block_cols=["lang"], block_size_cap=5
-    ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in capped} == {(10, 11)}
-    uncapped = blocked_edit_distance_pairs(
-        df, "doc_id", "text", block_cols=["lang"]
-    ).count()
-    assert uncapped > 1  # the skewed block pairs only without the cap
-
-
 # --- product quantization ---------------------------------------------------
 
 
@@ -206,24 +188,6 @@ def test_containment_catches_subset_jaccard_misses(spark):
     assert [(r["id_a"], r["id_b"], r["containment"]) for r in cont] == [(1, 2, 1.0)]
     # symmetric Jaccard at the same class of threshold sees nothing
     assert ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.8).count() == 0
-
-
-def test_containment_max_df_drops_boilerplate_only_overlap(spark):
-    from aidc_2018_timeseries_spark.operators.dedup import ngram_containment_pairs
-
-    # 8 docs share ONLY a boilerplate header; doc 9 truly contains doc 8's
-    # body. With max_df=2 the header shingles (df=8) stop generating
-    # candidates, but the true containment pair (rare shingles) survives.
-    header = "standard site header navigation bar"
-    body = "unique article body sentence number"
-    rows = [(i, f"{header} filler{i} pad{i} tail{i}") for i in range(8)]
-    rows += [(8, body), (9, body + " plus extra trailing context words")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = ngram_containment_pairs(
-        df, "doc_id", "text", threshold=0.9, max_df=2
-    ).collect()
-    assert (8, 9) in {(r["id_a"], r["id_b"]) for r in capped}
-    assert all(r["id_a"] in (8, 9) for r in capped)
 
 
 # --- temperature mixture -----------------------------------------------------

@@ -249,111 +249,3 @@ def test_semdedup_edge_corpora(spark, split):
     assert sum(r["keep"] for r in rows) == 1
     assert len({r["group_id"] for r in rows}) == 1
 
-
-# --- converged k-means deployment option (round 10, VERDICT r9 ask 6) ---
-
-
-def _blob_corpus(spark, seed=3, n_per=40, d=8, sep=6.0):
-    """Three well-separated Gaussian blobs with SCRAMBLED seed labels —
-    Lloyd iteration must recover blob structure regardless of seeding."""
-    rng = np.random.default_rng(seed)
-    centers = rng.standard_normal((3, d)) * sep
-    vecs, labels, blob = [], [], []
-    for b in range(3):
-        for _ in range(n_per):
-            vecs.append(centers[b] + 0.05 * rng.standard_normal(d))
-            labels.append(int(rng.integers(0, 3)))  # scrambled seed
-            blob.append(b)
-    return _corpus(spark, vecs, labels), blob
-
-
-@pytest.mark.parametrize("split", [False, True])
-def test_kmeans_fixed_point_labels_stable(spark, split):
-    """At the converged fixed point, one MORE centroid+assign step must
-    reproduce the labels exactly — the definition this option promises —
-    whatever the partition layout of the corpus."""
-    from aidc_2018_timeseries_spark.operators.similarity import (
-        assign_centroids,
-        centroid_means,
-        kmeans_converged_labels,
-    )
-
-    df, _ = _blob_corpus(spark)
-    df = _split(df, split)
-    stats = {}
-    conv = kmeans_converged_labels(
-        df, max_iters=15, stats=stats
-    ).localCheckpoint(eager=True)
-    assert stats["converged"], stats
-    cents = centroid_means(conv, group_col="label").select(
-        F.col("label").cast("long").alias("_cid"), "centroid_vec"
-    )
-    again = assign_centroids(conv, cents, centroid_id_col="_cid").select(
-        "vec_id", F.col("_cid").cast("long").alias("relabel")
-    )
-    diff = (
-        conv.join(again, "vec_id")
-        .filter(F.col("label") != F.col("relabel"))
-        .count()
-    )
-    assert diff == 0
-
-
-def test_kmeans_recovers_blob_structure(spark):
-    """Scrambled seeding converges to blob-pure clusters (same partition
-    of the ids as the ground-truth blobs, up to label renaming)."""
-    from aidc_2018_timeseries_spark.operators.similarity import (
-        kmeans_converged_labels,
-    )
-
-    df, blob = _blob_corpus(spark)
-    got = {
-        r["vec_id"]: r["label"]
-        for r in kmeans_converged_labels(df, max_iters=15).collect()
-    }
-    # partition equality up to renaming: the (blob -> got-label) map is a
-    # bijection and constant within each blob
-    mapping = {}
-    for i, b in enumerate(blob):
-        mapping.setdefault(b, set()).add(got[i])
-    assert all(len(s) == 1 for s in mapping.values()), mapping
-    assert len({next(iter(s)) for s in mapping.values()}) == 3
-
-
-def test_semdedup_kmeans_iters_zero_is_oracle_face(spark):
-    """kmeans_iters=0 must be byte-identical to the pre-round-10 one-step
-    form (the oracle face contract)."""
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((60, 8))
-    labels = [i % 4 for i in range(60)]
-    df = _corpus(spark, vecs, labels)
-    base = sorted(
-        map(tuple, semdedup_verdicts(df, threshold=TAU).collect())
-    )
-    explicit = sorted(
-        map(tuple, semdedup_verdicts(df, threshold=TAU, kmeans_iters=0).collect())
-    )
-    assert base == explicit
-
-
-@pytest.mark.parametrize("split", [False, True])
-def test_semdedup_converged_still_valid_verdicts(spark, split):
-    """With converged clustering the verdict invariants must hold: one
-    keep per group, every group_id is a member id, planted near-dup pairs
-    still deduplicate (the clustering changed, not the policy)."""
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((30, 8))
-    vecs = list(base) + [b + 0.001 * rng.standard_normal(8) for b in base[:10]]
-    labels = [int(rng.integers(0, 4)) for _ in vecs]  # scrambled seed
-    df = _split(_corpus(spark, vecs, labels), split)
-    out = semdedup_verdicts(df, threshold=TAU, kmeans_iters=10).collect()
-    by_group = {}
-    for r in out:
-        by_group.setdefault(r["group_id"], []).append(r)
-    for g, rows in by_group.items():
-        assert sum(r["keep"] for r in rows) == 1, g
-        assert g in {r["vec_id"] for r in rows}, g
-    # planted duplicates (i, 30+i) ended up in the same group
-    gid = {r["vec_id"]: r["group_id"] for r in out}
-    hits = sum(gid[i] == gid[30 + i] for i in range(10))
-    assert hits == 10, hits

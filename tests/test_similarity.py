@@ -193,25 +193,6 @@ def test_assign_centroids_matches_sequential_fold_reference(spark):
     assert got == {1: 3, 2: 5}
 
 
-def test_ivf_n_centroids_knob(spark):
-    """n_centroids derives the stride from a count so cell count stays
-    corpus-size-independent; results remain well-formed and recall holds."""
-    v = load_table(spark, SF_DIR, "embeddings")
-    q = _queries(v)
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(v, q, k=5).collect()
-    }
-    got = ivf_topk(v, q, n_centroids=10, n_probe=3, k=5).collect()
-    approx = {(r["query_id"], r["neighbor_id"]) for r in got}
-    assert len(exact & approx) / len(exact) >= 0.2
-    ranks = {}
-    for r in got:
-        assert r["neighbor_id"] != r["query_id"]
-        ranks.setdefault(r["query_id"], []).append(r["rank"])
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in ranks.values())
-
-
 def test_embedding_lsh_scaled_face_precision_and_recall(spark):
     """The scaled (Arrow-GEMM, prefix-stable-plane) face: every emitted
     pair is a TRUE pair (precision exact by rescore), and recall vs the
