@@ -36,6 +36,13 @@ def hash64(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def hash64_expr(expr: str) -> str:
+    """Spark SQL text computing :func:`hash64` of the SQL expression
+    ``expr``, for operators that build one ``F.expr``/``selectExpr``
+    string."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def hash64_seeded(col: Column | str, seed: int | str) -> Column:
     """Seeded variant: hash of ``seed || ':' || value``."""
     c = F.col(col) if isinstance(col, str) else col

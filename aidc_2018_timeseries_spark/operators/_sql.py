@@ -22,6 +22,14 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def let(name: str, value: str, body: str) -> str:
+    """SQL text of ``body`` with the lambda variable ``name`` bound to
+    ``value``. Spark evaluates ``value`` once per row, however often
+    ``body`` or a lambda inside it reads ``name``; an expression written
+    out inside a lambda body is evaluated again for every element."""
+    return f"transform(array({value}), {name} -> {body})[0]"
+
+
 def over(key: str, order: str | Sequence[str] = (), frame: str = "") -> str:
     """``OVER (PARTITION BY key [ORDER BY order…] [frame])``, ascending
     with nulls first like ``Window.orderBy``."""

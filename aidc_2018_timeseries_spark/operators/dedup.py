@@ -21,7 +21,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aidc_2018_timeseries_spark.functions.hashing import hash64
+from aidc_2018_timeseries_spark.functions.hashing import hash64, hash64_expr
 from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
 from aidc_2018_timeseries_spark.operators.text import shingle_hashes, tokenize
 
@@ -40,12 +40,11 @@ def _minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
-def content_hash(text_col: Column | str) -> Column:
+def content_hash(text_col: str) -> Column:
     """Normalized-content md5: lowercase + whitespace-collapse before
     hashing, so trivially-reformatted copies collide. Shared by the batch
     exact dedup and the streaming first-seen dedup."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(F.concat_ws(" ", tokenize(c)))
+    return F.md5(F.concat_ws(" ", tokenize(text_col)))
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -85,10 +84,10 @@ def minhash_signature_agg(
     """
     exploded = spread_for_compute(df, id_col).select(
         F.col(id_col).alias("doc"),
-        F.explode(shingle_hashes(F.col(text_col), n=shingle_n)).alias("h"),
+        F.explode(shingle_hashes(text_col, n=shingle_n)).alias("h"),
     )
     aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"s{i}")
+        F.expr(f"min(({a} * h + {b}) % {MINHASH_PRIME}) AS s{i}")
         for i, (a, b) in enumerate(_minhash_params(num_hashes))
     ]
     return exploded.groupBy("doc").agg(*aggs)
@@ -111,14 +110,11 @@ def minhash_candidate_pairs(
     sigs = minhash_signature_agg(df, id_col, text_col, num_hashes, shingle_n)
     band_structs = []
     for band in range(num_bands):
-        cols = [F.col(f"s{band * rows_per_band + j}") for j in range(rows_per_band)]
-        band_hash = hash64(F.concat_ws(",", *[c.cast("string") for c in cols]))
-        band_structs.append(
-            F.struct(F.lit(band).alias("band_id"), band_hash.alias("band_hash"))
-        )
+        cols = [f"CAST(s{band * rows_per_band + j} AS STRING)" for j in range(rows_per_band)]
+        band_hash = hash64_expr(f"concat_ws(',', {', '.join(cols)})")
+        band_structs.append(f"named_struct('band_id', {band}, 'band_hash', {band_hash})")
     banded = (
-        sigs.select("doc", F.explode(F.array(*band_structs)).alias("b"))
-        .select("doc", "b.band_id", "b.band_hash")
+        sigs.selectExpr("doc", f"inline(array({', '.join(band_structs)}))")
         # Materialize once: the self-join below would otherwise run the
         # whole shingle-explode + minhash aggregation TWICE (Spark never
         # reuses a subplan across self-join sides — the graph.py
@@ -126,19 +122,15 @@ def minhash_candidate_pairs(
         # relation is narrow and bounded: num_bands rows per doc.
         .localCheckpoint(eager=True)
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc") < F.col("r.doc")),
+    return (
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            F.expr("l.band_id = r.band_id AND l.band_hash = r.band_hash AND l.doc < r.doc"),
         )
-        .select(F.col("l.doc").alias("id_a"), F.col("r.doc").alias("id_b"))
+        .selectExpr("l.doc AS id_a", "r.doc AS id_b")
         .distinct()
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(
@@ -215,7 +207,7 @@ def ngram_jaccard_candidates(
         spread_for_compute(df, id_col)
         .select(
             F.col(id_col).alias("doc"),
-            shingle_hashes(F.col(text_col), n=shingle_n).alias("sh"),
+            shingle_hashes(text_col, n=shingle_n).alias("sh"),
         )
         .localCheckpoint(eager=True)
     )
@@ -280,7 +272,7 @@ def ngram_jaccard_candidates(
     return hashed, cand
 
 
-def simhash32(text: Column | str) -> Column:
+def simhash32(text: str) -> Column:
     """32-bit SimHash of the token multiset.
 
     Per token: 32-bit hash; bit j votes +1/−1; signature bit j = majority.
@@ -313,7 +305,7 @@ def simhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     return (
         spread_for_compute(df, id_col)
-        .select(F.col(id_col), simhash32(F.col(text_col)).alias("simhash"))
+        .select(F.col(id_col), simhash32(text_col).alias("simhash"))
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("canonical_id"))
     )
@@ -398,7 +390,7 @@ def duplicate_spans(
     the same shapes the MinHash band join already proved at 100 TB. Memory
     per task is bounded by (rows per gram-hash partition), not corpus size.
     """
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(text_col)
     starts = F.when(
         F.size("toks") >= k, F.sequence(F.lit(1), F.size("toks") - k + 1)
     ).otherwise(F.array().cast("array<int>"))
@@ -461,7 +453,7 @@ def blocked_edit_distance_pairs(
     blocks to a stronger key or the MinHash pass. Levenshtein runs
     JVM-side (Catalyst ``levenshtein``), no Python in the plan.
     """
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(text_col)
     title = F.array_join(F.slice(toks, 1, prefix_tokens), " ")
     keyed = df.select(
         F.col(id_col),
@@ -554,9 +546,7 @@ def minhash_components_collapsed(
         pairs = minhash_candidate_pairs(
             df, id_col, text_col, num_hashes, num_bands, shingle_n
         )
-        nodes = df.filter(
-            F.size(shingle_hashes(F.col(text_col), n=shingle_n)) > 0
-        ).select(id_col)
+        nodes = df.filter(F.size(tokenize(text_col)) >= shingle_n).select(id_col)
         return connected_components(
             nodes, pairs, id_col=id_col, src_col="id_a", dst_col="id_b"
         )
@@ -564,9 +554,9 @@ def minhash_components_collapsed(
     rep_pairs = minhash_candidate_pairs(
         reps, id_col, text_col, num_hashes, num_bands, shingle_n
     )
-    shingled_canon = reps.filter(
-        F.size(shingle_hashes(F.col(text_col), n=shingle_n)) > 0
-    ).select(F.col(id_col).alias("canonical_id"))
+    shingled_canon = reps.filter(F.size(tokenize(text_col)) >= shingle_n).select(
+        F.col(id_col).alias("canonical_id")
+    )
     star = (
         mapping.filter(F.col(id_col) != F.col("canonical_id"))
         .join(shingled_canon, "canonical_id", "semi")
@@ -626,7 +616,7 @@ def ngram_containment_pairs(
         spread_for_compute(df, id_col)
         .select(
             F.col(id_col).alias("doc"),
-            shingle_hashes(F.col(text_col), n=shingle_n).alias("sh"),
+            shingle_hashes(text_col, n=shingle_n).alias("sh"),
         )
         .localCheckpoint(eager=False)
     )

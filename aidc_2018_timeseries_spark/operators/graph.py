@@ -41,15 +41,40 @@ Design for scale:
   plan would otherwise grow linearly and Catalyst analysis would
   dominate). On a multi-node cluster with executor churn, swap for
   reliable ``checkpoint()`` with a checkpoint dir.
-- The per-round convergence check collects ONE scalar (the label sum) —
-  driver-side bookkeeping, same class as a training loop's loss readout,
-  not a data-plane collect.
+- The per-round convergence check reads ONE scalar (the label sum) from
+  ``DataFrame.observe`` on the job that already materializes the round
+  (the eager checkpoint, or the count that fills an escalated round's
+  cache), so a round costs its checkpoint job and no aggregate job of
+  its own — driver-side bookkeeping, same class as a training loop's
+  loss readout, not a data-plane collect.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aidc_2018_timeseries_spark.operators._sql import _q
+
+#: the convergence metric, summed as decimal(38,0): an int64 sum would
+#: overflow under ANSI mode at billions of nodes
+_LABEL_SUM = "sum(CAST(label AS DECIMAL(38,0))) AS s"
+
+
+def _observing_label_sum(df: DataFrame) -> DataFrame:
+    """``df`` with its label sum observed under a plain name. An
+    ``Observation`` object would start the session's ObservationManager,
+    which Spark 4.1 does not mark transient: once started, every task
+    closure that captures the session (an MLlib model summary does) fails
+    with NotSerializableException."""
+    return df.observe("label_sum", F.expr(_LABEL_SUM))
+
+
+def _observed_label_sum(df: DataFrame):
+    """The label sum observed while the last action ran ``df`` (a
+    DataFrame from :func:`_observing_label_sum`, or one built on it), read
+    from that action's own query execution."""
+    return df._jdf.queryExecution().observedMetrics().get("label_sum").get().get(0)
 
 
 def connected_components(
@@ -86,37 +111,39 @@ def connected_components(
     spark = vertices.sparkSession
     n_part = spark.sparkContext.defaultParallelism
 
-    fwd = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    fwd = edges.selectExpr(f"{_q(src_col)} AS u", f"{_q(dst_col)} AS v")
     und = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        fwd.unionByName(fwd.selectExpr("v AS u", "u AS v"))
         .repartition(n_part, "u")
         .persist()
     )
 
-    labels = vertices.select(
-        F.col(id_col).alias("node"), F.col(id_col).cast("long").alias("label")
-    ).localCheckpoint(eager=True)
-
     # Convergence via the label-sum invariant: a round only ever LOWERS
     # labels, so sum(label) strictly decreases until the fixpoint — an
-    # unchanged sum means no label moved. One tiny aggregate over the
-    # already-materialized checkpoint instead of a join against the
-    # previous round's labels. Summed as decimal(38,0): an int64 sum
-    # would overflow under ANSI mode at billions of nodes.
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
+    # unchanged sum means no label moved. The sum is observed on the job
+    # that materializes each round anyway, so convergence costs no job.
+    seed = _observing_label_sum(
+        vertices.selectExpr(
+            f"{_q(id_col)} AS node", f"CAST({_q(id_col)} AS BIGINT) AS label"
+        )
+    )
+    labels = seed.localCheckpoint(eager=True)
+    prev_sum = _observed_label_sum(seed)
     pinned = None
     try:
         for i in range(max_iter):
-            msgs = und.join(labels, und["u"] == labels["node"]).select(
-                F.col("v").alias("node"), F.col("label")
+            msgs = und.join(labels.withColumnRenamed("node", "u"), "u").selectExpr(
+                "v AS node", "label"
             )
-            labels = (
-                labels.unionByName(msgs)
-                .groupBy("node")
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=True)
+            merged = (
+                labels.unionByName(msgs).groupBy("node").agg(F.expr("min(label) AS label"))
             )
-            if i >= escalate_after:
+            if i < escalate_after:
+                merged = _observing_label_sum(merged)
+                labels = merged.localCheckpoint(eager=True)
+                cur_sum = _observed_label_sum(merged)
+            else:
+                labels = merged.localCheckpoint(eager=True)
                 # Pointer-jump (shortcutting): label ← min(label,
                 # label(label)). label(node) is always the id of a vertex
                 # in node's component (induction: it starts as node's own
@@ -138,24 +165,23 @@ def connected_components(
                 # output). An InMemoryRelation carries size-only stats, so
                 # the NEXT round's propagate checkpoint stays safe, and
                 # that checkpoint still truncates lineage each round. The
-                # persisted round table is unpersisted on function exit.
-                a, b = labels.alias("a"), labels.alias("b")
+                # persisted round table is unpersisted on function exit;
+                # its count fills the cache and observes the label sum.
                 jumped = (
-                    a.join(b, F.col("a.label") == F.col("b.node"), "left")
-                    .select(
-                        F.col("a.node").alias("node"),
-                        F.least(
-                            F.col("a.label"),
-                            F.coalesce(F.col("b.label"), F.col("a.label")),
-                        ).alias("label"),
+                    labels.alias("a")
+                    .join(labels.alias("b"), F.expr("a.label = b.node"), "left")
+                    .selectExpr(
+                        "a.node AS node",
+                        "least(a.label, coalesce(b.label, a.label)) AS label",
                     )
                     .persist()
                 )
-                jumped.count()
+                counted = _observing_label_sum(jumped).groupBy().count()
+                counted.collect()
+                cur_sum = _observed_label_sum(counted)
                 if pinned is not None:
                     pinned.unpersist()
                 pinned = labels = jumped
-            cur_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
             if cur_sum == prev_sum:
                 if stats is not None:
                     stats["rounds"] = i + 1

@@ -2,10 +2,23 @@
 star: LLM-training-data pipeline ops as first-class engine components).
 
 Everything is built-in Catalyst expressions (split/regexp/higher-order
-functions) — no Python in the hot path, so a 100 TB documents table runs
-scan-shaped with whole-stage codegen. Tokenization is whitespace-based and
-IDENTICAL in the DuckDB oracles (regexp differences between engines are a
-classic parity trap — the only regexes used behave identically in both).
+functions) — no Python in the hot path, and the work stays scan-local
+(no shuffle of its own). The higher-order functions (``filter``,
+``transform``, ``aggregate``) are interpreted ``CodegenFallback``
+expressions, not whole-stage-codegen'd ones, so their per-row cost is
+the thing to keep small: each scoring rule below is ONE Spark SQL
+expression string (``F.expr``) over the column's name, which costs one
+py4j command to build instead of a Column chain per token function,
+and reads its token array through one ``_sql.let`` binding, so a row is
+tokenized once per rule rather than once per read.
+Tokenization is whitespace-based and IDENTICAL in the DuckDB oracles
+(regexp differences between engines are a classic parity trap — the
+only regexes used behave identically in both).
+
+SQL-text traps these builders avoid: a bare ``0.4`` is a DECIMAL in
+Spark SQL (doubles are written ``0.4D``); the whitespace regex needs its
+backslash doubled inside a SQL string literal; and lambda variables get
+names that no column uses (``tok_``, ``w_`` …).
 """
 
 from __future__ import annotations
@@ -13,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from aidc_2018_timeseries_spark.functions.hashing import hash64, word_fingerprint
+from aidc_2018_timeseries_spark.functions.hashing import hash64, hash64_expr, word_fingerprint
+from aidc_2018_timeseries_spark.operators._sql import _q, let
 
 #: tiny embedded stopword lists for the language-ID heuristic. Real systems
 #: use character n-gram models; the ENGINE mechanics (score-per-language,
@@ -27,10 +41,26 @@ LANG_STOPWORDS = {
 }
 
 
-def tokenize(text: Column | str) -> Column:
-    """Whitespace tokenization of lowercased text (empty tokens removed)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(F.trim(c)), r"\s+"), lambda t: t != "")
+def _str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _tokens(expr: str) -> str:
+    """Spark SQL text of :func:`tokenize` over the SQL expression ``expr``."""
+    return rf"filter(split(lower(trim({expr})), '\\s+'), tok_ -> tok_ != '')"
+
+
+def _hits(tokens: str, words: list[str]) -> str:
+    """SQL text: how many elements of the token array ``tokens`` are in
+    ``words`` (integer — exact parity)."""
+    return f"size(filter({tokens}, w_ -> w_ IN ({', '.join(map(_str, words))})))"
+
+
+def tokenize(text: str) -> Column:
+    """Whitespace tokenization of the lowercased column ``text`` (empty
+    tokens removed)."""
+    return F.expr(_tokens(_q(text)))
 
 
 def tokenize_sql(expr: str) -> str:
@@ -38,11 +68,11 @@ def tokenize_sql(expr: str) -> str:
     return f"list_filter(string_split_regex(lower(trim({expr})), '\\s+'), t -> t <> '')"
 
 
-def token_count(text: Column | str) -> Column:
+def token_count(text: str) -> Column:
     return F.size(tokenize(text))
 
 
-def type_token_ratio(text: Column | str) -> Column:
+def type_token_ratio(text: str) -> Column:
     """Distinct tokens / total tokens — a classic repetition-quality signal.
     NULL for token-less docs (ANSI division would throw; the edge-corpus
     battery pins the guard)."""
@@ -51,7 +81,7 @@ def type_token_ratio(text: Column | str) -> Column:
     return F.when(n > 0, F.size(F.array_distinct(toks)) / n)
 
 
-def mean_token_length(text: Column | str) -> Column:
+def mean_token_length(text: str) -> Column:
     """NULL for token-less docs (ANSI division guard)."""
     toks = tokenize(text)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -59,7 +89,7 @@ def mean_token_length(text: Column | str) -> Column:
     return F.when(n > 0, total.cast("double") / n)
 
 
-def quality_score(text: Column | str, stopwords: list[str] | None = None) -> Column:
+def quality_score(text: str, stopwords: list[str] | None = None) -> Column:
     """Deterministic heuristic quality score in [0, 1]:
 
     0.4 * stopword-ratio-score + 0.3 * type-token-ratio
@@ -68,54 +98,55 @@ def quality_score(text: Column | str, stopwords: list[str] | None = None) -> Col
     Mirrors the length/stopword/repetition signals of published quality
     classifiers (Gopher/C4 rules) in engine-checkable form.
     """
-    stopwords = stopwords or LANG_STOPWORDS["en"]
-    toks = tokenize(text)
-    n = F.size(toks).cast("double")
-    stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*stopwords))).cast("double") / n
-    stop_score = F.least(stop_ratio * 5.0, F.lit(1.0))  # ~20% stopwords → full marks
-    ttr = F.size(F.array_distinct(toks)).cast("double") / n
-    len_score = F.least(n, F.lit(200.0)) / 200.0
-    score = 0.4 * stop_score + 0.3 * ttr + 0.3 * len_score
+    n = "CAST(size(toks_) AS DOUBLE)"
+    hits = _hits("toks_", stopwords or LANG_STOPWORDS["en"])
+    # ~20% stopwords → full marks
+    stop_score = f"least(CAST({hits} AS DOUBLE) / {n} * 5.0D, 1.0D)"
+    ttr = f"CAST(size(array_distinct(toks_)) AS DOUBLE) / {n}"
+    len_score = f"least({n}, 200.0D) / 200.0D"
     # empty/whitespace docs: no content = zero quality (ANSI division on
     # n = 0 would throw; found by the edge-corpus battery)
-    return F.when(n > 0, score).otherwise(F.lit(0.0))
+    score = f"0.4D * {stop_score} + 0.3D * ({ttr}) + 0.3D * ({len_score})"
+    return F.expr(
+        let("toks_", _tokens(_q(text)), f"CASE WHEN {n} > 0 THEN {score} ELSE 0.0D END")
+    )
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    """Stopword-hit count per language (integer — exact parity)."""
-    toks = tokenize(text)
-    return {
-        lang: F.size(F.filter(toks, lambda t: t.isin(*words)))
+def lang_id(text: str) -> Column:
+    """Deterministic argmax over per-language stopword hits; ties resolve
+    in the fixed key order of LANG_STOPWORDS, unknown when every count is
+    0 (or the text is NULL).
+
+    A forward fold over the languages with a strict ``>``: a later
+    language replaces the incumbent only when strictly better, so earlier
+    languages win ties (matches the DuckDB oracle, whose CASE chain tests
+    languages in the same order with >=; es/fr share stopwords so ties
+    are realizable). The fold holds each language's count once, so the
+    expression grows linearly with the number of languages; an unrolled
+    ``when(...).otherwise(best)`` chain copies the incumbent score into
+    both branches and doubles with every language.
+    """
+    langs = ", ".join(
+        f"named_struct('lang', {_str(lang)}, 'hits', {_hits('toks_', words)})"
         for lang, words in LANG_STOPWORDS.items()
-    }
+    )
+    fold = (
+        f"aggregate(array({langs}), named_struct('lang', 'unknown', 'hits', 0), "
+        "(best_, l_) -> IF(l_.hits > best_.hits, l_, best_), best_ -> best_.lang)"
+    )
+    return F.expr(let("toks_", _tokens(_q(text)), fold))
 
 
-def lang_id(text: Column | str) -> Column:
-    """Deterministic argmax over language scores; ties resolve in the fixed
-    key order of LANG_STOPWORDS, unknown when all scores are 0."""
-    scores = lang_scores(text)
-    best_lang = F.lit("unknown")
-    best_score = F.lit(0)
-    # iterate in FORWARD key order with strict >: a later language replaces
-    # the incumbent only when strictly better, so earlier languages win ties
-    # (matches the DuckDB oracle, whose CASE chain tests languages in the
-    # same order with >=; es/fr share stopwords so ties are realizable)
-    for lang in scores:
-        cond = scores[lang] > best_score
-        best_lang = F.when(cond, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(cond, scores[lang]).otherwise(best_score)
-    return best_lang
-
-
-def doc_fingerprint(text: Column | str) -> Column:
+def doc_fingerprint(text: str) -> Column:
     """Order-sensitive rolling hash of the token sequence (see
     functions/hashing.py); identical documents → identical fingerprint,
     resilient to case/whitespace differences."""
     return word_fingerprint(tokenize(text))
 
 
-def char_ngrams_of_tokens(tokens: Column, n: int) -> Column:
-    """Word n-gram shingles: join each n consecutive tokens with a space.
+def char_ngrams_of_tokens(tokens: str, n: int) -> str:
+    """Word n-gram shingles, as SQL text over the token-array SQL
+    expression ``tokens``: join each n consecutive tokens with a space.
 
     ``transform(sequence(1, size-n+1), i -> concat_ws(' ', slice(toks, i, n)))``
     — empty when the document has fewer than n tokens. The short-doc case
@@ -125,24 +156,31 @@ def char_ngrams_of_tokens(tokens: Column, n: int) -> Column:
     ``slice`` — found by the randomized losslessness property test on a
     corpus with 2-token docs (tests/test_dedup_properties.py); the
     driver testdata never exercises docs shorter than n.
+
+    The token array is bound once (``let``): written out inside the
+    ``transform`` lambda, it would be re-tokenized for every shingle.
     """
-    idx = F.when(
-        F.size(tokens) >= n, F.sequence(F.lit(1), F.size(tokens) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tokens, i, n)))
+    starts = (
+        f"IF(size(gram_toks_) >= {n}, sequence(1, size(gram_toks_) - {n - 1}), "
+        "CAST(array() AS ARRAY<INT>))"
+    )
+    grams = f"transform({starts}, i_ -> concat_ws(' ', slice(gram_toks_, i_, {n})))"
+    return let("gram_toks_", tokens, grams)
 
 
-def shingle_hashes(text: Column | str, n: int = 3, space_bits: int = 30) -> Column:
+def shingle_hashes(text: str, n: int = 3, space_bits: int = 30) -> Column:
     """Distinct 30-bit hashes of word n-gram shingles — the MinHash input.
 
     30-bit reduction keeps downstream universal-hash arithmetic
     (a*h + b mod p) inside int64 without overflow in BOTH engines
     (Spark 4 runs ANSI mode: silent wraparound would instead throw).
+
+    A document has a shingle iff it has at least n tokens, so node tests
+    ask ``size(tokenize(text)) >= n`` instead of hashing every shingle.
     """
-    shingles = char_ngrams_of_tokens(tokenize(text), n)
-    return F.array_distinct(
-        F.transform(shingles, lambda s: hash64(s) % F.lit(1 << space_bits))
-    )
+    shingles = char_ngrams_of_tokens(_tokens(_q(text)), n)
+    hashed = f"{hash64_expr('sh_')} % {1 << space_bits}"
+    return F.expr(f"array_distinct(transform({shingles}, sh_ -> {hashed}))")
 
 
 #: GPT-2-style pretokenizer approximation, RE2-compatible (no lookahead —
@@ -182,7 +220,7 @@ def tfidf_top_terms(df, id_col: str, text_col: str, k: int = 3):
     ``ln`` can't flip the cross-engine order.
     """
     n_docs = df.count()
-    terms = df.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("term"))
+    terms = df.select(F.col(id_col), F.explode(tokenize(text_col)).alias("term"))
     tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log((1.0 + float(n_docs)) / (1.0 + F.col("df"))) + F.lit(1.0)
@@ -202,7 +240,7 @@ def tfidf_top_terms(df, id_col: str, text_col: str, k: int = 3):
 
 
 def chunk_tokens(
-    text: Column | str, chunk_size: int, stride: int
+    text: str, chunk_size: int, stride: int
 ) -> Column:
     """Overlapping token chunks: array<struct<chunk_id, n_tokens, chunk>>.
 
@@ -270,13 +308,13 @@ def chunk_hash_embeddings(
     """
     ch = df.select(
         F.col(id_col),
-        F.explode(chunk_tokens(F.col(text_col), chunk_size, stride)).alias("_c"),
+        F.explode(chunk_tokens(text_col, chunk_size, stride)).alias("_c"),
     ).select(
         (F.col(id_col).cast("long") * (1 << id_shift) + F.col("_c.chunk_id"))
         .alias("vec_id"),
         F.col(id_col).alias("doc_id"),
         F.col("_c.chunk_id").alias("chunk_id"),
-        tokenize(F.col("_c.chunk")).alias("_toks"),
+        F.expr(_tokens("_c.chunk")).alias("_toks"),
     )
     tok = ch.select("vec_id", F.explode("_toks").alias("_tk"))
     comp = (
@@ -311,7 +349,7 @@ def chunk_hash_embeddings(
     )
 
 
-def remove_stopwords(text: Column | str, stopwords: list[str] | None = None) -> Column:
+def remove_stopwords(text: str, stopwords: list[str] | None = None) -> Column:
     """struct<clean, n_kept, n_removed>: tokens minus the stopword list,
     rejoined with single spaces (curation normalization pass)."""
     stopwords = stopwords or LANG_STOPWORDS["en"]
@@ -386,7 +424,7 @@ def greedy_pack(
     """
     from pyspark.sql import Window
 
-    n_tok = token_count(F.col(text_col))
+    n_tok = token_count(text_col)
     w = (
         Window.partitionBy(group_col)
         .orderBy(id_col)
@@ -430,7 +468,7 @@ def boilerplate_fraction(
     """
     ids = df.select(F.col(id_col))
     sh = df.select(
-        F.col(id_col), F.explode(shingle_hashes(F.col(text_col), n=shingle_n)).alias("sh")
+        F.col(id_col), F.explode(shingle_hashes(text_col, n=shingle_n)).alias("sh")
     )
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     frequent = dfreq.filter(F.col("df") >= min_docs).select("sh")
@@ -521,7 +559,7 @@ def heavy_hitters_mg(
     return merged.orderBy(F.desc("est_count"), F.asc(col)).limit(k)
 
 
-def fim_transform(text: Column | str, doc_id: Column | str) -> Column:
+def fim_transform(text: str, doc_id: Column | str) -> Column:
     """Fill-in-the-middle (FIM) reordering — the code-model training
     transform (Bavarian et al. 2022): split the token sequence into
     (prefix, middle, suffix) and emit it PSM-reordered with sentinel
@@ -534,9 +572,8 @@ def fim_transform(text: Column | str, doc_id: Column | str) -> Column:
     Returns struct<psm, n_prefix, n_middle, n_suffix>. Scan-local
     expression: no shuffle, no Python.
     """
-    c = F.col(text) if isinstance(text, str) else text
     d = F.col(doc_id) if isinstance(doc_id, str) else doc_id
-    toks = tokenize(c)
+    toks = tokenize(text)
     n = F.size(toks)
     lo = (F.lit(2) + d % 3).cast("long")
     a = F.floor(n * lo / 10).cast("int")
@@ -580,7 +617,7 @@ def length_bucket_batches(
     """
     from pyspark.sql import Window
 
-    n = token_count(F.col(text_col))
+    n = token_count(text_col)
     bucketed = df.select(
         F.col(id_col),
         n.cast("long").alias("n_tokens"),
@@ -612,7 +649,7 @@ def bigram_lm_topk(
     """
     from pyspark.sql import Window
 
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(text_col)
     pairs = F.when(
         F.size("toks") >= 2,
         F.transform(
@@ -670,7 +707,7 @@ def bigram_logprob_score(
     V (one global scalar) joins via a constant key, never a nested loop.
     Docs with < 2 tokens score NULL (no bigrams), kept with n_bigrams=0.
     """
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(text_col)
     pairs = F.when(
         F.size("toks") >= 2,
         F.transform(
@@ -784,54 +821,42 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     compares in INTEGER arithmetic (5*max2 > tot2, 10*dup3 > 3*tot3), so
     no accumulation-order or float-threshold surface exists.
     """
-    toks = tokenize(F.col(text_col))
-
-    def tag(n: int):
-        # factory, not a default-arg closure: pyspark dispatches transform
-        # lambdas on ARITY, and `lambda g, n=n` is arity-2 — it would be
-        # called as (element, index) with the array index silently bound
-        # to n (caught by the sf0.01 oracle check)
-        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram"))
-
     # n=1 grams ARE the token array — tagging it directly skips the
     # per-element sequence+slice+concat_ws round trip on the explode's
     # hot path (review finding; grams are byte-identical either way)
-    branches = [F.transform(toks, tag(1))] + [
-        F.transform(char_ngrams_of_tokens(toks, n), tag(n)) for n in (2, 3)
-    ]
-    exploded = df.select(
-        F.col(id_col), F.explode(F.concat(*branches)).alias("g")
-    ).select(id_col, F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
-    counts = exploded.groupBy(id_col, "n", "gram").agg(
-        F.count(F.lit(1)).alias("cnt")
+    grams = ["toks_"] + [char_ngrams_of_tokens("toks_", n) for n in (2, 3)]
+    tagged = ", ".join(
+        f"transform({g}, g_ -> named_struct('n', {n}, 'gram', g_))"
+        for n, g in enumerate(grams, 1)
     )
+    tagged_grams = let("toks_", _tokens(_q(text_col)), f"concat({tagged})")
+    exploded = df.selectExpr(_q(id_col), f"inline({tagged_grams})")
+    counts = exploded.groupBy(id_col, "n", "gram").agg(F.expr("count(1) AS cnt"))
     per_doc = counts.groupBy(id_col).agg(
-        F.max(F.when(F.col("n") == 1, F.col("cnt"))).alias("max1"),
-        F.sum(F.when(F.col("n") == 1, F.col("cnt"))).alias("tot1"),
-        F.max(F.when(F.col("n") == 2, F.col("cnt"))).alias("max2"),
-        F.sum(F.when(F.col("n") == 2, F.col("cnt"))).alias("tot2"),
-        F.sum(
-            F.when((F.col("n") == 3) & (F.col("cnt") > 1), F.col("cnt"))
-        ).alias("dup3"),
-        F.sum(F.when(F.col("n") == 3, F.col("cnt"))).alias("tot3"),
+        *(
+            F.expr(e)
+            for e in (
+                "max(CASE WHEN n = 1 THEN cnt END) AS max1",
+                "sum(CASE WHEN n = 1 THEN cnt END) AS tot1",
+                "max(CASE WHEN n = 2 THEN cnt END) AS max2",
+                "sum(CASE WHEN n = 2 THEN cnt END) AS tot2",
+                "sum(CASE WHEN n = 3 AND cnt > 1 THEN cnt END) AS dup3",
+                "sum(CASE WHEN n = 3 THEN cnt END) AS tot3",
+            )
+        )
     )
-    dup3 = F.when(F.col("tot3").isNotNull(), F.coalesce(F.col("dup3"), F.lit(0)))
+    dup3 = "CASE WHEN tot3 IS NOT NULL THEN coalesce(dup3, 0) END"
     return (
         df.select(id_col)
         .join(per_doc, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("tot1"), F.lit(0)).cast("long").alias("n_words"),
-            (F.col("max1") / F.col("tot1")).alias("top_token_frac"),
-            (F.col("max2") / F.col("tot2")).alias("top_bigram_frac"),
-            (dup3 / F.col("tot3")).alias("dup_trigram_frac"),
-            F.when(
-                F.col("tot2").isNotNull() & F.col("tot3").isNotNull(),
-                (
-                    (F.lit(5) * F.col("max2") > F.col("tot2"))
-                    | (F.lit(10) * dup3 > F.lit(3) * F.col("tot3"))
-                ).cast("long"),
-            ).alias("repetitive"),
+        .selectExpr(
+            _q(id_col),
+            "CAST(coalesce(tot1, 0) AS BIGINT) AS n_words",
+            "max1 / tot1 AS top_token_frac",
+            "max2 / tot2 AS top_bigram_frac",
+            f"{dup3} / tot3 AS dup_trigram_frac",
+            "CASE WHEN tot2 IS NOT NULL AND tot3 IS NOT NULL THEN"
+            f" CAST(5 * max2 > tot2 OR 10 * {dup3} > 3 * tot3 AS BIGINT) END AS repetitive",
         )
     )
 
@@ -906,7 +931,7 @@ def dsir_selection(
         F.col(id_col),
         F.col(group_col),
         F.col(target_col).alias("_t"),
-        char_ngrams_of_tokens(tokenize(F.col(text_col)), 2).alias("_bgs"),
+        F.expr(char_ngrams_of_tokens(_tokens(_q(text_col)), 2)).alias("_bgs"),
     )
     exploded = docs.select(
         id_col, F.explode("_bgs").alias("_bg"), "_t"

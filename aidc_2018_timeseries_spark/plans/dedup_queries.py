@@ -25,7 +25,7 @@ from aidc_2018_timeseries_spark.operators.text import (
 from aidc_2018_timeseries_spark.operators.text import (
     repetition_ctes_sql as _repetition_ctes_sql,
 )
-from aidc_2018_timeseries_spark.operators.text import shingle_hashes, tokenize_sql
+from aidc_2018_timeseries_spark.operators.text import tokenize, tokenize_sql
 from aidc_2018_timeseries_spark.plans.catalog import register
 from aidc_2018_timeseries_spark.sources.tables import load_table
 
@@ -305,9 +305,7 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~3× and the whole curation chain ~5× (measured 9.2s of the face's
     # 37.6s at sf0.1 was re-evaluated scalar scoring). A real 100 TB
     # pipeline materializes its curated corpus at exactly this point.
-    pre = scored.where(
-        (F.col("quality") >= _Q_THRESHOLD) & (F.col("lang_pred") == "en")
-    )
+    pre = scored.where(f"quality >= {_Q_THRESHOLD}D AND lang_pred = 'en'")
     if not under:
         # scored has no barrier in this branch — materialize the gate
         # survivors once, as before (see the block comment above).
@@ -317,12 +315,10 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_words", "repetitive")
     kept = (
         pre.join(rep, "doc_id")
-        .where((F.col("n_words") >= 20) & (F.col("repetitive") == 0))
+        .where("n_words >= 20 AND repetitive = 0")
         .localCheckpoint(eager=False)
     )
-    nodes = kept.where(
-        F.size(shingle_hashes(F.col("text"), n=_SHINGLE_N)) > 0
-    ).select("doc_id")
+    nodes = kept.where(F.size(tokenize("text")) >= _SHINGLE_N).select("doc_id")
     # Near-dup clustering: the direct MinHash pairs -> connected
     # components path (minhash_components_collapsed's default). The CC
     # loop runs eagerly here, at face construction.
@@ -330,18 +326,17 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept, "doc_id", "text",
         num_hashes=_NUM_HASHES, num_bands=_NUM_BANDS, shingle_n=_SHINGLE_N,
     )
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
+    sizes = labels.groupBy("label").agg(F.expr("count(1) AS cluster_size"))
     canon = (
-        labels.where(F.col("node") == F.col("label"))
+        labels.where("node = label")
         .join(sizes, "label")
-        .select(F.col("node").alias("doc_id"), "cluster_size")
+        .selectExpr("node AS doc_id", "cluster_size")
     )
     with_quality = canon.join(kept.select("doc_id", "quality"), "doc_id").select(
         "doc_id", "quality", "cluster_size"
     )
-    singletons = (
-        kept.join(nodes, "doc_id", "left_anti")
-        .select("doc_id", "quality", F.lit(1).cast("long").alias("cluster_size"))
+    singletons = kept.join(nodes, "doc_id", "left_anti").selectExpr(
+        "doc_id", "quality", "CAST(1 AS BIGINT) AS cluster_size"
     )
     return with_quality.unionByName(singletons)
 

@@ -208,7 +208,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    terms = d.select("doc_id", F.explode(tx.tokenize(F.col("text"))).alias("term"))
+    terms = d.select("doc_id", F.explode(tx.tokenize("text")).alias("term"))
     return (
         terms.groupBy("term")
         .agg(
@@ -568,7 +568,7 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    terms = d.select(F.explode(tx.tokenize(F.col("text"))).alias("term"))
+    terms = d.select(F.explode(tx.tokenize("text")).alias("term"))
     return tx.heavy_hitters_mg(terms, "term", k=50, n_counters=200)
 
 
@@ -1086,7 +1086,7 @@ _MG_EVAL_COUNTERS = 200
 def text_heavy_hitters_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _MG_EVAL_COUNTERS
     d = load_table(spark, sf_dir, "documents")
-    terms = d.select(F.explode(tx.tokenize(F.col("text"))).alias("term"))
+    terms = d.select(F.explode(tx.tokenize("text")).alias("term"))
     exact = terms.groupBy("term").agg(F.count(F.lit(1)).alias("f"))
     tot = exact.agg(F.sum("f").alias("n_tokens"))
     mg = tx.heavy_hitters_mg(terms, "term", k=None, n_counters=c)

@@ -4,7 +4,6 @@ turbofan / music / forecasting pipelines, against NumPy-oracle semantics.
 
 from __future__ import annotations
 
-import gc
 import math
 import re
 
@@ -102,28 +101,6 @@ def fleet_parquet(spark, cmapss_file, tmp_path_factory):
     return path
 
 
-def _py4j_commands(spark, build) -> int:
-    """py4j commands ``build()`` sends, object releases (``m``/``d``)
-    left out; gc is off so no release of an unrelated object lands in
-    the count."""
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    sent = []
-
-    def counting(command, *args, **kwargs):
-        sent.append(command)
-        return send(command, *args, **kwargs)
-
-    gc.disable()
-    client.send_command = counting
-    try:
-        build()
-    finally:
-        client.send_command = send
-        gc.enable()
-    return sum(1 for c in sent if not c.startswith("m\nd\n"))
-
-
 def _plan_nodes(df) -> list[str]:
     """Node names of the physical plan before adaptive execution
     re-plans it (AdaptiveSparkPlan prints its initial plan until run)."""
@@ -131,13 +108,13 @@ def _plan_nodes(df) -> list[str]:
     return [re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line).split(" ")[0] for line in text.splitlines()]
 
 
-def test_turbofan_train_windows_build_py4j_budget(spark, fleet_parquet):
+def test_turbofan_train_windows_build_py4j_budget(spark, fleet_parquet, py4j_commands):
     """Building the 24-feature train pipeline is a few SQL-expression
     projections, not one Column chain per feature: ≤ 300 py4j commands."""
     df = spark.read.parquet(fleet_parquet)
     df.schema  # cache the input schema outside the count
     build = lambda: turbofan_train_windows(df, FEATURE_COLS, seq_len=10, skip=3)  # noqa: E731
-    assert _py4j_commands(spark, build) <= 300
+    assert py4j_commands(build) <= 300
 
 
 def test_turbofan_train_windows_plan_shape(spark, fleet_parquet):

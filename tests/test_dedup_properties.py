@@ -209,7 +209,7 @@ def test_collapsed_minhash_components_equal_direct(spark):
         )
         pairs = minhash_candidate_pairs(df, "doc_id", "text")
         nodes = df.select("doc_id").where(
-            F.size(shingle_hashes(F.col("text"), n=3)) > 0
+            F.size(shingle_hashes("text", n=3)) > 0
         )
         direct = {
             r["node"]: r["label"]

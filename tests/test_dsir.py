@@ -13,7 +13,6 @@ from __future__ import annotations
 import hashlib
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators.text import dsir_selection

@@ -4,6 +4,8 @@ union-find ground truth, on shapes that stress the loop (long chains need
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 
 from aidc_2018_timeseries_spark.operators.graph import connected_components
@@ -64,6 +66,15 @@ def test_unconverged_raises(spark):
 # --- adaptive pointer-jump escalation (round 10, VERDICT r9 ask 2) ---
 
 
+#: rounds to the fixpoint per (shape, escalate_after): the convergence
+#: test (an unchanged label sum) must stop each schedule where it always has
+ROUNDS = {
+    ("chain", 0): 4, ("chain", 2): 5, ("chain", 6): 8,
+    ("cliques", 0): 2, ("cliques", 2): 2, ("cliques", 6): 2,
+    ("reversed_dups", 0): 2, ("reversed_dups", 2): 3, ("reversed_dups", 6): 3,
+}
+
+
 @pytest.mark.parametrize("shape", sorted(GRAPHS))
 @pytest.mark.parametrize("escalate_after", [0, 2, 6])
 def test_escalation_thresholds_same_labels(spark, shape, escalate_after):
@@ -72,13 +83,15 @@ def test_escalation_thresholds_same_labels(spark, shape, escalate_after):
     n, edges = GRAPHS[shape]
     vertices = spark.createDataFrame([(i,) for i in range(n)], "node long")
     edf = spark.createDataFrame(edges, "src long, dst long")
+    stats = {}
     got = {
         r["node"]: r["label"]
         for r in connected_components(
-            vertices, edf, escalate_after=escalate_after
+            vertices, edf, escalate_after=escalate_after, stats=stats
         ).collect()
     }
     assert got == _union_find(n, edges)
+    assert stats["rounds"] == ROUNDS[shape, escalate_after]
 
 
 def test_chain_escalation_cuts_rounds(spark):
@@ -123,3 +136,52 @@ def test_clique_never_escalates(spark):
     ).collect()
     connected_components(vertices, edf, stats=esc_stats).collect()
     assert esc_stats["rounds"] == plain_stats["rounds"] <= 6
+
+
+@pytest.mark.parametrize(
+    "n, edges, escalate_after",
+    [
+        (10, GRAPHS["cliques"][1], 6),
+        (40, [(i, i + 1) for i in range(39)], 5),
+    ],
+    ids=["cliques", "chain40"],
+)
+def test_convergence_runs_no_job_of_its_own(spark, monkeypatch, n, edges, escalate_after):
+    """Every job of the loop runs inside a round's eager checkpoint or the
+    collect with which the loop itself fills an escalated round's cache:
+    the label sum is observed on those jobs, not aggregated by a job of
+    its own (which would run through first/take or count)."""
+    sc = spark.sparkContext
+    vertices = spark.createDataFrame([(i,) for i in range(n)], "node long")
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    inside, outside = f"cc-materialize-{n}", f"cc-rest-{n}"
+    loop = connected_components.__code__
+
+    def in_group(method, only_from_loop):
+        def run(self, *args, **kwargs):
+            if only_from_loop and sys._getframe(1).f_code is not loop:
+                return method(self, *args, **kwargs)
+            sc.setJobGroup(inside, "materialization")
+            try:
+                return method(self, *args, **kwargs)
+            finally:
+                sc.setJobGroup(outside, "anything else")
+
+        return run
+
+    frame = type(vertices)
+    monkeypatch.setattr(frame, "localCheckpoint", in_group(frame.localCheckpoint, False))
+    monkeypatch.setattr(frame, "collect", in_group(frame.collect, True))
+    sc.setJobGroup(outside, "anything else")
+    try:
+        stats = {}
+        connected_components(
+            vertices, edf, max_iter=60, escalate_after=escalate_after, stats=stats
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    assert stats["rounds"] > 1
+    assert tracker.getJobIdsForGroup(inside)
+    assert tracker.getJobIdsForGroup(outside) == []

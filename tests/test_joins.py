@@ -11,7 +11,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators.joins import (
     asof_join,

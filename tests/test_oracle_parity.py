@@ -170,7 +170,7 @@ def test_heavy_hitters_mg_bound_vs_exact(spark):
     from tests.conftest import SF_DIR
 
     d = load_table(spark, SF_DIR, "documents")
-    terms = d.select(F.explode(tokenize(F.col("text"))).alias("term"))
+    terms = d.select(F.explode(tokenize("text")).alias("term"))
     n = terms.count()
     c = 60  # small counter budget so the bound actually bites on this corpus
     est = {

@@ -5,18 +5,12 @@ contracts and the deployment-vs-expression parity."""
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import functions as F
-
 from aidc_2018_timeseries_spark.operators import similarity as sim
 from aidc_2018_timeseries_spark.operators.text import chunk_hash_embeddings
 from aidc_2018_timeseries_spark.plans.similarity_queries import (
-    _RET_CS,
     _RET_CSTRIDE,
     _RET_K,
     _RET_PROBE,
-    _RET_ST,
     _retrieval_corpus,
     _retrieval_queries,
     retrieval_index_e2e,

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from aidc_2018_timeseries_spark.operators.text import greedy_pack, token_count
+from aidc_2018_timeseries_spark.operators.text import token_count
 from aidc_2018_timeseries_spark.plans.pipeline_queries import (
     llm_semantic_curation_packed,
     llm_semantic_curation_pipeline,
@@ -36,7 +36,7 @@ def test_pack_bounds_per_shard(spark, sf_dir):
     docs = (
         load_table(spark, sf_dir, "documents")
         .join(surv, "doc_id")
-        .select("source", "doc_id", token_count(F.col("text")).alias("n_tok"))
+        .select("source", "doc_id", token_count("text").alias("n_tok"))
         .collect()
     )
     max_doc = {}
@@ -79,7 +79,7 @@ def test_pack_tokens_conserved_vs_parent(spark, sf_dir):
         for r in load_table(spark, sf_dir, "documents")
         .join(surv, "doc_id")
         .groupBy("source")
-        .agg(F.sum(token_count(F.col("text"))).alias("tot"))
+        .agg(F.sum(token_count("text")).alias("tot"))
         .collect()
     }
     assert got == want
@@ -98,7 +98,7 @@ def test_pack_assignment_matches_python_replica(spark, sf_dir):
             (r["source"], r["doc_id"], r["n_tok"])
             for r in load_table(spark, sf_dir, "documents")
             .join(surv, "doc_id")
-            .select("source", "doc_id", token_count(F.col("text")).alias("n_tok"))
+            .select("source", "doc_id", token_count("text").alias("n_tok"))
             .collect()
         )
     )
