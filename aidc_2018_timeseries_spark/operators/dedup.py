@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.functions.hashing import hash64, hash64_expr
 from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
-from aidc_2018_timeseries_spark.operators.text import shingle_hashes, tokenize
+from aidc_2018_timeseries_spark.operators._sql import _q, let
+from aidc_2018_timeseries_spark.operators.text import _tokens, shingle_hashes, tokenize
 
 #: modulus for the universal hash family (prime > 2^30 shingle space)
 MINHASH_PRIME = 2147483647  # 2^31 - 1
@@ -278,23 +279,17 @@ def simhash32(text: str) -> Column:
     Per token: 32-bit hash; bit j votes +1/−1; signature bit j = majority.
     Bit extraction uses floor(h / 2^j) % 2 — exact in double for h < 2^32,
     and identical in DuckDB (no engine-specific bit ops).
+
+    One SQL expression; the token-hash array is bound once (``let``), so
+    the 32 votes read it instead of each re-hashing every token.
     """
-    toks = tokenize(text)
-    th = F.transform(toks, lambda t: hash64(t) % F.lit(1 << 32))
-
-    def voter(j: int):
-        return lambda acc, h: acc + F.when(
-            (F.floor(h / F.lit(float(1 << j))) % 2) == 1, 1
-        ).otherwise(-1)
-
-    bits = []
-    for j in range(32):
-        vote = F.aggregate(th, F.lit(0), voter(j))
-        bits.append(F.when(vote > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
+    hashes = f"transform({_tokens(_q(text))}, t_ -> {hash64_expr('t_')} % {1 << 32})"
+    bits = " + ".join(
+        f"IF(aggregate(sh_, 0, (acc_, h_) -> acc_ + "
+        f"IF(floor(h_ / {float(1 << j)!r}D) % 2 = 1, 1, -1)) > 0, {1 << j}, 0)"
+        for j in range(32)
+    )
+    return F.expr(f"CAST({let('sh_', hashes, bits)} AS BIGINT)")
 
 
 def simhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators._sql import _q
+from aidc_2018_timeseries_spark.operators.observe import _observed
 
 #: the convergence metric, summed as decimal(38,0): an int64 sum would
 #: overflow under ANSI mode at billions of nodes
@@ -62,19 +63,9 @@ _LABEL_SUM = "sum(CAST(label AS DECIMAL(38,0))) AS s"
 
 
 def _observing_label_sum(df: DataFrame) -> DataFrame:
-    """``df`` with its label sum observed under a plain name. An
-    ``Observation`` object would start the session's ObservationManager,
-    which Spark 4.1 does not mark transient: once started, every task
-    closure that captures the session (an MLlib model summary does) fails
-    with NotSerializableException."""
+    """``df`` with its label sum observed under a plain name (no
+    ``Observation`` object: see ``operators/observe.py``)."""
     return df.observe("label_sum", F.expr(_LABEL_SUM))
-
-
-def _observed_label_sum(df: DataFrame):
-    """The label sum observed while the last action ran ``df`` (a
-    DataFrame from :func:`_observing_label_sum`, or one built on it), read
-    from that action's own query execution."""
-    return df._jdf.queryExecution().observedMetrics().get("label_sum").get().get(0)
 
 
 def connected_components(
@@ -128,7 +119,7 @@ def connected_components(
         )
     )
     labels = seed.localCheckpoint(eager=True)
-    prev_sum = _observed_label_sum(seed)
+    prev_sum = _observed(seed, "label_sum")["s"]
     pinned = None
     try:
         for i in range(max_iter):
@@ -141,7 +132,7 @@ def connected_components(
             if i < escalate_after:
                 merged = _observing_label_sum(merged)
                 labels = merged.localCheckpoint(eager=True)
-                cur_sum = _observed_label_sum(merged)
+                cur_sum = _observed(merged, "label_sum")["s"]
             else:
                 labels = merged.localCheckpoint(eager=True)
                 # Pointer-jump (shortcutting): label ← min(label,
@@ -178,7 +169,7 @@ def connected_components(
                 )
                 counted = _observing_label_sum(jumped).groupBy().count()
                 counted.collect()
-                cur_sum = _observed_label_sum(counted)
+                cur_sum = _observed(counted, "label_sum")["s"]
                 if pinned is not None:
                     pinned.unpersist()
                 pinned = labels = jumped

@@ -10,27 +10,49 @@ nulls; observation metrics ride the scan the pipeline already pays for.
 The reference's closest relative is its inline assert guards
 (``datasets/turbofan.py:140,159-161`` — NaN / negativity checks executed
 eagerly on materialized arrays); here the guards are declarative and
-collected from the executed plan via ``Observation``.
+collected from the executed plan.
+
+Metrics are observed under a plain name and read from the query
+execution of the action that ran them. A ``pyspark.sql.Observation``
+would start the session's ObservationManager, which Spark 4.1 does not
+mark transient: once started, every task closure that captures the
+session (an MLlib model summary does) fails with
+NotSerializableException.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from collections.abc import Callable
+from functools import partial
+from typing import Any
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _observed(df: DataFrame, name: str) -> dict[str, Any]:
+    """The metrics observed under ``name`` while the last action ran
+    ``df`` (the observed frame, or one built on it), by metric name.
+    ``df`` must be the frame the action was called on: ``count()`` and
+    ``first()`` run a derived plan, so collect the frame instead (e.g.
+    ``df.groupBy().count()``)."""
+    row = df._jdf.queryExecution().observedMetrics().get(name).get()
+    return {f: row.get(i) for i, f in enumerate(row.schema().fieldNames())}
 
 
 def observe_quality(
     df: DataFrame, value_col: str, name: str = "quality"
-) -> tuple[DataFrame, Observation]:
+) -> tuple[DataFrame, Callable[[DataFrame], dict[str, Any]]]:
     """Attach standard quality metrics for ``value_col``; returns the
-    instrumented frame and the Observation to read after an action.
+    instrumented frame and a reader: ``read(ran)`` gives the metrics
+    observed while the last action ran the frame ``ran`` (see
+    :func:`_observed`).
 
     Metrics: n_rows, n_null, n_nan, n_negative, min/max (of non-null).
     """
-    obs = Observation(name)
     v = F.col(value_col)
     instrumented = df.observe(
-        obs,
+        name,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(v.isNull(), 1).otherwise(0)).alias("n_null"),
         F.sum(F.when(F.isnan(v), 1).otherwise(0)).alias("n_nan"),
@@ -38,4 +60,4 @@ def observe_quality(
         F.min(v).alias("v_min"),
         F.max(v).alias("v_max"),
     )
-    return instrumented, obs
+    return instrumented, partial(_observed, name=name)

@@ -98,10 +98,6 @@ def spread_for_compute(df: DataFrame, col: str) -> DataFrame:
         return df
     if size < n * _SMALL_SPREAD_FLOOR:
         return df.repartition(n, F.col(col))
-    try:
-        parts = df.rdd.getNumPartitions()
-    except Exception:
-        parts = None
-    if parts is not None and parts >= n:
+    if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, F.col(col))

@@ -252,23 +252,19 @@ def chunk_tokens(
     (standard keep-short-docs behaviour).
 
     Pure scan-local expression: chunking fans out rows proportionally to
-    output, no shuffle of its own.
+    output, no shuffle of its own. The token array is bound once
+    (``let``), so the chunks slice it instead of re-tokenizing the
+    document per chunk.
     """
-    toks = tokenize(text)
-    n = F.size(toks)
-    n_chunks = F.when(
-        n < chunk_size, F.lit(1)
-    ).otherwise(F.floor((n - chunk_size) / stride).cast("int") + 1)
-    return F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda c: F.struct(
-            c.cast("long").alias("chunk_id"),
-            F.least(F.lit(chunk_size), n - c * stride).alias("n_tokens"),
-            F.array_join(
-                F.slice(toks, c * F.lit(stride) + 1, chunk_size), " "
-            ).alias("chunk"),
-        ),
+    n = "size(ck_toks_)"
+    n_chunks = f"IF({n} < {chunk_size}, 1, CAST(floor(({n} - {chunk_size}) / {stride}) AS INT) + 1)"
+    chunks = (
+        f"transform(sequence(0, {n_chunks} - 1), c_ -> named_struct("
+        f"'chunk_id', CAST(c_ AS BIGINT), "
+        f"'n_tokens', least({chunk_size}, {n} - c_ * {stride}), "
+        f"'chunk', array_join(slice(ck_toks_, c_ * {stride} + 1, {chunk_size}), ' ')))"
     )
+    return F.expr(let("ck_toks_", _tokens(_q(text)), chunks))
 
 
 def chunk_hash_embeddings(

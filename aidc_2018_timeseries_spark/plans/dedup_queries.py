@@ -25,7 +25,7 @@ from aidc_2018_timeseries_spark.operators.text import (
 from aidc_2018_timeseries_spark.operators.text import (
     repetition_ctes_sql as _repetition_ctes_sql,
 )
-from aidc_2018_timeseries_spark.operators.text import tokenize, tokenize_sql
+from aidc_2018_timeseries_spark.operators.text import tokenize_sql
 from aidc_2018_timeseries_spark.plans.catalog import register
 from aidc_2018_timeseries_spark.sources.tables import load_table
 
@@ -178,7 +178,9 @@ def _corpus_pipeline_oracle() -> tuple[str, str]:
     scoring, language ID, MinHash candidate pairs over the SURVIVORS,
     transitive closure, canonical (min-id) representative per cluster with
     its cluster size; no-shingle survivors pass through as singletons.
-    Split so llm_corpus_pipeline_packed can extend the same chain."""
+    That branch is always empty (every kept doc has >= 20 tokens); the
+    Spark face has none, and parity proves it empty. Split so
+    llm_corpus_pipeline_packed can extend the same chain."""
     from aidc_2018_timeseries_spark.operators.text import LANG_STOPWORDS
 
     def in_list(words: list[str]) -> str:
@@ -259,36 +261,12 @@ def _corpus_pipeline_sql() -> str:
 def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.operators import text as tx
 
-    # Conditional spread (round 8): the face-level curation chain
-    # (quality/lang scoring, the gram explode) is compute-bound per row
-    # and, unlike the leaf dedup operators, had no spread — on a
-    # single-file corpus the whole pre-shuffle stage ran as ONE task
-    # (measured: the r7 dup-10x decade's 125-145s was ~85% this layout
-    # artifact, 20.0s once spread — SCALING.md round-8 correction). At
-    # 100 TB the input has thousands of splits and this is a no-op.
-    raw = load_table(spark, sf_dir, "documents")
-    under = (
-        raw.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    )
-    d = spread_for_compute(raw, "doc_id") if under else raw
-    scored = d.select(
+    scored = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "text",
         F.round(tx.quality_score("text"), 6).alias("quality"),
         tx.lang_id("text").alias("lang_pred"),
     )
-    if under:
-        # Catalyst pushes the quality/lang PREDICATE below the spread
-        # exchange into the (single-task) scan — the filter-pushdown
-        # sibling of the layout artifact above, found on
-        # dedup_keep_best_quality this round. A lazy checkpoint of the
-        # post-spread scored projection puts a barrier under the filter,
-        # so the scoring runs distributed and `pre` below needs no
-        # checkpoint of its own (its consumers re-run only the cheap
-        # filter over this materialization). On a well-split corpus the
-        # pushdown is the RIGHT plan — scoring runs inside a parallel
-        # scan — so the barrier is gated exactly like the spread.
-        scored = scored.localCheckpoint(eager=False)
     # Gopher-complete curation gate (round 6): min-length (>= 20 tokens,
     # which also makes the repetition verdict well-defined and
     # non-trivial) + the repetition filter, composed with the quality
@@ -297,19 +275,19 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram explode is the dominant cost and the conjunctive filter makes
     # the result identical either way (review finding; Catalyst cannot
     # push the scored-side predicates beneath the rep aggregation).
+    # Catalyst pushes the gate predicate into the scan, so the scoring
+    # runs once per input split: a corpus of many splits scores in
+    # parallel; a single-file corpus scores in one task.
     # Materialize the gate survivors ONCE (localCheckpoint — the CC
     # loop's own precedent): `pre` sits on both sides of the repetition
-    # join and `kept` feeds four consumers (nodes, pairs, the quality
-    # join-back, the singleton anti-join) plus the CC re-evaluation, so
-    # without materialization the quality/lang expression stage re-runs
-    # ~3× and the whole curation chain ~5× (measured 9.2s of the face's
+    # join and `kept` feeds the MinHash pairs, the CC vertices and the
+    # quality join-back, so without materialization the quality/lang
+    # expression stage re-runs per consumer (measured 9.2s of the face's
     # 37.6s at sf0.1 was re-evaluated scalar scoring). A real 100 TB
     # pipeline materializes its curated corpus at exactly this point.
-    pre = scored.where(f"quality >= {_Q_THRESHOLD}D AND lang_pred = 'en'")
-    if not under:
-        # scored has no barrier in this branch — materialize the gate
-        # survivors once, as before (see the block comment above).
-        pre = pre.localCheckpoint(eager=False)
+    pre = scored.where(
+        f"quality >= {_Q_THRESHOLD}D AND lang_pred = 'en'"
+    ).localCheckpoint(eager=False)
     rep = tx.repetition_signals(
         pre.select("doc_id", "text"), "doc_id", "text"
     ).select("doc_id", "n_words", "repetitive")
@@ -318,10 +296,11 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("n_words >= 20 AND repetitive = 0")
         .localCheckpoint(eager=False)
     )
-    nodes = kept.where(F.size(tokenize("text")) >= _SHINGLE_N).select("doc_id")
     # Near-dup clustering: the direct MinHash pairs -> connected
     # components path (minhash_components_collapsed's default). The CC
-    # loop runs eagerly here, at face construction.
+    # loop runs eagerly here, at face construction. Every kept doc is a
+    # CC vertex: n_words counts the tokens the vertex test counts, and
+    # n_words >= 20 >= _SHINGLE_N, so no kept doc is left out of `labels`.
     labels = dd.minhash_components_collapsed(
         kept, "doc_id", "text",
         num_hashes=_NUM_HASHES, num_bands=_NUM_BANDS, shingle_n=_SHINGLE_N,
@@ -332,13 +311,9 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sizes, "label")
         .selectExpr("node AS doc_id", "cluster_size")
     )
-    with_quality = canon.join(kept.select("doc_id", "quality"), "doc_id").select(
+    return canon.join(kept.select("doc_id", "quality"), "doc_id").select(
         "doc_id", "quality", "cluster_size"
     )
-    singletons = kept.join(nodes, "doc_id", "left_anti").selectExpr(
-        "doc_id", "quality", "CAST(1 AS BIGINT) AS cluster_size"
-    )
-    return with_quality.unionByName(singletons)
 
 
 # --- embedding near-dup pairs, LSH-bucketed (the 100 TB face) ---

@@ -42,6 +42,27 @@ def test_logistic_alarm_baseline_beats_chance(spark):
     assert auc > 0.7, (auc, pos_rate)
 
 
+def test_logistic_baseline_runs_after_observe_quality(spark):
+    """observe_quality observes under a plain name: after its action, a
+    task closure that captures the session (the logistic model's
+    transform) still serializes. A ``pyspark.sql.Observation`` would have
+    started Spark 4.1's non-transient ObservationManager and failed the
+    transform with NotSerializableException."""
+    from aidc_2018_timeseries_spark.ml.baselines import (
+        train_rul_alarm_logistic_baseline,
+    )
+    from aidc_2018_timeseries_spark.operators.observe import observe_quality
+
+    ev = load_table(spark, SF_DIR, "events")
+    instrumented, read = observe_quality(ev.select("value"), "value")
+    counted = instrumented.groupBy().count()
+    n_rows = counted.collect()[0][0]
+    assert read(counted)["n_rows"] == n_rows > 0
+    feats = rul_feature_frame(ev, "user_id", ["ts", "event_id"], "value", seq_len=20, cap=60)
+    _, auc, _ = train_rul_alarm_logistic_baseline(feats, rul_threshold=30.0)
+    assert auc > 0.7, auc
+
+
 def test_training_curve_descends_to_closed_form_minimum(spark):
     """The GD loss series must strictly decrease and approach the exact
     least-squares minimum (computed independently with NumPy from the raw

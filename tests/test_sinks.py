@@ -196,10 +196,11 @@ def test_observe_quality_rides_the_main_action(spark):
     from tests.conftest import SF_DIR
 
     ev = load_table(spark, SF_DIR, "events").select("user_id", "value")
-    instrumented, obs = observe_quality(ev, "value")
+    instrumented, read = observe_quality(ev, "value")
     # the pipeline's own action — metrics piggyback on this execution
-    n_out = instrumented.filter(F.col("value") > 50).count()
-    m = obs.get
+    counted = instrumented.filter(F.col("value") > 50).groupBy().count()
+    n_out = counted.collect()[0][0]
+    m = read(counted)
     assert m["n_rows"] == ev.count()
     assert m["n_null"] == ev.filter(F.col("value").isNull()).count()
     assert m["n_nan"] == 0

@@ -1,12 +1,14 @@
 """The corpus-curation text rules as single SQL expressions: `lang_id`
 against a pure-Python forward scan, the size of its expression tree, the
-token-count node test that replaces hashing every shingle, and the py4j
-cost of building the `llm_corpus_pipeline` face."""
+token-count node test that replaces hashing every shingle, the py4j
+cost of building the `llm_corpus_pipeline` face, and that face's one
+plan for every corpus layout."""
 
 from __future__ import annotations
 
 import re
 
+import pyarrow.parquet as pq
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -122,3 +124,28 @@ def test_corpus_pipeline_py4j_budget(spark, sf_dir, py4j_commands):
     face = CATALOG["llm_corpus_pipeline"].spark_fn
     face(spark, sf_dir).collect()  # cache the input schema outside the count
     assert py4j_commands(lambda: face(spark, sf_dir).collect()) <= 2000
+
+
+def test_corpus_pipeline_is_one_plan_for_every_layout(spark, sf_dir, tmp_path):
+    """The same documents written as one file and as four files give equal
+    llm_corpus_pipeline rows, and neither plan holds a Union or an
+    anti-join: every kept document is a connected-components vertex, so
+    the face has no singleton branch."""
+    load_all()
+    face = CATALOG["llm_corpus_pipeline"].spark_fn
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    one, four = tmp_path / "one", tmp_path / "four"
+    one.mkdir()
+    pq.write_table(docs, one / "documents.parquet")
+    (four / "documents.parquet").mkdir(parents=True)
+    step = -(-docs.num_rows // 4)
+    for i in range(4):
+        pq.write_table(docs.slice(i * step, step), four / "documents.parquet" / f"part-{i}.parquet")
+    got = {}
+    for layout in (one, four):
+        df = face(spark, str(layout))
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Union" not in plan and "LeftAnti" not in plan, plan
+        got[layout] = sorted(map(tuple, df.collect()))
+    assert got[one] == got[four]
+    assert any(size > 1 for _, _, size in got[one])  # near-dup clusters, not only singletons
