@@ -28,23 +28,3 @@ def dot(a: Column | str, b: Column | str) -> Column:
 def l2_norm(a: Column | str) -> Column:
     sq = F.transform(_c(a), lambda x: x.cast("double") * x.cast("double"))
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """NULL when either vector has zero norm — cosine is undefined there,
-    and the unguarded division throws DIVIDE_BY_ZERO under ANSI mode the
-    moment a corpus contains an all-zero embedding (a real occurrence:
-    padding rows, failed encoders). NULL never passes a ``sim >= t``
-    filter, so zero vectors simply never match — the behavior every
-    caller wants. Found by the zero-vector edge battery.
-
-    The guard tests each norm INDIVIDUALLY, not their product: for
-    subnormal-magnitude vectors (components ≲ 1e-154) two positive norms
-    can multiply to exactly 0.0, and the Arrow kernels in
-    operators/similarity.py (assign_centroids et al.) mask on per-vector
-    norm > 0 — a product guard would make these folds and the kernels
-    disagree on exactly those vectors (ADVICE r5)."""
-    return F.when(
-        (l2_norm(a) > 0) & (l2_norm(b) > 0),
-        dot(a, b) / (l2_norm(a) * l2_norm(b)),
-    )

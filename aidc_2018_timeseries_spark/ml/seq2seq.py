@@ -111,10 +111,10 @@ def decode(states, n_steps: int, weights: Seq2SeqWeights, first_input: np.ndarra
     return np.array(out)
 
 
-def reconstruct(x: np.ndarray, weights: Seq2SeqWeights, reverse_target: bool = True) -> np.ndarray:
+def reconstruct(x: np.ndarray, weights: Seq2SeqWeights) -> np.ndarray:
     """Autoencoder forward (reference ``turbofan_autoencoder.py``): encode
     the window, decode the same length starting from a zero input (W10),
-    optionally against the reversed sequence (W11)."""
+    against the reversed sequence (W11). The forward-order decode is
+    ``reconstruct(x, weights)[::-1]``."""
     states = encode(x, weights)
-    y = decode(states, x.shape[0], weights, np.zeros(x.shape[1]))
-    return y[::-1] if reverse_target else y
+    return decode(states, x.shape[0], weights, np.zeros(x.shape[1]))[::-1]

@@ -114,15 +114,12 @@ def minhash_candidate_pairs(
         cols = [f"CAST(s{band * rows_per_band + j} AS STRING)" for j in range(rows_per_band)]
         band_hash = hash64_expr(f"concat_ws(',', {', '.join(cols)})")
         band_structs.append(f"named_struct('band_id', {band}, 'band_hash', {band_hash})")
-    banded = (
-        sigs.selectExpr("doc", f"inline(array({', '.join(band_structs)}))")
-        # Materialize once: the self-join below would otherwise run the
-        # whole shingle-explode + minhash aggregation TWICE (Spark never
-        # reuses a subplan across self-join sides — the graph.py
-        # oriented-edges / similarity.py signature pattern). The banded
-        # relation is narrow and bounded: num_bands rows per doc.
-        .localCheckpoint(eager=True)
-    )
+    # Both self-join sides compute the signature aggregate; nothing is
+    # materialized. On the corpora measured so far AQE broadcasts the
+    # banded side (num_bands rows per doc) and reuses the input shuffle,
+    # and recomputing the small aggregate costs less than the 3 jobs a
+    # checkpoint adds to every request.
+    banded = sigs.selectExpr("doc", f"inline(array({', '.join(band_structs)}))")
     return (
         banded.alias("l")
         .join(

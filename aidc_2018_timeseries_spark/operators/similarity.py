@@ -523,8 +523,8 @@ def embedding_lsh_dup_pairs(
     # folds ≈ 100µs/pair, 417s at 10.9M true pairs). Norms computed once
     # per corpus vector ride the same marshalling joins; the fold over
     # the same array yields the same double, so the guarded dot/(na*nb)
-    # is bit-identical to cosine_similarity and the oracle contract
-    # holds.
+    # is bit-identical to dot(a, b) / (l2_norm(a) * l2_norm(b)) per pair
+    # and the oracle contract holds.
     va = vectors.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("_va"),
@@ -977,8 +977,8 @@ def semdedup_verdicts(
        LOWEST similarity to its cluster centroid (the least-redundant
        representative); ties break on min id.
 
-    Zero-norm vectors have no defined cosine (``cosine_similarity`` is
-    NULL there) and are excluded from the output — the caller's corpus
+    Zero-norm vectors have no defined cosine (their similarity is NULL)
+    and are excluded from the output — the caller's corpus
     contract, mirrored by the oracle's ``sim IS NOT NULL`` filter.
 
     Scale shape: assignment is one (batch × C) normalized GEMM per Arrow

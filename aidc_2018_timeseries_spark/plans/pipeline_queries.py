@@ -156,13 +156,16 @@ def _w14_mean_oracle(seq_len: int = 10, n_steps: int = 5) -> str:
     "w14_autoregressive_generation",
     _w14_mean_oracle(),
     doc="W14 autoregressive generation: seed window → predict → slide → "
-    "feed back, per series via applyInPandas (parallel across series). "
+    "feed back; each series' tail is gathered into one array, then one "
+    "mapInArrow generates every series of an Arrow batch in lockstep "
+    "(one predictor call per step per batch). "
     "ORACLE-CHECKED since round 7 (previously rows-only 'sequential per "
     "series'): with the default trailing-mean predictor the loop unrolls "
     "into 5 fixed SQL rounds (see _w14_mean_oracle) — the identity-"
     "predictor fixed point and the TCN closed form were rounds 4/7's "
-    "steps; this closes the LAST W14 variant. Missing actuals emit NaN "
-    "on both sides; output rounds at 6 dp, feedback stays unrounded",
+    "steps; this closes the LAST W14 variant. A missing actual is null "
+    "here and NaN in the oracle; every sf0.01 series has >= 15 rows, so "
+    "none occurs. Output rounds at 6 dp, feedback stays unrounded",
 )
 def w14_autoregressive_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.ml.autoregressive import autoregressive_generate
@@ -439,7 +442,7 @@ def w14_identity_autoregressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = min_length_filter(ev, "user_id", min_len=15)
     out = autoregressive_generate(
         ev, "user_id", ["ts", "event_id"], "value",
-        seq_len=10, n_steps=5, predictor=lambda w: float(w[-1]),
+        seq_len=10, n_steps=5, predictor=lambda w: w[:, -1],
     )
     return out.select(
         "user_id", "step",
@@ -537,7 +540,7 @@ def _w14_tcn_weights():
 
 
 def _w14_tcn_step_sql(a: str, b: str, c: str) -> str:
-    """One tcn_forward(window[-3:]) as a DuckDB expression with the
+    """One step's TCN forward over window[-3:] as a DuckDB expression with the
     weight-NORMALIZED constants inlined (one Python source of truth:
     _w14_tcn_weights + ml.tcn.weight_normalized). Float grouping mirrors
     the NumPy accumulation exactly: conv taps fold ((tap0 + tap1) + bias),
@@ -622,8 +625,9 @@ def _w14_tcn_oracle() -> str:
     "w14_tcn_autoregressive",
     _w14_tcn_oracle(),
     doc="W14 composed with the TCN forward pass (reference "
-    "utils/inference.py:61 generates with the trained model): each series' "
-    "sliding window feeds tcn_forward worker-side via applyInPandas; "
+    "utils/inference.py:61 generates with the trained model): the sliding "
+    "windows of every series in an Arrow batch feed one tcn_forward_batch "
+    "call per step, worker-side via mapInArrow; "
     "deterministic seeded weights make the output reproducible. "
     "ORACLE-CHECKED since round 7: the pinned 1-block/k=2/2-channel model "
     "has receptive field 3, so the whole generate loop is a closed form "

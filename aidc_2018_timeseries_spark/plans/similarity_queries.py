@@ -704,8 +704,8 @@ def dedup_semdedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norm-once form of the guarded cosine: every vec_id in verd has a
     # non-zero norm (zero vectors never get a verdict), and the fold over
     # the same array yields the same double, so dot/(na*nb) is
-    # bit-identical to cosine_similarity while paying one fold per pair
-    # instead of three across the quadratic truth arm
+    # bit-identical to dot / (l2_norm(a) * l2_norm(b)) while paying one
+    # fold per pair instead of three across the quadratic truth arm
     av = verd.select("vec_id", "group_id").join(ve, "vec_id")
     a, b = av.alias("a"), av.alias("b")
     truth = (

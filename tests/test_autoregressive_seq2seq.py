@@ -33,7 +33,7 @@ def test_autoregressive_matches_local_loop(spark):
         tail = vals[-(seq_len + n_steps):]
         window = tail[:seq_len].copy()
         for step in range(1, n_steps + 1):
-            pred = trailing_mean_predictor(window)
+            pred = trailing_mean_predictor(window[None])[0]
             g, a = got[(sid, step)]
             assert g == pytest.approx(pred, rel=1e-12)
             assert a == pytest.approx(float(tail[seq_len + step - 1]), rel=1e-12)
@@ -83,6 +83,109 @@ def test_autoregressive_short_series_emits_nothing(spark):
     assert out.count() == 0
 
 
+def _replay(vals: np.ndarray, seq_len: int, n_steps: int, predictor) -> list[tuple]:
+    """One series' generation, one step at a time, as (step, generated,
+    actual) with None where the output is null."""
+    tail = vals[-(seq_len + n_steps):]
+    window = tail[:seq_len].copy()
+    out = []
+    for step in range(1, n_steps + 1):
+        pred = float(predictor(window[None])[0])
+        actual = tail[seq_len + step - 1] if seq_len + step - 1 < len(tail) else None
+        out.append((step, pred, None if actual is None else float(actual)))
+        window = np.append(window[1:], pred)
+    return out
+
+
+def test_autoregressive_mixed_lengths_match_per_series_replay(spark):
+    """Series of seq_len + 1 up to beyond seq_len + n_steps rows, shuffled
+    and spread over several partitions, generate exactly what a
+    per-series NumPy replay of the same predictor gives."""
+    seq_len, n_steps = 5, 4
+    rng = np.random.default_rng(5)
+    lengths = np.repeat(np.arange(seq_len + 1, seq_len + n_steps + 4), 3)
+    data = {sid: rng.uniform(-5, 5, size=n) for sid, n in enumerate(lengths)}
+    rows = [(sid, t, float(v)) for sid, vals in data.items() for t, v in enumerate(vals)]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "series_id int, t int, v double").repartition(4, "t")
+    assert df.rdd.getNumPartitions() == 4
+    gen = autoregressive_generate(df, "series_id", "t", "v", seq_len, n_steps)
+    plan = gen._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning(series_id") == 1  # the one gather, on the key
+    got = sorted((r["series_id"], r["step"], r["generated"], r["actual"]) for r in gen.collect())
+    want = sorted(
+        (sid, *row)
+        for sid, vals in data.items()
+        for row in _replay(vals, seq_len, n_steps, trailing_mean_predictor)
+    )
+    assert got == want
+
+
+def test_autoregressive_one_predictor_call_per_step_per_arrow_batch(spark, tmp_path):
+    """7 series in one partition, 3 per Arrow batch: batches of 3, 3 and 1
+    series, each generated in lockstep by n_steps predictor calls."""
+    seq_len, n_steps = 4, 3
+    calls = tmp_path / "calls.txt"
+
+    def spy(windows):
+        with open(calls, "a") as f:
+            f.write(f"{windows.shape[0]} {windows.shape[1]}\n")
+        return trailing_mean_predictor(windows)
+
+    rows = [(sid, t, float(sid + t)) for sid in range(7) for t in range(seq_len + n_steps)]
+    df = spark.createDataFrame(rows, "series_id int, t int, v double")
+    confs = {"spark.sql.shuffle.partitions": "1", "spark.sql.execution.arrow.maxRecordsPerBatch": "3"}
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        out = autoregressive_generate(df, "series_id", "t", "v", seq_len, n_steps, predictor=spy)
+        assert out.count() == 7 * n_steps
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    shapes = [tuple(map(int, line.split())) for line in calls.read_text().splitlines()]
+    assert shapes == [(3, seq_len)] * n_steps + [(3, seq_len)] * n_steps + [(1, seq_len)] * n_steps
+
+
+def test_autoregressive_null_value_reads_as_nan_in_place(spark):
+    """A null keeps its slot: the predictor sees NaN exactly where it was
+    until the window slides past it, and a null actual stays null."""
+    seq_len, n_steps = 4, 3
+    vals = [10.0, None, 12.0, 13.0, 14.0, None, 16.0]
+    df = spark.createDataFrame(
+        [(1, t, v) for t, v in enumerate(vals)], "series_id int, t int, v double"
+    )
+    # bit j set <=> window slot j is NaN
+    nan_slots = lambda w: np.isnan(w) @ (2.0 ** np.arange(w.shape[1]))
+    out = autoregressive_generate(df, "series_id", "t", "v", seq_len, n_steps, predictor=nan_slots)
+    got = sorted((r["step"], r["generated"], r["actual"]) for r in out.collect())
+    assert got == [(1, 2.0, 14.0), (2, 1.0, None), (3, 0.0, 16.0)]
+    # the trailing mean of a window holding the NaN is emitted as null
+    mean = autoregressive_generate(df, "series_id", "t", "v", seq_len, n_steps).collect()
+    assert [r["generated"] for r in mean] == [None] * n_steps
+
+
+def test_autoregressive_empty_input_has_declared_schema(spark):
+    df = spark.createDataFrame([], "series_id long, t int, v double")
+    out = autoregressive_generate(df, "series_id", "t", "v", seq_len=4, n_steps=2)
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<series_id:bigint,step:int,generated:double,actual:double>"
+    )
+
+
+def test_trailing_mean_is_a_per_row_left_fold():
+    rng = np.random.default_rng(9)
+    windows = rng.normal(size=(50, 13)) * 10.0 ** rng.integers(-8, 8, size=(50, 13))
+    got = trailing_mean_predictor(windows)
+    for row, g in zip(windows, got):
+        total = 0.0
+        for v in row:
+            total += float(v)
+        assert g == total / windows.shape[1]
+
+
 def test_seq2seq_shapes_and_determinism():
     w = Seq2SeqWeights(n_features=3, hidden_sizes=(6, 5))
     x = np.random.default_rng(2).normal(size=(12, 3))
@@ -93,10 +196,8 @@ def test_seq2seq_shapes_and_determinism():
     assert y1.shape == (7, 3)
     np.testing.assert_array_equal(y1, y2)
     # autoregressive feedback: step k+1 depends on step k
-    recon = reconstruct(x, w, reverse_target=True)
+    recon = reconstruct(x, w)
     assert recon.shape == x.shape
-    # reversal (W11): reconstruct without reversal is the flipped sequence
-    np.testing.assert_allclose(reconstruct(x, w, reverse_target=False), recon[::-1])
 
 
 def test_encoder_final_state_depends_on_whole_sequence():

@@ -162,6 +162,10 @@ def _is_register(deco: ast.expr) -> bool:
     return isinstance(deco, ast.Call) and isinstance(deco.func, ast.Name) and deco.func.id == "register"
 
 
+def _is_all(node: ast.stmt) -> bool:
+    return isinstance(node, ast.Assign) and any(isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets)
+
+
 def _package_graph():
     """(definitions name -> [locations], edges name -> names its bodies
     mention, root names from module-level code and @register faces,
@@ -184,7 +188,7 @@ def _package_graph():
                 for a in node.names:
                     if a.asname:
                         aliases.setdefault(a.asname, set()).add(a.name.split(".")[-1])
-            else:
+            elif not _is_all(node):  # a re-export list names definitions, it does not use them
                 roots |= _names([node])
     return defs, edges, roots, aliases
 
@@ -237,7 +241,6 @@ SWITCH_ALLOWLIST = {
     "connected_components.stats": "round-count out-parameter; perfbench's corpus workload passes it through a wrapper",
     "minhash_components_collapsed.collapse": "perfbench passes the default explicitly; the star path goes with ROADMAP item 2",
     # reference forms that have no face (see REACHABILITY_ALLOWLIST)
-    "reconstruct.reverse_target": "reference W11 reversed decoder target; tests/test_autoregressive_seq2seq.py",
     "resize_images.kernel": "pins the resize kernel where PIL is installed; tests/test_ml_and_multimodal.py",
 }
 
