@@ -20,7 +20,7 @@ documented here because the face keys by event_type and never needs it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -64,40 +64,47 @@ def concurrency_sweep(
 
 def hierarchical_running_sum(
     df: DataFrame,
+    keys: list[str],
     bucket_col: str,
-    order_cols: list[str],
-    val_col: str,
+    order_cols: list[str | Column],
+    val: str | Column,
     out_col: str = "running_sum",
 ) -> DataFrame:
-    """GLOBAL running sum without a global single-partition window — the
-    two-level prefix-sum decomposition: (1) running sum WITHIN each bucket
-    (shuffle keyed by bucket, parallel across buckets), (2) running offset
-    ACROSS buckets computed on the buckets-total relation (one row per
-    bucket — thousands of rows at 100 TB, so its single-partition window
-    is free), (3) broadcast the offsets back. Row values are exactly what
-    one global ordered window would produce, provided ``bucket_col`` is
-    coarser than (sorts consistently with) ``order_cols``'s leading column.
+    """Per-``keys`` running sum of ``val`` without a window over a whole
+    key — the two-level prefix-sum decomposition: (1) running sum WITHIN
+    each (keys, bucket) (shuffle keyed by bucket, parallel across
+    buckets), (2) exclusive running offset ACROSS a key's buckets computed
+    on the (keys, bucket)-totals relation (one row per bucket, so its
+    window is over bucket totals, never rows), (3) one plain equi-join
+    back on (keys, bucket): the row-level side already carries that
+    partitioning from its window, so the join adds no big-side shuffle.
+    Row values are exactly what one ordered window per key would produce,
+    provided ``bucket_col`` is coarser than (sorts consistently with)
+    ``order_cols``'s leading column. ``keys=[]`` is the GLOBAL running
+    sum; ``val=F.lit(1)`` is a row number.
 
-    This is the scale-out answer for every "order the WHOLE table"
-    operator (W13 global split, trailing-k over a whole stream, sweep-line
-    concurrency): the only global structure is the per-bucket totals.
+    This is the scale-out answer for every "order the whole table / the
+    whole series" operator (W13 global split, O2 hash permutation,
+    sweep-line concurrency, bucketed W1, the DSIR rank): the only
+    structure spanning buckets is the per-bucket totals.
     """
+    part = [*keys, bucket_col]
     w_in = (
-        Window.partitionBy(bucket_col)
+        Window.partitionBy(*part)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = df.withColumn("_cum_in", F.sum(val_col).over(w_in))
-    totals = df.groupBy(bucket_col).agg(F.sum(val_col).alias("_btot"))
+    local = df.withColumn("_cum_in", F.sum(val).over(w_in))
+    totals = df.groupBy(*part).agg(F.sum(val).alias("_btot"))
     w_b = (
-        Window.orderBy(bucket_col)
+        Window.partitionBy(*keys)
+        .orderBy(bucket_col)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     offsets = totals.select(
-        bucket_col,
-        (F.sum("_btot").over(w_b) - F.col("_btot")).alias("_boff"),
+        *part, (F.sum("_btot").over(w_b) - F.col("_btot")).alias("_boff")
     )
-    return local.join(F.broadcast(offsets), bucket_col).withColumn(
+    return local.join(offsets, part).withColumn(
         out_col, F.col("_cum_in") + F.col("_boff")
     ).drop("_cum_in", "_boff")
 
@@ -127,7 +134,7 @@ def concurrency_curve_global(
         "day_bucket", F.col("t_us") - (F.col("t_us") % F.lit(bucket_us))
     )
     out = hierarchical_running_sum(
-        bounds, "day_bucket", ["t_us", "delta", "bid"], "delta", out_col="conc"
+        bounds, [], "day_bucket", ["t_us", "delta", "bid"], "delta", out_col="conc"
     )
     return out.select("t_us", "delta", "bid", "conc")
 
@@ -208,6 +215,9 @@ def sessionize_bucketed(
         # 97.0s → re-measured after this change in SCALING.md round 7
         .localCheckpoint(eager=False)
     )
+    # Its own stitch, not hierarchical_running_sum: a bucket's offset
+    # carries a first-event flag that needs the previous bucket's last
+    # timestamp, which the primitive's plain totals cannot supply.
     summary = flagged.groupBy(key, "_sb_b").agg(
         F.min(us_col).alias("_sb_first_us"),
         F.max(us_col).alias("_sb_last_us"),

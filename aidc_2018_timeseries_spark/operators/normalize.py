@@ -79,52 +79,6 @@ def trailing_window_zscore(
     return df.withColumn(out or (value_col + "_z"), (v - mean) / safe_sigma)
 
 
-def trailing_window_zscore_bucketed(
-    df: DataFrame,
-    key: str,
-    us_col: str,
-    id_col: str,
-    value_col: str,
-    seq_len: int,
-    value_bucket: int,
-    row_bucket: int,
-    eps: float = 1e-9,
-    out: str | None = None,
-) -> DataFrame:
-    """A2 with BOUNDED window partitions: :func:`trailing_window_zscore`
-    routed through ``rolling_window_agg_bucketed`` (windowing.py), for the
-    one-series-exceeds-a-task regime. mean/E[x²] come from the bucketed
-    trailing frame (``complete_only=False`` keeps the plain contract:
-    every row z-scores against its possibly-truncated leading frame —
-    truncation can only happen in row-bucket 0, where it matches plain);
-    σ/eps guard arithmetic is formula-identical to the plain form, so the
-    result is row-identical (equality pytest-pinned). Output = input
-    columns + the z column (helper ``rn`` dropped for schema parity).
-    """
-    from aidc_2018_timeseries_spark.operators.windowing import (
-        rolling_window_agg_bucketed,
-    )
-
-    v = F.col(value_col).cast("double")
-    tmp = rolling_window_agg_bucketed(
-        df,
-        key,
-        us_col,
-        id_col,
-        {"_zb_m": F.avg(v), "_zb_m2": F.avg(v * v)},
-        seq_len,
-        value_bucket,
-        row_bucket,
-        complete_only=False,
-    )
-    mean = F.col("_zb_m")
-    sigma = F.sqrt(F.greatest(F.col("_zb_m2") - mean * mean, F.lit(0.0)))
-    safe_sigma = F.when(sigma <= eps, F.lit(1.0)).otherwise(sigma)
-    return tmp.withColumn(
-        out or (value_col + "_z"), (v - mean) / safe_sigma
-    ).drop("_zb_m", "_zb_m2", "rn")
-
-
 def array_window_zscore(arr: Column | str, eps: float = 1e-9) -> Column:
     """A2 on an array window: z-score the array over its own elements."""
     a = F.col(arr) if isinstance(arr, str) else arr

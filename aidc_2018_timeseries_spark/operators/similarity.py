@@ -359,31 +359,16 @@ def hyperplane_rows(
 ) -> list[tuple[int, int, list[float]]]:
     """Deterministic Gaussian hyperplanes for sign-LSH: one (table_id,
     bit_idx, plane) tuple per bit. The single source of truth shared by the
-    Spark signature kernel below AND the DuckDB oracle generator in
-    plans/dedup_queries.py — both engines see bit-identical plane constants,
-    so the driver's hash check verifies the whole LSH algorithm."""
-    import numpy as np
+    Spark signature kernel below AND the DuckDB oracle generators in
+    plans/ — both engines see bit-identical plane constants, so the
+    driver's hash check verifies the whole LSH algorithm.
 
-    rng = np.random.RandomState(seed)
-    return [
-        (t, b, [float(x) for x in rng.randn(dim)])
-        for t in range(n_tables)
-        for b in range(n_bits)
-    ]
-
-
-def hyperplane_rows_stable(
-    dim: int, n_tables: int, n_bits: int, seed: int = 7
-) -> list[tuple[int, int, list[float]]]:
-    """PREFIX-STABLE sibling of :func:`hyperplane_rows`: plane (t, b)
-    depends only on (seed, t, b), never on ``n_bits`` — each plane draws
-    from its own ``RandomState([seed, t, b])`` instead of one shared
-    stream. This is what lets a CORPUS-SCALED bit count be oracle-checked:
-    the static SQL inlines the planes for a maximum bit budget once, and
-    masking ``bit_idx < n_bits`` reproduces exactly the planes the Spark
-    side generated for the data-derived ``n_bits``, because the first k
-    planes of any budget are identical. The original generator cannot do
-    this (its single RNG stream re-deals every plane when n_bits changes).
+    PREFIX-STABLE: plane (t, b) draws from its own
+    ``RandomState([seed, t, b])``, so it never depends on ``n_tables`` or
+    ``n_bits``. This is what lets a CORPUS-SCALED bit count be
+    oracle-checked: the static SQL inlines the planes for a maximum bit
+    budget once, and masking ``bit_idx < n_bits`` reproduces exactly the
+    planes the Spark side generated for the data-derived ``n_bits``.
     """
     import numpy as np
 
@@ -463,14 +448,13 @@ def lsh_signatures(
 
 def embedding_lsh_dup_pairs(
     vectors: DataFrame,
+    n_bits: int,
     threshold: float = 0.35,
     n_tables: int = 8,
-    n_bits: int | None = None,
     seed: int = 7,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    planes: list[tuple[int, int, list[float]]] | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs, LSH-bucketed: candidates = vectors
     sharing any table's sign-bucket (equi-join on (table_id, bucket) over
@@ -478,26 +462,17 @@ def embedding_lsh_dup_pairs(
 
     This is the 100 TB catalog face for embedding dedup: the corpus is
     never self-joined all-pairs — only bucket keys shuffle, and n_bits
-    scales the bucket count with the corpus (it MUST: fixed bits means
+    must scale the bucket count with the corpus (fixed bits means
     per-bucket population ∝ n and candidates quadratic — measured 15s→300s
-    over one decade with n_bits=4, SCALING.md round-4 audit). For exactly
-    that reason the DEFAULT is corpus-derived: ``n_bits=None`` counts the
-    corpus once and picks bits via ``scaled_n_bits`` (~64 vectors/bucket);
-    pinning an explicit n_bits is the opt-in for oracle baselines whose
-    plane constants must be inlineable into a static SQL string
-    (plans/dedup_queries.py: dedup_embedding_lsh). Precision is exact
+    over one decade with n_bits=4, SCALING.md round-4 audit):
+    ``scaled_n_bits(n)`` picks ~64 vectors/bucket, as the corpus-scaled
+    face ``dedup_embedding_lsh_scaled`` does. Precision is exact
     (rescore); recall < 1 by design and is pinned against the brute-force
     baseline in tests/test_similarity.py. Signatures come from the GEMM
     kernel :func:`lsh_signatures`.
-    ``planes`` overrides the generated hyperplanes (n_tables/seed/dim are
-    then ignored) — the corpus-scaled catalog face passes prefix-stable
-    planes so its data-derived bit count remains oracle-checkable.
     Output: (id_a, id_b, sim), id_a < id_b.
     """
-    if planes is None:
-        if n_bits is None:
-            n_bits = scaled_n_bits(vectors.count())
-        planes = hyperplane_rows(dim, n_tables, n_bits, seed)
+    planes = hyperplane_rows(dim, n_tables, n_bits, seed)
     # Materialize the signature relation once: Spark does not reuse a
     # subplan across the two sides of a self-join, so without this the
     # full-corpus signature scan (the GEMM pass at scale) runs TWICE —

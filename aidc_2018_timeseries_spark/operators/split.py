@@ -12,16 +12,18 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from aidc_2018_timeseries_spark.operators.intervals import hierarchical_running_sum
 
 
 def time_ordered_split(
     df: DataFrame,
     order: str | Sequence[str],
     train_ratio: float,
+    bucket_expr: Column,
     out: str = "split",
-    bucket_expr=None,
 ) -> DataFrame:
     """W13: first round(ratio*N) rows (global time order) are 'train', the
     rest 'test' (reference ``timeseries.py:52-63``: split over the window
@@ -29,36 +31,27 @@ def time_ordered_split(
 
     round() matches NumPy's ``int(round(ratio * N))``.
 
-    Scale path: pass ``bucket_expr`` — a Column that COARSENS the leading
-    order column (e.g. ``ts div <week_ns>``) — and the global row index is
-    computed via the two-level prefix-sum decomposition
-    (``intervals.hierarchical_running_sum``): per-bucket row numbering in
-    parallel, one tiny buckets-total offset relation, identical output.
-    Without it, a global single-partition window is used — fine only for
-    bookkeeping-sized inputs; at 100 TB use ``bucket_expr`` or the
-    per-series form :func:`per_key_time_split`.
+    ``bucket_expr`` is a Column that COARSENS the leading order column
+    (e.g. ``ts div <week_ns>``); the global row index is the two-level
+    prefix sum (``intervals.hierarchical_running_sum``): per-bucket row
+    numbering in parallel plus one tiny buckets-total offset relation, so
+    no window ever holds the whole table. Multi-series datasets usually
+    want the per-series form :func:`per_key_time_split` instead.
     """
     order_names = [order] if isinstance(order, str) else list(order)
     n = df.count()
     cutoff = int(round(train_ratio * n))
-    if bucket_expr is not None:
-        from aidc_2018_timeseries_spark.operators.intervals import (
-            hierarchical_running_sum,
-        )
-
-        ranked = hierarchical_running_sum(
-            df.withColumn("_bucket", bucket_expr).withColumn("_one", F.lit(1)),
-            "_bucket",
-            order_names,
-            "_one",
-            out_col="_rn",
-        ).drop("_bucket", "_one")
-    else:
-        w = Window.orderBy(*[F.col(n_) for n_ in order_names])
-        ranked = df.withColumn("_rn", F.row_number().over(w))
+    ranked = hierarchical_running_sum(
+        df.withColumn("_bucket", bucket_expr),
+        [],
+        "_bucket",
+        order_names,
+        F.lit(1),
+        out_col="_rn",
+    )
     return ranked.withColumn(
         out, F.when(F.col("_rn") <= cutoff, F.lit("train")).otherwise(F.lit("test"))
-    ).drop("_rn")
+    ).drop("_bucket", "_rn")
 
 
 def per_key_time_split(
@@ -71,8 +64,8 @@ def per_key_time_split(
     """Scale-clean W13 for multi-series datasets: per key, the first
     round(ratio·n_k) rows in time order are 'train', the rest 'test'.
 
-    Unlike the global-row_number form (:func:`time_ordered_split`, which
-    funnels every row through ONE partition), this uses key-partitioned
+    Unlike the global form (:func:`time_ordered_split`, which counts the
+    table and stitches bucket offsets), this uses key-partitioned
     windows only — the shuffle is by series key and usually reuses the
     partitioning the windowing stage already established. Semantically it
     is the reference's window-axis split applied per series, which is what
@@ -124,22 +117,18 @@ def hash_permutation_shuffle(
     is defined by the key, not by this materialization.
     """
     from aidc_2018_timeseries_spark.functions.hashing import hash64_seeded
-    from aidc_2018_timeseries_spark.operators.intervals import (
-        hierarchical_running_sum,
-    )
 
     h = hash64_seeded(F.col(id_col).cast("string"), f"shuf:{seed}")
     ranked = hierarchical_running_sum(
-        df.withColumn("_h", h)
-        .withColumn("_bucket", F.expr(f"_h div {1 << 53}"))
-        .withColumn("_one", F.lit(1)),
+        df.withColumn("_h", h).withColumn("_bucket", F.expr(f"_h div {1 << 53}")),
+        [],
         "_bucket",
         ["_h", id_col],
-        "_one",
+        F.lit(1),
         out_col="_rn",
     )
     return ranked.withColumn(pos_col, (F.col("_rn") - 1).cast("long")).drop(
-        "_h", "_bucket", "_one", "_rn"
+        "_h", "_bucket", "_rn"
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.functions.hashing import hash64, hash64_expr, word_fingerprint
 from aidc_2018_timeseries_spark.operators._sql import _q, let
+from aidc_2018_timeseries_spark.operators.intervals import hierarchical_running_sum
 
 #: tiny embedded stopword lists for the language-ID heuristic. Real systems
 #: use character n-gram models; the ENGINE mechanics (score-per-language,
@@ -906,20 +907,19 @@ def dsir_selection(
     ``Window.partitionBy(group).orderBy(key desc)`` row_number serializes
     a DOMINANT source into one task (a Zipf source holding 90% of a
     100 TB corpus = one executor sorting 90 TB). The rank is instead the
-    two-level prefix-sum decomposition (the
-    ``operators/intervals.hierarchical_running_sum`` template, applied
-    per group): (1) bucket rows within each group by integer key RANGE,
-    descending — ``_kb = (kmax − key) DIV width`` with a per-group width
-    targeting ``rank_buckets`` buckets, so bucket order equals key order
-    and equal keys share a bucket; (2) ``row_number`` within (group,
-    bucket) — partitions bounded ≈ n_group/rank_buckets because keys are
-    near-unique by construction (per-doc hash Gumbel in micro units);
-    (3) per-(group, bucket) counts → per-group running offsets on the
-    ≤ rank_buckets-rows-per-group relation (its window is free); (4)
-    global-in-group rank = local rank + bucket offset — identical to the
-    single-window rank (equality pytest-pinned in tests/test_dsir.py),
-    all integer arithmetic so cross-engine-exact. ``rank_buckets=0``
-    selects the plain single-window rank (the equality baseline).
+    two-level prefix sum ``operators/intervals.hierarchical_running_sum``
+    keyed by group: (1) bucket rows within each group by integer key
+    RANGE, descending — ``_kb = (kmax − key) DIV width`` with a per-group
+    width targeting ``rank_buckets`` buckets, so bucket order equals key
+    order and equal keys share a bucket; (2) a running count of 1 over
+    (key desc, id) within (group, bucket) — partitions bounded ≈
+    n_group/rank_buckets because keys are near-unique by construction
+    (per-doc hash Gumbel in micro units) — plus the bucket's exclusive
+    offset from the ≤ rank_buckets-rows-per-group totals relation. The
+    rank is identical to the single-window rank (equality pytest-pinned
+    in tests/test_dsir.py), all integer arithmetic so cross-engine-exact.
+    ``rank_buckets=0`` selects the plain single-window rank (the equality
+    baseline).
     """
     from pyspark.sql import Window
 
@@ -1037,32 +1037,18 @@ def dsir_selection(
         # double rounding; key desc ⇔ _kb asc, equal keys ⇒ equal _kb.
         .withColumn("_kb", F.expr("(_kmax - key_micro) DIV _kw"))
     )
-    w_loc = Window.partitionBy(group_col, "_kb").orderBy(
-        F.col("key_micro").desc(), F.col(id_col).asc()
+    ranked = hierarchical_running_sum(
+        bucketed,
+        [group_col],
+        "_kb",
+        [F.col("key_micro").desc(), F.col(id_col).asc()],
+        F.lit(1),
+        out_col="_rank",
     )
-    counts = bucketed.groupBy(group_col, "_kb").agg(
-        F.count(F.lit(1)).alias("_bc")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("_kb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    offsets = counts.select(
-        group_col, "_kb", (F.sum("_bc").over(w_off) - F.col("_bc")).alias("_boff")
-    )
-    return (
-        bucketed.withColumn("_lrank", F.row_number().over(w_loc))
-        .join(F.broadcast(offsets), [group_col, "_kb"])
-        .select(
-            *out_cols,
-            F.when(
-                (F.col("_lrank") + F.col("_boff"))
-                <= F.ceil(F.col("_ngrp") * keep_frac),
-                F.lit(1),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("selected"),
-        )
+    return ranked.select(
+        *out_cols,
+        F.when(F.col("_rank") <= F.ceil(F.col("_ngrp") * keep_frac), F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("selected"),
     )

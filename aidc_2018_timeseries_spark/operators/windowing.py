@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from aidc_2018_timeseries_spark.operators._sql import _q, over
+from aidc_2018_timeseries_spark.operators.intervals import hierarchical_running_sum
 
 
 def _order_cols(order: str | Sequence[str]) -> list[Column]:
@@ -116,7 +117,6 @@ def rolling_window_agg_bucketed(
     seq_len: int,
     value_bucket: int,
     row_bucket: int,
-    complete_only: bool = True,
 ) -> DataFrame:
     """W1 with BOUNDED window partitions — the skew-proof sibling of
     :func:`rolling_window_agg` for the regime the round-6 len10x/keys10x
@@ -127,10 +127,11 @@ def rolling_window_agg_bucketed(
     The hierarchical prefix-sum template (operators/intervals.py) applied
     to trailing ROW windows:
 
-    1. global per-series row number ``rn`` WITHOUT a per-series window:
-       local row_number within (key, ``us_col div value_bucket``) +
-       exclusive prefix-sum of bucket counts over the tiny per-(key,
-       bucket) summary relation — the sessionize_bucketed rn machinery;
+    1. per-series row number ``rn`` WITHOUT a per-series window:
+       ``intervals.hierarchical_running_sum`` counts rows in (``us_col``,
+       ``id_col``) order within (key, ``us_col div value_bucket``) and
+       adds each bucket's exclusive offset from the tiny per-(key,
+       bucket) totals relation;
     2. row-bucket ``g = (rn-1) div row_bucket``; the last ``seq_len-1``
        rows of each bucket are REPLICATED into bucket g+1 as context
        (trailing windows need exactly T-1 rows of carry-in — bounded,
@@ -138,14 +139,11 @@ def rolling_window_agg_bucketed(
     3. the trailing frame runs within (key, g) ordered by rn: every
        non-context row's frame is fully contained in its bucket's
        contiguous rn range [g*B - (T-1) + 1, (g+1)*B], so the result is
-       row-identical to the plain form (equality pytest-pinned).
+       row-identical to the plain form (equality pytest-pinned), and the
+       first T-1 rows of a series emit no window, as in the plain form.
 
     ``row_bucket`` must be >= ``seq_len`` so context only ever comes from
-    the immediately-preceding bucket. ``complete_only=True`` keeps the
-    plain form's "first T-1 windows don't exist" parity; ``False`` emits
-    truncated leading frames (the trailing_window_zscore contract) —
-    safe because rn < seq_len implies bucket 0, where truncation is
-    exactly the plain behavior.
+    the immediately-preceding bucket.
 
     Output: input columns + ``rn`` + the aggregate columns.
     """
@@ -154,7 +152,7 @@ def rolling_window_agg_bucketed(
             f"row_bucket ({row_bucket}) must be >= seq_len ({seq_len}): "
             "context replication only reaches one bucket back"
         )
-    tmp = ("_rb_vb", "_rb_lrn", "_rb_n", "_rb_off", "_rb_g", "_rb_ctx", "_rb_t", "rn")
+    tmp = ("_rb_vb", "_rb_g", "_rb_ctx", "_rb_t", "rn")
     clash = [c for c in df.columns if c in tmp]
     if clash:
         raise ValueError(
@@ -166,39 +164,9 @@ def rolling_window_agg_bucketed(
     vb = F.expr(
         f"(`{us_col}` - pmod(`{us_col}`, {int(value_bucket)})) div {int(value_bucket)}"
     )
-    # per-(key, value-bucket) counts come from the RAW scan — a plain
-    # partial-aggregated groupBy, no window, no sort — so the windowed
-    # `local` relation below has exactly ONE consumer and nothing big is
-    # ever computed twice (round-7 plan audit: the first cut derived
-    # counts from `local`, which re-scanned and re-windowed the input;
-    # a localCheckpoint fixed the duplication but cost more than it
-    # saved at 100M — materializing 2x100M rows and losing the window's
-    # partitioning, 121 -> 230s — so the fix is structural instead)
-    counts = (
-        df.withColumn("_rb_vb", vb)
-        .groupBy(key, "_rb_vb")
-        .agg(F.count(F.lit(1)).alias("_rb_n"))
-    )
-    w_b = (
-        Window.partitionBy(key)
-        .orderBy("_rb_vb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # tiny relation: one row per (key, value-bucket); its per-key window
-    # is over bucket COUNTS, never rows. Plain equi-join back (not
-    # broadcast): big side already carries (key, _rb_vb) partitioning
-    offsets = counts.withColumn(
-        "_rb_off", F.sum("_rb_n").over(w_b) - F.col("_rb_n")
-    ).select(key, "_rb_vb", "_rb_off")
-    w_in = Window.partitionBy(key, "_rb_vb").orderBy(us_col, id_col)
-    local = df.withColumn("_rb_vb", vb).withColumn(
-        "_rb_lrn", F.row_number().over(w_in).cast("long")
-    )
-    withrn = (
-        local.join(offsets, [key, "_rb_vb"])
-        .withColumn("rn", F.col("_rb_lrn") + F.col("_rb_off"))
-        .drop("_rb_vb", "_rb_lrn", "_rb_off")
-    )
+    withrn = hierarchical_running_sum(
+        df.withColumn("_rb_vb", vb), [key], "_rb_vb", [us_col, id_col], F.lit(1), out_col="rn"
+    ).drop("_rb_vb")
     b = int(row_bucket)
     g = F.expr(f"(rn - 1) div {b}")
     # own row + (boundary rows only) a context replica for bucket g+1,
@@ -223,8 +191,9 @@ def rolling_window_agg_bucketed(
     )
     for name, expr in agg_exprs.items():
         out = out.withColumn(name, expr.over(frame))
-    out = out.filter(F.col("_rb_ctx") == 0).drop("_rb_g", "_rb_ctx")
-    return out.filter(F.col("rn") >= seq_len) if complete_only else out
+    return out.filter((F.col("_rb_ctx") == 0) & (F.col("rn") >= seq_len)).drop(
+        "_rb_g", "_rb_ctx"
+    )
 
 
 def strided_rolling_window_agg(

@@ -15,7 +15,6 @@ from aidc_2018_timeseries_spark.operators import dedup as dd
 from aidc_2018_timeseries_spark.operators.similarity import (
     embedding_lsh_dup_pairs,
     hyperplane_rows,
-    hyperplane_rows_stable,
 )
 from aidc_2018_timeseries_spark.operators.graph import connected_components
 from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute
@@ -421,9 +420,9 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return embedding_lsh_dup_pairs(
         e,
+        _LSH_BITS,
         threshold=_LSH_THRESHOLD,
         n_tables=_LSH_TABLES,
-        n_bits=_LSH_BITS,
         seed=_LSH_SEED,
         dim=_LSH_DIM,
     )
@@ -435,7 +434,7 @@ _LSH_SCALED_MAX_BITS = 12  # oracle plane budget: 64 vecs/bucket * 2^12 ≈ 262k
 def _embedding_lsh_scaled_oracle() -> str:
     """The corpus-SCALED variant of _embedding_lsh_oracle: n_bits is
     data-derived (scaled_n_bits), which a static SQL string can still
-    check because the planes are PREFIX-STABLE (hyperplane_rows_stable —
+    check because the planes are PREFIX-STABLE (hyperplane_rows —
     plane (t, b) never depends on the bit budget). The SQL inlines the
     max-budget plane set once, recomputes the bit-count rule
     ``greatest(floor, ceil(log2(n/64)))`` from COUNT(*) — exact-parity
@@ -444,9 +443,7 @@ def _embedding_lsh_scaled_oracle() -> str:
     vectors the oracle's plane budget is exhausted and the face would
     honestly mismatch (driver SFs are 3 orders of magnitude below that).
     """
-    rows = hyperplane_rows_stable(
-        _LSH_DIM, _LSH_TABLES, _LSH_SCALED_MAX_BITS, _LSH_SEED
-    )
+    rows = hyperplane_rows(_LSH_DIM, _LSH_TABLES, _LSH_SCALED_MAX_BITS, _LSH_SEED)
     values = ",\n      ".join(
         f"({t}, {b}, [{', '.join(repr(x) for x in plane)}]::DOUBLE[])"
         for t, b, plane in rows
@@ -504,8 +501,11 @@ def dedup_embedding_lsh_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits = scaled_n_bits(e.count(), floor=_LSH_BITS)
     return embedding_lsh_dup_pairs(
         e,
+        bits,
         threshold=_LSH_THRESHOLD,
-        planes=hyperplane_rows_stable(_LSH_DIM, _LSH_TABLES, bits, _LSH_SEED),
+        n_tables=_LSH_TABLES,
+        seed=_LSH_SEED,
+        dim=_LSH_DIM,
     )
 
 

@@ -147,7 +147,7 @@ def _w14_mean_oracle(seq_len: int = 10, n_steps: int = 5) -> str:
            ROUND(preds[i], 6) AS generated,
            ROUND(CASE WHEN {seq_len} + i <= len(tail)
                       THEN tail[{seq_len} + i]
-                      ELSE 'NaN'::DOUBLE END, 6) AS actual
+                      ELSE NULL END, 6) AS actual
     FROM w{n_steps}, unnest(range(1, {n_steps + 1})) AS u(i)
     """
 
@@ -163,9 +163,8 @@ def _w14_mean_oracle(seq_len: int = 10, n_steps: int = 5) -> str:
     "series'): with the default trailing-mean predictor the loop unrolls "
     "into 5 fixed SQL rounds (see _w14_mean_oracle) — the identity-"
     "predictor fixed point and the TCN closed form were rounds 4/7's "
-    "steps; this closes the LAST W14 variant. A missing actual is null "
-    "here and NaN in the oracle; every sf0.01 series has >= 15 rows, so "
-    "none occurs. Output rounds at 6 dp, feedback stays unrounded",
+    "steps; this closes the LAST W14 variant. Output rounds at 6 dp, "
+    "feedback stays unrounded",
 )
 def w14_autoregressive_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.ml.autoregressive import autoregressive_generate

@@ -55,7 +55,7 @@ def w1_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitions — hierarchical prefix-sum row numbers (no per-series "
     "window anywhere) + per-(series, row-bucket) frames with T-1 rows of "
     "explicit carry-in. The one-series-100M-rows audit "
-    "(tools/bench_rolling_bucketed.py, SCALING.md round 7) measured plain "
+    "(SCALING.md round 7) measured plain "
     "W1 at 353s (one un-splittable sort task) vs 121s bucketed; same "
     "deployment rule as sessionize_bucketed: plain by default, bucketed "
     "when one series can outgrow a task. Row-bucket 64 is deliberately "
@@ -218,9 +218,9 @@ def w10_zero_prepend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r
     """,
     doc="W13 first round(0.8*N) rows (time order) = train, rest = test. "
-    "Row indexing runs the two-level prefix-sum scale path (weekly ts "
-    "buckets ranked in parallel + a tiny bucket-offset relation) — "
-    "identical output to the oracle's single global ROW_NUMBER",
+    "The row index is the two-level prefix sum (weekly ts buckets ranked "
+    "in parallel + a tiny bucket-offset relation) — identical output to "
+    "the oracle's single global ROW_NUMBER",
 )
 def w13_time_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = split.time_ordered_split(

@@ -1186,7 +1186,9 @@ def _dsir_ctes() -> str:
     "per source. Plan: one bucket-keyed shuffle (256 keys, map-side "
     "combined) builds both models in a single aggregate; the bucket "
     "relation broadcasts back; one id-keyed shuffle sums integer "
-    "weights; rank is a source-partitioned window",
+    "weights; the per-source rank is the two-level prefix sum "
+    "(intervals.hierarchical_running_sum keyed by source over 64 "
+    "key-range buckets), so a dominant source never sorts in one task",
 )
 def text_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aidc_2018_timeseries_spark.operators.partitioning import spread_for_compute

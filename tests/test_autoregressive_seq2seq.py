@@ -166,6 +166,43 @@ def test_autoregressive_null_value_reads_as_nan_in_place(spark):
     assert [r["generated"] for r in mean] == [None] * n_steps
 
 
+def test_autoregressive_short_tail_matches_mean_oracle(spark, tmp_path):
+    """A series too short to supply every actual: the Spark face's rows
+    equal the DuckDB oracle's, missing actuals null on both sides."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aidc_2018_timeseries_spark.plans.pipeline_queries import _w14_mean_oracle
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(9), pa.int64()),
+                "ts": pa.array([t * 10 for t in range(9)], pa.int64()),
+                "user_id": pa.array([1] * 9, pa.int64()),
+                "value": pa.array([float(t * t % 7) for t in range(9)], pa.float64()),
+            }
+        ),
+        path,
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    want = sorted(con.sql(_w14_mean_oracle(8, 4)).fetchall())
+    out = autoregressive_generate(
+        spark.read.parquet(path), "user_id", ["ts", "event_id"], "value", seq_len=8, n_steps=4
+    )
+    got = sorted(
+        tuple(r)
+        for r in out.selectExpr(
+            "user_id", "step", "round(generated, 6)", "round(actual, 6)"
+        ).collect()
+    )
+    assert got == want
+    assert [r[3] is None for r in got] == [False, True, True, True]
+
+
 def test_autoregressive_empty_input_has_declared_schema(spark):
     df = spark.createDataFrame([], "series_id long, t int, v double")
     out = autoregressive_generate(df, "series_id", "t", "v", seq_len=4, n_steps=2)

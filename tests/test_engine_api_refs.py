@@ -234,7 +234,6 @@ def test_every_engine_definition_is_reached():
 SWITCH_ALLOWLIST = {
     # names, not code paths
     "asof_join.right_ts": "column name; None reuses left_ts, as both faces' sides share the ts column",
-    "trailing_window_zscore_bucketed.out": "output column name; None gives `<value_col>_z`",
     "quality_score.stopwords": "stopword list; None is LANG_STOPWORDS['en']",
     "remove_stopwords.stopwords": "stopword list; None is LANG_STOPWORDS['en']",
     # set, but not visibly to a name match

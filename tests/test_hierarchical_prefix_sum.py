@@ -18,27 +18,49 @@ def _bounds(spark, n=500):
     return spark.createDataFrame(rows, "t long, delta int, bid long")
 
 
-def test_matches_naive_global_window(spark):
-    df = _bounds(spark)
+def _assert_matches_naive_window(df, keys):
+    """hierarchical_running_sum over 100-wide floor buckets of t == one
+    running-sum window per key (one global window when keys is [])."""
+    order = ["t", "delta", "bid"]
     got = hierarchical_running_sum(
-        df.withColumn("bucket", F.col("t") - F.col("t") % 100),
+        df.withColumn("bucket", F.expr("(t - pmod(t, 100)) div 100")),
+        keys,
         "bucket",
-        ["t", "delta", "bid"],
+        order,
         "delta",
         out_col="cum",
     )
-    w = Window.orderBy("t", "delta", "bid").rowsBetween(
+    w = Window.partitionBy(*keys).orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     want = df.withColumn("cum", F.sum("delta").over(w))
-    a = sorted((r.t, r.delta, r.bid, r.cum) for r in got.collect())
-    b = sorted((r.t, r.delta, r.bid, r.cum) for r in want.collect())
+    cols = [*keys, *order, "cum"]
+    a = sorted(tuple(r) for r in got.select(*cols).collect())
+    b = sorted(tuple(r) for r in want.select(*cols).collect())
     assert a == b
+
+
+def test_matches_naive_global_window(spark):
+    _assert_matches_naive_window(_bounds(spark), [])
+
+
+def test_keyed_matches_per_key_window(spark):
+    """Keys whose rows span many buckets, negative t (floor buckets below
+    zero), and a key with a single row."""
+    rows = [
+        (k, ((i * 2654435761) % 97) * 10 - 480 + k, 1 if (i + k) % 3 else -1, i)
+        for k in (1, 2, 3)
+        for i in range(k * 100, k * 100 + 150)
+    ]
+    rows.append((9, -7, 1, 10_000))
+    df = spark.createDataFrame(rows, "k long, t long, delta int, bid long")
+    assert min(r[1] for r in rows) < 0
+    _assert_matches_naive_window(df, ["k"])
 
 
 def test_single_bucket_degenerates_to_global(spark):
     df = _bounds(spark, n=50).withColumn("bucket", F.lit(0))
-    got = hierarchical_running_sum(df, "bucket", ["t", "delta", "bid"], "delta")
+    got = hierarchical_running_sum(df, [], "bucket", ["t", "delta", "bid"], "delta")
     # last row of the prefix sum is the grand total
     total = df.agg(F.sum("delta")).first()[0]
     last = got.orderBy(F.desc("t"), F.desc("delta"), F.desc("bid")).first()
@@ -49,7 +71,7 @@ def test_plan_keeps_big_window_partitioned(spark):
     """The only unpartitioned (single-partition) window must consume the
     per-bucket AGGREGATE, never the raw boundary stream."""
     df = _bounds(spark).withColumn("bucket", F.col("t") - F.col("t") % 100)
-    out = hierarchical_running_sum(df, "bucket", ["t", "delta", "bid"], "delta")
+    out = hierarchical_running_sum(df, [], "bucket", ["t", "delta", "bid"], "delta")
     plan = out._jdf.queryExecution().executedPlan().toString()
     for line in plan.splitlines():
         if "Window" in line and "bucket#" not in line.split("partitionBy")[0]:

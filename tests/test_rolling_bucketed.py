@@ -1,7 +1,6 @@
-"""rolling_window_agg_bucketed / trailing_window_zscore_bucketed: the
-skew-proof W1/A2 forms must be row-identical to the plain forms (round-6
-verdict item 6 — the one-series-exceeds-a-task regime the len10x/keys10x
-audit isolated).
+"""rolling_window_agg_bucketed: the skew-proof W1 form must be
+row-identical to the plain form (round-6 verdict item 6 — the
+one-series-exceeds-a-task regime the len10x/keys10x audit isolated).
 
 Corpus design stresses the seams: multiple keys, duplicate timestamps
 (id tiebreak), negative timestamps (floor bucketing), a series shorter
@@ -16,10 +15,6 @@ import random
 
 from pyspark.sql import functions as F
 
-from aidc_2018_timeseries_spark.operators.normalize import (
-    trailing_window_zscore,
-    trailing_window_zscore_bucketed,
-)
 from aidc_2018_timeseries_spark.operators.windowing import (
     rolling_window_agg,
     rolling_window_agg_bucketed,
@@ -58,30 +53,9 @@ def test_bucketed_agg_equals_plain(spark):
     plain = rolling_window_agg(df, "k", ["us", "id"], dict(aggs), SEQ)
     buck = rolling_window_agg_bucketed(df, "k", "us", "id", dict(aggs), SEQ, VB, RB)
     assert _rows(buck.select(*plain.columns)) == _rows(plain)
-    # short series emits nothing under complete_only, both forms
+    # short series emits nothing, both forms
     assert plain.filter(F.col("k") == 9).count() == 0
     assert buck.filter(F.col("k") == 9).count() == 0
-
-
-def test_bucketed_agg_incomplete_frames(spark):
-    df = _corpus(spark)
-    aggs = {"w_avg": F.avg(F.col("v"))}
-    buck = rolling_window_agg_bucketed(
-        df, "k", "us", "id", aggs, SEQ, VB, RB, complete_only=False
-    )
-    # every input row survives; leading frames are truncated like plain's
-    assert buck.count() == df.count()
-    first = buck.filter((F.col("k") == 1) & (F.col("rn") == 1)).first()
-    one = df.orderBy("us", "id").filter(F.col("k") == 1).first()
-    assert abs(first["w_avg"] - one["v"]) < 1e-12
-
-
-def test_bucketed_zscore_equals_plain(spark):
-    df = _corpus(spark)
-    plain = trailing_window_zscore(df, "k", ["us", "id"], "v", SEQ)
-    buck = trailing_window_zscore_bucketed(df, "k", "us", "id", "v", SEQ, VB, RB)
-    assert sorted(plain.columns) == sorted(buck.columns)
-    assert _rows(buck.select(*plain.columns)) == _rows(plain)
 
 
 def test_bucketed_agg_guards(spark):

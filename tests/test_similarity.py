@@ -130,7 +130,7 @@ def test_lsh_dup_pairs_precision_and_recall(spark):
 
     v = load_table(spark, SF_DIR, "embeddings")
     exact = {(r["id_a"], r["id_b"]): r["sim"] for r in embedding_cosine_dup_pairs(v, 0.35).collect()}
-    got = {(r["id_a"], r["id_b"]): r["sim"] for r in embedding_lsh_dup_pairs(v, 0.35).collect()}
+    got = {(r["id_a"], r["id_b"]): r["sim"] for r in embedding_lsh_dup_pairs(v, n_bits=5, threshold=0.35).collect()}
     assert got, "LSH face found no pairs at all"
     for pair, sim in got.items():
         assert pair in exact and exact[pair] == sim  # exact precision
@@ -149,7 +149,7 @@ def test_lsh_dup_pairs_one_bit_recovers_exact(spark):
 
     v = load_table(spark, SF_DIR, "embeddings")
     exact = sorted(map(tuple, embedding_cosine_dup_pairs(v, 0.35).collect()))
-    got = sorted(map(tuple, embedding_lsh_dup_pairs(v, 0.35, n_tables=16, n_bits=1).collect()))
+    got = sorted(map(tuple, embedding_lsh_dup_pairs(v, n_bits=1, threshold=0.35, n_tables=16).collect()))
     assert exact == got
 
 
@@ -194,13 +194,9 @@ def test_assign_centroids_matches_sequential_fold_reference(spark):
 
 
 def test_embedding_lsh_scaled_face_precision_and_recall(spark):
-    """The scaled (Arrow-GEMM, prefix-stable-plane) face: every emitted
-    pair is a TRUE pair (precision exact by rescore), and recall vs the
-    brute-force thresholded truth clears the sign-LSH floor. (Until
-    round 7 this compared against the fixed face's pair set — the two
-    faces shared a plane generator then; with prefix-stable planes the
-    sets are independent samples of the truth and only precision/recall
-    are invariants.)"""
+    """The scaled (Arrow-GEMM) face: every emitted pair is a TRUE pair
+    (precision exact by rescore), and recall vs the brute-force
+    thresholded truth clears the sign-LSH floor."""
     import numpy as np
 
     from aidc_2018_timeseries_spark.plans.catalog import CATALOG, load_all
@@ -226,23 +222,21 @@ def test_embedding_lsh_scaled_face_precision_and_recall(spark):
     assert recall >= 0.5, f"recall {recall}"
 
 
-def test_hyperplane_rows_stable_prefix_property(spark):
+def test_hyperplane_rows_prefix_property(spark):
     """plane (t, b) must not depend on the bit budget — the property the
     scaled face's static oracle rests on (mask bit_idx < b over one
     inlined max-budget set)."""
-    from aidc_2018_timeseries_spark.operators.similarity import (
-        hyperplane_rows_stable,
-    )
+    from aidc_2018_timeseries_spark.operators.similarity import hyperplane_rows
 
-    big = {(t, b): p for t, b, p in hyperplane_rows_stable(16, 4, 9, 7)}
+    big = {(t, b): p for t, b, p in hyperplane_rows(16, 4, 9, 7)}
     for bits in (1, 4, 7):
-        for t, b, p in hyperplane_rows_stable(16, 4, bits, 7):
+        for t, b, p in hyperplane_rows(16, 4, bits, 7):
             assert big[(t, b)] == p
 
 
 def test_lsh_signature_arrow_matches_expression(spark):
-    """GEMM signatures == a Spark-expression reference on the stable
-    planes at test SF: per (vector, plane) the sequential-fold
+    """GEMM signatures == a Spark-expression reference on the planes
+    at test SF: per (vector, plane) the sequential-fold
     ``functions.vectors.dot``, the 6-dp ``F.round`` sign test, and the
     bit-shift sum per table — the arithmetic the scaled face's DuckDB
     oracle inlines, evaluated by the JVM instead of NumPy."""
@@ -250,12 +244,12 @@ def test_lsh_signature_arrow_matches_expression(spark):
 
     from aidc_2018_timeseries_spark.functions.vectors import dot
     from aidc_2018_timeseries_spark.operators.similarity import (
-        hyperplane_rows_stable,
+        hyperplane_rows,
         lsh_signatures,
     )
 
     v = load_table(spark, SF_DIR, "embeddings")
-    planes = hyperplane_rows_stable(64, 8, 5, 7)
+    planes = hyperplane_rows(64, 8, 5, 7)
     pl = spark.createDataFrame(
         planes,
         StructType(
@@ -361,7 +355,6 @@ def test_lsh_signature_matches_python_sequential_fold(spark):
     differ (the prefix-stable masked regime)."""
     from aidc_2018_timeseries_spark.operators.similarity import (
         hyperplane_rows,
-        hyperplane_rows_stable,
         lsh_signatures,
     )
 
@@ -373,8 +366,8 @@ def test_lsh_signature_matches_python_sequential_fold(spark):
         hyperplane_rows(64, 1, 10, 5),
         # mixed per-table widths: drop the high bit from table 0 only
         [p for p in hyperplane_rows(64, 2, 5, 99) if not (p[0] == 0 and p[1] == 4)],
-        # the prefix-stable planes the corpus-scaled face uses
-        hyperplane_rows_stable(64, 8, 5, 7),
+        # the planes the corpus-scaled face uses
+        hyperplane_rows(64, 8, 5, 7),
     ]
     for planes in configs:
         per_table = {}
