@@ -17,7 +17,3 @@ that capability surface Spark-first:
 """
 
 __version__ = "0.1.0"
-
-from aidc_2018_timeseries_spark.session import configure_session, get_spark
-
-__all__ = ["configure_session", "get_spark", "__version__"]

@@ -29,7 +29,9 @@ def time_ordered_split(
     rest 'test' (reference ``timeseries.py:52-63``: split over the window
     axis, time-ordered, no shuffle before the split).
 
-    round() matches NumPy's ``int(round(ratio * N))``.
+    The cutoff is ``bround`` (HALF_EVEN) of ratio·N, which matches
+    Python's ``int(round(ratio * N))``. N is a one-row count read as a
+    scalar subquery, so building the plan runs no Spark job.
 
     ``bucket_expr`` is a Column that COARSENS the leading order column
     (e.g. ``ts div <week_ns>``); the global row index is the two-level
@@ -39,8 +41,9 @@ def time_ordered_split(
     want the per-series form :func:`per_key_time_split` instead.
     """
     order_names = [order] if isinstance(order, str) else list(order)
-    n = df.count()
-    cutoff = int(round(train_ratio * n))
+    cutoff = df.select(
+        F.bround(F.lit(train_ratio) * F.count(F.lit(1)), 0).cast("long")
+    ).scalar()
     ranked = hierarchical_running_sum(
         df.withColumn("_bucket", bucket_expr),
         [],

@@ -10,6 +10,7 @@ from aidc_2018_timeseries_spark.operators.intervals import (
     concurrency_curve_global,
     hierarchical_running_sum,
 )
+from aidc_2018_timeseries_spark.operators.split import time_ordered_split
 
 
 def _bounds(spark, n=500):
@@ -88,3 +89,37 @@ def test_curve_ends_at_zero_and_never_negative(spark):
     concs = [r.conc for r in sorted(curve, key=lambda r: (r.t_us, r.delta, r.bid))]
     assert concs[-1] == 0  # every interval that opens eventually closes
     assert min(concs) >= 0
+
+
+def test_time_split_cutoff_rounds_half_even(spark):
+    """The W13 cutoff is Python's round(ratio * N): 2.5 → 2 and 3.5 → 4."""
+    for n, want in ((5, 2), (7, 4)):
+        df = spark.range(n).withColumn("ts", F.col("id") * 10)
+        out = time_ordered_split(df, "ts", 0.5, F.expr("ts div 30"))
+        train = sorted(r.id for r in out.filter("split = 'train'").collect())
+        assert train == list(range(want)), (n, train)
+
+
+def test_w13_face_build_runs_only_the_schema_read(spark, sf_dir):
+    """Building w13_time_split runs no job beyond load_table's parquet
+    schema read: the row count behind the cutoff runs with the plan."""
+    from aidc_2018_timeseries_spark.plans.catalog import CATALOG, load_all
+    from aidc_2018_timeseries_spark.sources.tables import load_table
+
+    load_all()
+    sc = spark.sparkContext
+
+    def build_jobs(name, build) -> list[int]:
+        group = f"build-{name}"
+        sc.setJobGroup(group, "DataFrame construction only")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    read = build_jobs("w13-read", lambda: load_table(spark, sf_dir, "events"))
+    face = build_jobs(
+        "w13-face", lambda: CATALOG["w13_time_split"].spark_fn(spark, sf_dir)
+    )
+    assert len(face) == len(read), (read, face)
