@@ -26,9 +26,6 @@ from pyspark.sql import SparkSession
 
 _LOG = logging.getLogger(__name__)
 
-#: the Python daemon of every session that :func:`get_spark` builds
-_DAEMON_MODULE = "aidc_2018_timeseries_spark.daemon"
-
 # Runtime-settable confs required to read the driver's testdata and to keep
 # results deterministic / DuckDB-comparable.
 _RUNTIME_CONFS = {
@@ -84,7 +81,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.python.daemon.module", _DAEMON_MODULE)
+        .config("spark.python.daemon.module", "aidc_2018_timeseries_spark.daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()
